@@ -1225,9 +1225,9 @@ def x74_prune_in_or_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x74 — round 13's lake levers end-to-end under the oracle gate
     (the x73 pattern applied to this round): on a PARTITIONED table with
     parquet checkpoints, (1) a CoW DELETE with an IN-list predicate —
-    discovery pruned via `_cond_disjuncts` per-value branch expansion
-    (io/manifest.py), including a key absent from the table (a no-match
-    branch must lose nothing); (2) an UPDATE with a top-level OR of two
+    discovery pruned with the IN list kept as a value set
+    (io/prune.py), including a key absent from the table (a no-match
+    value must lose nothing); (2) an UPDATE with a top-level OR of two
     point predicates — discovery pruned with the UNION of branch file
     sets; (3) a partition_filter read and a partition-RANGE read, both
     planned through the parquet checkpoint's `part::<col>` columns (the

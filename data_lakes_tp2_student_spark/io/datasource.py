@@ -11,8 +11,8 @@ Delta parity for the idiomatic entry points:
         .option("path", root).save())
 
 built on Spark 4's Python Data Source API (SPARK-44076, public). The
-READER plans one input partition per data file from the pinned
-snapshot's manifest — and implements `pushFilters` (SPARK-48921): Spark
+READER plans size-packed input partitions from the pinned snapshot's
+manifest — and implements `pushFilters` (SPARK-48921): Spark
 hands the scan's predicates down before planning, the reader prunes
 files against the manifest's partition values and recorded [min, max]
 column stats (the same data skipping `ManifestTable.read`'s explicit
@@ -82,20 +82,14 @@ from pyspark.sql.datasource import (
     DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamArrowWriter,
-    EqualNullSafe,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    LessThan,
-    LessThanOrEqual,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
 from .logstore import LocalLogStore
-from .manifest import HIVE_NULL, ManifestTable, _file_stats, _json_safe, _path_value
+from .manifest import HIVE_NULL, ManifestTable, _file_stats
+from .prune import _path_value, from_filters, keep
 
 
 def _open_table(options: dict) -> ManifestTable:
@@ -254,11 +248,9 @@ class _ScanPartition(InputPartition):
     """One or more data files read by a single task: absolute path,
     manifest-relative path (the DV join key), the entry's partition
     values (Hive layout keeps them out of the file), and the file's
-    deletion-vector parquet paths. `more` carries additional
-    (path, rel, partition, dv_paths) tuples when `filesPerPartition`
-    coalesces small files into one task (PERF.md #45 experiment: the
-    per-partition Python-worker round-trip dominates many-small-file
-    tables; batching amortizes it without touching the 1-file default)."""
+    deletion-vector parquet paths. `more` carries the additional
+    (path, rel, partition, dv_paths) tuples `pack_by_size` put in the
+    same bin."""
 
     def __init__(self, path: str, rel: str, partition: dict, dv_paths: tuple, more: tuple = ()):
         self.path = path
@@ -273,138 +265,35 @@ class ManifestBatchReader(DataSourceReader):
         self._schema = schema
         table = _open_table(options)
         self._table = table
-        version = _resolve_version(table, options)
-        m = table.manifest(version)
-        self._files = m["files"]
-        self._partition_by = set(m["partition_by"])
-        # logical→physical resolution for projection and stats skipping
-        # (round 9 column mapping); {} = identity
-        self._mapping = m.get("column_mapping") or {}
-        # small-file coalescing knob (round 9; auto since round 15):
-        # N files per input partition, or "auto" (the default) to pack
-        # by SIZE the way Spark's own FilePartition planner does —
-        # DATAPLANE_r14 measured the per-input-partition Python-worker
-        # round-trip at a ~1 s floor for file-per-task scans of
-        # many-small-file tables (format path 0.92-3.5 s vs native
-        # 0.06-0.34 s), which is pure partition-count overhead, not IO.
-        # An explicit integer keeps the old fixed-k behavior.
-        fpp = str(options.get("filesperpartition", "auto")).lower()
-        self._files_per_partition = (
-            None if fpp == "auto" else max(1, int(fpp))
-        )
-        # pushed-filter pruning state: {col: set of partition strings}
-        # and {col: [lo, hi]} range bounds (None = unbounded side)
-        self._part_prune: dict[str, set] = {}
-        self._range_prune: dict[str, list] = {}
+        self._m = table.manifest(_resolve_version(table, options))
+        # logical→physical resolution for projection (round 9 column
+        # mapping); {} = identity
+        self._mapping = self._m.get("column_mapping") or {}
+        self._pred = None  # pushed-filter predicate (see pushFilters)
 
     def __getstate__(self):
         # the reader is pickled to executors for read(), which needs only
         # the schema — the table handle (S3 stores hold client locks) and
-        # the file list are DRIVER planning state
+        # the manifest are DRIVER planning state
         state = dict(self.__dict__)
         state["_table"] = None
-        state["_files"] = []
+        state["_m"] = None
         return state
 
     def pushFilters(self, filters):
-        """Record file-prunable predicates; YIELD BACK every filter —
-        manifest skipping drops whole files whose stats/partition cannot
-        match, but surviving files still hold non-matching rows, so
-        Spark must keep the row-level predicate (exactly parquet's
-        PushedFilters contract)."""
-        for f in filters:
-            attr = getattr(f, "attribute", None)
-            if attr is not None and len(attr) == 1:
-                col = attr[0]
-                # a null-safe equality with a NON-null literal prunes
-                # exactly like EqualTo (null rows can't match it)
-                eq = isinstance(f, EqualTo) or (
-                    isinstance(f, EqualNullSafe) and f.value is not None
-                )
-                if col in self._partition_by:
-                    if eq:
-                        self._part_prune.setdefault(col, set()).update(
-                            {_path_value(f.value)}
-                        )
-                    elif isinstance(f, In):
-                        self._part_prune.setdefault(col, set()).update(
-                            _path_value(v) for v in f.value
-                        )
-                # strict bounds are kept inclusive: pruning may only
-                # over-approximate the surviving file set. Any type
-                # surprise (null literal, mixed-type bounds) simply
-                # skips the prune — never fails the scan.
-                try:
-                    import math
-
-                    def _nan(x):
-                        # a NaN literal cannot prune: Spark orders NaN
-                        # GREATER than every double (`col < NaN` matches
-                        # every row) while NaN poisons min/max folding —
-                        # skipping the bound keeps pruning sound
-                        return isinstance(x, float) and math.isnan(x)
-
-                    bounds = self._range_prune.setdefault(col, [None, None])
-                    if isinstance(f, In) and f.value:
-                        # col ∈ S ⇒ min(S) ≤ col ≤ max(S): zone-map fold
-                        vals = [_json_safe(v) for v in f.value]
-                        if not any(_nan(v) for v in vals):
-                            lo, hi = min(vals), max(vals)
-                            bounds[0] = lo if bounds[0] is None else max(bounds[0], lo)
-                            bounds[1] = hi if bounds[1] is None else min(bounds[1], hi)
-                    else:
-                        v = _json_safe(f.value)
-                        if not _nan(v):
-                            if eq or isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                                bounds[0] = v if bounds[0] is None else max(bounds[0], v)
-                            if eq or isinstance(f, (LessThan, LessThanOrEqual)):
-                                bounds[1] = v if bounds[1] is None else min(bounds[1], v)
-                except (AttributeError, TypeError):
-                    pass
-            yield f
-
-    @staticmethod
-    def _stats_overlap(entry: dict, col: str, lo, hi) -> bool:
-        st = entry.get("stats", {}).get(col)
-        if st is None:
-            return True  # no stats = cannot skip (skipping is optional)
-        try:
-            return (lo is None or st[1] >= lo) and (hi is None or st[0] <= hi)
-        except TypeError:
-            return True  # cross-type bound (e.g. str vs int) — keep
-
+        """Record the filters as a file-skipping predicate; YIELD BACK
+        every filter — manifest skipping drops whole files whose
+        stats/partition cannot match, but surviving files still hold
+        non-matching rows, so Spark must keep the row-level predicate
+        (exactly parquet's PushedFilters contract)."""
+        filters = list(filters)
+        self._pred = from_filters(filters)
+        yield from filters
 
     def partitions(self):
-        files = self._files
-        for col, want in self._part_prune.items():
-            files = [e for e in files if e["partition"].get(col) in want]
-        for col, (lo, hi) in self._range_prune.items():
-            if lo is None and hi is None:
-                continue
-            if col in self._partition_by:
-                # PARTITION column range (round 9): no footer stats —
-                # the exact value is the path string; compare TYPED
-                # ('9' < '10' numerically). NULL/unparsable kept; the
-                # row-level predicate stays with Spark either way.
-                from .manifest import _typed_part_value
-
-                st = self._schema[col].dataType.simpleString()
-                tlo = _typed_part_value(str(lo), st) if lo is not None else None
-                thi = _typed_part_value(str(hi), st) if hi is not None else None
-                files = [
-                    e
-                    for e in files
-                    if (pv := _typed_part_value(e["partition"].get(col), st))
-                    is None
-                    or (
-                        (tlo is None or pv >= tlo)
-                        and (thi is None or pv <= thi)
-                    )
-                ]
-                continue
-            # stats are keyed by PHYSICAL name; filters arrive logical
-            sc = self._mapping.get(col, col)
-            files = [e for e in files if self._stats_overlap(e, sc, lo, hi)]
+        """Size-packed bins (`pack_by_size`) of the files the pushed
+        filters cannot rule out."""
+        files = keep(self._m, self._m["files"], self._pred)
         if not files:
             # Spark requires at least one partition; an empty one yields
             # nothing (read() returns immediately on a None path)
@@ -421,18 +310,6 @@ class ManifestBatchReader(DataSourceReader):
                 else ()
             )
             structs.append((p, e["path"], e["partition"], dv_paths))
-        k = self._files_per_partition
-        if k is not None:
-            return [
-                _ScanPartition(*chunk[0], more=tuple(chunk[1:]))
-                for chunk in (
-                    structs[i : i + k] for i in range(0, len(structs), k)
-                )
-            ]
-        # "auto" (round 15, VERDICT r14 item 2): size-packed bins via
-        # the shared pack_by_size rule (also used by the streaming
-        # source) — partition count grows with DATA SIZE, never with
-        # file count.
         return [
             _ScanPartition(*structs[bin[0]], more=tuple(structs[i] for i in bin[1:]))
             for bin in pack_by_size([e.get("bytes") for e in files])
@@ -1055,7 +932,6 @@ _CATALOG_STASH_OPTS = (
     "versionasof",
     "timestampasof",
     "statscols",
-    "filesperpartition",
 )
 
 

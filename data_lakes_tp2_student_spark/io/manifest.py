@@ -77,7 +77,18 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import NumericType, StructField, StructType
+
+from .prune import (
+    Pred,
+    _json_safe,
+    _session_tz_utc,
+    ckpt_filter,
+    envelope,
+    from_dicts,
+    from_where,
+    keep,
+)
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -112,174 +123,6 @@ class MergeCardinalityError(RuntimeError):
     which source row "wins", so the merge is ambiguous. Delta raises the
     same error (DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW_IN_MERGE);
     deduplicate the source on the merge keys and retry."""
-
-
-def _norm_bounds(lo, hi, sample, col_type=None, tz_utc=True):
-    """Canonicalize a (lo, hi) bound pair (None = unbounded side) into
-    the DOMAIN of a stored stats `sample` value, or return None when
-    comparability cannot be proven — callers must then skip pruning on
-    that column (sound: pruning fewer files never changes results).
-
-    Domains: numeric stats accept numeric bounds verbatim; plain-string
-    stats accept string bounds verbatim; datetime-ISO string stats
-    (what `_json_safe` stores for parquet footer datetimes) get bounds
-    re-emitted in the stats' EXACT format — naive vs '+00:00'-suffixed
-    (TIMESTAMP_MICROS footers are UTC-aware; a naive literal is that
-    instant only under a UTC session timezone), and date-only stats
-    floor both sides to the day (exact for hi — a DATE ≤ ts iff DATE ≤
-    floor-day(ts) — and over-approximating for lo).
-
-    `col_type` (the committed table schema's simpleString for the
-    column, when the caller can resolve it — ADVICE r12): a `string`
-    column NEVER takes the datetime branch even if its sampled stat
-    happens to parse as an ISO date ('2024-01-05' as a plain string
-    must not be floored/reformatted — lexicographic compare on the
-    verbatim literal is the sound domain). Temporal types confirm the
-    datetime branch; absent (None), the legacy sample-sniff decides.
-
-    `tz_utc=False` (ADVICE r12): the caller's bounds came from a SQL
-    predicate Spark evaluates in a NON-UTC session timezone, so a naive
-    timestamp literal is NOT the UTC instant the stats store — every
-    datetime canonicalization is refused (returns None → skip pruning)
-    except the tz-free case: date-only stats (a DATE column) compared
-    against date-only bounds, where no instant conversion exists."""
-    import datetime as _dt
-
-    if sample is None or isinstance(sample, bool):
-        return None
-    if isinstance(sample, (int, float)):
-        ok = all(
-            b is None
-            or (isinstance(b, (int, float)) and not isinstance(b, bool))
-            for b in (lo, hi)
-        )
-        return (lo, hi) if ok else None
-    if not isinstance(sample, str):
-        return None
-    str_col = isinstance(col_type, str) and col_type.startswith("string")
-    try:
-        if str_col:
-            raise ValueError("schema says string: verbatim domain")
-        sdt = _dt.datetime.fromisoformat(sample)
-        date_only = "T" not in sample and ":" not in sample
-    except ValueError:
-        ok = all(b is None or isinstance(b, str) for b in (lo, hi))
-        return (lo, hi) if ok else None
-    if not tz_utc:
-        def _is_date_only(b):
-            if b is None:
-                return True
-            if not isinstance(b, str):
-                return False
-            try:
-                _dt.date.fromisoformat(b)
-                return True
-            except ValueError:
-                return False
-
-        if not (date_only and _is_date_only(lo) and _is_date_only(hi)):
-            return None
-    utc_suffix = sample.endswith("+00:00")
-    if sdt.tzinfo is not None and not utc_suffix:
-        return None  # non-UTC-offset stats format: unknown domain
-
-    def conv(b):
-        if b is None:
-            return None
-        if not isinstance(b, str):
-            raise ValueError("non-string bound on datetime-string stats")
-        d = _dt.datetime.fromisoformat(b)
-        if d.tzinfo is not None:
-            if utc_suffix and d.utcoffset() == _dt.timedelta(0):
-                d = d.replace(tzinfo=None)
-            else:
-                raise ValueError("offset bound vs naive/other stats")
-        if utc_suffix:
-            return d.isoformat() + "+00:00"
-        return d.date().isoformat() if date_only else d.isoformat()
-
-    try:
-        return (conv(lo), conv(hi))
-    except ValueError:
-        return None
-
-
-_REFUSE = object()  # sentinel: literal not usable in the column's domain
-
-
-def _lit_domain(v, simple_type: str):
-    """A parsed SQL literal → the committed column's COMPARISON domain,
-    or `_REFUSE` when no sound conversion exists (round 13 review: a
-    quoted literal list like `b IN ('2', '10')` on an INT column had
-    its [min, max] envelope computed in STRING order — '10' < '2' — and
-    then re-typed into numeric order, yielding an inverted or tighter-
-    than-true interval that silently pruned files holding matches).
-    None (unbounded side) passes through. Strings parse into numeric
-    domains only when the WHOLE string is the number; numeric literals
-    never enter string domains (Spark casts the COLUMN there, so string
-    stats/partition order proves nothing about the match set)."""
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return _REFUSE
-    if simple_type in ("tinyint", "smallint", "int", "bigint"):
-        if isinstance(v, int):
-            return v
-        if isinstance(v, float):
-            return v  # float bound vs int domain: same python order
-        if isinstance(v, str):
-            try:
-                return int(v)
-            except ValueError:
-                try:
-                    return float(v)
-                except ValueError:
-                    return _REFUSE
-        return _REFUSE
-    if simple_type in ("float", "double") or simple_type.startswith(
-        "decimal"
-    ):
-        if isinstance(v, (int, float)):
-            return v
-        if isinstance(v, str):
-            try:
-                return float(v)
-            except ValueError:
-                return _REFUSE
-        return _REFUSE
-    if simple_type.startswith("string"):
-        return v if isinstance(v, str) else _REFUSE
-    if simple_type in ("date", "timestamp", "timestamp_ntz"):
-        # temporal literals stay ISO strings; their ordering as strings
-        # matches their temporal ordering within one format, and the
-        # downstream paths (_norm_bounds / _typed_part_value) finish the
-        # canonicalization. Non-strings (collected datetimes) pass too.
-        import datetime as _dt
-
-        if isinstance(v, (str, _dt.date, _dt.datetime)):
-            return v
-        return _REFUSE
-    if simple_type == "boolean":
-        return _REFUSE  # equality on bools prunes poorly; stay out
-    return v if isinstance(v, str) else _REFUSE
-
-
-def _session_tz_utc(spark) -> bool:
-    """True iff `spark` evaluates naive timestamp literals as UTC
-    instants (session timezone pinned to UTC). ManifestTable accepts ANY
-    SparkSession, not just `get_spark()`'s UTC-pinned one — under a
-    non-UTC session a naive `timestamp'...'` in a WHERE string, or a
-    collected timestamp min/max, denotes a DIFFERENT instant than the
-    UTC-aware stats the manifest stores, so temporal pruning must be
-    refused (ADVICE r12). Unknown/unreadable → False (prune less)."""
-    if spark is None:
-        return False
-    try:
-        return str(spark.conf.get("spark.sql.session.timeZone")) in (
-            "UTC", "Etc/UTC", "GMT", "Z", "+00:00",
-        )
-    except Exception:
-        return False
 
 
 _CKPT_CORE = ("path", "partition", "bytes", "rows", "stats", "dv")
@@ -438,114 +281,16 @@ def _ckpt_to_parquet_bytes(body: dict) -> bytes:
     return sink.getvalue().to_pybytes()
 
 
-def _ckpt_from_parquet(
-    b: bytes,
-    coarse_range: dict | None = None,
-    col_types: dict | None = None,
-    coarse_parts: dict | None = None,
-) -> dict:
-    """Decode a columnar checkpoint. With `coarse_range` ({col: (lo, hi),
-    None = unbounded side}), rows whose TYPED stat columns prove the file
-    disjoint from the range are dropped VECTORIZED before python-dict
-    materialization — null stats, absent columns, and domain-mismatched
-    bounds keep the row (sound over-approximation, same contract as
-    `_prune_files_range`). `col_types` ({col: schema simpleString},
-    ADVICE r12) pins each bound's domain to the committed column type so
-    a STRING column whose stored min parses as an ISO date is never
-    date-floored at the coarse level either.
-
-    Round 13: coarse_range entries naming PARTITION columns prune on the
-    checkpoint's `part::<col>` columns — the typed compare runs once per
-    DISTINCT partition value (dictionary-style), then a vectorized is_in
-    keeps matching rows, so a partition-scoped read at 10^6 files
-    materializes O(selected) python dicts. `coarse_parts` ({col:
-    set-of-path-values}) is the exact-value form `partition_filter`
-    reads thread down. Absent `part::` columns (pre-r13 checkpoints) and
-    NULL/unparsable values keep the row — sound."""
+def _ckpt_from_parquet(b: bytes, env: dict | None = None) -> dict:
+    """Decode a columnar checkpoint. With `env` (a predicate envelope,
+    see `prune.envelope`), rows that provably cannot match are dropped
+    vectorized by `prune.ckpt_filter` before any entry dict exists."""
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     t = pq.read_table(pa.BufferReader(b))
-    if coarse_parts:
-        for c, allowed in coarse_parts.items():
-            pname = f"part::{c}"
-            if pname not in t.column_names or None in allowed:
-                continue  # NULL-value filters: exact path handles them
-            keep = pc.is_in(t[pname], pa.array(sorted(allowed), pa.string()))
-            t = t.filter(pc.fill_null(keep, True))  # NULL partition: keep
-    if coarse_range:
-        # pass 1 — PARTITION columns: filter t eagerly (row count shrinks
-        # before the stats masks are built against it)
-        for c, (lo, hi) in coarse_range.items():
-            pname = f"part::{c}"
-            if pname not in t.column_names:
-                continue
-            st = (col_types or {}).get(c)
-            if not st:
-                continue
-            lo = None if lo is None else _json_safe(lo)
-            hi = None if hi is None else _json_safe(hi)
-            tlo = None if lo is None else _typed_part_value(str(lo), st)
-            thi = None if hi is None else _typed_part_value(str(hi), st)
-            if (lo is not None and tlo is None) or (
-                hi is not None and thi is None
-            ):
-                continue  # unparsable bound: cannot prune, sound
-            uniq = [
-                u for u in pc.unique(t[pname]).to_pylist() if u is not None
-            ]
-            dropped = [
-                u
-                for u in uniq
-                if (pv := _typed_part_value(u, st)) is not None
-                and not (
-                    (tlo is None or tlo <= pv)
-                    and (thi is None or pv <= thi)
-                )
-            ]
-            if dropped:
-                bad = pc.is_in(t[pname], pa.array(dropped, pa.string()))
-                t = t.filter(pc.fill_null(pc.invert(bad), True))
-        # pass 2 — stats columns: accumulate one mask, apply once
-        mask = None
-        for c, (lo, hi) in coarse_range.items():
-            if f"part::{c}" in t.column_names:
-                continue  # handled in pass 1
-            lo = None if lo is None else _json_safe(lo)
-            hi = None if hi is None else _json_safe(hi)
-            mn_name = f"stat_min::{c}"
-            if mn_name not in t.column_names:
-                continue
-            # canonicalize the bounds into this column's stored domain
-            # (datetime-ISO strings may carry '+00:00', date-only stats
-            # floor to the day) — unprovable comparability skips the
-            # column, same contract as _prune_files_range
-            sample_arr = pc.drop_null(t[mn_name]).slice(0, 1).to_pylist()
-            nb = _norm_bounds(
-                lo,
-                hi,
-                sample_arr[0] if sample_arr else None,
-                col_type=(col_types or {}).get(c),
-            )
-            if nb is None:
-                continue
-            lo, hi = nb
-            keep = None
-            try:
-                if hi is not None:
-                    keep = pc.less_equal(t[mn_name], pa.scalar(hi))
-                if lo is not None:
-                    k2 = pc.greater_equal(t[f"stat_max::{c}"], pa.scalar(lo))
-                    keep = k2 if keep is None else pc.and_(keep, k2)
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError, TypeError):
-                continue  # bound domain ≠ stats domain: cannot skip, sound
-            if keep is None:
-                continue
-            keep = pc.fill_null(keep, True)  # stats-less file: keep
-            mask = keep if mask is None else pc.and_(mask, keep)
-        if mask is not None:
-            t = t.filter(mask)
+    if env:
+        t = ckpt_filter(t, env)
     cols = {
         c: t[c].to_pylist()
         for c in t.column_names
@@ -601,27 +346,6 @@ def _plan_deterministic(df) -> bool:
         return False
 
 
-def _json_safe(v):
-    """Parquet-footer statistic → JSON-storable canonical value."""
-    import datetime as _dt
-
-    import numpy as _np
-
-    if v is None or isinstance(v, (bool, str)):
-        return v
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).decode("utf-8", "replace")
-    if isinstance(v, _np.integer):
-        return int(v)
-    if isinstance(v, _np.floating):
-        return float(v)
-    if isinstance(v, (_dt.datetime, _dt.date)):
-        return v.isoformat()
-    if isinstance(v, (int, float)):
-        return v
-    return str(v)
-
-
 def _file_stats(path: str, cols: list[str]) -> dict[str, list]:
     """Per-file [min, max] for `cols`, read from the parquet FOOTER the
     write just produced (pyarrow metadata — no data pages touched).
@@ -675,17 +399,6 @@ def _file_stats(path: str, cols: list[str]) -> dict[str, list]:
     return out
 
 
-def _path_value(v) -> str | None:
-    """A partition-filter value → the string Spark renders in the path
-    segment (review r6: Python ``str(True)`` is ``'True'`` but Spark
-    writes ``flag=true`` — the mismatch silently returned 0 rows)."""
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
-
-
 def _parse_partition(rel_path: str) -> dict[str, str | None]:
     """Partition values from a relative file path's `k=v` dir segments
     (Hive layout; `txn` is the commit id, not a table partition)."""
@@ -698,44 +411,6 @@ def _parse_partition(rel_path: str) -> dict[str, str | None]:
             continue
         out[k] = None if v == HIVE_NULL else unquote(v)
     return out
-
-
-def _typed_part_value(v: str | None, simple_type: str):
-    """A partition value's PATH STRING parsed into the committed column
-    type's comparison domain (round 9 partition-range pruning): numeric
-    types compare numerically ('9' < '10' must hold — lexicographic
-    says otherwise), date/timestamp values parse to datetimes (Spark
-    spells path timestamps '2021-01-04 10:30:00' with a SPACE while
-    isoformat bounds carry 'T' — a raw string compare would order the
-    space before 'T' and silently mis-prune same-day values; review
-    r9 wave 2), booleans normalize. None (the NULL partition) and
-    unparsable values return None — callers must treat that as
-    'cannot prune'. A tz-AWARE parse also returns None (ADVICE r13):
-    path-derived partition values are naive wall times, so an aware
-    bound (e.g. `datetime(..., tzinfo=timezone.utc)` in a
-    range_filter) would raise TypeError inside the callers' naive
-    `tlo <= pv` compares — refusing mirrors _norm_bounds' aware-offset
-    refusal and degrades to no-prune, which is always sound."""
-    if v is None:
-        return None
-    try:
-        if simple_type in ("tinyint", "smallint", "int", "bigint"):
-            return int(v)
-        if simple_type in ("float", "double") or simple_type.startswith("decimal"):
-            return float(v)
-        if simple_type == "boolean":
-            return v.lower() == "true"
-        if simple_type in ("date", "timestamp", "timestamp_ntz"):
-            import datetime as _dt
-
-            s = v.replace(" ", "T")
-            if simple_type == "date" and "T" not in s:
-                return _dt.datetime.fromisoformat(s + "T00:00:00")
-            out = _dt.datetime.fromisoformat(s)
-            return None if out.tzinfo is not None else out
-        return v  # string: value order IS lexicographic order
-    except ValueError:
-        return None
 
 
 def _part_key(partition: dict) -> tuple:
@@ -942,49 +617,29 @@ class ManifestTable:
             files = [e for e in files if e["path"] not in gone]
         return files + add
 
-    def _read_checkpoint_body(
-        self,
-        version: int,
-        coarse_range: dict | None = None,
-        col_types: dict | None = None,
-        coarse_parts: dict | None = None,
-    ) -> dict:
+    def _read_checkpoint_body(self, version: int, env: dict | None = None) -> dict:
         """Checkpoint `version`'s body ({version, files[, txns]}),
-        whichever format exists — parquet preferred (columnar). With
-        `coarse_range`, the PARQUET path prunes rows vectorized against
-        the typed stat columns BEFORE materializing python dicts (sound
-        over-approximation: null/absent/mismatched-domain stats keep the
-        row); the JSON path ignores it — callers exact-prune later
-        either way. Raises FileNotFoundError if neither format exists."""
+        whichever format exists — parquet preferred (columnar). `env`
+        pre-filters a PARQUET checkpoint (see `_ckpt_from_parquet`); the
+        JSON path ignores it. Raises FileNotFoundError if neither format
+        exists."""
         try:
             b = self.store.read_log(self._checkpoint_pq_name(version))
         except FileNotFoundError:
             b = None
         if b is not None:
-            return _ckpt_from_parquet(b, coarse_range, col_types, coarse_parts)
+            return _ckpt_from_parquet(b, env)
         return json.loads(self.store.read_log(self._checkpoint_name(version)))
 
-    def _snapshot_files(
-        self,
-        version: int,
-        coarse_range: dict | None = None,
-        col_types: dict | None = None,
-        coarse_parts: dict | None = None,
-    ) -> list[dict]:
+    def _snapshot_files(self, version: int, env: dict | None = None) -> list[dict]:
         """Reconstruct version N's full file list: nearest checkpoint ≤ N,
         then replay the (few) later log entries — O(Δ since checkpoint).
-        `coarse_range` (round 12): a sound {col: (lo, hi)} pre-filter the
-        PARQUET checkpoint applies columnar, so a range-filtered read at
-        10^5+ files materializes O(selected) entries — post-checkpoint
-        ADDS are kept unpruned (the caller's exact prune handles them)."""
+        `env` pre-filters the checkpoint's entries only; later adds are
+        kept unfiltered."""
         cps = [c for c in self.checkpoints() if c <= version]
         if cps:
             start = cps[-1]
-            files = list(
-                self._read_checkpoint_body(
-                    start, coarse_range, col_types, coarse_parts
-                )["files"]
-            )
+            files = list(self._read_checkpoint_body(start, env)["files"])
         else:
             start = -1
             files = []
@@ -992,27 +647,19 @@ class ManifestTable:
             files = self._apply(self._raw(v), files)
         return files
 
-    def manifest(
-        self,
-        version: int,
-        coarse_range: dict | None = None,
-        col_types: dict | None = None,
-        coarse_parts: dict | None = None,
-    ) -> dict:
+    def manifest(self, version: int, prune: Pred | None = None) -> dict:
         """Version N's metadata with its FULL reconstructed file list
         under `files` (the pre-round-7 full-snapshot shape, now derived
         from the delta log). Raises FileNotFoundError for vacuumed or
-        never-committed versions. With `coarse_range` the file list may
-        omit files a PARQUET checkpoint proves disjoint from the range
-        (callers must treat the list as range-scoped, not the full
-        snapshot)."""
+        never-committed versions. With `prune`, a parquet checkpoint
+        pre-filters the list by the predicate's envelope, so the list
+        may omit files that cannot match: callers treat it as
+        prune-scoped and still apply `keep`."""
         e = self._raw(version)
         if "files" in e:
             return e
         out = {k: v for k, v in e.items() if k not in ("add", "remove")}
-        out["files"] = self._snapshot_files(
-            version, coarse_range, col_types, coarse_parts
-        )
+        out["files"] = self._snapshot_files(version, envelope(prune, e))
         return out
 
     def _publish(self, entry: dict) -> bool:
@@ -1867,77 +1514,16 @@ class ManifestTable:
             version = self.latest_version()
         if version is None:
             raise FileNotFoundError(f"no committed version at {self.root}")
-        # round 12: with a PARQUET checkpoint the range filter prunes
-        # COLUMNAR inside the checkpoint read, before any python dict
-        # materializes — O(selected) planning at 10^5+ files. Mapped
-        # tables skip the coarse pass (their stats are keyed by physical
-        # names; the exact prune below resolves the mapping).
-        coarse = None
-        ctypes = None
-        cparts = None
-        if range_filter or partition_filter:
-            e0 = self._raw(version)
-            if "files" not in e0 and not e0.get("column_mapping"):
-                if range_filter:
-                    coarse = {
-                        c: (v[0], v[1])
-                        for c, v in range_filter.items()
-                        if isinstance(v, (tuple, list)) and len(v) == 2
-                    }
-                # round 13: partition_filter values prune COLUMNAR inside
-                # the parquet checkpoint too (`part::<col>` columns) — a
-                # partition-scoped read at 10^6 files materializes
-                # O(selected) dicts. Same value normalization as the
-                # exact filter below; the exact filter stays authoritative
-                # for post-checkpoint adds and json checkpoints.
-                if partition_filter:
-                    cparts = {
-                        k: {
-                            _path_value(v)
-                            for v in (
-                                vs
-                                if isinstance(vs, (list, set, tuple))
-                                else [vs]
-                            )
-                        }
-                        for k, vs in partition_filter.items()
-                    }
-                # pin each bound's domain to the committed column type
-                # (ADVICE r12) so the coarse pass never date-floors a
-                # STRING column whose stats look like ISO dates
-                ctypes = {
-                    f.name: f.dataType.simpleString()
-                    for f in StructType.fromJson(
-                        json.loads(self._table_schema_of(e0))
-                    ).fields
-                }
-        m = self.manifest(
-            version,
-            coarse_range=coarse or None,
-            col_types=ctypes,
-            coarse_parts=cparts,
-        )
-        files = m["files"]
-        if range_filter:
-            files = self._prune_files_range(m, files, range_filter)
-        if partition_filter:
-            unknown = set(partition_filter) - set(m["partition_by"])
-            if unknown:
-                # a typo'd key would otherwise prune EVERY file and read
-                # as an empty table (review r6) — fail loud instead
-                raise ValueError(
-                    f"partition_filter keys {sorted(unknown)} are not "
-                    f"partition columns {m['partition_by']} of version {version}"
-                )
-            want = {
-                k: {_path_value(v) for v in (vs if isinstance(vs, (list, set, tuple)) else [vs])}
-                for k, vs in partition_filter.items()
-            }
-            files = [
-                e
-                for e in files
-                if all(e["partition"].get(k) in vs for k, vs in want.items())
-            ]
+        pred = from_dicts(partition_filter, range_filter)
+        m = self.manifest(version, prune=pred)
+        unknown = set(partition_filter or ()) - set(m.get("partition_by") or ())
+        if unknown:
+            # a typo'd key would otherwise prune EVERY file and read
+            # as an empty table (review r6) — fail loud instead
+            raise ValueError(
+                f"partition_filter keys {sorted(unknown)} are not "
+                f"partition columns {m['partition_by']} of version {version}"
+            )
         # Materialization (shared with the provenance path): project to
         # the version's CUMULATIVE table schema, not just its COMMIT
         # schema (ADVICE r7 — an append omitting an existing column must
@@ -1945,553 +1531,7 @@ class ManifestTable:
         # pre-evolution rows null-filled, partition-discovery types pinned
         # back to the committed types, and DELETION VECTORS applied to the
         # file entries that carry them (round 8 merge-on-read).
-        return self._load_snapshot(spark, m, files)
-
-    def _prune_files_range(
-        self, m: dict, files: list[dict], range_filter: dict,
-        tz_utc: bool = True, col_types: dict | None = None,
-    ) -> list[dict]:
-        """Manifest data skipping: drop every file whose recorded
-        [min, max] (or typed partition value) cannot overlap the
-        inclusive [lo, hi] per column. Sound over-approximation — files
-        without stats for the column are always kept. Shared by read()
-        and the CoW rewrite discovery scan (round 11). Bound domains are
-        resolved against the committed SCHEMA type (ADVICE r12 — a
-        string column whose stored min happens to parse as an ISO date
-        must not be date-floored) and, with `tz_utc=False`, temporal
-        canonicalization is refused for predicate-derived bounds a
-        non-UTC session evaluated (see `_norm_bounds`)."""
-        # stats are keyed by PHYSICAL column name (stable across
-        # renames); callers filter on logical names
-        cmap = m.get("column_mapping") or {}
-        if col_types is None:  # callers in a loop pass it precomputed
-            col_types = {
-                f.name: f.dataType.simpleString()
-                for f in StructType.fromJson(
-                    json.loads(self._table_schema_of(m))
-                ).fields
-            }
-        part_types = {
-            c: t
-            for c, t in col_types.items()
-            if c in (m["partition_by"] or [])
-        }
-        for c, (lo, hi) in range_filter.items():
-            sc = cmap.get(c, c)
-            # canonicalize to the stats' stored domain (review r6:
-            # a date bound against ISO-string stats raised TypeError).
-            # A None bound means UNBOUNDED on that side (round 12 — the
-            # automatic WHERE-derived prune emits one-sided ranges for
-            # predicates like `ts >= X`).
-            lo = None if lo is None else _json_safe(lo)
-            hi = None if hi is None else _json_safe(hi)
-            if lo is None and hi is None:
-                continue
-            if c in part_types:
-                # PARTITION column (round 9): files carry no footer
-                # stats for it — the exact value lives in the path;
-                # compare TYPED ('9' < '10' numerically). NULL /
-                # unparsable values are kept (cannot prune — sound).
-                st = part_types[c]
-                # round-13 review: the tz gate applies HERE too — under
-                # a non-UTC session, collected/parsed temporal bounds
-                # are session-zone wall times while path values are the
-                # writer's UTC wall times; refuse timestamp columns and
-                # dates with time-carrying bounds (date-only↔date-only
-                # compares are instant-free and stay prunable)
-                if not tz_utc and st.startswith("timestamp"):
-                    continue
-                if not tz_utc and st == "date":
-                    def _dateonly(b):
-                        if b is None:
-                            return True
-                        s2 = str(b)
-                        return "T" not in s2 and ":" not in s2
-
-                    if not (_dateonly(lo) and _dateonly(hi)):
-                        continue
-                tlo = None if lo is None else _typed_part_value(str(lo), st)
-                thi = None if hi is None else _typed_part_value(str(hi), st)
-                if (lo is not None and tlo is None) or (
-                    hi is not None and thi is None
-                ):
-                    continue
-                files = [
-                    e
-                    for e in files
-                    if (pv := _typed_part_value(e["partition"].get(c), st))
-                    is None
-                    or (
-                        (tlo is None or tlo <= pv)
-                        and (thi is None or pv <= thi)
-                    )
-                ]
-                continue
-            # canonicalize the bounds into the stats' STORED domain
-            # (round 12, shared with the coarse checkpoint prune):
-            # datetime stats strings may carry '+00:00' (TIMESTAMP_MICROS
-            # footers), date-only stats floor to the day, and a bound
-            # whose comparability cannot be proven skips the column
-            # instead of raising or comparing unsoundly
-            sample = next(
-                (
-                    e["stats"][sc][0]
-                    for e in files
-                    if e.get("stats", {}).get(sc)
-                    and e["stats"][sc][0] is not None
-                ),
-                None,
-            )
-            nb = _norm_bounds(
-                lo, hi, sample, col_type=col_types.get(c), tz_utc=tz_utc
-            )
-            if nb is None:
-                continue
-            lo, hi = nb
-            files = [
-                e
-                for e in files
-                if "stats" not in e
-                or sc not in e["stats"]
-                or (
-                    (hi is None or e["stats"][sc][0] <= hi)
-                    and (lo is None or e["stats"][sc][1] >= lo)
-                )
-            ]
-        return files
-
-    @staticmethod
-    def _cond_ranges(condition) -> dict:
-        """Conservative WHERE-string → {col: (lo, hi)} over-approximation
-        (None = unbounded side) for automatic file skipping. Parses ONLY
-        a plain conjunction of `col OP literal` comparisons (OP ∈ =, ==,
-        <, <=, >, >=; either operand order; numeric, 'quoted', date'...'
-        and timestamp'...' literals) plus `col IN (lit, ...)` atoms
-        (round 13 — the common retention-delete shape), which bound the
-        column by the [min, max] ENVELOPE of the literal list (finite-
-        union over-approximation). Anything else — Column conditions,
-        OR/NOT, other parentheses, functions, BETWEEN, NOT IN, double
-        quotes — returns {} or skips the atom (`_cond_disjuncts` handles
-        top-level OR). Soundness argument: rows matching a conjunction
-        satisfy EVERY conjunct, so ranges derived from any SUBSET of
-        conjuncts still contain every matching row; strict comparisons
-        are widened to inclusive bounds (keeps more files); quoted
-        literals are stashed before the AND-split so a literal
-        containing ' and ' can never fabricate an atom (same guard the
-        MERGE ON parser grew for ADVICE r11)."""
-        import re
-
-        if not isinstance(condition, str) or '"' in condition or "\x00" in condition:
-            return {}
-        lits: list[str] = []
-
-        def _stash(mm):
-            lits.append(mm.group(1))
-            return f"\x00{len(lits) - 1}\x00"
-
-        s = re.sub(r"'([^']*)'", _stash, condition)
-        if "'" in s:
-            return {}
-        COL = r"`?([A-Za-z_]\w*)`?"
-        VAL = r"((?:date|timestamp)?\x00\d+\x00|[-+]?\d+(?:\.\d+)?)"
-        OPS = r"(==|=|<=|>=|<|>)"
-        FLIP = {"<": ">", "<=": ">=", ">": "<", ">=": "<=", "=": "=", "==": "=="}
-
-        def _decode(tok: str):
-            mm = re.fullmatch(r"(?:date|timestamp)?\x00(\d+)\x00", tok, re.I)
-            if mm:
-                return lits[int(mm.group(1))]
-            return float(tok) if "." in tok else int(tok)
-
-        # rewrite well-formed IN-lists into their [min, max] envelope
-        # BEFORE the paren bail: `k IN (3, 9, 5)` ⇒ `k >= 3 and k <= 9`.
-        # A `NOT IN` or keyword-collision match ('not'/'and'/'or' as the
-        # "column") is left untouched so the paren/NOT bail rejects it —
-        # NOT IN bounds nothing. Ill-formed or mixed-type lists poison
-        # the rewrite (left in place → paren bail → {}).
-        def _in_rewrite(mm):
-            col, body = mm.group(1), mm.group(2)
-            if re.fullmatch(r"not|and|or|in", col, re.I):
-                return mm.group(0)
-            toks = [t.strip() for t in body.split(",")]
-            vals = []
-            for t in toks:
-                if not re.fullmatch(VAL, t, re.I):
-                    return mm.group(0)
-                vals.append(_decode(t))
-            try:
-                lo_i = min(range(len(vals)), key=lambda i: vals[i])
-                hi_i = max(range(len(vals)), key=lambda i: vals[i])
-                # round-13 review: this parser cannot see the column's
-                # type, so when EVERY literal also parses as a number
-                # the envelope is only sound if the string and numeric
-                # orders pick the SAME endpoints — `b IN ('1','9','10')`
-                # on an INT column would otherwise envelope to ('1','9')
-                # and a typed consumer would prune the file holding 10.
-                # Disagreement → leave the atom unrewritten (paren bail
-                # → no prune, sound).
-                if all(isinstance(v, str) for v in vals):
-                    try:
-                        nums = [float(v) for v in vals]
-                    except ValueError:
-                        nums = None
-                    if nums is not None:
-                        nlo = min(range(len(nums)), key=lambda i: nums[i])
-                        nhi = max(range(len(nums)), key=lambda i: nums[i])
-                        if vals[nlo] != vals[lo_i] or vals[nhi] != vals[hi_i]:
-                            return mm.group(0)
-            except TypeError:
-                return mm.group(0)  # mixed literal types: unboundable
-            return f" {mm.group(1)} >= {toks[lo_i]} and {mm.group(1)} <= {toks[hi_i]} "
-
-        s = re.sub(
-            rf"{COL}\s+in\s*\(([^()]*)\)", _in_rewrite, s, flags=re.I
-        )
-
-        # BETWEEN is inclusive two-sided range sugar; rewrite BEFORE the
-        # AND-split (its inner 'and' would otherwise shear the atom in
-        # two, dropping both halves — sound but blind). Keyword
-        # collisions ('not between') are left for the NOT bail.
-        def _between_rewrite(mm):
-            col, lo_t, hi_t = mm.groups()
-            if re.fullmatch(r"not|and|or|in|between", col, re.I):
-                return mm.group(0)
-            return f" {col} >= {lo_t} and {col} <= {hi_t} "
-
-        s = re.sub(
-            rf"{COL}\s+between\s+{VAL}\s+and\s+{VAL}",
-            _between_rewrite,
-            s,
-            flags=re.I,
-        )
-        if "(" in s or ")" in s or re.search(r"\b(?:or|not)\b", s, re.I):
-            return {}
-
-        out: dict[str, list] = {}
-        poisoned: set[str] = set()
-        for atom in re.split(r"\band\b", s, flags=re.I):
-            m1 = re.fullmatch(rf"\s*{COL}\s*{OPS}\s*{VAL}\s*", atom, re.I)
-            if m1:
-                col, op, tok = m1.groups()
-            else:
-                m2 = re.fullmatch(rf"\s*{VAL}\s*{OPS}\s*{COL}\s*", atom, re.I)
-                if not m2:
-                    continue
-                tok, op, col = m2.groups()
-                op = FLIP[op]
-            if re.fullmatch(r"(?:date|timestamp)", col, re.I):
-                continue
-            v = _decode(tok)
-            cur = out.setdefault(col, [None, None])
-            try:
-                if op in ("=", "==", ">", ">="):
-                    cur[0] = v if cur[0] is None else max(cur[0], v)
-                if op in ("=", "==", "<", "<="):
-                    cur[1] = v if cur[1] is None else min(cur[1], v)
-            except TypeError:
-                poisoned.add(col)  # mixed literal types on one column
-        res: dict[str, tuple] = {}
-        for c, b in out.items():
-            if c in poisoned or (b[0] is None and b[1] is None):
-                continue
-            if b[0] is not None and b[1] is not None:
-                try:
-                    b[0] <= b[1]  # both sides must live in ONE domain
-                except TypeError:
-                    continue
-            res[c] = (b[0], b[1])
-        return res
-
-    @staticmethod
-    def _cond_disjuncts(condition) -> list[dict]:
-        """WHERE-string → list of per-branch {col: (lo, hi)} range dicts
-        for a TOP-LEVEL OR of conjunctions (round 13):
-        `(day = 'a' and id > 3) or day = 'b'` → [{day, id}, {day}]. A
-        file can hold matching rows iff it can satisfy SOME branch, so
-        the prunable set is the UNION of each branch's survivors —
-        still a sound over-approximation. Returns [] (no prune) when
-        ANY branch is unboundable (`_cond_ranges` → {}): that branch
-        alone could match anywhere, making the union everything. OR
-        splitting respects parens depth and stashes quoted literals
-        first so ' or ' inside a string can never fabricate a branch;
-        AND binds tighter than OR, so a depth-0 split is precedence-
-        exact. Plain conjunctions come back as a single-element list."""
-        import re
-
-        if (
-            not isinstance(condition, str)
-            or '"' in condition
-            or "\x00" in condition
-        ):
-            return []
-        lits: list[str] = []
-
-        def _stash(mm):
-            lits.append(mm.group(1))
-            return f"\x00{len(lits) - 1}\x00"
-
-        s = re.sub(r"'([^']*)'", _stash, condition)
-        if "'" in s or re.search(r"\bnot\b", s, re.I):
-            return []
-        branches: list[str] = []
-        depth, cur = 0, []
-        for tok in re.split(r"(\(|\)|\bor\b)", s, flags=re.I):
-            if tok == "(":
-                depth += 1
-                cur.append(tok)
-            elif tok == ")":
-                depth -= 1
-                if depth < 0:
-                    return []
-                cur.append(tok)
-            elif tok is not None and depth == 0 and re.fullmatch(
-                r"or", tok, re.I
-            ):
-                branches.append("".join(cur))
-                cur = []
-            else:
-                cur.append(tok or "")
-        if depth != 0:
-            return []
-        branches.append("".join(cur))
-
-        def _unquote(b: str) -> str:
-            return re.sub(
-                r"\x00(\d+)\x00", lambda m: f"'{lits[int(m.group(1))]}'", b
-            )
-
-        COL = r"`?[A-Za-z_]\w*`?"
-        VAL = r"(?:(?:date|timestamp)?\x00\d+\x00|[-+]?\d+(?:\.\d+)?)"
-        IN_ATOM = re.compile(
-            rf"({COL})\s+in\s*\(({VAL}(?:\s*,\s*{VAL})*)\)", re.I
-        )
-
-        def _expand_in(b: str, budget: int) -> list[str]:
-            """`k IN (v1..vn)` ≡ `k=v1 OR .. OR k=vn`: expand SMALL
-            IN-lists into per-value branches so SCATTERED lists prune
-            exactly (the [min, max] envelope `_cond_ranges` falls back
-            to spans the whole table when the values sit at opposite
-            ends). Cross-product of multiple IN atoms capped at
-            `budget` expanded branches — beyond it, the envelope still
-            applies (sound, just coarser)."""
-            mm = IN_ATOM.search(b)
-            if not mm:
-                return [b]
-            col = mm.group(1)
-            if re.fullmatch(r"not|and|or|in", col, re.I):
-                return [b]
-            toks = [t.strip() for t in mm.group(2).split(",")]
-            if len(toks) > budget:
-                return [b]
-            out2: list[str] = []
-            for t_ in toks:
-                sub = b[: mm.start()] + f" {col} = {t_} " + b[mm.end():]
-                rest = _expand_in(sub, max(1, budget // len(toks)))
-                if len(rest) * len(out2) > 32:
-                    return [b]
-                out2.extend(rest)
-            return out2 if 0 < len(out2) <= 32 else [b]
-
-        out: list[dict] = []
-        for b in branches:
-            b = b.strip()
-            # strip ONE layer of wrapping parens when they match: scan
-            # for a depth-0 return before the end ('(a) and (b)' must
-            # NOT be stripped to 'a) and (b')
-            if b.startswith("(") and b.endswith(")"):
-                d = 0
-                for i, ch in enumerate(b):
-                    d += ch == "("
-                    d -= ch == ")"
-                    if d == 0 and i < len(b) - 1:
-                        break
-                else:
-                    b = b[1:-1]
-            for eb in _expand_in(b, 32):
-                rf = ManifestTable._cond_ranges(_unquote(eb))
-                if not rf:
-                    return []
-                out.append(rf)
-        return out
-
-    def _cond_coarse(self, entry: dict, condition, spark):
-        """Predicate-derived COARSE envelope for the checkpoint-level
-        pre-prune of row-level op discovery (round 13, completing the
-        r12→r13 data-plane story): `_rewrite_files` and the DV paths
-        used to materialize the FULL dict manifest — 8.2 s at 10^6
-        files — before `_auto_prune` could drop anything. This returns
-        the per-column UNION of the predicate's disjunct bounds (a
-        column bounds the union only when EVERY branch bounds it), the
-        loosest over-approximation `_auto_prune` later tightens exactly,
-        as (coarse_range, col_types) for `manifest(...)`. (None, None)
-        whenever no sound coarse bound exists: legacy full-snapshot
-        entries, mapped tables (checkpoint stats keyed by physical
-        names), non-UTC sessions (the checkpoint coarse path normalizes
-        datetime domains as UTC instants), or an unboundable predicate.
-        Sound: coarse keeps a superset of every branch's files, files
-        without stats always survive, and post-checkpoint adds are never
-        coarse-pruned."""
-        if (
-            not isinstance(entry, dict)
-            or "files" in entry
-            or entry.get("column_mapping")
-        ):
-            return None, None
-        if not _session_tz_utc(spark):
-            return None, None
-        disjuncts = self._cond_disjuncts(condition)
-        if not disjuncts:
-            return None, None
-        common = set(disjuncts[0])
-        for rf in disjuncts[1:]:
-            common &= set(rf)
-        col_types = {
-            f.name: f.dataType.simpleString()
-            for f in StructType.fromJson(
-                json.loads(self._table_schema_of(entry))
-            ).fields
-        }
-        env: dict = {}
-        for c in common:
-            # normalize every branch bound into the COLUMN's comparison
-            # domain BEFORE taking the union min/max (round-13 review: a
-            # quoted int list's envelope taken in string order — e.g.
-            # {'1','9','10'} → ('1','9') — is tighter than the true
-            # numeric envelope (1, 10) and silently missed matches);
-            # an unconvertible literal makes the branch unbounded on c,
-            # so c cannot bound the union at all
-            try:
-                los = [
-                    _lit_domain(rf[c][0], col_types.get(c, ""))
-                    for rf in disjuncts
-                ]
-                his = [
-                    _lit_domain(rf[c][1], col_types.get(c, ""))
-                    for rf in disjuncts
-                ]
-                if any(v is _REFUSE for v in los + his):
-                    continue
-                lo = None if any(v is None for v in los) else min(los)
-                hi = None if any(v is None for v in his) else max(his)
-                if lo is None and hi is None:
-                    continue
-                if lo is not None and hi is not None and not (lo <= hi):
-                    continue  # cross-domain residue: refuse, stay sound
-            except TypeError:
-                continue  # mixed branch domains: no sound envelope
-            env[c] = (lo, hi)
-        if not env:
-            return None, None
-        return env, col_types
-
-    def _auto_prune(
-        self, m: dict, files: list[dict], condition, spark=None
-    ) -> list[dict]:
-        """Automatic Delta-style data skipping for row-level DELETE /
-        UPDATE discovery (round 12 — DATAPLANE_r11 measured CoW
-        hit-discovery LINEAR in file count, 22 s for a one-row delete at
-        8192 files, with the fix gated behind an opt-in `range_filter`
-        hint): derive min/max bounds from the WHERE predicate itself via
-        `_cond_ranges` and prune the discovery scan, no user action
-        needed. Literal domains are normalized against the STORED stats
-        domain before comparing (stats serialize datetimes as isoformat
-        strings — a `timestamp'2024-01-01 05:00:00'` literal must become
-        '2024-01-01T05:00:00' or the lexicographic compare is unsound);
-        columns whose literal cannot be proven comparable in the stats'
-        own domain are dropped from the prune (sound: pruning fewer
-        files never changes results), and any residual compare error
-        falls back to the unpruned list.
-
-        `spark` (ADVICE r12): the session that will EVALUATE `condition`.
-        Spark resolves a naive `timestamp'...'` literal in the session
-        timezone, while the stored stats are UTC instants — so when the
-        session timezone is not UTC, temporal canonicalization is
-        unsound and is refused column-by-column (tz_utc=False threads
-        through `_norm_bounds`; date-only vs date-only compares, which
-        involve no instant conversion, still prune). No handle → assume
-        non-UTC (the conservative direction: fewer files pruned).
-
-        Round 13: the predicate may be a top-level OR of conjunctions
-        (`_cond_disjuncts`); survivors are the UNION of each branch's
-        surviving files — a branch that loses every provable bound keeps
-        ALL files, collapsing the union to no-prune (sound)."""
-        disjuncts = self._cond_disjuncts(condition)
-        if not disjuncts:
-            return files
-        tz_utc = _session_tz_utc(spark)
-        cmap = m.get("column_mapping") or {}
-        part_cols = set(m["partition_by"] or [])
-        col_types = {
-            f.name: f.dataType.simpleString()
-            for f in StructType.fromJson(
-                json.loads(self._table_schema_of(m))
-            ).fields
-        }
-
-        def _norm_branch(rf: dict) -> dict:
-            norm: dict = {}
-            for c, (lo, hi) in rf.items():
-                # literals into the column's comparison domain first
-                # (round-13 review: quoted numerics on numeric columns
-                # otherwise ride string order into typed compares)
-                ct = col_types.get(c, "")
-                lo = _lit_domain(lo, ct)
-                hi = _lit_domain(hi, ct)
-                if lo is _REFUSE or hi is _REFUSE:
-                    continue
-                if (
-                    lo is not None
-                    and hi is not None
-                    and type(lo) is type(hi)
-                    and not isinstance(lo, str)
-                    and lo > hi
-                ):
-                    continue  # residual inversion: refuse, stay sound
-                if c in part_cols:
-                    # typed partition compare canonicalizes its own
-                    # domain — but temporal partition values under a
-                    # non-UTC session have the same literal-vs-instant
-                    # hazard, so they are gated identically (date
-                    # partitions with date-only bounds stay prunable;
-                    # timestamps need UTC)
-                    if not tz_utc and ct.startswith("timestamp"):
-                        continue
-                    norm[c] = (lo, hi)
-                    continue
-                sc = cmap.get(c, c)
-                sample = next(
-                    (
-                        e["stats"][sc][0]
-                        for e in files
-                        if e.get("stats", {}).get(sc)
-                        and e["stats"][sc][0] is not None
-                    ),
-                    None,
-                )
-                nb = _norm_bounds(
-                    lo, hi, sample, col_type=col_types.get(c), tz_utc=tz_utc
-                )
-                if nb is not None:
-                    norm[c] = nb
-            return {
-                c: b
-                for c, b in norm.items()
-                if b[0] is not None or b[1] is not None
-            }
-
-        try:
-            surviving: set | None = set()
-            for rf in disjuncts:
-                norm = _norm_branch(rf)
-                if not norm:
-                    return files  # this branch alone can match anywhere
-                kept = self._prune_files_range(
-                    m, files, norm, tz_utc=tz_utc, col_types=col_types
-                )
-                surviving.update(e["path"] for e in kept)
-            return [e for e in files if e["path"] in surviving]
-        except Exception:
-            return files  # pruning is an optimization, never a crash
+        return self._load_snapshot(spark, m, keep(m, m["files"], pred))
 
     # ---------- table services over the log ----------
 
@@ -2909,6 +1949,19 @@ class ManifestTable:
         plus `_rel`/`_pos` provenance columns."""
         return self._load_snapshot(spark, m, m["files"], provenance=True)
 
+    def _where_snapshot(self, spark: SparkSession, condition):
+        """(latest version, its manifest, the files that can hold a row
+        matching `condition`, `condition` as a Column): the discovery
+        prelude of every row-level op. A WHERE string prunes through
+        `prune.from_where`; Column conditions prune nothing."""
+        latest = self.latest_version()
+        if latest is None:
+            raise FileNotFoundError(f"no committed version at {self.root}")
+        pred = from_where(condition, spark)
+        m = self.manifest(latest, prune=pred)
+        cond = F.expr(condition) if isinstance(condition, str) else condition
+        return latest, m, keep(m, m["files"], pred), cond
+
     def _rewrite_files(
         self,
         spark: SparkSession,
@@ -2934,33 +1987,15 @@ class ManifestTable:
         Delta's serializable DELETE). A no-match predicate is a no-op
         returning the current version (no empty commit).
 
-        `range_filter` (round 11, the data-plane soak measured the
-        discovery scan linear in file count — 22 s at 8192 files): the
-        manifest-stats skipping lever read() has, applied to the
-        DISCOVERY scan, so a stats-clustered DELETE/UPDATE schedules
-        O(overlapping files) tasks instead of O(table files). The caller
-        CONTRACT is Delta's replaceWhere-hint contract: the ranges must
-        OVER-APPROXIMATE `condition` (every row the condition can match
-        lies inside them) — files without stats are always kept, so a
-        correct hint can never change the result, only the work."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
-        # round 13: the predicate's coarse envelope pre-prunes INSIDE the
-        # parquet checkpoint read, so discovery materializes O(selected)
-        # entries instead of the full dict manifest (8.2 s at 10^6 files)
-        coarse, ctypes = self._cond_coarse(
-            self._raw(latest), condition, spark
-        )
-        m = self.manifest(latest, coarse_range=coarse, col_types=ctypes)
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        files = m["files"]
-        if range_filter:
-            files = self._prune_files_range(m, files, range_filter)
-        # round 12: hint-free automatic skipping — bounds derived from
-        # the WHERE predicate itself (composes with an explicit hint:
-        # both are over-approximations, so applying both stays sound)
-        files = self._auto_prune(m, files, condition, spark=spark)
+        Discovery only scans the files a WHERE-string `condition` can
+        match (`_where_snapshot`). `range_filter` is an explicit hint
+        applied on top, with Delta's replaceWhere-hint contract: the
+        ranges must OVER-APPROXIMATE `condition` (every row the condition
+        can match lies inside them) — files without stats are always
+        kept, so a correct hint can never change the result, only the
+        work."""
+        latest, m, files, cond = self._where_snapshot(spark, condition)
+        files = keep(m, files, from_dicts(range_filter=range_filter))
         prov = self._load_snapshot(spark, m, files, provenance=True)
         hit = [
             r._rel
@@ -3137,26 +2172,8 @@ class ManifestTable:
         direction for skipping (a pruned file never contains live
         matches). Conflict semantics match the CoW path: the DV was
         derived from a snapshot, so any racing commit aborts it."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
-        # round 13: coarse envelope pre-prunes inside the parquet
-        # checkpoint read — O(selected) entry materialization (hits are
-        # a subset of the coarse survivors, so the dv re-add lookup and
-        # the exact _auto_prune below are unaffected)
-        coarse, ctypes = self._cond_coarse(
-            self._raw(latest), condition, spark
-        )
-        m = self.manifest(latest, coarse_range=coarse, col_types=ctypes)
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        # round 12: the DV match scan only needs files that CAN contain
-        # matches — same automatic WHERE-derived skipping as the CoW path
-        # (files outside the bounds hold no matched positions, so they
-        # need no DV entry; pruning them cannot change the result)
-        prov = self._load_snapshot(
-            spark, m, self._auto_prune(m, m["files"], condition, spark=spark),
-            provenance=True,
-        )
+        latest, m, files, cond = self._where_snapshot(spark, condition)
+        prov = self._load_snapshot(spark, m, files, provenance=True)
         matched = prov.filter(
             F.coalesce(cond.cast("boolean"), F.lit(False))
         )
@@ -3281,26 +2298,8 @@ class ManifestTable:
         vector; their transformed images → a fresh appended data file
         (written through the normal txn path, so it lands in the table's
         partition layout with footer stats like any commit)."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
-        # round 13: coarse envelope pre-prunes inside the parquet
-        # checkpoint read — O(selected) entry materialization (hits are
-        # a subset of the coarse survivors, so the dv re-add lookup and
-        # the exact _auto_prune below are unaffected)
-        coarse, ctypes = self._cond_coarse(
-            self._raw(latest), condition, spark
-        )
-        m = self.manifest(latest, coarse_range=coarse, col_types=ctypes)
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        # round 12: the DV match scan only needs files that CAN contain
-        # matches — same automatic WHERE-derived skipping as the CoW path
-        # (files outside the bounds hold no matched positions, so they
-        # need no DV entry; pruning them cannot change the result)
-        prov = self._load_snapshot(
-            spark, m, self._auto_prune(m, m["files"], condition, spark=spark),
-            provenance=True,
-        )
+        latest, m, files, cond = self._where_snapshot(spark, condition)
+        prov = self._load_snapshot(spark, m, files, provenance=True)
         matched = prov.filter(
             F.coalesce(cond.cast("boolean"), F.lit(False))
         )
@@ -4221,27 +3220,27 @@ class MergeBuilder:
                 f"source columns)"
             )
         on = F.expr(self._on) if isinstance(self._on, str) else self._on
-        # ---- automatic target-file skipping (round 11 — the data-plane
-        # soak measured touched-file discovery linear in file count):
-        # when ON is a conjunction holding `t.c = s.c` equalities on
-        # stats columns, ONE tiny agg computes the SOURCE's key bounds
-        # and every target file whose [min, max] cannot intersect them
-        # is dropped from (a) the matched-discovery join — it can hold
-        # no matched pair — and (b) the insert anti-join — a source row
-        # can only match target rows with EQUAL keys, so disjoint files
-        # cannot veto an insert. Delta's MERGE does the same min/max
-        # pushdown. NOT-MATCHED-BY-SOURCE needs every target row and
-        # gets the FULL snapshot, built lazily below — exactly ONE
-        # multi-path DataFrame is constructed up front (constructing a
-        # full 10^4-path frame AND a pruned one costs two driver-side
-        # file-index passes: measured +60% on an unprunable merge), and
-        # the prune engages only past a 10% saving for the same reason.
+        # ---- target-file skipping: when ON holds `t.c = s.c` equalities,
+        # one agg over the source gives its key bounds, and target files
+        # that cannot hold those keys drop out of the matched-discovery
+        # join and the insert anti-join (a source row only matches equal
+        # keys). One provenance frame is built up front and the prune
+        # engages only past a 10% saving: building a full frame AND a
+        # pruned one costs two driver file-index passes. Keys bound
+        # anything only when the source type orders like the target's.
+        stypes = {f.name: f.dataType for f in src.schema.fields}
         keys = [
             (tc, sc)
             for tc, sc in self._equi_keys()
-            if tc in tcols and sc in src.columns
+            if tc in tcols
+            and sc in stypes
+            and (
+                stypes[sc] == ttypes[tc]
+                or isinstance(stypes[sc], NumericType)
+                and isinstance(ttypes[tc], NumericType)
+            )
         ]
-        rf: dict = {}
+        pred = None
         if keys and prune_ok:
             aggs = []
             for i, (_tc, sc) in enumerate(keys):
@@ -4254,49 +3253,20 @@ class MergeBuilder:
             except Exception:
                 b = None  # un-orderable key type — skip pruning, stay sound
             if b is not None:
-                for i, (tc, _sc) in enumerate(keys):
-                    lo, hi = b[f"__lo{i}"], b[f"__hi{i}"]
-                    if lo is not None and hi is not None:
-                        rf[tc] = (lo, hi)
-        # round 13 (the #70 lever applied to MERGE): the source bounds
-        # also pre-prune INSIDE the parquet checkpoint read, so touched-
-        # file discovery materializes O(selected) entries — gated OFF
-        # when a NOT-MATCHED-BY-SOURCE clause exists (it needs the FULL
-        # snapshot), for mapped/legacy tables, and under non-UTC
-        # sessions (collected timestamp bounds are session-zone naive)
-        coarse = ctypes = None
-        if (
-            rf
-            and not self._nms
-            and "files" not in e0
-            and not e0.get("column_mapping")
-            and _session_tz_utc(spark)
-        ):
-            coarse = rf
-            ctypes = {
-                f.name: f.dataType.simpleString() for f in schema.fields
-            }
-        m = t.manifest(latest, coarse_range=coarse, col_types=ctypes)
+                rf = {
+                    tc: (b[f"__lo{i}"], b[f"__hi{i}"])
+                    for i, (tc, _sc) in enumerate(keys)
+                    if b[f"__lo{i}"] is not None and b[f"__hi{i}"] is not None
+                }
+                # collected timestamps are wall times in the session zone
+                pred = Pred([rf], _session_tz_utc(spark)) if rf else None
+        # NOT-MATCHED-BY-SOURCE needs every target file: no checkpoint
+        # pre-filter then, and `prov` below reads the full list
+        m = t.manifest(latest, prune=None if self._nms else pred)
         sel_files = m["files"]
-        if rf:
-            # ADVICE r11: _prune_files_range compares source bounds
-            # against stored stats with raw Python operators — a
-            # source key whose type differs from the stats domain
-            # (string source vs numeric target stats, where the Spark
-            # join would implicitly cast) raises TypeError. Pruning is
-            # an optimization: fall back to the unpruned list rather
-            # than crash a previously-working MERGE.
-            # ADVICE r12: collected timestamp bounds are naive in
-            # the SESSION timezone — only UTC sessions may compare
-            # them against the UTC-aware stored stats
-            try:
-                pf = t._prune_files_range(
-                    m, sel_files, rf, tz_utc=_session_tz_utc(spark)
-                )
-            except Exception:
-                pf = sel_files
-            if len(pf) <= 0.9 * len(sel_files):
-                sel_files = pf
+        pf = keep(m, sel_files, pred)
+        if len(pf) <= 0.9 * len(sel_files):
+            sel_files = pf
         pruned_prov = t._load_snapshot(spark, m, sel_files, provenance=True)
         prov = pruned_prov if sel_files is m["files"] else None
 

@@ -128,13 +128,6 @@ class ManifestStreamReader(DataSourceStreamReader):
         # UNPACED (full drain, one batch per trigger semantics intact)
         # and use processing-time triggers when pacing matters.
         self._max_versions = int(options.get("maxversionspertrigger", 0))
-        # batch-reader parity (round 15): "auto" (default) size-packs a
-        # micro-batch's files via the shared pack_by_size rule; an
-        # explicit integer pins fixed-k files per input partition
-        fpp = str(options.get("filesperpartition", "auto")).lower()
-        self._files_per_partition = (
-            None if fpp == "auto" else max(1, int(fpp))
-        )
         self._paced_backfill = str(
             options.get("pacedinitialbackfill", "false")
         ).lower() in ("true", "1")
@@ -269,15 +262,7 @@ class ManifestStreamReader(DataSourceStreamReader):
             # not its file count — a backfill batch spanning thousands
             # of small-file commits reads in ~core-count tasks instead
             # of one Python-worker round-trip per file
-            k = self._files_per_partition
-            bins = (
-                pack_by_size([b for _r, _p, b in rels])
-                if k is None
-                else [
-                    list(range(i, min(i + k, len(structs))))
-                    for i in range(0, len(structs), k)
-                ]
-            )
+            bins = pack_by_size([b for _r, _p, b in rels])
             parts = [
                 _FilePartition(
                     *structs[bin[0]],

@@ -199,9 +199,9 @@ def phase_delete_cow(spark, tab, n_files: int) -> dict:
 def phase_delete_in_list(spark, tab, n_files: int) -> dict:
     """Round 13 (VERDICT r12 item 5): the common retention-delete shape —
     `DELETE WHERE id IN (a, b, c)` with SCATTERED values — must stay flat
-    in F: `_cond_disjuncts` expands the small IN-list into per-value
-    branches and the discovery scan unions exactly the hit files (the
-    [min, max] envelope would span the whole table here)."""
+    in F: the IN list stays a value set (`prune.from_where`), so the
+    discovery scan keeps exactly the hit files (the [min, max] envelope
+    would span the whole table here)."""
     before = tab.latest_version()
     targets = [
         (n_files // 8) * ROWS_PER_FILE,

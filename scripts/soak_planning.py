@@ -4,7 +4,7 @@ driver-side O(F) over the JSON checkpoint. This script measures, at
 each file count F:
 
   - checkpoint load + snapshot reconstruction (`manifest(v)`) ms,
-  - stats pruning over the full list (`_prune_files_range`) ms,
+  - stats pruning over the full list (the dict evaluator `prune.keep`) ms,
   - pruned-scan DataFrame construction (`_load_snapshot` on the
     pruned file subset) ms,
   - full-scan DataFrame construction ms (the unprunable worst case),
@@ -39,6 +39,7 @@ import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
 from data_lakes_tp2_student_spark.io.manifest import ManifestTable  # noqa: E402
+from data_lakes_tp2_student_spark.io.prune import Pred, keep  # noqa: E402
 from data_lakes_tp2_student_spark.session import get_spark  # noqa: E402
 
 
@@ -137,17 +138,16 @@ def bench_once(
     t_load = time.perf_counter() - t0
     n = len(m["files"])
 
+    pred = Pred([{"id": (42, 42)}])
     t0 = time.perf_counter()
-    pruned = tab._prune_files_range(m, m["files"], {"id": (42, 42)})
+    pruned = keep(m, m["files"], pred)
     t_prune = time.perf_counter() - t0
     assert len(pruned) == 1, len(pruned)
 
     # the fused path: checkpoint load + COARSE prune in one step (the
     # parquet checkpoint prunes columnar before materializing dicts)
     t0 = time.perf_counter()
-    coarse = tab.manifest(
-        tab.latest_version(), coarse_range={"id": (42, 42)}
-    )["files"]
+    coarse = tab.manifest(tab.latest_version(), prune=pred)["files"]
     t_coarse = time.perf_counter() - t0
     assert 1 <= len(coarse) <= n
 

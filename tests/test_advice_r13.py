@@ -34,8 +34,20 @@ from data_lakes_tp2_student_spark.io.manifest import (
     ManifestTable,
     _ckpt_from_parquet,
     _ckpt_to_parquet_bytes,
-    _norm_bounds,
 )
+from data_lakes_tp2_student_spark.io.prune import (
+    Pred,
+    _norm_bounds,
+    envelope,
+    from_where,
+    keep,
+)
+
+
+def _where(cond):
+    """The parsed branches of `cond` ([] when it prunes nothing)."""
+    p = from_where(cond)
+    return p.branches if p else []
 
 
 def _spy_loads(monkeypatch):
@@ -171,7 +183,8 @@ def test_string_column_with_iso_date_values_not_date_floored(
 
 def test_string_column_iso_dates_checkpoint_coarse_path(spark, tmp_path):
     """Same hazard at the COLUMNAR checkpoint's vectorized coarse prune:
-    the committed schema type is threaded down to _ckpt_from_parquet."""
+    the committed schema type rides the envelope into the checkpoint
+    filter."""
     tab = ManifestTable(
         str(tmp_path / "t"),
         stats_cols=["s"],
@@ -299,7 +312,7 @@ def test_ckpt_mixed_column_coarse_prune_sound():
         ],
     }
     out = _ckpt_from_parquet(
-        _ckpt_to_parquet_bytes(body), coarse_range={"x": (big, big)}
+        _ckpt_to_parquet_bytes(body), {"x": ((big, big), "bigint")}
     )
     assert [e["path"] for e in out["files"]] == ["a.parquet", "b.parquet"]
 
@@ -310,54 +323,70 @@ def test_ckpt_mixed_column_coarse_prune_sound():
 
 
 def test_cond_ranges_in_list():
-    cr = ManifestTable._cond_ranges
-    assert cr("day IN ('2024-01-01','2024-01-02')") == {
-        "day": ("2024-01-01", "2024-01-02")
-    }
-    assert cr("k in (9, 3, 5)") == {"k": (3, 9)}
-    assert cr("k in (9, 3) and k >= 4") == {"k": (4, 9)}
-    assert cr("d in (date'2024-01-05', date'2024-01-02')") == {
-        "d": ("2024-01-02", "2024-01-05")
-    }
-    # NOT IN bounds nothing; malformed/mixed lists bail entirely
-    assert cr("k not in (3, 9)") == {}
-    assert cr("k in ()") == {}
-    assert cr("k in (3, 'x')") == {}
-    assert cr("k in (select v from t)") == {}
+    """IN lists stay value sets (typed later, per value)."""
+    assert _where("day IN ('2024-01-01','2024-01-02')") == [
+        {"day": frozenset({"2024-01-01", "2024-01-02"})}
+    ]
+    assert _where("k in (9, 3, 5)") == [{"k": frozenset({3, 5, 9})}]
+    # a conjunction keeps the value set (any conjunct alone is sound)
+    assert _where("k in (9, 3) and k >= 4") == [{"k": frozenset({3, 9})}]
+    assert _where("d in (date'2024-01-05', date'2024-01-02')") == [
+        {"d": frozenset({"2024-01-02", "2024-01-05"})}
+    ]
+    # NOT IN, empty lists and subqueries bound nothing
+    assert _where("k not in (3, 9)") == []
+    assert _where("k in ()") == []
+    assert _where("k in (select v from t)") == []
+    # a mixed list parses; on an INT column 'x' has no value, so the
+    # normalizer drops the whole set and every file is kept
+    assert _where("k in (3, 'x')") == [{"k": frozenset({3, "x"})}]
+    files = [
+        {"path": f"f{i}", "partition": {}, "stats": {"k": [i, i]}}
+        for i in range(5)
+    ]
+    kept = keep({"partition_by": []}, files, from_where("k in (3, 'x')"),
+                {"k": "int"})
+    assert kept == files
 
 
 def test_cond_disjuncts():
-    cd = ManifestTable._cond_disjuncts
-    assert cd("day = 'a' or day = 'b'") == [
+    assert _where("day = 'a' or day = 'b'") == [
         {"day": ("a", "a")},
         {"day": ("b", "b")},
     ]
-    assert cd("(day = 'a' and id > 3) or day = 'b'") == [
+    assert _where("(day = 'a' and id > 3) or day = 'b'") == [
         {"day": ("a", "a"), "id": (3, None)},
         {"day": ("b", "b")},
     ]
-    # small IN-lists expand into exact per-value branches (scattered
-    # values prune to their own files instead of the whole envelope)
-    assert cd("k in (1, 5) or k = 9") == [
-        {"k": (1, 1)},
-        {"k": (5, 5)},
+    # IN lists are value sets: scattered values prune to their own files
+    # instead of the [min, max] envelope, with no size cap
+    assert _where("k in (1, 5) or k = 9") == [
+        {"k": frozenset({1, 5})},
         {"k": (9, 9)},
     ]
-    assert cd("id in (3, 5000)") == [{"id": (3, 3)}, {"id": (5000, 5000)}]
-    # over-budget lists fall back to the [min, max] envelope (sound)
+    assert _where("id in (3, 5000)") == [{"id": frozenset({3, 5000})}]
     big = "id in (" + ",".join(str(i * 100) for i in range(40)) + ")"
-    assert cd(big) == [{"id": (0, 3900)}]
-    # cross-product of two small INs, capped at 32 branches
-    r = cd("a in (1,2) and b in (10,20)")
-    assert len(r) == 4 and {"a": (1, 1), "b": (10, 10)} in r
+    assert _where(big) == [{"id": frozenset(range(0, 4000, 100))}]
+    # two IN lists in one conjunction: one branch, two value sets
+    assert _where("a in (1,2) and b in (10,20)") == [
+        {"a": frozenset({1, 2}), "b": frozenset({10, 20})}
+    ]
     # plain conjunction → single branch
-    assert cd("id = 7") == [{"id": (7, 7)}]
+    assert _where("id = 7") == [{"id": (7, 7)}]
     # one unboundable branch collapses the union to no-prune
-    assert cd("day = 'a' or length(v) > 2") == []
+    assert _where("day = 'a' or length(v) > 2") == []
     # ' or ' inside a quoted literal can never fabricate a branch
-    assert cd("name = 'x or y'") == [{"name": ("x or y", "x or y")}]
-    assert cd("not id = 7") == []
-    assert cd(None) == []
+    assert _where("name = 'x or y'") == [{"name": ("x or y", "x or y")}]
+    assert _where("not id = 7") == []
+    assert _where(None) == []
+    # scattered values keep exactly their files
+    files = [
+        {"path": f"f{i}", "partition": {}, "stats": {"id": [i * 100, i * 100 + 99]}}
+        for i in range(60)
+    ]
+    kept = keep({"partition_by": []}, files, from_where("id in (3, 5000)"),
+                {"id": "int"})
+    assert [e["path"] for e in kept] == ["f0", "f50"]
 
 
 def test_delete_in_list_auto_prunes(spark, tmp_path, monkeypatch):
@@ -450,25 +479,21 @@ def test_session_split_conf_applied(spark):
 
 
 def test_cond_ranges_between():
-    """Round 13: BETWEEN is inclusive two-sided range sugar — rewritten
-    before the AND-split (its inner 'and' would otherwise shear the
-    atom, dropping both halves)."""
-    cr = ManifestTable._cond_ranges
-    cd = ManifestTable._cond_disjuncts
-    assert cr("ts between 3 and 9") == {"ts": (3, 9)}
-    assert cr("day between '2024-01-01' and '2024-01-05'") == {
-        "day": ("2024-01-01", "2024-01-05")
-    }
-    assert cr("g = 2 and ts between 3 and 9") == {
-        "ts": (3, 9),
-        "g": (2, 2),
-    }
-    assert cr("d between date'2024-01-02' and date'2024-01-05'") == {
-        "d": ("2024-01-02", "2024-01-05")
-    }
+    """BETWEEN is inclusive two-sided range sugar; its inner 'and' is
+    not a conjunction split point."""
+    assert _where("ts between 3 and 9") == [{"ts": (3, 9)}]
+    assert _where("day between '2024-01-01' and '2024-01-05'") == [
+        {"day": ("2024-01-01", "2024-01-05")}
+    ]
+    assert _where("g = 2 and ts between 3 and 9") == [
+        {"ts": (3, 9), "g": (2, 2)}
+    ]
+    assert _where("d between date'2024-01-02' and date'2024-01-05'") == [
+        {"d": ("2024-01-02", "2024-01-05")}
+    ]
     # NOT BETWEEN bounds nothing
-    assert cr("ts not between 3 and 9") == {}
-    assert cd("ts between 3 and 9 or ts = 50") == [
+    assert _where("ts not between 3 and 9") == []
+    assert _where("ts between 3 and 9 or ts = 50") == [
         {"ts": (3, 9)},
         {"ts": (50, 50)},
     ]
@@ -514,9 +539,8 @@ def test_delete_discovery_coarse_prunes_at_checkpoint(spark, tmp_path,
     seen: list[int] = []
     orig = ManifestTable.manifest
 
-    def spy(self, version, coarse_range=None, col_types=None,
-            coarse_parts=None):
-        m = orig(self, version, coarse_range, col_types, coarse_parts)
+    def spy(self, version, prune=None):
+        m = orig(self, version, prune)
         seen.append(len(m["files"]))
         return m
 
@@ -532,9 +556,8 @@ def test_delete_discovery_coarse_prunes_at_checkpoint(spark, tmp_path,
     # normalization), discovery sees the full list, result stays exact
     seen2: list[int] = []
 
-    def spy2(self, version, coarse_range=None, col_types=None,
-             coarse_parts=None):
-        m = orig(self, version, coarse_range, col_types, coarse_parts)
+    def spy2(self, version, prune=None):
+        m = orig(self, version, prune)
         seen2.append(len(m["files"]))
         return m
 
@@ -568,9 +591,8 @@ def test_merge_discovery_coarse_prunes_at_checkpoint(spark, tmp_path,
     seen: list[int] = []
     orig = ManifestTable.manifest
 
-    def spy(self, version, coarse_range=None, col_types=None,
-            coarse_parts=None):
-        m = orig(self, version, coarse_range, col_types, coarse_parts)
+    def spy(self, version, prune=None):
+        m = orig(self, version, prune)
         seen.append(len(m["files"]))
         return m
 
@@ -590,9 +612,8 @@ def test_merge_discovery_coarse_prunes_at_checkpoint(spark, tmp_path,
     n_now = len(tab._snapshot_files(tab.latest_version()))
     seen2: list[int] = []
 
-    def spy2(self, version, coarse_range=None, col_types=None,
-             coarse_parts=None):
-        m = orig(self, version, coarse_range, col_types, coarse_parts)
+    def spy2(self, version, prune=None):
+        m = orig(self, version, prune)
         seen2.append(len(m["files"]))
         return m
 
@@ -651,18 +672,31 @@ def test_quoted_int_in_list_stats_column_exact(spark, tmp_path):
 
 
 def test_in_rewrite_order_disagreement_refuses_envelope():
-    """The schema-blind parser refuses an IN envelope whenever the
-    string and numeric orders disagree on the endpoints (it cannot know
-    which domain the column lives in)."""
-    cr = ManifestTable._cond_ranges
-    # 33+ values forces the envelope path (expansion cap is 32)
+    """The parser stays schema-blind (IN lists are raw value sets); the
+    checkpoint envelope hulls them only after typing each value, so the
+    string and numeric orders can never be confused."""
+    import json as _json
+
+    def entry(ktype):
+        return {"table_schema": _json.dumps({
+            "type": "struct",
+            "fields": [{"name": "k", "type": ktype, "nullable": True,
+                        "metadata": {}}],
+        })}
+
     vals = ", ".join(f"'{v}'" for v in list(range(100, 131)) + [1, 9])
-    assert cr(f"k in ({vals})") == {}
-    # agreeing orders still envelope ('100'..'131' share a width)
+    pred = Pred(from_where(f"k in ({vals})").branches)
+    # INT column: numeric hull; STRING column: string order is the domain
+    assert envelope(pred, entry("integer")) == {"k": ((1, 130), "int")}
+    assert envelope(pred, entry("string")) == {"k": (("1", "9"), "string")}
     vals2 = ", ".join(f"'{v}'" for v in range(100, 140))
-    assert cr(f"k in ({vals2})") == {"k": ("100", "139")}
+    pred2 = Pred(from_where(f"k in ({vals2})").branches)
+    assert envelope(pred2, entry("integer")) == {"k": ((100, 139), "int")}
     # duplicated endpoint values never false-refuse
-    assert cr("k in ('2', '2')") == {"k": ("2", "2")}
+    assert _where("k in ('2', '2')") == [{"k": frozenset({"2"})}]
+    assert envelope(Pred(_where("k in ('2', '2')")), entry("integer")) == {
+        "k": ((2, 2), "int")
+    }
 
 
 def test_no_match_delete_fully_pruned_is_noop(spark, tmp_path):
@@ -681,7 +715,7 @@ def test_no_match_delete_fully_pruned_is_noop(spark, tmp_path):
 
 
 def test_partition_range_tz_gate_unit():
-    """Review finding 3: _prune_files_range's typed PARTITION branch
+    """Review finding 3: the dict evaluator's typed PARTITION compare
     honors tz_utc — timestamp partition columns refuse pruning under a
     non-UTC session; date columns stay prunable only for date-only
     bounds."""
@@ -710,23 +744,14 @@ def test_partition_range_tz_gate_unit():
         {"path": "b", "partition": {"ts": "2024-01-03 05:00:00",
                                     "d": "2024-01-03"}},
     ]
-    tab = ManifestTable.__new__(ManifestTable)
     # timestamp partition: prunes under UTC, refuses otherwise
-    kept_utc = tab._prune_files_range(
-        m, files, {"ts": ("2024-01-03", None)}, tz_utc=True
-    )
+    kept_utc = keep(m, files, Pred([{"ts": ("2024-01-03", None)}], True))
     assert [e["path"] for e in kept_utc] == ["b"]
-    kept_local = tab._prune_files_range(
-        m, files, {"ts": ("2024-01-03", None)}, tz_utc=False
-    )
+    kept_local = keep(m, files, Pred([{"ts": ("2024-01-03", None)}], False))
     assert [e["path"] for e in kept_local] == ["a", "b"]
     # date partition: date-only bounds prune under any tz; a
     # time-carrying bound refuses when not tz_utc
-    kept_d = tab._prune_files_range(
-        m, files, {"d": ("2024-01-03", None)}, tz_utc=False
-    )
+    kept_d = keep(m, files, Pred([{"d": ("2024-01-03", None)}], False))
     assert [e["path"] for e in kept_d] == ["b"]
-    kept_dt = tab._prune_files_range(
-        m, files, {"d": ("2024-01-02 10:00", None)}, tz_utc=False
-    )
+    kept_dt = keep(m, files, Pred([{"d": ("2024-01-02 10:00", None)}], False))
     assert [e["path"] for e in kept_dt] == ["a", "b"]

@@ -27,10 +27,8 @@ from __future__ import annotations
 
 import datetime
 
-from data_lakes_tp2_student_spark.io.manifest import (
-    ManifestTable,
-    _typed_part_value,
-)
+from data_lakes_tp2_student_spark.io.manifest import ManifestTable
+from data_lakes_tp2_student_spark.io.prune import _typed_part_value
 
 
 def test_typed_part_value_refuses_aware(monkeypatch):

@@ -20,6 +20,7 @@ from data_lakes_tp2_student_spark.io.manifest import (
     ManifestTable,
     _plan_deterministic,
 )
+from data_lakes_tp2_student_spark.io.prune import from_where, keep
 
 
 def _spy_loads(monkeypatch):
@@ -36,54 +37,74 @@ def _spy_loads(monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# _cond_ranges: the conservative WHERE parser
+# from_where: the conservative WHERE parser
 # ---------------------------------------------------------------------------
 
 
+def _where(cond):
+    """The parsed branches of `cond` ([] when it prunes nothing)."""
+    p = from_where(cond)
+    return p.branches if p else []
+
+
 def test_cond_ranges_conjunction_and_orientation():
-    cr = ManifestTable._cond_ranges
-    assert cr("id = 7") == {"id": (7, 7)}
-    assert cr("7 = id") == {"id": (7, 7)}
-    assert cr("id >= 3 and id <= 9") == {"id": (3, 9)}
+    assert _where("id = 7") == [{"id": (7, 7)}]
+    assert _where("7 = id") == [{"id": (7, 7)}]
+    assert _where("id >= 3 and id <= 9") == [{"id": (3, 9)}]
     # reversed operands flip the operator
-    assert cr("3 <= id AND 9 >= id") == {"id": (3, 9)}
+    assert _where("3 <= id AND 9 >= id") == [{"id": (3, 9)}]
     # strict ops widen to inclusive (over-approximation)
-    assert cr("id > 3 and id < 9") == {"id": (3, 9)}
+    assert _where("id > 3 and id < 9") == [{"id": (3, 9)}]
     # one-sided ranges survive
-    assert cr("ts >= 100") == {"ts": (100, None)}
-    assert cr("ts <= 100") == {"ts": (None, 100)}
+    assert _where("ts >= 100") == [{"ts": (100, None)}]
+    assert _where("ts <= 100") == [{"ts": (None, 100)}]
     # repeated bounds tighten
-    assert cr("id >= 3 and id >= 5 and id <= 9 and id <= 7") == {
-        "id": (5, 7)
-    }
-    # multiple columns, unparsed conjuncts ignored (sound subset)
-    assert cr("id = 4 and length(v) > 2") == {}  # parens bail entirely
-    assert cr("id = 4 and v2 like 'x%'") == {"id": (4, 4)}
+    assert _where("id >= 3 and id >= 5 and id <= 9 and id <= 7") == [
+        {"id": (5, 7)}
+    ]
+    # conjuncts of other shapes (functions, LIKE) are ignored: the
+    # remaining conjuncts still bound every matching row
+    assert _where("id = 4 and length(v) > 2") == [{"id": (4, 4)}]
+    assert _where("id = 4 and v2 like 'x%'") == [{"id": (4, 4)}]
 
 
 def test_cond_ranges_literals_and_bailouts():
-    cr = ManifestTable._cond_ranges
-    assert cr("day = 'd1'") == {"day": ("d1", "d1")}
-    assert cr("ts >= timestamp'2024-01-05 00:00:00'") == {
-        "ts": ("2024-01-05 00:00:00", None)
-    }
-    assert cr("d = date'2024-01-05'") == {"d": ("2024-01-05", "2024-01-05")}
-    assert cr("id = 1.5") == {"id": (1.5, 1.5)}
+    assert _where("day = 'd1'") == [{"day": ("d1", "d1")}]
+    assert _where("ts >= timestamp'2024-01-05 00:00:00'") == [
+        {"ts": ("2024-01-05 00:00:00", None)}
+    ]
+    assert _where("d = date'2024-01-05'") == [
+        {"d": ("2024-01-05", "2024-01-05")}
+    ]
+    assert _where("id = 1.5") == [{"id": (1.5, 1.5)}]
     # a literal containing ' and ' can never fabricate an atom
-    assert cr("name = 'a and id = 7 and b'") == {
-        "name": ("a and id = 7 and b", "a and id = 7 and b")
-    }
-    # OR / NOT / parens / double quotes / Column conditions bail
-    assert cr("id = 7 or id = 9") == {}
-    assert cr("not id = 7") == {}
-    assert cr("(id = 7)") == {}
-    assert cr('id = "x"') == {}
-    assert cr(object()) == {}  # non-string (Column) conditions bail
-    assert cr(None) == {}
-    # mixed literal types on one column poison it
-    assert cr("id >= 3 and id <= 'x'") == {}
+    assert _where("name = 'a and id = 7 and b'") == [
+        {"name": ("a and id = 7 and b", "a and id = 7 and b")}
+    ]
+    # OR splits into branches; wrapping parens are stripped
+    assert _where("id = 7 or id = 9") == [{"id": (7, 7)}, {"id": (9, 9)}]
+    assert _where("(id = 7)") == [{"id": (7, 7)}]
+    # NOT / double quotes / Column conditions bound nothing
+    assert _where("not id = 7") == []
+    assert _where('id = "x"') == []
+    assert _where(object()) == []  # non-string (Column) conditions bail
+    assert _where(None) == []
+    # mixed literal types on one column: both sides stay raw; the
+    # normalizer drops the side with no sound conversion (see below)
+    assert _where("id >= 3 and id <= 'x'") == [{"id": (3, "x")}]
     # purely numeric LHS and RHS is not a column comparison
-    assert cr("5 = 3") == {}
+    assert _where("5 = 3") == []
+
+
+def test_unconvertible_side_is_unbounded():
+    """The 'x' bound has no INT-domain value, so only `id >= 3` prunes."""
+    files = [
+        {"path": f"f{i}", "partition": {}, "stats": {"id": [i * 10, i * 10 + 9]}}
+        for i in range(4)
+    ]
+    m = {"partition_by": []}
+    kept = keep(m, files, from_where("id >= 13 and id <= 'x'"), {"id": "int"})
+    assert [e["path"] for e in kept] == ["f1", "f2", "f3"]
 
 
 # ---------------------------------------------------------------------------
@@ -237,9 +258,9 @@ def test_merge_on_with_quoted_literal_disables_parse_and_stays_correct(
 
 def test_merge_prune_type_mismatch_falls_back_not_crashes(spark, tmp_path):
     """ADVICE r11 #2: string source keys vs numeric target stats — the
-    raw-Python bounds compare raises TypeError inside
-    _prune_files_range; the merge must fall back to the unpruned file
-    list and produce the implicit-cast join result Spark gives."""
+    source's string-order bounds cannot bound the int matches, so the
+    merge must not prune on that key and must produce the implicit-cast
+    join result Spark gives."""
     tab = ManifestTable(str(tmp_path / "t"), stats_cols=["id"])
     tab.commit_overwrite(
         spark.createDataFrame(

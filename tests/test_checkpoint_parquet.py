@@ -20,6 +20,7 @@ from data_lakes_tp2_student_spark.io.manifest import (
     _ckpt_from_parquet,
     _ckpt_to_parquet_bytes,
 )
+from data_lakes_tp2_student_spark.io.prune import Paths, Pred
 
 
 def _rows(df):
@@ -111,7 +112,7 @@ def test_parquet_checkpoint_roundtrip_preserves_entries():
 
     # coarse prune: id=(1,5) keeps f1 (overlap) + f3 (no id stats)
     pruned = _ckpt_from_parquet(
-        _ckpt_to_parquet_bytes(body), coarse_range={"id": (1, 5)}
+        _ckpt_to_parquet_bytes(body), {"id": ((1, 5), "bigint")}
     )
     assert [e["path"][-20:] for e in pruned["files"]] == [
         "data/txn=a/f1.parquet"[-20:],
@@ -119,19 +120,19 @@ def test_parquet_checkpoint_roundtrip_preserves_entries():
     ]
     # mixed-domain column cannot skip at the coarse level (sound)
     pruned2 = _ckpt_from_parquet(
-        _ckpt_to_parquet_bytes(body), coarse_range={"mixed": (0, 1)}
+        _ckpt_to_parquet_bytes(body), {"mixed": ((0, 1), "bigint")}
     )
     assert len(pruned2["files"]) == 3
     # one-sided range works
     pruned3 = _ckpt_from_parquet(
-        _ckpt_to_parquet_bytes(body), coarse_range={"id": (10, None)}
+        _ckpt_to_parquet_bytes(body), {"id": ((10, None), "bigint")}
     )
     assert len(pruned3["files"]) == 2  # f2 + stats-less f3
     # datetime bound in naive isoformat vs '+00:00' stats: sound at the
     # exact boundary (equal instant must KEEP the file)
     pruned4 = _ckpt_from_parquet(
         _ckpt_to_parquet_bytes(body),
-        coarse_range={"ts": (None, "2024-01-01T00:00:00")},
+        {"ts": ((None, "2024-01-01T00:00:00"), "timestamp")},
     )
     assert any(e["path"].endswith("f1.parquet") for e in pruned4["files"])
 
@@ -159,9 +160,9 @@ def test_parquet_checkpoint_range_read_identical_and_pruned(
     n_all = len(tp._snapshot_files(tp.latest_version()))
     assert seen and seen[0] < n_all, (seen, n_all)
     # the COARSE path already shrank the list before the exact prune:
-    # manifest(coarse_range=...) returns fewer entries than the snapshot
+    # manifest(prune=...) returns fewer entries than the snapshot
     coarse = tp.manifest(
-        tp.latest_version(), coarse_range={"id": (7, 7)}
+        tp.latest_version(), prune=Pred([{"id": (7, 7)}])
     )["files"]
     assert len(coarse) < n_all
 
@@ -310,7 +311,7 @@ def test_parquet_checkpoint_partition_coarse_prune(spark, tmp_path):
 
     # exact-value coarse prune: O(selected) entries materialized
     full = tab._snapshot_files(v)
-    sel = tab._snapshot_files(v, coarse_parts={"day": {"d1"}})
+    sel = tab._snapshot_files(v, {"day": (Paths({"d1"}), "string")})
     assert 0 < len(sel) < len(full)
     assert all(e["partition"]["day"] == "d1" for e in sel if e["partition"])
 
@@ -323,11 +324,7 @@ def test_parquet_checkpoint_partition_coarse_prune(spark, tmp_path):
 
     # typed-range prune on the partition column (string type here:
     # lexicographic domain) — identical to the exact filter's result
-    sel_r = tab._snapshot_files(
-        v,
-        coarse_range={"day": ("d2", "d2")},
-        col_types={"day": "string"},
-    )
+    sel_r = tab._snapshot_files(v, {"day": (("d2", "d2"), "string")})
     assert 0 < len(sel_r) < len(full)
     kept_days = {e["partition"].get("day") for e in sel_r if e["partition"]}
     assert kept_days == {"d2"}
@@ -341,14 +338,14 @@ def test_parquet_checkpoint_partition_coarse_prune(spark, tmp_path):
     sink = pa.BufferOutputStream()
     pq.write_table(legacy_blob_table, sink)
     out = _ckpt_from_parquet(
-        sink.getvalue().to_pybytes(), coarse_parts={"day": {"d1"}}
+        sink.getvalue().to_pybytes(), {"day": (Paths({"d1"}), "string")}
     )
     assert len(out["files"]) == len(full)  # absent part:: ⇒ keep all
 
 
 def test_parquet_checkpoint_int_partition_range_typed(spark, tmp_path):
     """Integer partition values compare NUMERICALLY in the coarse path
-    ('9' < '10' must hold) — same contract as _prune_files_range."""
+    ('9' < '10' must hold) — same contract as the dict evaluator."""
     tab = ManifestTable(
         str(tmp_path / "t"), stats_cols=[], checkpoint_interval=1,
         checkpoint_format="parquet",
@@ -362,9 +359,7 @@ def test_parquet_checkpoint_int_partition_range_typed(spark, tmp_path):
     )
     v = tab.latest_version()
     full = tab._snapshot_files(v)
-    sel = tab._snapshot_files(
-        v, coarse_range={"b": (9, 10)}, col_types={"b": "int"}
-    )
+    sel = tab._snapshot_files(v, {"b": ((9, 10), "int")})
     assert 0 < len(sel) < len(full)
     days = {e["partition"]["b"] for e in sel}
     assert days <= {"9", "10"}, days

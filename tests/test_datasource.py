@@ -44,6 +44,12 @@ def _read(spark, root, **opts):
     return r.load()
 
 
+def _n_files(parts) -> int:
+    """Files planned across scan partitions (a size-packed partition
+    carries extra files in `more`; an empty scan has a path-less one)."""
+    return sum(1 + len(p.more) for p in parts if p.path)
+
+
 def _multiset(df):
     return Counter(map(tuple, df.collect()))
 
@@ -151,7 +157,7 @@ def test_push_filters_prune_files_not_rows(spark, tmp_path):
     )
     assert len(remaining) == 2  # every filter is handed back to Spark
     full = ManifestBatchReader(schema, {"path": root})
-    n_pruned, n_full = len(pruned.partitions()), len(full.partitions())
+    n_pruned, n_full = _n_files(pruned.partitions()), _n_files(full.partitions())
     assert n_pruned < n_full
     # partition pruning alone keeps only day=d1 files
     part_only = ManifestBatchReader(schema, {"path": root})
@@ -161,21 +167,21 @@ def test_push_filters_prune_files_not_rows(spark, tmp_path):
         for e in ManifestTable(root).manifest(0)["files"]
         if e["partition"]["day"] == "d1"
     )
-    assert len(part_only.partitions()) == d1_files
+    assert _n_files(part_only.partitions()) == d1_files
     # stats pruning alone: id <= 5 overlaps only low-id files
     rng_only = ManifestBatchReader(schema, {"path": root})
     list(rng_only.pushFilters([LessThanOrEqual(("id",), 5)]))
-    assert len(rng_only.partitions()) < n_full
+    assert _n_files(rng_only.partitions()) < n_full
     # In on a STATS column folds to [min, max] zone-map bounds
     in_stats = ManifestBatchReader(schema, {"path": root})
     list(in_stats.pushFilters([In(("id",), (1, 2, 3))]))
-    assert len(in_stats.partitions()) < n_full
+    assert _n_files(in_stats.partitions()) < n_full
     # null-safe equality with a non-null literal prunes like EqualTo
     from pyspark.sql.datasource import EqualNullSafe
 
     ns = ManifestBatchReader(schema, {"path": root})
     list(ns.pushFilters([EqualNullSafe(("day",), "d1")]))
-    assert len(ns.partitions()) == d1_files
+    assert _n_files(ns.partitions()) == d1_files
     # end-to-end exactness for both new shapes
     got2 = _read(spark, root).filter(
         F.col("day").eqNullSafe("d1") & F.col("id").isin(1, 4, 7)
@@ -1012,25 +1018,35 @@ def test_native_read_path_stays_native(spark, tmp_path):
     assert "BatchScan manifest" in fmt and "(Python)" in fmt
 
 
-def test_files_per_partition_coalescing_exact(spark, tmp_path):
-    """filesPerPartition (PERF.md #45): batching small files into one
-    task amortizes the per-partition Python round-trip (measured 20.4 s
-    → 1.75 s on a 960-small-file table at fpp=15). Correctness: the
-    coalesced read returns the identical multiset — including DV'd
-    files and partition-column injection — and partitions() really
-    shrinks."""
+def test_files_per_partition_coalescing_exact(spark, tmp_path, monkeypatch):
+    """Size packing puts several small files in one task (the
+    `_ScanPartition.more` read path). Correctness: the packed read
+    returns the identical multiset — including DV'd files and
+    partition-column injection — and partitions() really shrinks."""
     root = str(tmp_path / "t")
     tab = ManifestTable(root)
     rows = [(i, f"v{i}", f"d{i % 3}") for i in range(60)]
     tab.commit_overwrite(_df(spark, rows), partition_by=["day"])
     tab._delete_where_dv(spark, F.col("id") % 7 == 0)
     exact = _multiset(tab.read(spark))
-    got = _read(spark, root, filesPerPartition="8")
-    assert _multiset(got) == exact
-    one = ManifestBatchReader(got.schema, {"path": root})
-    eight = ManifestBatchReader(got.schema, {"path": root, "filesperpartition": "8"})
-    n1, n8 = len(one.partitions()), len(eight.partitions())
-    assert n8 < n1 and n8 >= (n1 + 7) // 8
+    schema = tab.read(spark).schema
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "64")
+    n_all = len(ManifestBatchReader(schema, {"path": root}).partitions())
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    reader = ManifestBatchReader(schema, {"path": root})
+    packed = reader.partitions()
+    assert len(packed) < n_all and _n_files(packed) == n_all
+    assert any(p.more for p in packed)
+    # the executor-side read of each packed partition, called directly:
+    # Spark's planner worker does not see this process's environment
+    got = Counter(
+        row
+        for p in packed
+        for batch in reader.read(p)
+        for row in zip(*(c.to_pylist() for c in batch.columns))
+    )
+    assert got == exact
+    assert _multiset(_read(spark, root)) == exact
 
 
 def test_sql_surface_temp_view_and_catalog_tables(spark, tmp_path):
@@ -1144,8 +1160,12 @@ def test_partition_range_pruning_is_typed(spark, tmp_path):
     list(pruned.pushFilters([_GTE(("day",), 10)]))
     full = ManifestBatchReader(schema, {"path": root})
     kept = pruned.partitions()
-    assert len(kept) < len(full.partitions())
-    assert all(p.partition["day"] in ("10", "11") for p in kept)
+    assert _n_files(kept) < _n_files(full.partitions())
+    assert all(
+        part["day"] in ("10", "11")
+        for p in kept
+        for part in (p.partition, *(f[2] for f in p.more))
+    )
     # native path: read(range_filter) prunes typed too
     tab = ManifestTable(root)
     m = tab.manifest(tab.latest_version())
@@ -1250,8 +1270,7 @@ def test_stale_stash_in_logged_schema_is_shed_on_create(spark, tmp_path):
 
 
 def test_auto_files_per_partition_packs_by_size(spark, tmp_path, monkeypatch):
-    """Default filesperpartition="auto" (round 15, VERDICT r14 item 2):
-    input partitions are SIZE-packed bins mirroring Spark's own
+    """Input partitions are SIZE-packed bins mirroring Spark's own
     FilePartition rule — maxSplitBytes = min(maxPartitionBytes,
     max(openCost, totalCost/parallelism)) — so a many-small-file table
     no longer pays one Python-worker round-trip per file (DATAPLANE_r14
@@ -1298,7 +1317,6 @@ def test_auto_files_per_partition_packs_by_size(spark, tmp_path, monkeypatch):
     # bins of 6 — the bin rule, not the file count, sets task count
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
     auto = ManifestBatchReader(schema, {"path": root})
-    assert auto._files_per_partition is None  # default IS auto
     parts = auto.partitions()
     assert len(parts) == 2
     sizes = sorted(1 + len(p.more) for p in parts)
@@ -1310,9 +1328,10 @@ def test_auto_files_per_partition_packs_by_size(spark, tmp_path, monkeypatch):
     wide = ManifestBatchReader(schema, {"path": root})
     assert len(wide.partitions()) == 12
 
-    # explicit integer keeps the fixed-k contract
-    fixed = ManifestBatchReader(schema, {"path": root, "filesperpartition": "4"})
-    assert [1 + len(p.more) for p in fixed.partitions()] == [4, 4, 4]
+    # par=3: three bins of 4
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    three = ManifestBatchReader(schema, {"path": root})
+    assert [1 + len(p.more) for p in three.partitions()] == [4, 4, 4]
 
     # auto packs AFTER pruning: filters shrink the packed set, and the
     # result read through the format matches the table read exactly

@@ -67,11 +67,9 @@ PREDICATES = [
     "p = 2 and id >= 60",
     "(p = 0 and id < 10) or (p = 4 and id > 90)",
     # mixed / degenerate
-    # _cond_disjuncts bails on the NOT token, so NO prune engages for this
-    # predicate at all (not "conjunct ignored, atom used" — ADVICE r13):
-    # the unpruned path is exact, which is what the sweep asserts
+    # the IS NOT NULL conjunct is ignored and `id = 11` alone prunes
     "id IS NOT NULL and id = 11",
-    "not id = 7",  # NOT bails: no prune, exact
+    "not id = 7",  # bounds nothing: no prune, exact
     "id = 7 or not g = 2",
 ]
 
@@ -138,8 +136,8 @@ DV_PREDICATES = [
 
 @pytest.mark.parametrize("pred", DV_PREDICATES)
 def test_dv_delete_matches_unpruned_filter(spark, table, pred):
-    """The merge-on-read DV path shares _auto_prune/_cond_coarse — the
-    same sweep contract holds."""
+    """The merge-on-read DV path shares the WHERE predicate and both
+    evaluators — the same sweep contract holds."""
     tab = table
     before = tab.latest_version()
     base = tab.read(spark)

@@ -549,13 +549,12 @@ def test_micro_batch_partitions_are_size_packed(spark, tmp_path, monkeypatch):
     wide = ManifestStreamReader(schema, {"path": root})
     assert len(wide.partitions({"version": -1}, {"version": 0})) == 12
 
-    # explicit integer keeps the fixed-k contract (batch-reader parity)
-    fixed = ManifestStreamReader(
-        schema, {"path": root, "filesperpartition": "4"}
-    )
+    # par=3: three bins of 4 (batch-reader parity)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    three = ManifestStreamReader(schema, {"path": root})
     assert [
         1 + len(p.more)
-        for p in fixed.partitions({"version": -1}, {"version": 0})
+        for p in three.partitions({"version": -1}, {"version": 0})
     ] == [4, 4, 4]
 
     # end-to-end through the registered format: exactly-once, all rows
