@@ -112,14 +112,14 @@ def _lit_domain(v, simple_type: str):
     never in string order); string types take strings only (Spark casts
     the column for a numeric literal, so string order proves nothing);
     temporal types take ISO strings and dates, re-emitted in canonical
-    isoformat so one format orders them. NaN and booleans are refused:
-    Spark orders NaN above every double, and bool equality prunes
-    poorly. None (an unbounded side) passes through."""
+    isoformat so one format orders them; boolean types take booleans
+    only. NaN is refused: Spark orders NaN above every double. None (an
+    unbounded side) passes through."""
     v = _json_safe(v)
     if v is None:
         return None
-    if isinstance(v, bool):
-        return _REFUSE
+    if isinstance(v, bool) or simple_type == "boolean":
+        return v if isinstance(v, bool) and simple_type == "boolean" else _REFUSE
     numeric = simple_type in ("tinyint", "smallint", "int", "bigint", "float",
                               "double") or simple_type.startswith("decimal")
     if numeric:
@@ -143,8 +143,6 @@ def _lit_domain(v, simple_type: str):
             return _dt.datetime.fromisoformat(v).isoformat()
         except ValueError:
             return _REFUSE
-    if simple_type == "boolean":
-        return _REFUSE
     return v if isinstance(v, str) else _REFUSE
 
 
@@ -209,9 +207,10 @@ def _typed_part_value(v: str | None, simple_type: str):
     """A partition path string in the column type's comparison domain:
     numbers compare numerically ('9' < '10'), dates and timestamps parse
     to naive datetimes (Spark writes path timestamps with a space, ISO
-    bounds carry 'T'), booleans normalize, strings stay verbatim. None
-    for the NULL partition, unparsable values and tz-aware values (path
-    values are naive wall times) — callers keep such files."""
+    bounds carry 'T'), 'true'/'false' become booleans, strings stay
+    verbatim. None for the NULL partition, unparsable values and
+    tz-aware values (path values are naive wall times) — callers keep
+    such files."""
     if v is None:
         return None
     try:
@@ -220,7 +219,7 @@ def _typed_part_value(v: str | None, simple_type: str):
         if simple_type in ("float", "double") or simple_type.startswith("decimal"):
             return float(v)
         if simple_type == "boolean":
-            return v.lower() == "true"
+            return {"true": True, "false": False}.get(v.lower())
         if simple_type in ("date", "timestamp", "timestamp_ntz"):
             s = v.replace(" ", "T")
             if simple_type == "date" and "T" not in s:
@@ -313,11 +312,11 @@ def _meet(a, b):
 def from_dicts(partition_filter=None, range_filter=None) -> Pred | None:
     """`range_filter` ({col: (lo, hi)}) and `partition_filter` ({col:
     value or list}) as one branch. A column in both keeps the exact
-    partition filter."""
+    partition filter. A `range_filter` value that is not a (lo, hi) pair
+    raises."""
     b: dict = {}
-    for c, v in (range_filter or {}).items():
-        if isinstance(v, (tuple, list)) and len(v) == 2:
-            b[c] = (v[0], v[1])
+    for c, (lo, hi) in (range_filter or {}).items():
+        b[c] = (lo, hi)
     for c, vs in (partition_filter or {}).items():
         vs = vs if isinstance(vs, (list, set, tuple)) else [vs]
         b[c] = Paths(_path_value(v) for v in vs)
@@ -368,7 +367,7 @@ _TOKEN = re.compile(
     r"|(?P<sym>\S))",
     re.I,
 )
-_KW = {"and": "a", "or": "o", "in": "i", "between": "b"}
+_KW = {"and": "a", "or": "o", "in": "i", "between": "b", "case": "k", "end": "e"}
 _CMP = {"=": (1, 1), "==": (1, 1), ">": (1, 0), ">=": (1, 0),
         "<": (0, 1), "<=": (0, 1)}  # (bounds lo, bounds hi)
 _FLIP = {"=": "=", "==": "=", ">": "<", ">=": "<=", "<": ">", "<=": ">="}
@@ -376,7 +375,8 @@ _FLIP = {"=": "=", "==": "=", ">": "<", ">=": "<=", "<": ">", "<=": ">="}
 
 def _tokens(s: str, lits: list) -> list[tuple[str, object]]:
     """(kind, value) tokens; kinds: c column, v literal, p comparison,
-    a/o/i/b AND/OR/IN/BETWEEN, parens and commas as themselves, x other."""
+    a/o/i/b AND/OR/IN/BETWEEN, k/e CASE/END, parens and commas as
+    themselves, x other."""
     out = []
     for m in _TOKEN.finditer(s):
         if m.group("lit"):
@@ -401,10 +401,12 @@ def _tokens(s: str, lits: list) -> list[tuple[str, object]]:
 
 def _split(toks: list, sep: str) -> list[list]:
     """Split at depth-0 `sep` tokens; a BETWEEN's own AND is not a split
-    point. Unbalanced parentheses raise ValueError."""
+    point. CASE ... END nests like parentheses, so the ANDs and ORs of
+    its WHEN conditions are no split points either. Unbalanced
+    parentheses or CASE/END raise ValueError."""
     out, cur, depth, between = [], [], 0, False
     for t in toks:
-        depth += (t[0] == "(") - (t[0] == ")")
+        depth += (t[0] in "(k") - (t[0] in ")e")
         if depth < 0:
             raise ValueError("unbalanced parentheses")
         if depth == 0 and t[0] == sep and not (sep == "a" and between):
@@ -454,7 +456,7 @@ def from_where(condition, spark=None) -> Pred | None:
     """A SQL WHERE string as a predicate: top-level OR branches, each an
     AND of comparisons, IN lists (kept as value sets) and BETWEENs, with
     strict comparisons widened to inclusive bounds. Conjuncts of any
-    other shape (functions, NOT, IS NULL, nested ORs) are ignored — the
+    other shape (functions, NOT, IS NULL, nested ORs, CASE) are ignored — the
     remaining conjuncts still bound every matching row. None (no prune)
     for non-string conditions, double quotes or backslashes, or when a
     branch bounds nothing. Quoted literals are stashed before

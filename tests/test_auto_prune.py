@@ -96,6 +96,31 @@ def test_cond_ranges_literals_and_bailouts():
     assert _where("5 = 3") == []
 
 
+def test_case_when_conditions_are_not_conjuncts():
+    """The ANDs and ORs inside CASE ... END belong to its WHEN condition,
+    not to the WHERE: `b = 2` below is no conjunct, and the condition is
+    TRUE for exactly the rows without b = 2."""
+    case = "CASE WHEN lower(s) = 'x' AND b = 2 AND c = 3 THEN false ELSE true END"
+    assert _where(case) == []
+    assert _where(case + " and id = 4") == [{"id": (4, 4)}]
+    assert _where("id = 4 or case when b = 2 or c = 3 then true end") == []
+    assert _where("id between 1 and 3 and case when b = 2 then true end") == [
+        {"id": (1, 3)}
+    ]
+    # an END without its CASE is unbalanced: no prune
+    assert _where("end > 3 and id = 1") == []
+
+
+def test_range_filter_requires_pairs():
+    """A malformed `range_filter` hint raises instead of being ignored."""
+    from data_lakes_tp2_student_spark.io.prune import from_dicts
+
+    assert from_dicts(range_filter={"id": [1, 5]}).branches == [{"id": (1, 5)}]
+    for bad in (5, (1, 2, 3), None):
+        with pytest.raises((TypeError, ValueError)):
+            from_dicts(range_filter={"id": bad})
+
+
 def test_unconvertible_side_is_unbounded():
     """The 'x' bound has no INT-domain value, so only `id >= 3` prunes."""
     files = [

@@ -1178,6 +1178,35 @@ def test_partition_range_pruning_is_typed(spark, tmp_path):
     assert narrowed.where("day = 9").count() == 0
 
 
+def test_boolean_partition_pushdown_prunes(spark, tmp_path):
+    """Pushed EqualTo/In on a BOOLEAN partition column prune files: the
+    literal True matches the path value 'true' Spark writes."""
+    from pyspark.sql.datasource import EqualTo, In
+
+    root = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, i % 2 == 0) for i in range(8)], "id int, flag boolean"
+    )
+    (
+        df.write.format("manifest").mode("overwrite")
+        .option("path", root).option("partitionBy", "flag").save()
+    )
+    schema = _read(spark, root).schema
+    n_full = _n_files(ManifestBatchReader(schema, {"path": root}).partitions())
+    for f in (EqualTo(("flag",), True), In(("flag",), (True,))):
+        pruned = ManifestBatchReader(schema, {"path": root})
+        list(pruned.pushFilters([f]))
+        kept = pruned.partitions()
+        assert 0 < _n_files(kept) < n_full
+        assert all(
+            part["flag"] == "true"
+            for p in kept
+            for part in (p.partition, *(m[2] for m in p.more))
+        )
+    got = _read(spark, root).filter("flag")
+    assert _multiset(got) == _multiset(df.filter("flag"))
+
+
 def test_catalog_stash_never_propagates_into_written_schemas(spark, tmp_path):
     """ADVICE r10 (medium): the catalog-options stash is a READ-side
     channel — a df read from catalog table A and written to table B must

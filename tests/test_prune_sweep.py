@@ -71,6 +71,11 @@ PREDICATES = [
     "id IS NOT NULL and id = 11",
     "not id = 7",  # bounds nothing: no prune, exact
     "id = 7 or not g = 2",
+    # the ANDs/ORs of a CASE's WHEN are no conjuncts of the WHERE: each
+    # condition is TRUE for the rows a conjunct-split would prune away
+    "CASE WHEN lower(s) = 'w7' AND id = 7 AND p = 2 THEN false ELSE true END",
+    "CASE WHEN id = 7 OR p = 2 THEN false ELSE true END",
+    "id < 40 and case when s = 'w7' and id = 7 then false else true end",
 ]
 
 
@@ -131,6 +136,7 @@ DV_PREDICATES = [
     "p IN ('1', '4')",
     "d >= timestamp'2024-01-10 05:00:00'",
     "s IN ('w1', 'w50')",
+    "CASE WHEN lower(s) = 'w7' AND id = 7 AND p = 2 THEN false ELSE true END",
 ]
 
 
