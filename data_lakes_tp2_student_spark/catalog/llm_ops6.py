@@ -1156,17 +1156,16 @@ def x73_parquet_ckpt_autoskip(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE-derived file skipping. v0 = orders(o_orderkey, o_totalprice)
     range-partitioned so per-file stats are disjoint; v1 = a CoW DELETE
     of `o_orderkey <= 100` whose discovery scan prunes AUTOMATICALLY
-    from the predicate's derived bounds (no range_filter hint — VERDICT
-    r11 item 1); the commit writes a PARQUET checkpoint
-    (checkpoint_interval=1, Delta checkpoint parity) with typed
-    min/max stat columns; v2 = an UPDATE of one key, discovery pruned
-    the same way, reading its snapshot THROUGH the parquet checkpoint.
-    Output = latest snapshot + a range-filtered read (the coarse prune
-    runs VECTORIZED inside the checkpoint read, then the exact prune
-    and the row predicate) + v0 time travel across both checkpoint
-    formats. A hash match proves the columnar checkpoint round-trip,
-    the delta replay over it, and both automatic prunes lose and invent
-    nothing."""
+    from the predicate's derived bounds (no range_filter hint); the
+    commit writes a columnar checkpoint (checkpoint_interval=1, Delta
+    checkpoint parity) with typed min/max stat columns; v2 = an UPDATE
+    of one key, discovery pruned the same way, reading its snapshot
+    THROUGH the columnar checkpoint. Output = latest snapshot + a
+    range-filtered read (the coarse prune runs VECTORIZED inside the
+    checkpoint read, then the exact prune and the row predicate) + v0
+    time travel from behind two checkpoints. A hash match proves the
+    columnar checkpoint round-trip, the delta replay over it, and both
+    automatic prunes lose and invent nothing."""
     root = os.path.join(
         _TMP, "x73_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     )
@@ -1175,7 +1174,6 @@ def x73_parquet_ckpt_autoskip(spark: SparkSession, sf_dir: str) -> DataFrame:
         root,
         stats_cols=["o_orderkey"],
         checkpoint_interval=1,
-        checkpoint_format="parquet",
     )
     df = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table.commit_overwrite(df.repartitionByRange(8, "o_orderkey"))
@@ -1224,13 +1222,13 @@ def x73_parquet_ckpt_autoskip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x74_prune_in_or_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x74 — round 13's lake levers end-to-end under the oracle gate
     (the x73 pattern applied to this round): on a PARTITIONED table with
-    parquet checkpoints, (1) a CoW DELETE with an IN-list predicate —
+    columnar checkpoints, (1) a CoW DELETE with an IN-list predicate —
     discovery pruned with the IN list kept as a value set
     (io/prune.py), including a key absent from the table (a no-match
     value must lose nothing); (2) an UPDATE with a top-level OR of two
     point predicates — discovery pruned with the UNION of branch file
     sets; (3) a partition_filter read and a partition-RANGE read, both
-    planned through the parquet checkpoint's `part::<col>` columns (the
+    planned through the columnar checkpoint's `part::<col>` columns (the
     round-13 vectorized partition prune) then re-checked exactly. A hash
     match proves the branch-union and partition prunes lose and invent
     nothing across delete/update/read."""
@@ -1242,7 +1240,6 @@ def x74_prune_in_or_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         root,
         stats_cols=["o_orderkey"],
         checkpoint_interval=1,
-        checkpoint_format="parquet",
     )
     df = (
         load(spark, sf_dir, "orders")

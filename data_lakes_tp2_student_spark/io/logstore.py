@@ -45,7 +45,7 @@ from abc import ABC, abstractmethod
 
 class LogStore(ABC):
     """The manifest layer's storage contract. `name` arguments are log-file
-    basenames (`v{N}.json` / `v{N}.checkpoint.json`); `rel` arguments are
+    basenames (`v{N}.json` / `v{N}.checkpoint.parquet`); `rel` arguments are
     table-relative data paths (`data/txn=<id>/.../part-*.parquet`)."""
 
     # ---- commit log ----

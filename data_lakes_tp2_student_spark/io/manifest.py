@@ -23,9 +23,12 @@ reduced to its load-bearing core:
   commits, the touched partition values for replace_partitions) — the
   Delta-Lake JSON-commit contract. A version's full file list is
   reconstructed by replaying the log from the nearest CHECKPOINT
-  (`v{N}.checkpoint.json`, written every `checkpoint_interval` commits),
-  so commit cost is O(Δfiles) and reconstruction cost is O(Δ since last
-  checkpoint), never O(table files) per commit.
+  (`v{N}.checkpoint.parquet`, one columnar format: each entry's JSON
+  verbatim plus typed prune-only stats and partition columns; written
+  after every `checkpoint_interval`-th version, whatever kind of commit
+  produced it, and by vacuum), so commit cost is O(Δfiles) and
+  reconstruction cost is O(Δ since last checkpoint), never O(table
+  files) per commit. Legacy `v{N}.checkpoint.json` files still read.
 - **Commit = atomic put-if-absent of the next log entry.** The entry is
   staged to a temp name and published with `os.link` (hard link), which
   fails with EEXIST if some other writer won the version — the HDFS-style
@@ -125,209 +128,73 @@ class MergeCardinalityError(RuntimeError):
     deduplicate the source on the merge keys and retry."""
 
 
-_CKPT_CORE = ("path", "partition", "bytes", "rows", "stats", "dv")
-
-
 def _ckpt_to_parquet_bytes(body: dict) -> bytes:
-    """Columnar checkpoint encoding (round 12, Delta checkpoint parity):
-    one row per file entry with TYPED per-column min/max stat columns
-    (`stat_min::<col>` / `stat_max::<col>`) so a reader can data-skip
-    over the checkpoint itself vectorized, before materializing a single
-    python dict. Stats columns whose values mix domains across files
-    (str vs numeric) fall back to a per-entry `stats_json` blob — the
-    reader treats those as unskippable at the coarse level (sound).
-    `partition`, `dv` and any non-core entry keys ride as JSON strings;
-    `version` and the cumulative `txns` map ride as schema metadata.
-    Round 13 (VERDICT r12 item 3): each partition column ALSO rides as a
-    typed-string `part::<col>` column so partition-filtered planning can
-    prune rows vectorized too — files carry no footer stats for their
-    partition columns, so the `stat_min::` path never covers them and a
-    partition-scoped read at 10^6 files used to materialize every
-    entry's python dict. Readers treat absent `part::` columns (pre-r13
-    checkpoints) as unskippable — sound."""
+    """Encode a checkpoint body ({version, files[, txns]}) as the
+    columnar checkpoint: one row per file entry. The `entry` column holds
+    each entry's JSON verbatim and is the only decode source, so the
+    round trip is exact by construction. The other columns are
+    prune-only: typed `stat_min::<col>`/`stat_max::<col>` for every stats
+    column whose values share one kind (str, int64 or float) and
+    `part::<col>` partition values as strings, so `prune.ckpt_filter`
+    drops rows vectorized before any entry is decoded. A stats column
+    mixing kinds (an int and float mix would round ints beyond 2^53) gets
+    no typed pair and never skips. `version` and the cumulative `txns`
+    map ride as schema metadata."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     files = body["files"]
-    names: list[str] = []
-    for e in files:
-        for c in e.get("stats") or {}:
-            if c not in names:
-                names.append(c)
-    typed: dict[str, tuple[list, list]] = {}
-    fallback: set[str] = set()
-    for c in names:
-        los: list = []
-        his: list = []
-        kind = None
-        ok = True
-        for e in files:
-            st = (e.get("stats") or {}).get(c)
-            if st is None:
-                los.append(None)
-                his.append(None)
-                continue
-            lo, hi = st
-            for v in (lo, hi):
-                if v is None:
-                    continue
-                if isinstance(v, bool) or not isinstance(v, (int, float, str)):
-                    ok = False
-                    break
-                # int and float are DISTINCT kinds (ADVICE r12): a mixed
-                # column would coerce ints to float64, silently rounding
-                # values beyond 2^53 — a min rounded UP (or max rounded
-                # DOWN) later prunes a file that contains matching rows.
-                # Mixed columns ride the stats_json fallback instead;
-                # ints outside int64 (pathological, not parquet-footer-
-                # producible) also fall back rather than overflow Arrow.
-                k = (
-                    "str"
-                    if isinstance(v, str)
-                    else ("float" if isinstance(v, float) else "int")
-                )
-                if k == "int" and not (-(2**63) <= v < 2**63):
-                    ok = False
-                    break
-                if kind is not None and k != kind:
-                    ok = False
-                    break
-                kind = k
-            if not ok:
-                break
-            los.append(lo)
-            his.append(hi)
-        if ok and kind is not None:
-            typed[c] = (los, his)
-        else:
-            fallback.add(c)
-    cols: dict[str, list] = {
-        "path": [e["path"] for e in files],
-        "partition": [
-            json.dumps(e.get("partition") or {}, sort_keys=True)
-            for e in files
-        ],
-        "bytes": [e.get("bytes") for e in files],
-        "rows": [e.get("rows") for e in files],
-        "dv": [json.dumps(e["dv"]) if e.get("dv") else None for e in files],
-        "stats_json": [
-            (
-                json.dumps(
-                    {
-                        c: v
-                        for c, v in e["stats"].items()
-                        if c in fallback
-                    },
-                    sort_keys=True,
-                )
-                if e.get("stats") and fallback & set(e["stats"])
-                else None
-            )
-            for e in files
-        ],
-        "extra": [
-            (
-                json.dumps(
-                    {k: v for k, v in e.items() if k not in _CKPT_CORE},
-                    sort_keys=True,
-                )
-                if set(e) - set(_CKPT_CORE)
-                else None
-            )
-            for e in files
-        ],
-    }
-    fields = [
-        pa.field("path", pa.string()),
-        pa.field("partition", pa.string()),
-        pa.field("bytes", pa.int64()),
-        pa.field("rows", pa.int64()),
-        pa.field("dv", pa.string()),
-        pa.field("stats_json", pa.string()),
-        pa.field("extra", pa.string()),
-    ]
-    for c, (los, his) in typed.items():
-        t = (
-            pa.string()
-            if any(isinstance(v, str) for v in los + his)
-            else (
-                pa.float64()
-                if any(isinstance(v, float) for v in los + his)
-                else pa.int64()
-            )
+    cols: dict[str, list] = {"entry": [json.dumps(e) for e in files]}
+    fields = [pa.field("entry", pa.string())]
+    kinds = {str: pa.string(), int: pa.int64(), float: pa.float64()}
+    stat_cols = dict.fromkeys(c for e in files for c in e.get("stats") or {})
+    for c in stat_cols:
+        los, his = zip(
+            *(((e.get("stats") or {}).get(c) or (None, None)) for e in files)
         )
-        cols[f"stat_min::{c}"] = los
-        cols[f"stat_max::{c}"] = his
-        fields += [
-            pa.field(f"stat_min::{c}", t),
-            pa.field(f"stat_max::{c}", t),
-        ]
-    pcols: list[str] = []
-    for e in files:
-        for k in e.get("partition") or {}:
-            if k not in pcols:
-                pcols.append(k)
-    for k in pcols:
-        cols[f"part::{k}"] = [
-            (e.get("partition") or {}).get(k) for e in files
-        ]
+        vals = [v for v in los + his if v is not None]
+        seen = {type(v) for v in vals}
+        if len(seen) != 1 or not seen <= set(kinds):
+            continue
+        if int in seen and not all(-(2**63) <= v < 2**63 for v in vals):
+            continue
+        t = kinds[seen.pop()]
+        cols[f"stat_min::{c}"], cols[f"stat_max::{c}"] = list(los), list(his)
+        fields += [pa.field(f"stat_min::{c}", t), pa.field(f"stat_max::{c}", t)]
+    part_cols = dict.fromkeys(k for e in files for k in e.get("partition") or {})
+    for k in part_cols:
+        cols[f"part::{k}"] = [(e.get("partition") or {}).get(k) for e in files]
         fields.append(pa.field(f"part::{k}", pa.string()))
     md = {b"version": str(body["version"]).encode()}
     if "txns" in body:
         md[b"txns"] = json.dumps(body["txns"], sort_keys=True).encode()
-    table = pa.table(cols, schema=pa.schema(fields, metadata=md))
     sink = pa.BufferOutputStream()
-    pq.write_table(table, sink)
+    pq.write_table(pa.table(cols, schema=pa.schema(fields, metadata=md)), sink)
     return sink.getvalue().to_pybytes()
 
 
 def _ckpt_from_parquet(b: bytes, env: dict | None = None) -> dict:
     """Decode a columnar checkpoint. With `env` (a predicate envelope,
     see `prune.envelope`), rows that provably cannot match are dropped
-    vectorized by `prune.ckpt_filter` before any entry dict exists."""
+    vectorized by `prune.ckpt_filter` before any entry is decoded."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    t = pq.read_table(pa.BufferReader(b))
+    pf = pq.ParquetFile(pa.BufferReader(b))
+    if "entry" not in pf.schema_arrow.names:
+        raise ValueError(
+            "columnar checkpoint has no `entry` column: it was written by "
+            "an older encoding this version no longer reads — delete the "
+            "checkpoint file to replay the log, or rebuild the table"
+        )
+    t = pf.read(columns=None if env else ["entry"])
     if env:
         t = ckpt_filter(t, env)
-    cols = {
-        c: t[c].to_pylist()
-        for c in t.column_names
-        if not c.startswith("part::")  # prune-only; `partition` JSON is
-    }                                  # the authoritative decode source
-    stat_names = [
-        c[len("stat_min::"):]
-        for c in t.column_names
-        if c.startswith("stat_min::")
-    ]
-    files = []
-    for i in range(t.num_rows):
-        p = cols["partition"][i]
-        e: dict = {
-            "path": cols["path"][i],
-            # fast path: unpartitioned tables pay no per-row json parse
-            "partition": {} if p == "{}" else json.loads(p),
-            "bytes": cols["bytes"][i],
-            "rows": cols["rows"][i],
-        }
-        st: dict = {}
-        for c in stat_names:
-            lo = cols[f"stat_min::{c}"][i]
-            hi = cols[f"stat_max::{c}"][i]
-            if lo is not None or hi is not None:
-                st[c] = [lo, hi]
-        if cols["stats_json"][i]:
-            st.update(json.loads(cols["stats_json"][i]))
-        if st:
-            e["stats"] = st
-        if cols["dv"][i]:
-            e["dv"] = json.loads(cols["dv"][i])
-        if cols["extra"][i]:
-            e.update(json.loads(cols["extra"][i]))
-        files.append(e)
-    md = t.schema.metadata or {}
-    body = {"version": int(md[b"version"]), "files": files}
+    md = pf.schema_arrow.metadata or {}
+    body = {
+        "version": int(md[b"version"]),
+        "files": json.loads("[" + ",".join(t["entry"].to_pylist()) + "]"),
+    }
     if b"txns" in md:
         body["txns"] = json.loads(md[b"txns"])
     return body
@@ -445,11 +312,12 @@ class ManifestTable:
     Delta/Iceberg data-skipping design. Pair with `optimize_zorder` so
     the min/max boxes are actually tight.
 
-    `checkpoint_interval`: a full-snapshot checkpoint file is written
-    after every Nth commit (and by vacuum), bounding log replay. The
-    checkpoint is derived data — rebuilding it from the log is always
-    possible, and concurrent writers racing the same checkpoint write
-    identical bytes (atomic os.replace)."""
+    `checkpoint_interval`: a full-snapshot columnar checkpoint is
+    written after every Nth version, by every commit kind (one publish
+    loop, `_commit_entry`), and by vacuum, bounding log replay; 0 turns
+    interval checkpoints off. The checkpoint is derived data — rebuilding
+    it from the log is always possible, and concurrent writers racing
+    the same checkpoint write identical bytes (atomic os.replace)."""
 
     def __init__(
         self,
@@ -457,19 +325,13 @@ class ManifestTable:
         stats_cols: list[str] | None = None,
         checkpoint_interval: int = 10,
         log_store=None,
-        checkpoint_format: str = "json",
     ) -> None:
-        if checkpoint_format not in ("json", "parquet"):
-            raise ValueError(
-                f"checkpoint_format must be 'json' or 'parquet', "
-                f"got {checkpoint_format!r}"
-            )
         if log_store is None:
             if "://" in root:
                 # A URI root without an explicit backend would write data
                 # via Spark while the default local store's os.walk finds
                 # nothing — every commit publishing an EMPTY file list is
-                # silent data loss (ADVICE r6). Fail at construction.
+                # silent data loss. Fail at construction.
                 raise ValueError(
                     f"ManifestTable got URI root {root!r} without a "
                     f"log_store — construct io.logstore.S3LogStore for "
@@ -485,13 +347,6 @@ class ManifestTable:
         self.data_dir = getattr(log_store, "data_dir", None)
         self.stats_cols = list(stats_cols or [])
         self.checkpoint_interval = max(0, int(checkpoint_interval))
-        # round 12 (VERDICT r11 item 3): "parquet" writes COLUMNAR
-        # checkpoints (typed per-column min/max stats — Delta checkpoint
-        # parity) so snapshot planning at 10^5-10^6 files reads the file
-        # list in O(columnar scan) and a range-filtered read touches
-        # O(selected) python objects instead of parsing a multi-MB JSON
-        # body. Readers understand BOTH formats regardless of this knob.
-        self.checkpoint_format = checkpoint_format
         # highest version this handle has observed — the O(Δ) probe
         # anchor for latest_version (never trusted blindly: see there)
         self._version_hint: int | None = None
@@ -506,7 +361,6 @@ class ManifestTable:
             stats_cols=self.stats_cols,
             checkpoint_interval=self.checkpoint_interval,
             log_store=self.store.clone(),
-            checkpoint_format=self.checkpoint_format,
         )
 
     # ---------- log primitives (storage via self.store) ----------
@@ -517,10 +371,6 @@ class ManifestTable:
 
     @staticmethod
     def _checkpoint_name(version: int) -> str:
-        return f"v{version:020d}.checkpoint.json"
-
-    @staticmethod
-    def _checkpoint_pq_name(version: int) -> str:
         return f"v{version:020d}.checkpoint.parquet"
 
     def versions(self) -> list[int]:
@@ -537,16 +387,21 @@ class ManifestTable:
                     continue
         return sorted(out)
 
-    def checkpoints(self) -> list[int]:
-        out = set()
+    def _checkpoint_files(self) -> dict[str, int]:
+        """{log name: version} of every checkpoint file, columnar or
+        legacy JSON."""
+        out = {}
         for name in self.store.list_log():
-            for suf in (".checkpoint.json", ".checkpoint.parquet"):
+            for suf in (".checkpoint.parquet", ".checkpoint.json"):
                 if name.endswith(suf) and name.startswith("v"):
                     try:
-                        out.add(int(name[1 : -len(suf)]))
+                        out[name] = int(name[1 : -len(suf)])
                     except ValueError:
                         pass
-        return sorted(out)
+        return out
+
+    def checkpoints(self) -> list[int]:
+        return sorted(set(self._checkpoint_files().values()))
 
     def latest_version(self) -> int | None:
         """The newest committed version. O(Δ) warm (round 9, soak
@@ -618,18 +473,17 @@ class ManifestTable:
         return files + add
 
     def _read_checkpoint_body(self, version: int, env: dict | None = None) -> dict:
-        """Checkpoint `version`'s body ({version, files[, txns]}),
-        whichever format exists — parquet preferred (columnar). `env`
-        pre-filters a PARQUET checkpoint (see `_ckpt_from_parquet`); the
-        JSON path ignores it. Raises FileNotFoundError if neither format
-        exists."""
+        """Checkpoint `version`'s body ({version, files[, txns]}): the
+        only checkpoint reader. `env` pre-filters the columnar checkpoint
+        (see `_ckpt_from_parquet`). A legacy `.checkpoint.json`, the
+        default format of tables written before the columnar one, is
+        read whole. Raises FileNotFoundError if neither file exists."""
         try:
-            b = self.store.read_log(self._checkpoint_pq_name(version))
+            b = self.store.read_log(self._checkpoint_name(version))
         except FileNotFoundError:
-            b = None
-        if b is not None:
-            return _ckpt_from_parquet(b, env)
-        return json.loads(self.store.read_log(self._checkpoint_name(version)))
+            legacy = f"v{version:020d}.checkpoint.json"
+            return json.loads(self.store.read_log(legacy))
+        return _ckpt_from_parquet(b, env)
 
     def _snapshot_files(self, version: int, env: dict | None = None) -> list[dict]:
         """Reconstruct version N's full file list: nearest checkpoint ≤ N,
@@ -651,7 +505,7 @@ class ManifestTable:
         """Version N's metadata with its FULL reconstructed file list
         under `files` (the pre-round-7 full-snapshot shape, now derived
         from the delta log). Raises FileNotFoundError for vacuumed or
-        never-committed versions. With `prune`, a parquet checkpoint
+        never-committed versions. With `prune`, a columnar checkpoint
         pre-filters the list by the predicate's envelope, so the list
         may omit files that cannot match: callers treat it as
         prune-scoped and still apply `keep`."""
@@ -677,35 +531,27 @@ class ManifestTable:
         return ok
 
     def _write_checkpoint(self, version: int) -> None:
-        """Materialize version N's full snapshot as a checkpoint file.
-        Derived data: idempotent (two racers write identical content) and
-        atomic (backend create-or-replace), so best-effort is safe.
+        """Materialize version N's full snapshot as a columnar checkpoint
+        (`_ckpt_to_parquet_bytes`). Derived data: idempotent (two racers
+        write identical content) and atomic (backend create-or-replace),
+        so best-effort is safe.
 
-        Round 9: the checkpoint also carries the CUMULATIVE per-app
-        `txns` map ({app: highest committed txn version ≤ N}) when the
-        retained log can prove it complete — so `last_txn_version`
-        misses cost O(Δ since checkpoint) instead of O(retained log)
-        (soak: 3.9 s per miss at 600 moto commits), and — because
-        vacuum writes a fresh checkpoint BEFORE truncating — a sink's
-        idempotence memory now SURVIVES log truncation instead of being
-        forgotten with the vacuumed entries. A checkpoint that cannot
-        prove completeness (predecessor lacks the map and v0 is already
+        The checkpoint also carries the CUMULATIVE per-app `txns` map
+        ({app: highest committed txn version ≤ N}) when the retained log
+        can prove it complete, so a `last_txn_version` miss costs O(Δ
+        since checkpoint) instead of O(retained log), and, because vacuum
+        writes a checkpoint BEFORE truncating, a sink's idempotence
+        memory survives log truncation. A checkpoint that cannot prove
+        completeness (predecessor lacks the map and v0 is already
         vacuumed) omits `txns`; readers fall back to the full walk."""
         files = self._snapshot_files(version)
         body = {"version": version, "files": files}
         txns = self._txns_up_to(version)
         if txns is not None:
             body["txns"] = {k: txns[k] for k in sorted(txns)}
-        if self.checkpoint_format == "parquet":
-            self.store.put_log_atomic(
-                self._checkpoint_pq_name(version),
-                _ckpt_to_parquet_bytes(body),
-            )
-        else:
-            self.store.put_log_atomic(
-                self._checkpoint_name(version),
-                json.dumps(body).encode(),
-            )
+        self.store.put_log_atomic(
+            self._checkpoint_name(version), _ckpt_to_parquet_bytes(body)
+        )
 
     def _txns_up_to(self, version: int) -> dict | None:
         """The complete {app: max txn version} map over commits 0..N, or
@@ -925,11 +771,11 @@ class ManifestTable:
         remove_paths: list[str] | None = None,
         entry_extra: dict | None = None,
     ) -> int:
-        """The ONE commit loop. The data write happens once — files are
+        """Write `df` once and commit it (`_commit_files`). Files are
         immutable and version-independent; only the log entry rebases (or
         aborts: see _check_conflicts) when a concurrent writer wins the
         version race. Publishes a DELTA entry — O(this commit's files),
-        not O(table files) — and a checkpoint every Nth version.
+        not O(table files).
 
         `base` is the version this commit's INPUT was derived from — the
         conflict-detection anchor. Snapshot-derived commits (compact /
@@ -938,7 +784,7 @@ class ManifestTable:
         fresh-data commits whose input is external) leaves a window where
         a commit landing between the caller's snapshot read and this
         method's entry makes parent == base and silently skips
-        _check_conflicts (ADVICE r7, medium)."""
+        _check_conflicts."""
         schema_json = df.schema.json()
         if base is ManifestTable._BASE_UNSET:
             base = self.latest_version()
@@ -1022,14 +868,14 @@ class ManifestTable:
         column_mapping: dict | None = None,
         base_mapping: dict | None = None,
     ) -> int:
-        """Publish ALREADY-WRITTEN txn files as one atomic commit — the
-        back half of _commit, factored out so writers that stage files
-        without a driver-side DataFrame (the `manifest` batch DataSource,
-        io/datasource.py, whose executors write Arrow batches straight
-        into the txn dir) share the exact same constraint validation,
-        layout checks, and version-race loop. `base`/`base_cons` are the
-        conflict anchor and constraint set the INPUT was derived from —
-        capture them before the data write, not here."""
+        """Commit ALREADY-WRITTEN files: validate them, then build the
+        entry that `_commit_entry` publishes. The back half of _commit,
+        shared with writers that stage files without a driver-side
+        DataFrame (the `manifest` DataSource, io/datasource.py, whose
+        executors write Arrow batches straight into the txn dir) and with
+        the DV commits, which re-add existing entries. `base`/`base_cons`
+        are the conflict anchor and constraint set the INPUT was derived
+        from — capture them before the data write, not here."""
         # CHECK constraints validate the commit's NEW rows (retained
         # files were validated by their own commits). Validation reads
         # the freshly WRITTEN files back rather than re-running the
@@ -1087,8 +933,8 @@ class ManifestTable:
         remove: dict = {"kind": remove_kind}
         if remove_kind == "partitions":
             # key=repr: partition VALUES may mix str and None, which a
-            # plain sort refuses to order (review r7 wave 3 — a replace
-            # touching day=NULL alongside day='d1' raised TypeError)
+            # plain sort refuses to order (a replace touching day=NULL
+            # alongside day='d1' would raise TypeError)
             remove["values"] = [
                 [list(kv) for kv in t] for t in sorted(touched, key=repr)
             ]
@@ -1098,45 +944,16 @@ class ManifestTable:
             # ANY path that writes an idempotence token gets the guard —
             # an unguarded token write would plant out-of-order versions
             # and break last_txn_version's newest-first monotonicity
-            # (round-8 review wave 2)
             txn_guard = (entry_extra["txn"]["app"], entry_extra["txn"]["version"])
-        if txn_guard is not None:
-            # sequential-duplicate check (the in-loop guard below only
-            # fires when a commit landed CONCURRENTLY, parent != base)
-            app, ver = txn_guard
-            last = self.last_txn_version(app)
-            if last is not None and last >= ver:
-                raise TxnAlreadyCommitted(
-                    f"txn ({app!r}, {ver}) already committed (log holds "
-                    f"version {last})"
-                )
-        for _ in range(max_attempts):
-            parent = self.latest_version()
-            if parent != base:
-                if txn_guard is not None:
-                    # duplicate classification must run BEFORE conflict
-                    # detection: an overwrite-mode redelivery should be
-                    # skipped as a duplicate, not fail as a conflict
-                    # (round-8 review wave 2); re-scan ONLY the newly
-                    # landed versions, O(Δ)
-                    app, ver = txn_guard
-                    for v in range(
-                        (base + 1) if base is not None else 0, parent + 1
-                    ):
-                        t = self._raw(v).get("txn")
-                        if t and t.get("app") == app and t["version"] >= ver:
-                            raise TxnAlreadyCommitted(
-                                f"txn ({app!r}, {ver}) already committed "
-                                f"at version {v}"
-                            )
-                self._check_conflicts(action, remove_kind, touched, base, parent)
+
+        def build(parent: int | None) -> dict:
             table_schema = schema_json
             p_entry = self._raw(parent) if parent is not None else None
             if p_entry is not None and remove_kind != "all":
                 # O(1) layout compatibility vs the parent COMMIT (each
                 # commit checked against its own parent, so the invariant
-                # holds across the whole retained chain) — review r6: a
-                # forgotten partition_by used to brick the table.
+                # holds across the whole retained chain): a forgotten
+                # partition_by would otherwise brick the table.
                 if (p_entry.get("partition_by") or []) != (partition_by or []):
                     raise ValueError(
                         f"commit would mix partition layouts — pass the "
@@ -1170,15 +987,12 @@ class ManifestTable:
                     f"concurrent column rename/drop at v{parent} — re-run"
                 )
             entry = {
-                "version": (parent if parent is not None else -1) + 1,
-                "parent": parent,
                 "action": action,
                 "partition_by": partition_by or [],
                 "schema": schema_json,
                 "table_schema": table_schema,
                 "add": new_files,
                 "remove": remove,
-                "committed_at": time.time(),
             }
             if base_cons:
                 entry["constraints"] = base_cons
@@ -1188,6 +1002,67 @@ class ManifestTable:
                 # e.g. {"txn": {"app":…, "version":…}} — the Delta txn
                 # action the streaming sink uses for idempotent restarts
                 entry.update(entry_extra)
+            return entry
+
+        return self._commit_entry(
+            action, remove_kind, base, build, touched, txn_guard, max_attempts
+        )
+
+    def _commit_entry(
+        self,
+        action: str,
+        conflict_kind: str,
+        base: int | None,
+        build,
+        touched: set = frozenset(),
+        txn_guard: tuple | None = None,
+        max_attempts: int = 20,
+    ) -> int:
+        """The ONE version-race loop every commit kind goes through.
+        Each attempt reads the latest version as the parent; when commits
+        landed since `base`, it first refuses a duplicate `txn_guard`
+        token among them, then runs `_check_conflicts` with
+        `conflict_kind` (a remove kind: "none" rebases, "all"/"files"
+        abort on any intervening commit, "partitions" on an overlap with
+        `touched`). `build(parent)` returns the entry; this loop stamps
+        `version`, `parent` and `committed_at`, publishes it with
+        put-if-absent, and on success writes the checkpoint due every
+        `checkpoint_interval` versions."""
+        if txn_guard is not None:
+            # sequential-duplicate check (the in-loop guard below only
+            # fires when a commit landed CONCURRENTLY, parent != base)
+            app, ver = txn_guard
+            last = self.last_txn_version(app)
+            if last is not None and last >= ver:
+                raise TxnAlreadyCommitted(
+                    f"txn ({app!r}, {ver}) already committed (log holds "
+                    f"version {last})"
+                )
+        for _ in range(max_attempts):
+            parent = self.latest_version()
+            if parent != base:
+                if txn_guard is not None:
+                    # duplicate classification must run BEFORE conflict
+                    # detection: an overwrite-mode redelivery is skipped
+                    # as a duplicate, not failed as a conflict; re-scan
+                    # ONLY the newly landed versions, O(Δ)
+                    app, ver = txn_guard
+                    for v in range(
+                        (base + 1) if base is not None else 0, parent + 1
+                    ):
+                        t = self._raw(v).get("txn")
+                        if t and t.get("app") == app and t["version"] >= ver:
+                            raise TxnAlreadyCommitted(
+                                f"txn ({app!r}, {ver}) already committed "
+                                f"at version {v}"
+                            )
+                self._check_conflicts(action, conflict_kind, touched, base, parent)
+            entry = dict(
+                build(parent),
+                version=(parent if parent is not None else -1) + 1,
+                parent=parent,
+                committed_at=time.time(),
+            )
             if self._publish(entry):
                 v = entry["version"]
                 if (
@@ -1203,15 +1078,14 @@ class ManifestTable:
                         # checkpoint (disk pressure, races with vacuum's
                         # log truncation, a transient S3 error from
                         # put_log_atomic: botocore raises ClientError,
-                        # NOT OSError — ADVICE r8) must not turn a
-                        # durable commit into an apparent failure that
-                        # invites a duplicating caller retry; the next
-                        # interval commit or vacuum writes the next
-                        # checkpoint
+                        # NOT OSError) must not turn a durable commit
+                        # into an apparent failure that invites a
+                        # duplicating caller retry; the next interval
+                        # commit or vacuum writes the next checkpoint
                         pass
                 return v
         raise RuntimeError(
-            f"manifest commit lost the version race {max_attempts} times"
+            f"{action} lost the version race {max_attempts} times"
         )
 
     def commit_overwrite(
@@ -1445,48 +1319,31 @@ class ManifestTable:
         table_schema: str | None = None,
         mapping=_MAPPING_CARRY,
     ) -> int:
-        """Publish a files-unchanged metadata commit (constraint add/
-        drop, column rename/drop). Conservative with respect to races:
-        ADD was validated against snapshot `base`, so ANY intervening
-        commit aborts it (its rows were never checked); the others share
-        the path for simplicity — all are instant retries. The parent's
+        """Commit a files-unchanged metadata entry (constraint add/drop,
+        column rename/drop). Conservative with respect to races: ADD was
+        validated against snapshot `base`, so ANY intervening commit
+        aborts it (its rows were never checked); the others share the
+        path for simplicity — all are instant retries. The parent's
         column mapping carries forward unless the caller overrides it
         (rename/drop pass the altered mapping + logical schema)."""
         if mapping is ManifestTable._MAPPING_CARRY:
             mapping = self._mapping_of(base_entry)
-        ts = (
-            table_schema
-            if table_schema is not None
-            else self._table_schema_of(base_entry)
-        )
-        for _ in range(20):
-            parent = self.latest_version()
-            if parent != base:
-                raise ConcurrentWriteConflict(
-                    f"{action} validated against version {base} but v{parent} "
-                    f"landed concurrently — re-run against the new snapshot"
-                )
-            entry = {
-                "version": parent + 1,
-                "parent": parent,
-                "action": action,
-                "partition_by": base_entry.get("partition_by") or [],
-                # a schema-altering metadata commit DECLARES the whole
-                # logical schema (there is no narrower "commit schema"
-                # for a commit that writes no files)
-                "schema": table_schema if table_schema is not None else base_entry["schema"],
-                "table_schema": ts,
-                "add": [],
-                "remove": {"kind": "none"},
-                "committed_at": time.time(),
-            }
-            if cons:
-                entry["constraints"] = cons
-            if mapping is not None:
-                entry["column_mapping"] = mapping
-            if self._publish(entry):
-                return entry["version"]
-        raise RuntimeError(f"{action} lost the version race 20 times")
+        entry = {
+            "action": action,
+            "partition_by": base_entry.get("partition_by") or [],
+            # a schema-altering metadata commit DECLARES the whole
+            # logical schema (there is no narrower "commit schema" for a
+            # commit that writes no files)
+            "schema": table_schema or base_entry["schema"],
+            "table_schema": table_schema or self._table_schema_of(base_entry),
+            "add": [],
+            "remove": {"kind": "none"},
+        }
+        if cons:
+            entry["constraints"] = cons
+        if mapping is not None:
+            entry["column_mapping"] = mapping
+        return self._commit_entry(action, "all", base, lambda _parent: entry)
 
     # ---------- read ----------
 
@@ -2079,9 +1936,9 @@ class ManifestTable:
 
     def _drop_uncommitted_dv(self, dv_rel: str) -> None:
         """Best-effort delete of the txn dir holding a staged DV parquet
-        that a pre-publish commit abort left unreferenced (ADVICE r14).
-        Best-effort: a failed delete only re-creates the orphan vacuum
-        would have swept anyway."""
+        (or a DV update's fresh data file) that a pre-publish commit
+        abort left unreferenced. Best-effort: a failed delete only
+        re-creates the orphan vacuum would have swept anyway."""
         d = _txn_dir_of(dv_rel)
         if d is None:
             return
@@ -2163,10 +2020,15 @@ class ManifestTable:
         self.store.delete_txn_dir(txn)
         return written[0]
 
-    def _delete_where_dv(self, spark: SparkSession, condition) -> int:
+    def _delete_where_dv(self, spark: SparkSession, condition, apply_set=None) -> int:
         """Merge-on-read DELETE: record matched row positions in a DV
-        parquet and re-publish the hit file entries with the DV attached
+        parquet and re-commit the hit file entries with the DV attached
         (`remove: files` + re-add, so `_apply` needs no new replay kind).
+        An UPDATE is the same DELETE plus the matched rows' images under
+        `apply_set(matched, cond)`, appended as a fresh data file
+        (written through the normal txn path, so it lands in the table's
+        partition layout with footer stats like any commit).
+
         The file entries' recorded stats stay as written — after a DV
         they are OVER-approximations of the live rows, which is the sound
         direction for skipping (a pruned file never contains live
@@ -2186,69 +2048,43 @@ class ManifestTable:
         if not hit:
             self.store.delete_txn_dir(txn)  # empty DV: no-op, no commit
             return latest
+        p_entry = self._raw(latest)
+        cons, mapping = self._constraints_of(p_entry), self._mapping_of(p_entry)
+        part_by = m["partition_by"] or None
+        new_files: list[dict] = []
+        if apply_set is not None:
+            updated = apply_set(matched, cond).drop("_rel", "_pos")
+            # the updated images are NEW rows — same constraint surface as
+            # a _commit write path (the CoW twin validates inside _commit)
+            self._validate_constraints(updated, cons)
+            _txn, new_files = self._write_txn(updated, part_by, mapping=mapping)
         dv_rel = self._merge_stacked_dvs(txn, dv_rel, hit, m)
         hitset = set(hit)
         add = [
             dict(e, dv=[dv_rel]) for e in m["files"] if e["path"] in hitset
         ]
         try:
-            return self._commit_dv(latest, m, "delete_dv", add, hit)
-        except ConcurrentWriteConflict:
-            # ADVICE r14: a conflict abort is definitively pre-publish
-            # (raised by _check_conflicts before _publish runs), so the
-            # staged DV dir — fresh or merged — is unreferenced by any
-            # commit and only this process knows its uuid: delete it
-            # instead of stranding an orphan until vacuum's min-age
-            # sweep. Other failure modes (ambiguous _publish IO errors)
-            # deliberately leave the dir for vacuum — deleting on an
-            # ambiguous failure could tear a commit that actually
-            # landed.
-            self._drop_uncommitted_dv(dv_rel)
-            raise
-
-    def _commit_dv(
-        self,
-        base: int,
-        m: dict,
-        action: str,
-        add: list[dict],
-        removed_paths: list[str],
-        extra_add: list[dict] | None = None,
-    ) -> int:
-        """Publish a DV commit: remove the hit entries by path, re-add
-        them with their `dv` lists extended (plus `extra_add` fresh data
-        files for merge-on-read UPDATE). Metadata-only with respect to
-        schema — the table schema carries over from the parent."""
-        p_entry = self._raw(base)
-        schema_json = self._table_schema_of(p_entry)
-        entry_core = {
-            "action": action,
-            "partition_by": m["partition_by"] or [],
-            "schema": schema_json,
-            "table_schema": schema_json,
-            "add": add + (extra_add or []),
-            "remove": {"kind": "files", "values": sorted(removed_paths)},
-        }
-        if self._constraints_of(p_entry):
-            entry_core["constraints"] = self._constraints_of(p_entry)
-        if self._mapping_of(p_entry) is not None:
-            entry_core["column_mapping"] = self._mapping_of(p_entry)
-        for _ in range(20):
-            parent = self.latest_version()
-            if parent != base:
-                # snapshot-derived: any intervening commit aborts (the
-                # racing commit may have rewritten the very files this
-                # DV marks, or added rows the predicate should have seen)
-                self._check_conflicts(action, "files", set(), base, parent)
-            entry = dict(
-                entry_core,
-                version=(parent if parent is not None else -1) + 1,
-                parent=parent,
-                committed_at=time.time(),
+            # schema, constraints and mapping carry over from the parent
+            return self._commit_files(
+                spark, None, add + new_files, self._table_schema_of(p_entry),
+                part_by, "update_dv" if apply_set else "delete_dv", "files",
+                latest, cons, remove_paths=hit, validate=False,
+                column_mapping=mapping, base_mapping=mapping,
             )
-            if self._publish(entry):
-                return entry["version"]
-        raise RuntimeError(f"{action} lost the version race 20 times")
+        except ConcurrentWriteConflict:
+            # a conflict abort is definitively pre-publish (raised by
+            # _check_conflicts before _publish runs), so the staged dirs —
+            # the DV parquet, fresh or merged, and any updated-row data
+            # files — are unreferenced by any commit and only this process
+            # knows their uuids: delete them instead of stranding orphans
+            # until vacuum's min-age sweep. Other failure modes (ambiguous
+            # _publish IO errors) deliberately leave them for vacuum —
+            # deleting on an ambiguous failure could tear a commit that
+            # actually landed.
+            self._drop_uncommitted_dv(dv_rel)
+            if new_files:  # all in one txn dir
+                self._drop_uncommitted_dv(new_files[0]["path"])
+            raise
 
     def update_where(
         self, spark: SparkSession, condition, set_exprs: dict,
@@ -2286,62 +2122,12 @@ class ManifestTable:
             return out
 
         if mode == "dv":
-            return self._update_where_dv(spark, condition, apply_set)
+            return self._delete_where_dv(spark, condition, apply_set)
         if mode != "cow":
             raise ValueError(f"update_where mode must be 'cow' or 'dv', got {mode!r}")
         return self._rewrite_files(
             spark, condition, "update", apply_set, range_filter=range_filter,
         )
-
-    def _update_where_dv(self, spark, condition, apply_set) -> int:
-        """Merge-on-read UPDATE: old positions of matched rows → deletion
-        vector; their transformed images → a fresh appended data file
-        (written through the normal txn path, so it lands in the table's
-        partition layout with footer stats like any commit)."""
-        latest, m, files, cond = self._where_snapshot(spark, condition)
-        prov = self._load_snapshot(spark, m, files, provenance=True)
-        matched = prov.filter(
-            F.coalesce(cond.cast("boolean"), F.lit(False))
-        )
-        txn, dv_rel, hit = self._write_dv(
-            spark,
-            matched.select(
-                F.col("_rel").alias("file"), F.col("_pos").alias("pos")
-            ),
-        )
-        if not hit:
-            self.store.delete_txn_dir(txn)
-            return latest
-        part_by = m["partition_by"] or None
-        updated = apply_set(matched, cond).drop("_rel", "_pos")
-        # the updated images are NEW rows — same constraint surface as a
-        # _commit write path (the CoW twin validates inside _commit)
-        self._validate_constraints(
-            updated, self._constraints_of(self._raw(latest))
-        )
-        _txn2, new_files = self._write_txn(
-            updated, part_by, mapping=self._mapping_of(self._raw(latest))
-        )
-        dv_rel = self._merge_stacked_dvs(txn, dv_rel, hit, m)
-        hitset = set(hit)
-        add = [
-            dict(e, dv=[dv_rel]) for e in m["files"] if e["path"] in hitset
-        ]
-        try:
-            return self._commit_dv(
-                latest, m, "update_dv", add, hit, extra_add=new_files
-            )
-        except ConcurrentWriteConflict:
-            # ADVICE r14 (same rationale as the delete path): a conflict
-            # abort is pre-publish, so both staged dirs — the DV parquet
-            # and the fresh updated-row data files — are unreferenced;
-            # drop them rather than strand orphans for vacuum.
-            self._drop_uncommitted_dv(dv_rel)
-            if new_files:
-                d = _txn_dir_of(new_files[0]["path"])
-                if d is not None:
-                    self.store.delete_txn_dir(d.split("/", 1)[1])
-            raise
 
     def _read_schema_names(self) -> set:
         latest = self.latest_version()
@@ -2777,12 +2563,12 @@ class ManifestTable:
         itself makes per-app versions monotone with commit order, so the
         first match from the end IS the max — a long-lived txn stream
         pays O(distance to its last commit), not O(log) per batch.
-        Round 9: a MISS no longer walks the whole retained log — the
-        walk stops at the nearest checkpoint carrying the cumulative
-        `txns` map (written since r9; vacuum refreshes it before
-        truncating, so idempotence memory survives log truncation) and
-        answers from it; legacy txns-less checkpoints fall through to
-        the vacuum boundary as before."""
+        A MISS does not walk the whole retained log: the walk stops at
+        the nearest checkpoint carrying the cumulative `txns` map (vacuum
+        writes one before truncating, so idempotence memory survives log
+        truncation) and answers from it, through `_read_checkpoint_body`
+        like every checkpoint read; legacy txns-less checkpoints fall
+        through to the vacuum boundary."""
         latest = self.latest_version()
         if latest is None:
             return None
@@ -2825,7 +2611,7 @@ class ManifestTable:
                     return t["version"]
         if floor >= 0:
             try:
-                cp = json.loads(self.store.read_log(self._checkpoint_name(floor)))
+                cp = self._read_checkpoint_body(floor)
             except FileNotFoundError:
                 cp = {}
             if "txns" in cp:
@@ -2872,39 +2658,30 @@ class ManifestTable:
         # Capture the conflict base FIRST: the restored snapshot itself is
         # immutable, but a commit landing between this method's entry and
         # the base capture would otherwise make parent == base and skip
-        # the conflict gate (ADVICE r7 — same window as compact's).
+        # the conflict gate (same window as compact's).
         base = self.latest_version()
         files = self._snapshot_files(version)  # raises if vacuumed/unknown
         src = self._raw(version)
-        for _ in range(20):
-            parent = self.latest_version()
-            if parent != base:
-                self._check_conflicts("restore", "all", set(), base, parent)
-            entry = {
-                "version": (parent if parent is not None else -1) + 1,
-                "parent": parent,
-                "action": "restore",
-                "restored_version": version,
-                "partition_by": src.get("partition_by") or [],
-                "schema": src["schema"],
-                "table_schema": self._table_schema_of(src),
-                "add": files,
-                "remove": {"kind": "all"},
-                "committed_at": time.time(),
-            }
-            # RESTORE republishes the target version's METADATA too
-            # (Delta restores schema and properties together): its
-            # constraint set comes back with its data — consistent, and
-            # never resurrects data violating a newer constraint. The
-            # contemporaneous column mapping travels with it (the
-            # restored files' physical names resolve under IT).
-            if self._constraints_of(src):
-                entry["constraints"] = self._constraints_of(src)
-            if self._mapping_of(src) is not None:
-                entry["column_mapping"] = self._mapping_of(src)
-            if self._publish(entry):
-                return entry["version"]
-        raise RuntimeError("restore lost the version race 20 times")
+        entry = {
+            "action": "restore",
+            "restored_version": version,
+            "partition_by": src.get("partition_by") or [],
+            "schema": src["schema"],
+            "table_schema": self._table_schema_of(src),
+            "add": files,
+            "remove": {"kind": "all"},
+        }
+        # RESTORE republishes the target version's METADATA too (Delta
+        # restores schema and properties together): its constraint set
+        # comes back with its data — consistent, and never resurrects
+        # data violating a newer constraint. The contemporaneous column
+        # mapping travels with it (the restored files' physical names
+        # resolve under IT).
+        if self._constraints_of(src):
+            entry["constraints"] = self._constraints_of(src)
+        if self._mapping_of(src) is not None:
+            entry["column_mapping"] = self._mapping_of(src)
+        return self._commit_entry("restore", "all", base, lambda _parent: entry)
 
     # ---------- maintenance ----------
 
@@ -2924,16 +2701,16 @@ class ManifestTable:
         so retained snapshots stay reconstructible. Returns removed txn
         dir names.
 
-        `min_age_seconds` is the in-flight-writer guard (review r6): an
+        `min_age_seconds` is the in-flight-writer guard: an
         unreferenced txn dir younger than this is indistinguishable from
         a commit BETWEEN its data write and its log publish — deleting it
         would let the writer publish an entry listing deleted files.
         Delta's retention window serves the same purpose; lower it only
         when no writer can be active (tests, sole owner).
 
-        Reader hazard (VERDICT r6 item 6, pinned by
-        tests/test_manifest_model.py): a reader holds a FILE LIST, not a
-        lock. A reader whose version stays within the retention window is
+        Reader hazard (pinned by tests/test_manifest_model.py): a reader
+        holds a FILE LIST, not a lock. A reader whose version stays
+        within the retention window is
         safe — its files remain referenced. `keep_versions` small + a
         long-running reader on an old version, or `min_age_seconds=0`
         with ANY concurrent reader/writer, is the documented unsafe
@@ -2946,8 +2723,8 @@ class ManifestTable:
         checkpoint write, no log truncation.
 
         `deep=True` additionally sweeps UNREFERENCED FILES inside LIVE
-        txn dirs (ADVICE r10): a zombie speculative task whose write()
-        completes its PUTs after the commit's pre-publish LIST leaves
+        txn dirs: a zombie speculative task whose write() completes
+        its PUTs after the commit's pre-publish LIST leaves
         objects under a committed txn prefix that the dir-granular sweep
         never reaps. Each zombie file gets the same min_age guard (a
         younger unreferenced file could be an in-flight attempt of a
@@ -3004,24 +2781,14 @@ class ManifestTable:
             # retained snapshots must survive losing the older entries
             if keep[0] not in self.checkpoints():
                 self._write_checkpoint(keep[0])
-        # log truncation in ONE bulk call (round 9: 10^4 dead entries
-        # were 10^4 DELETE round-trips on S3)
-        # doom checkpoint files by their LISTED names (json or parquet —
-        # dooming both spellings blindly would unlink a name that was
-        # never written)
-        old_cps = []
-        for name in self.store.list_log():
-            for suf in (".checkpoint.json", ".checkpoint.parquet"):
-                if name.startswith("v") and name.endswith(suf):
-                    try:
-                        c = int(name[1 : -len(suf)])
-                    except ValueError:
-                        continue
-                    if keep and c < keep[0]:
-                        old_cps.append(name)
-        doomed = [
-            self._version_name(v) for v in vs if v not in keep
-        ] + old_cps
+        # log truncation in ONE bulk call (one DELETE round-trip per dead
+        # entry would dominate on S3); checkpoints are doomed by their
+        # LISTED names, columnar or legacy JSON
+        doomed = [self._version_name(v) for v in vs if v not in keep] + [
+            name
+            for name, c in self._checkpoint_files().items()
+            if keep and c < keep[0]
+        ]
         self.store.delete_logs(doomed)
         return removed + zombies
 

@@ -198,8 +198,9 @@ def main():
     # ---- phase 5: checkpoint size at live-file cardinality ----
     cps = tab.checkpoints()
     cp_bytes = len(tab.store.read_log(tab._checkpoint_name(cps[-1]))) if cps else 0
+    cp_files = len(tab._read_checkpoint_body(cps[-1])["files"]) if cps else 0
     print(json.dumps({"phase": "checkpoint", "count": len(cps),
-                      "latest_bytes": cp_bytes,
+                      "latest_bytes": cp_bytes, "latest_entries": cp_files,
                       "bytes_per_file": round(cp_bytes / max(1, n_files_live), 1)}))
 
     # ---- phase 6: vacuum wall time (log truncation + orphan sweep) ----

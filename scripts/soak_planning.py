@@ -1,16 +1,15 @@
-"""Driver-side planning soak at 10^4–10^5 manifest files (VERDICT r11
-item 3): DATAPLANE_r11 stopped at 8192 files; snapshot planning is
-driver-side O(F) over the JSON checkpoint. This script measures, at
-each file count F:
+"""Driver-side planning soak at 10^4–10^5 manifest files: snapshot
+planning is driver-side O(F) over the checkpoint. This script measures,
+at each file count F, over the columnar checkpoint:
 
   - checkpoint load + snapshot reconstruction (`manifest(v)`) ms,
   - stats pruning over the full list (the dict evaluator `prune.keep`) ms,
+  - checkpoint load with the coarse prune inside the checkpoint read
+    (`manifest(v, prune=...)`) ms,
   - pruned-scan DataFrame construction (`_load_snapshot` on the
     pruned file subset) ms,
   - full-scan DataFrame construction ms (the unprunable worst case),
-  - with both the JSON checkpoint path and the round-12 PARQUET
-    (columnar) checkpoint path, to show the parquet checkpoint's
-    O(columnar-read) advantage — Delta checkpoint parity.
+  - the checkpoint's size in bytes.
 
 The F data files are HARD LINKS of one tiny parquet (inode-only, so
 10^5 files cost ~nothing to create); their manifest entries carry
@@ -18,8 +17,7 @@ synthetic DISJOINT id ranges so a point-lookup prune selects exactly
 one file. This measures the metadata plane, not the data plane.
 
 Usage: python scripts/soak_planning.py [--files 4096,16384,65536,131072]
-Prints one JSON line per (F, checkpoint-format) combination and a
-final summary line.
+Prints one JSON line per F and a final summary line.
 """
 
 from __future__ import annotations
@@ -46,9 +44,9 @@ from data_lakes_tp2_student_spark.session import get_spark  # noqa: E402
 def build_table(root: str, n_files: int) -> ManifestTable:
     """One commit of `n_files` hard-linked parquet files with synthetic
     disjoint [lo, hi] id stats, through the REAL commit machinery."""
-    # auto-checkpointing OFF during the build: the measured handles write
-    # their own checkpoint at the final version, in their own format
-    tab = ManifestTable(root, stats_cols=["id"], checkpoint_interval=0)
+    # interval 1: the giant v0 gets no checkpoint (v > 0 gate), the
+    # final small v1 gets one
+    tab = ManifestTable(root, stats_cols=["id"], checkpoint_interval=1)
     txn = "0" * 32
     stage = tab.store.txn_stage_dir(txn)
     os.makedirs(stage, exist_ok=True)
@@ -130,9 +128,7 @@ def build_table(root: str, n_files: int) -> ManifestTable:
     return tab
 
 
-def bench_once(
-    spark, tab: ManifestTable, fmt: str, full_frame: bool = True
-) -> dict:
+def bench_once(spark, tab: ManifestTable, full_frame: bool = True) -> dict:
     t0 = time.perf_counter()
     m = tab.manifest(tab.latest_version())
     t_load = time.perf_counter() - t0
@@ -145,7 +141,7 @@ def bench_once(
     assert len(pruned) == 1, len(pruned)
 
     # the fused path: checkpoint load + COARSE prune in one step (the
-    # parquet checkpoint prunes columnar before materializing dicts)
+    # checkpoint prunes columnar before decoding any entry)
     t0 = time.perf_counter()
     coarse = tab.manifest(tab.latest_version(), prune=pred)["files"]
     t_coarse = time.perf_counter() - t0
@@ -166,7 +162,9 @@ def bench_once(
 
     return {
         "files": n,
-        "checkpoint": fmt,
+        "checkpoint_bytes": len(
+            tab.store.read_log(tab._checkpoint_name(tab.latest_version()))
+        ),
         "load_ms": round(t_load * 1e3, 1),
         "prune_ms": round(t_prune * 1e3, 1),
         "coarse_plan_ms": round(t_coarse * 1e3, 1),
@@ -185,19 +183,12 @@ def main() -> None:
         help="comma-separated file counts",
     )
     ap.add_argument(
-        "--fmt", default="json,parquet",
-        help="checkpoint formats to measure (round 13: the simulated 10^6"
-             " run uses --fmt parquet — a 10^6-entry JSON checkpoint is"
-             " the O(F)-parse shape the parquet format exists to replace)",
-    )
-    ap.add_argument(
         "--skip-full-frame", action="store_true",
         help="skip the full-scan frame construction (O(F) by definition;"
              " at 10^6 files it alone dominates the soak wall)",
     )
     args = ap.parse_args()
     counts = [int(x) for x in args.files.split(",")]
-    fmts = tuple(args.fmt.split(","))
     spark = get_spark(app_name="soak-planning", shuffle_partitions=8)
     rows = []
     with tempfile.TemporaryDirectory() as td:
@@ -206,28 +197,12 @@ def main() -> None:
             t0 = time.perf_counter()
             tab = build_table(root, f)
             build_s = time.perf_counter() - t0
-            for fmt in fmts:
-                try:
-                    fresh = ManifestTable(
-                        root, stats_cols=["id"], checkpoint_interval=1,
-                        checkpoint_format=fmt,
-                    )
-                except TypeError:
-                    if fmt == "parquet":
-                        continue  # parquet checkpoints not built yet
-                    fresh = ManifestTable(
-                        root, stats_cols=["id"], checkpoint_interval=1,
-                    )
-                # each format handle checkpoints the FINAL (small) v1
-                # in its own encoding; planning then reads v1's tiny
-                # entry + this checkpoint — the production shape
-                fresh._write_checkpoint(fresh.latest_version())
-                r = bench_once(
-                    spark, fresh, fmt, full_frame=not args.skip_full_frame
-                )
-                r["build_s"] = round(build_s, 2)
-                rows.append(r)
-                print(json.dumps(r), flush=True)
+            # planning reads the FINAL (small) v1's tiny entry + its
+            # checkpoint — the production shape
+            r = bench_once(spark, tab, full_frame=not args.skip_full_frame)
+            r["build_s"] = round(build_s, 2)
+            rows.append(r)
+            print(json.dumps(r), flush=True)
     print(json.dumps({"planning_soak": rows}))
     spark.stop()
 

@@ -118,6 +118,24 @@ def dv_stage(
     return f"txn={txn}", written[0], [target]
 
 
+def commit_dv(
+    table: ManifestTable, latest: int, m: dict, dv_rel: str, hit: list[str]
+) -> int:
+    """The commit tail of `_delete_where_dv`: re-add the hit entries
+    with the DV attached through `_commit_files`, carrying the parent's
+    schema, constraints and column mapping."""
+    p_entry = table._raw(latest)
+    mapping = table._mapping_of(p_entry)
+    hitset = set(hit)
+    add = [dict(e, dv=[dv_rel]) for e in m["files"] if e["path"] in hitset]
+    return table._commit_files(
+        None, None, add, table._table_schema_of(p_entry),
+        m["partition_by"] or None, "delete_dv", "files", latest,
+        table._constraints_of(p_entry), remove_paths=hit, validate=False,
+        column_mapping=mapping, base_mapping=mapping,
+    )
+
+
 def _wait_for(path: str) -> None:
     import time as _time
 
@@ -160,7 +178,7 @@ def main() -> None:
         # position set is the production `_delete_where_dv` tail —
         # fresh snapshot → stage DV → `_merge_stacked_dvs` (which READS
         # any DV parquet a racing process committed meanwhile — exactly
-        # the supersede window the verdict names) → `_commit_dv`; a
+        # the supersede window the verdict names) → `commit_dv`; a
         # ConcurrentWriteConflict cleans the staged dirs via the same
         # `_drop_uncommitted_dv` the production abort path uses, then
         # the whole derivation retries from the NEW snapshot.
@@ -174,16 +192,8 @@ def main() -> None:
                 m = table.manifest(latest)
                 txn, dv_rel, hit = dv_stage(table, m, positions)
                 dv_rel = table._merge_stacked_dvs(txn, dv_rel, hit, m)
-                hitset = set(hit)
-                add = [
-                    dict(e, dv=[dv_rel])
-                    for e in m["files"]
-                    if e["path"] in hitset
-                ]
                 try:
-                    versions.append(
-                        table._commit_dv(latest, m, "delete_dv", add, hit)
-                    )
+                    versions.append(commit_dv(table, latest, m, dv_rel, hit))
                     break
                 except ConcurrentWriteConflict:
                     conflicts += 1
@@ -204,12 +214,8 @@ def main() -> None:
         dv_rel = table._merge_stacked_dvs(txn, dv_rel, hit, m)
         print(json.dumps({"staged": True}), flush=True)
         _wait_for(cfg["barrier"])
-        hitset = set(hit)
-        add = [
-            dict(e, dv=[dv_rel]) for e in m["files"] if e["path"] in hitset
-        ]
         try:
-            v = table._commit_dv(latest, m, "delete_dv", add, hit)
+            v = commit_dv(table, latest, m, dv_rel, hit)
             out = {"result": v}
         except ConcurrentWriteConflict:
             table._drop_uncommitted_dv(dv_rel)

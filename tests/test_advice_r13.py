@@ -15,8 +15,8 @@
    now pinned by the committed schema's column type.
 4. (low) `_ckpt_to_parquet_bytes` coerced mixed int/float stat columns
    to float64, rounding ints beyond 2^53 — a rounded min/max can prune
-   a file that contains matching rows. Mixed columns now ride the
-   stats_json fallback, exact.
+   a file that contains matching rows. Mixed columns get no typed
+   prune columns; the verbatim entry keeps their stats exact.
 
 Reference tie-in: the reference mutates rows by whole-file pandas
 rewrites (/root/reference/src/preprocess_to_staging.py); the data-
@@ -189,7 +189,6 @@ def test_string_column_iso_dates_checkpoint_coarse_path(spark, tmp_path):
         str(tmp_path / "t"),
         stats_cols=["s"],
         checkpoint_interval=1,
-        checkpoint_format="parquet",
     )
     df1 = spark.createDataFrame(
         [(1, "2024-01-02"), (2, "2024-01-03")], "id int, s string"
@@ -299,8 +298,9 @@ def test_ckpt_pure_int_and_pure_float_stay_typed():
 
 
 def test_ckpt_mixed_column_coarse_prune_sound():
-    """A coarse range whose column fell back to stats_json must keep
-    every row (unskippable at the coarse level, exact-pruned later)."""
+    """A coarse range on a mixed-kind column (no typed stat columns)
+    must keep every row (unskippable at the coarse level, exact-pruned
+    later)."""
     big = 2**53 + 1
     body = {
         "version": 0,
@@ -523,7 +523,7 @@ def test_delete_discovery_coarse_prunes_at_checkpoint(spark, tmp_path,
     manifest alone costs 8.2 s; PERF.md #69)."""
     tab = ManifestTable(
         str(tmp_path / "t"), stats_cols=["id"],
-        checkpoint_interval=1, checkpoint_format="parquet",
+        checkpoint_interval=1,
     )
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(60)], "id int, v string"
@@ -577,7 +577,7 @@ def test_merge_discovery_coarse_prunes_at_checkpoint(spark, tmp_path,
     EXCEPT when a NOT-MATCHED-BY-SOURCE clause needs the full snapshot."""
     tab = ManifestTable(
         str(tmp_path / "t"), stats_cols=["id"],
-        checkpoint_interval=1, checkpoint_format="parquet",
+        checkpoint_interval=1,
     )
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(60)], "id int, v string"
@@ -644,7 +644,7 @@ def test_quoted_int_in_list_on_partition_column_exact(spark, tmp_path):
     domain before any envelope; the delete must remove ALL matches."""
     tab = ManifestTable(
         str(tmp_path / "t"), stats_cols=[],
-        checkpoint_interval=1, checkpoint_format="parquet",
+        checkpoint_interval=1,
     )
     df = spark.createDataFrame(
         [(i, i % 12) for i in range(48)], "id int, b int"

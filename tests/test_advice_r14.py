@@ -84,7 +84,6 @@ def test_aware_bound_checkpoint_coarse_path(spark, tmp_path):
         spark,
         tmp_path / "t",
         checkpoint_interval=1,
-        checkpoint_format="parquet",
     )
     aware_lo = datetime.datetime(
         2024, 1, 3, tzinfo=datetime.timezone.utc

@@ -1,12 +1,11 @@
-"""Round 12: columnar (parquet) manifest checkpoints — Delta checkpoint
-parity (VERDICT r11 item 3). The JSON checkpoint parses the whole file
-list into python dicts before any pruning can happen; the parquet
-checkpoint stores TYPED per-column min/max stat columns so a
-range-filtered read prunes VECTORIZED and materializes O(selected)
-entries. These tests pin: byte-level round-trip equality of the file
-list vs the JSON path, identical read() results on every path, coarse
-prune engagement and soundness, txns-map survival, and vacuum cleanup
-of parquet checkpoint files."""
+"""Columnar (parquet) manifest checkpoints — Delta checkpoint parity.
+The checkpoint stores each entry's JSON verbatim plus TYPED per-column
+min/max stat columns, so a range-filtered read prunes VECTORIZED and
+decodes O(selected) entries. These tests pin: exact round-trip of the
+file list against log replay, identical read() results on every path,
+coarse prune engagement and soundness, txns-map survival across log
+truncation, the due checkpoint for every commit kind, legacy JSON
+checkpoints, and vacuum cleanup of checkpoint files."""
 
 from __future__ import annotations
 
@@ -27,10 +26,9 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def _mk(spark, path, fmt, n=40, interval=1):
+def _mk(spark, path, n=40, interval=1):
     tab = ManifestTable(
-        str(path), stats_cols=["id"], checkpoint_interval=interval,
-        checkpoint_format=fmt,
+        str(path), stats_cols=["id"], checkpoint_interval=interval
     )
     df = spark.createDataFrame(
         [(i, f"v{i}", f"d{i % 3}") for i in range(n)],
@@ -47,31 +45,31 @@ def _mk(spark, path, fmt, n=40, interval=1):
 
 
 def test_parquet_checkpoint_snapshot_equals_json(spark, tmp_path):
-    """The reconstructed file list from a parquet checkpoint is
-    ENTRY-IDENTICAL to the JSON one for the same commits (path,
-    partition, bytes, rows, stats — everything)."""
-    tj, df = _mk(spark, tmp_path / "j", "json")
-    tp, _ = _mk(spark, tmp_path / "p", "parquet")
-    fj = tj._snapshot_files(tj.latest_version())
-    fp = tp._snapshot_files(tp.latest_version())
-    # paths embed distinct txn ids — compare entries path-normalized
+    """The file list decoded from a columnar checkpoint is ENTRY-EXACT
+    against log replay (path, partition, bytes, rows, stats —
+    everything), and a `checkpoint_interval=0` twin that only replays
+    the log holds the same entries and rows."""
+    tp, _ = _mk(spark, tmp_path / "p")
+    v = tp.latest_version()
+    assert v in tp.checkpoints()
+    replay: list = []
+    for u in range(v + 1):
+        replay = ManifestTable._apply(tp._raw(u), replay)
+    assert tp._read_checkpoint_body(v)["files"] == replay
+    assert tp._snapshot_files(v) == replay
+
+    twin, _ = _mk(spark, tmp_path / "j", interval=0)
+    assert twin.checkpoints() == []
+
+    # paths embed distinct txn ids — compare entries without them
     def norm(fs):
         return sorted(
-            json.dumps(
-                {**e, "path": e["path"].rsplit("/", 1)[-1][-20:]},
-                sort_keys=True,
-            )
+            json.dumps({k: x for k, x in e.items() if k != "path"}, sort_keys=True)
             for e in fs
         )
 
-    assert len(fj) == len(fp)
-    assert {tuple(sorted(e)) for e in fj} == {tuple(sorted(e)) for e in fp}
-    for ej, ep in zip(
-        sorted(fj, key=lambda e: e["partition"]["day"]),
-        sorted(fp, key=lambda e: e["partition"]["day"]),
-    ):
-        assert ej["partition"] == ep["partition"]
-    assert _rows(tj.read(spark)) == _rows(tp.read(spark))
+    assert norm(tp._snapshot_files(v)) == norm(twin._snapshot_files(v))
+    assert _rows(twin.read(spark)) == _rows(tp.read(spark))
 
 
 def test_parquet_checkpoint_roundtrip_preserves_entries():
@@ -102,7 +100,13 @@ def test_parquet_checkpoint_roundtrip_preserves_entries():
             "partition": {"day": "d2"},
             "bytes": 30,
             "rows": 9,
-            "stats": {"mixed": [3, 4]},  # forces `mixed` into fallback
+            "stats": {"mixed": [3, 4]},  # `mixed` gets no typed columns
+        },
+        {
+            # legacy entry without `bytes`/`rows`: the keys stay ABSENT
+            # (a None would break row_count and describe_detail)
+            "path": "data/txn=a/f4.parquet",
+            "partition": {"day": "d2"},
         },
     ]
     body = {"version": 7, "files": files, "txns": {"app1": 42}}
@@ -114,20 +118,21 @@ def test_parquet_checkpoint_roundtrip_preserves_entries():
     pruned = _ckpt_from_parquet(
         _ckpt_to_parquet_bytes(body), {"id": ((1, 5), "bigint")}
     )
-    assert [e["path"][-20:] for e in pruned["files"]] == [
-        "data/txn=a/f1.parquet"[-20:],
-        "data/txn=a/f3.parquet"[-20:],
+    assert [e["path"] for e in pruned["files"]] == [
+        "data/txn=a/f1.parquet",
+        "data/txn=a/f3.parquet",
+        "data/txn=a/f4.parquet",
     ]
     # mixed-domain column cannot skip at the coarse level (sound)
     pruned2 = _ckpt_from_parquet(
         _ckpt_to_parquet_bytes(body), {"mixed": ((0, 1), "bigint")}
     )
-    assert len(pruned2["files"]) == 3
+    assert len(pruned2["files"]) == 4
     # one-sided range works
     pruned3 = _ckpt_from_parquet(
         _ckpt_to_parquet_bytes(body), {"id": ((10, None), "bigint")}
     )
-    assert len(pruned3["files"]) == 2  # f2 + stats-less f3
+    assert len(pruned3["files"]) == 3  # f2 + stats-less f3, f4
     # datetime bound in naive isoformat vs '+00:00' stats: sound at the
     # exact boundary (equal instant must KEEP the file)
     pruned4 = _ckpt_from_parquet(
@@ -140,10 +145,10 @@ def test_parquet_checkpoint_roundtrip_preserves_entries():
 def test_parquet_checkpoint_range_read_identical_and_pruned(
     spark, tmp_path, monkeypatch
 ):
-    """read(range_filter=...) over a parquet checkpoint returns the same
-    rows as the JSON table AND materializes fewer entries."""
-    tj, df = _mk(spark, tmp_path / "j", "json")
-    tp, _ = _mk(spark, tmp_path / "p", "parquet")
+    """read(range_filter=...) over a columnar checkpoint returns the same
+    rows as a checkpoint-less table AND materializes fewer entries."""
+    tj, df = _mk(spark, tmp_path / "j", interval=0)
+    tp, _ = _mk(spark, tmp_path / "p")
     want = _rows(tj.read(spark, range_filter={"id": (7, 7)}).filter("id = 7"))
 
     seen: list[int] = []
@@ -168,11 +173,10 @@ def test_parquet_checkpoint_range_read_identical_and_pruned(
 
 
 def test_parquet_checkpoint_deltas_and_vacuum(spark, tmp_path):
-    """Post-checkpoint deltas replay over a parquet checkpoint exactly
-    as over JSON; vacuum reaps superseded parquet checkpoint files."""
+    """Post-checkpoint deltas replay over a columnar checkpoint; vacuum
+    reaps superseded checkpoint files."""
     tab = ManifestTable(
-        str(tmp_path / "t"), stats_cols=["id"], checkpoint_interval=2,
-        checkpoint_format="parquet",
+        str(tmp_path / "t"), stats_cols=["id"], checkpoint_interval=2
     )
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(30)], "id int, v string"
@@ -201,47 +205,155 @@ def test_parquet_checkpoint_deltas_and_vacuum(spark, tmp_path):
     assert sorted(r.id for r in tab.read(spark).collect()) == got
 
 
-def test_parquet_checkpoint_txns_survive(spark, tmp_path):
-    """The cumulative txns map rides parquet checkpoint metadata — a
-    fresh handle recovers last_txn_version after log truncation, same
-    contract as the JSON checkpoint."""
+def _stage_one_row(tab, value):
+    """Stage one hand-written parquet file; its entry records neither
+    `bytes` nor `rows` (the legacy entry shape)."""
     import os
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tab = ManifestTable(
-        str(tmp_path / "t"), checkpoint_interval=1,
-        checkpoint_format="parquet",
-    )
-    df = spark.createDataFrame([(1, "a")], "id int, v string")
-    tab.commit_overwrite(df)
     txn = uuid.uuid4().hex
     stage = tab.store.txn_stage_dir(txn)
     os.makedirs(stage, exist_ok=True)
     pq.write_table(
-        pa.table({"id": pa.array([2], "int32"), "v": ["b"]}),
+        pa.table({"id": pa.array([value], "int32"), "v": [f"r{value}"]}),
         os.path.join(stage, "part-0.parquet"),
     )
     entries = [
-        {"path": rel, "partition": {}, "bytes": os.path.getsize(loc)}
-        for rel, loc in tab.store.finalize_txn(txn)
+        {"path": rel, "partition": {}} for rel, _ in tab.store.finalize_txn(txn)
     ]
+    return txn, entries
+
+
+def test_parquet_checkpoint_txns_survive(spark, tmp_path):
+    """The cumulative txns map rides the columnar checkpoint's metadata —
+    a fresh handle recovers last_txn_version after log truncation has
+    removed the entry that carried the token."""
+    tab = ManifestTable(str(tmp_path / "t"), checkpoint_interval=1)
+    df = spark.createDataFrame([(1, "a")], "id int, v string")
+    tab.commit_overwrite(df)
+    txn, entries = _stage_one_row(tab, 2)
     tab._commit_files(
         None, txn, entries, tab._table_schema_of(tab._raw(0)), None,
         "append", "none", 0, {}, validate=False,
         entry_extra={"txn": {"app": "appX", "version": 7}},
     )
+    assert tab._read_checkpoint_body(1).get("txns") == {"appX": 7}
+    tab.commit_append(spark.createDataFrame([(3, "c")], df.schema))
+    tab.vacuum(keep_versions=1, min_age_seconds=0)
+    assert tab.versions() == [2]  # the token's entry v1 is gone
+    assert [n for n in tab.store.list_log() if ".checkpoint." in n] == [
+        "v%020d.checkpoint.parquet" % 2
+    ]
     fresh = tab.clone()
     assert fresh.last_txn_version("appX") == 7
-    # and specifically via the PARQUET checkpoint's schema metadata
-    assert tab._read_checkpoint_body(1).get("txns") == {"appX": 7}
+    # the v1 entry without bytes/rows passed through due checkpoints:
+    # count and detail still answer from metadata plus one footer read
+    assert fresh.row_count() == 3
+    detail = fresh.describe_detail()
+    assert detail["num_rows"] is None and detail["size_bytes"] > 0
 
 
-def test_checkpoint_format_validation(tmp_path):
-    with pytest.raises(ValueError):
-        ManifestTable(str(tmp_path / "t"), checkpoint_format="orc")
+def test_legacy_json_checkpoint_reads_and_headless_columnar_raises(
+    spark, tmp_path
+):
+    """A hand-written legacy `.checkpoint.json` below a truncated log
+    still reconstructs snapshots and answers last_txn_version; a columnar
+    checkpoint without the `entry` column fails loudly."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tab = ManifestTable(str(tmp_path / "t"), checkpoint_interval=0)
+    df = spark.createDataFrame([(1, "a")], "id int, v string")
+    tab.commit_overwrite(df)
+    txn, entries = _stage_one_row(tab, 2)
+    tab._commit_files(
+        None, txn, entries, tab._table_schema_of(tab._raw(0)), None,
+        "append", "none", 0, {}, validate=False,
+        entry_extra={"txn": {"app": "old", "version": 3}},
+    )
+    tab.commit_append(spark.createDataFrame([(3, "c")], df.schema))
+    # the legacy format: the whole body as one JSON document at v1
+    body = {"version": 1, "files": tab._snapshot_files(1), "txns": {"old": 3}}
+    with open(os.path.join(tab.log_dir, "v%020d.checkpoint.json" % 1), "w") as f:
+        json.dump(body, f)
+    for v in (0, 1):  # truncate the log below the legacy checkpoint
+        os.unlink(os.path.join(tab.log_dir, tab._version_name(v)))
+    fresh = tab.clone()
+    assert fresh.checkpoints() == [1]
+    assert _rows(fresh.read(spark)) == [(1, "a"), (2, "r2"), (3, "c")]
+    assert fresh.last_txn_version("old") == 3
+
+    # a columnar checkpoint in the older per-field encoding: no `entry`
+    t = pa.table({"path": [e["path"] for e in body["files"]]})
+    t = t.replace_schema_metadata({b"version": b"2"})
+    sink = pa.BufferOutputStream()
+    pq.write_table(t, sink)
+    fresh.store.put_log_atomic(
+        fresh._checkpoint_name(2), sink.getvalue().to_pybytes()
+    )
+    with pytest.raises(ValueError, match="no `entry` column"):
+        fresh.clone().read(spark)
+
+
+def _dv_delete(spark, tab):
+    tab.delete_where(spark, "id = 3", mode="dv")
+
+
+def _dv_update(spark, tab):
+    tab.update_where(spark, "id = 4", {"v": "'u'"}, mode="dv")
+
+
+def _restore(spark, tab):
+    tab.restore(0)
+
+
+def _add_constraint(spark, tab):
+    tab.add_check_constraint(spark, "pos", "id >= 0")
+
+
+def _drop_constraint(spark, tab):
+    tab.add_check_constraint(spark, "pos", "id >= 0")
+    tab.drop_check_constraint("pos")
+
+
+def _rename_column(spark, tab):
+    tab.rename_column("v", "w")
+
+
+def _drop_column(spark, tab):
+    tab.drop_column("v")
+
+
+@pytest.mark.parametrize(
+    "op",
+    [_dv_delete, _dv_update, _restore, _add_constraint, _drop_constraint,
+     _rename_column, _drop_column],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_every_commit_kind_writes_due_checkpoint(spark, tmp_path, op):
+    """Every commit kind goes through the one publish loop, so at
+    `checkpoint_interval=1` the new version always has its checkpoint,
+    and the checkpoint equals log replay."""
+    tab = ManifestTable(str(tmp_path / "t"), checkpoint_interval=1)
+    df = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(10)], "id int, v string"
+    )
+    tab.commit_overwrite(df.coalesce(2))
+    tab.commit_append(spark.createDataFrame([(10, "x")], df.schema))
+    before = tab.latest_version()
+    op(spark, tab)
+    v = tab.latest_version()
+    assert v > before
+    assert v in tab.checkpoints(), (v, tab.checkpoints())
+    replay: list = []
+    for u in range(v + 1):
+        replay = ManifestTable._apply(tab._raw(u), replay)
+    assert tab._read_checkpoint_body(v)["files"] == replay
 
 
 def test_dir_coalesced_scan_roots_identical_results(spark, tmp_path):
@@ -301,11 +413,11 @@ def test_parquet_checkpoint_partition_coarse_prune(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tab, df = _mk(spark, tmp_path / "t", "parquet")
+    tab, df = _mk(spark, tmp_path / "t")
     v = tab.latest_version()
 
     # the checkpoint physically carries the part:: column
-    raw = tab.store.read_log(tab._checkpoint_pq_name(v))
+    raw = tab.store.read_log(tab._checkpoint_name(v))
     t = pq.read_table(pa.BufferReader(raw))
     assert "part::day" in t.column_names
 
@@ -347,8 +459,7 @@ def test_parquet_checkpoint_int_partition_range_typed(spark, tmp_path):
     """Integer partition values compare NUMERICALLY in the coarse path
     ('9' < '10' must hold) — same contract as the dict evaluator."""
     tab = ManifestTable(
-        str(tmp_path / "t"), stats_cols=[], checkpoint_interval=1,
-        checkpoint_format="parquet",
+        str(tmp_path / "t"), stats_cols=[], checkpoint_interval=1
     )
     df = spark.createDataFrame(
         [(i, i % 12) for i in range(48)], "id int, b int"

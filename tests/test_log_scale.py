@@ -177,9 +177,7 @@ def test_checkpoint_txn_map_bounds_miss_cost(tmp_path):
     for i in range(25):
         _synth_txn_commit(tab, "appA", i)
     # the latest checkpoint carries the cumulative map
-    import json as _json
-
-    cp = _json.loads(tab.store.read_log(tab._checkpoint_name(20)))
+    cp = tab._read_checkpoint_body(20)
     assert cp["txns"] == {"appA": 20}
     counting = _Counting(tab.store)
     tab.store = counting

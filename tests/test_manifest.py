@@ -776,7 +776,7 @@ def test_checkpoint_written_at_interval_and_used(spark, tmp_path):
     for k in range(8):
         tab.commit_append(_df(spark, [(k, f"v{k}", "d1")]))
     assert tab.checkpoints() == [3, 6]
-    ck = json.loads(tab.store.read_log(tab._checkpoint_name(6)))
+    ck = tab._read_checkpoint_body(6)
     assert len(ck["files"]) == len(tab.manifest(6)["files"])
     # reconstruction equals naive full replay at every version
     for v in tab.versions():
@@ -1709,7 +1709,7 @@ def test_constraints_survive_dv_commits_and_restore(spark, tab):
     tab.commit_overwrite(_df(spark, [(1, "a", "d1"), (2, "b", "d1")]))
     v_add = tab.add_check_constraint(spark, "id_positive", "id > 0")
     tab.delete_where(spark, "id = 2", mode="dv")
-    assert tab.constraints() == {"id_positive": "id > 0"}  # carried by _commit_dv
+    assert tab.constraints() == {"id_positive": "id > 0"}  # carried by the DV commit
     with pytest.raises(CheckConstraintViolation):
         tab.commit_append(_df(spark, [(-1, "x", "d1")]))
     # restore to BEFORE the constraint existed -> constraint gone with it

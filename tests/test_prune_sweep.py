@@ -84,7 +84,7 @@ def table(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("sweep") / "t"
     tab = ManifestTable(
         str(root), stats_cols=["id", "s", "d"],
-        checkpoint_interval=1, checkpoint_format="parquet",
+        checkpoint_interval=1,
     )
     rows = [
         (

@@ -60,7 +60,7 @@ def table_and_rows(spark, tmp_path_factory):
     df = spark.createDataFrame(rows, "id int, k int, g string, x double, d date")
     tab = ManifestTable(
         root, stats_cols=["id", "k", "x", "d"],
-        checkpoint_interval=1, checkpoint_format="parquet",
+        checkpoint_interval=1,
     )
     tab.commit_overwrite(df.repartition(8, "id"), partition_by=["g"])
     m = tab.manifest(0)
