@@ -209,9 +209,12 @@ _SIMHASH_CTE = """
 )
 def x2c_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x2 — 64-bit SimHash fingerprint per document (near-dup via small
-    hamming distance; banding reuses the x2 LSH shape)."""
+    hamming distance; banding reuses the x2 LSH shape), rendered as the
+    64-character '0'/'1' string from the kernel's bigint."""
     docs = load(spark, sf_dir, "documents")
-    return simhash(docs, "text").select("doc_id", "simhash")
+    return simhash(docs, "text").select(
+        "doc_id", F.lpad(F.bin("simhash"), 64, "0").alias("simhash")
+    )
 
 
 # ------------------------------------------------------- x3 similarity search

@@ -131,14 +131,14 @@ def x2f_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bit fingerprint. The Spark path generates candidates with
     TWO-LEVEL banding (16-bit band + 12-bit sub-band of the
     complementary bits — see operators/dedup.py:simhash_pairs for the
-    pigeonhole proof and the round-10 quadratic-candidates finding that
-    forced the redesign); the oracle's single-level 16-bit banding is an
+    pigeonhole proof); the oracle's single-level 16-bit banding is an
     independent exact-recall candidate generator (pigeonhole needs only
     ≤3 diffs over 4 disjoint slices), so both sides compute the same
-    final pair set. The hamming filter is bit_count(xor) over 32-bit
-    halves — all codegen'd; the SimHash complement to x2's MinHash
-    banding, catching word-frequency-preserving edits that shingle sets
-    miss."""
+    final pair set. Fingerprints stay bigints end to end: band keys are
+    shift-and-mask integers and the hamming filter is one
+    bit_count(xor) — all codegen'd; the SimHash complement to x2's
+    MinHash banding, catching word-frequency-preserving edits that
+    shingle sets miss."""
     docs = load(spark, sf_dir, "documents")
     sh = simhash(docs, "text").select("doc_id", "simhash")
     return simhash_pairs(sh, "doc_id", bands=4, max_hamming=3)

@@ -32,8 +32,14 @@ documented contract.
 
 from __future__ import annotations
 
+import logging
 import os
+from hashlib import md5
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.compute import eager, spread
@@ -283,13 +289,14 @@ def _pair_overlap(
         else exploded_shingles(df.repartition(id_col), id_col, text_col)
     )
     if shingles_are_distinct and shingles is not None and not shingles.is_cached:
-        # The flag's contract (ADVICE r15): 'distinct AND cached'. An
-        # uncached frame would silently recompute the whole shingle
-        # pipeline per broadcast build below — fail loudly instead.
-        raise ValueError(
-            "shingles_are_distinct=True requires a persisted "
-            "distinct-shingle table (e.g. eager(distinct_shingles(...)))"
+        # The flag's contract is 'distinct AND cached'. An uncached frame
+        # (never persisted, or dropped by clearCache) would recompute the
+        # whole shingle pipeline per broadcast build below: persist it.
+        logging.getLogger("spark_graft").warning(
+            "shingles_are_distinct=True got an uncached shingle table; "
+            "persisting it (pass eager(distinct_shingles(...)) to avoid this)"
         )
+        raw = eager(shingles)
     if _input_bytes(df) >= int(
         os.environ.get("SPARK_GRAFT_VERIFY_CUT_MIN_BYTES", str(32 << 20))
     ):
@@ -550,128 +557,110 @@ def simhash_pairs(
     max_hamming: int = 3,
     sub_bands: int = 4,
 ) -> DataFrame:
-    """x2 — SimHash near-dup candidate pairs: TWO-LEVEL banding of the
-    64-bit fingerprint (round 10 — the scaling bench caught the 32-bit /
-    8-bit-band form going quadratic: candidates ~ n²/2^width, measured
-    x105.9 wall at 10x docs, 363M candidates at 50k). Emit pairs
-    (id_a < id_b) colliding on (band, sub-band), then keep pairs within
-    `max_hamming` exact bit flips.
+    """x2 — SimHash near-dup pairs (id_a < id_b, hamming) within
+    `max_hamming` bit flips of the bigint fingerprints `simhash` emits.
 
-    Pigeonhole guarantee, both levels: ≤3 diffs over 4 disjoint 16-bit
-    bands → some band is clean; GIVEN that band is clean, the
-    complementary 48 bits still hold all ≤3 diffs → some 12-bit sub-band
-    of them is clean too — so every true pair collides on at least one
-    of the 16 (band, sub) combos and recall is exact for max_hamming ≤
-    min(bands, sub_bands) - 1. The effective join key is 16+12 = 28
-    bits: candidate volume ~ n²/2^28 instead of n²/2^8 (Manku et al.
-    2007 use the same fingerprint width and radius; their
-    permuted-table probing is this scheme's generalization — at larger
-    n, raise bands/sub_bands to widen the effective key further). The
-    exact distance is bit_count(xor) over the two 32-bit halves —
-    codegen'd integer ops, no per-bit loops. The banded side is
-    persisted+materialized: it feeds both sides of the self-join (see
-    `eager`)."""
+    Candidates come from TWO-LEVEL banding: each `64 / bands`-bit band
+    pairs with each of `sub_bands` equal slices of its complementary
+    bits, and a pair is a candidate when it collides on one (band,
+    sub-band) key. Pigeonhole at both levels: ≤3 diffs over 4 disjoint
+    16-bit bands leave one band clean, and the complementary 48 bits
+    then hold all ≤3 diffs, so one 12-bit sub-band is clean too — recall
+    is exact for max_hamming ≤ min(bands, sub_bands) - 1, and the 28-bit
+    effective key keeps candidates near n²/2^28 (Manku et al. 2007 use
+    the same width and radius; raise bands/sub_bands at larger n). Keys
+    are shift-and-mask integers (bit 0 = MSB, as in the fingerprint) and
+    the distance is one bit_count(xor) — codegen'd integer ops only. The
+    banded side is persisted and materialized: it feeds both sides of
+    the self-join (see `eager`)."""
     nbits = 64
     width = nbits // bands
-    swidth = (nbits - width) // sub_bands
+    cwidth = nbits - width
+    swidth = cwidth // sub_bands
+    fp = F.col(sim_col)
+
+    def bits(v: Column, lo: int, n: int, total: int = nbits) -> Column:
+        # bits [lo, lo + n) of a `total`-bit value, MSB first
+        if n == 0:
+            return F.lit(0).cast("bigint")
+        return F.shiftrightunsigned(v, total - lo - n).bitwiseAND(
+            F.lit((1 << n) - 1)
+        )
+
     combos = []
     for b in range(bands):
-        comp = F.concat(
-            *[
-                F.substring(F.col(sim_col), x * width + 1, width)
-                for x in range(bands)
-                if x != b
-            ]
+        tail = nbits - (b + 1) * width
+        comp = F.shiftleft(bits(fp, 0, b * width), tail).bitwiseOR(
+            bits(fp, (b + 1) * width, tail)
         )
         for s in range(sub_bands):
+            key = F.shiftleft(bits(fp, b * width, width), swidth).bitwiseOR(
+                bits(comp, s * swidth, swidth, cwidth)
+            )
             combos.append(
                 F.struct(
-                    F.lit(b * sub_bands + s).alias("band"),
-                    F.concat(
-                        F.substring(F.col(sim_col), b * width + 1, width),
-                        F.substring(comp, s * swidth + 1, swidth),
-                    ).alias("bits"),
+                    F.lit(b * sub_bands + s).alias("band"), key.alias("bits")
                 )
             )
     banded = eager(
         sh_df.select(
-            F.col(id_col), F.col(sim_col), F.explode(F.array(*combos)).alias("k")
-        ).select(F.col(id_col), F.col(sim_col), "k.band", "k.bits")
+            F.col(id_col), fp, F.explode(F.array(*combos)).alias("k")
+        ).select(F.col(id_col), fp, "k.band", "k.bits")
     )
     a = banded.select(
-        F.col(id_col).alias("id_a"), F.col(sim_col).alias("_sa"), "band", "bits"
+        F.col(id_col).alias("id_a"), fp.alias("_sa"), "band", "bits"
     )
     b = banded.select(
-        F.col(id_col).alias("id_b"), F.col(sim_col).alias("_sb"), "band", "bits"
+        F.col(id_col).alias("id_b"), fp.alias("_sb"), "band", "bits"
     )
-    cand = (
+    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("bigint")
+    return (
         a.join(b, ["band", "bits"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_sa", "_sb")
-        .distinct()
-    )
-
-    def _half(col: str, i: int):
-        return (
-            F.conv(F.substring(col, i * 32 + 1, 32), 2, 10).cast("bigint")
-        )
-
-    ham = sum(
-        F.bit_count(_half("_sa", i).bitwiseXOR(_half("_sb", i))).cast("bigint")
-        for i in range(2)
-    )
-    return (
-        cand.select("id_a", "id_b", ham.alias("hamming"))
+        .select("id_a", "id_b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
+        .distinct()
     )
 
 
 def simhash(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
-    """x2 — 64-bit SimHash over words as a bit string: bit b is 1 when the
-    word-population's b-th md5 bit majority is positive (bit b = the b-th
-    MSB of the first 16 hex digits of md5(word)). 64 bits as of round 10
-    (was 32): the scaling bench showed a 32-bit fingerprint's band
-    buckets densifying quadratically at 50k docs — 64-bit is the
-    published SimHash width (Manku et al. 2007) and what simhash_pairs'
-    two-level banding needs for 28-bit effective keys.
+    """x2 — 64-bit SimHash fingerprint of each row's words as one signed
+    bigint (bit 0 = MSB): bit b is set when a strict majority of the
+    words have bit b in the first 8 bytes of md5(word) — the b-th MSB of
+    md5's first 16 hex digits, the definition the DuckDB oracle spells
+    out digit by digit. 64 bits is the published SimHash width (Manku et
+    al. 2007) and what `simhash_pairs`' two-level banding needs; render
+    the '0'/'1' string with `lpad(bin(fp), 64, '0')`.
 
-    Two md5 PER WORD — one per 32-bit half (review r6 guarded against
-    the k-fold shape where md5 re-evaluates inside every per-bit
-    aggregate, 64x the hash work): the halves land in two materialized
-    bigint-array columns and the 64 majority folds run over the
-    precomputed ints with pure bit arithmetic. (Catalyst inlines the
-    shared _wmd5 prefix into both half-columns — two md5 calls per word
-    in the optimized plan, verified; collapsing to one would need an
-    engine-specific hash DuckDB can't mirror.) The bit definition
-    matches the DuckDB oracle's hex-digit extraction exactly (b-th MSB
-    either way).
+    The fold runs in one Arrow-batched pandas UDF after a round-robin
+    `spread`: per row, so no exchange follows the spread at any scale.
+    Per batch, the kernel splits each text on a single space (as Spark's
+    and DuckDB's split do), md5-hashes the UTF-8 bytes of each distinct
+    word once, unpacks the first 8 digest bytes into bits and takes each
+    document's strict majority per bit. Null text has no words and gives
+    0; "" is one empty word; a tie gives 0. See PERF.md ("SimHash: one
+    bigint per document") for the measured alternatives."""
 
-    Round 15 optimization note: the "explode words → 64 codegen'd ±1
-    sum-aggs per doc" rewrite (the minhash explode/groupBy trick, guide
-    §4.1) was measured-REJECTED — same-session best-of-4 at sf0.1: this
-    per-row interpreted fold 0.861 s vs the explode+HashAggregate form
-    1.854 s. The groupBy's exchange + second aggregate stage costs more
-    wall than the interpreter overhead it removes, and at cluster scale
-    this form also shuffles NOTHING (the fold is embarrassingly per-row)
-    while the explode form pays one 64-long-per-doc exchange. Kept
-    per-row; see OPTIMIZATION_r15.md and tests/test_opt_r15.py for the
-    pinned equivalence of the two forms.
-    """
-    wmd5 = f"transform(split({text_col}, ' '), w -> substr(md5(w), 1, 16))"
-    wh = "transform(_wmd5, m -> CAST(conv(substr(m, 1, 8), 16, 10) AS BIGINT))"
-    wl = "transform(_wmd5, m -> CAST(conv(substr(m, 9, 8), 16, 10) AS BIGINT))"
-    expr = """
-    array_join(transform(sequence(0, 63), b ->
-      CASE WHEN aggregate(IF(b < 32, _wh, _wl), 0, (acc, h) ->
-        acc + (CASE WHEN (h div shiftleft(CAST(1 AS BIGINT), 31 - b % 32)) % 2 = 1
-               THEN 1 ELSE -1 END)
-      ) > 0 THEN '1' ELSE '0' END), '')
-    """
-    return (
-        spread(df)
-        .withColumn("_wmd5", F.expr(wmd5))
-        .withColumn("_wh", F.expr(wh))
-        .withColumn("_wl", F.expr(wl))
-        .withColumn(out_col, F.expr(expr))
-        .drop("_wmd5", "_wh", "_wl")
+    # Nested so that the UDF pickles by value: Python workers need not be
+    # able to import this package.
+    def kernel(texts: pd.Series) -> pd.Series:
+        words = pc.split_pattern(pa.array(texts, pa.string()), " ")
+        lens = pc.list_value_length(words).fill_null(0).to_numpy()
+        enc = pc.dictionary_encode(pc.list_flatten(words))
+        uniq = enc.dictionary.cast(pa.binary()).to_pylist()
+        digests = b"".join(md5(w).digest()[:8] for w in uniq)
+        word_bits = np.unpackbits(
+            np.frombuffer(digests, np.uint8).reshape(-1, 8), axis=1
+        )[enc.indices.to_numpy(zero_copy_only=False)]
+        major = np.zeros((len(lens), 64), dtype=bool)
+        has = lens > 0
+        if has.any():
+            starts = (np.cumsum(lens) - lens)[has]
+            ones = np.add.reduceat(word_bits, starts, axis=0, dtype=np.int64)
+            major[has] = 2 * ones > lens[has, None]
+        fps = np.packbits(major, axis=1).view(">i8").ravel()
+        return pd.Series(fps.astype(np.int64))
+
+    return spread(df).withColumn(
+        out_col, F.pandas_udf(kernel, "bigint")(F.col(text_col))
     )

@@ -85,13 +85,12 @@ def main() -> None:
 
     stage("04_x2b_full", _verify_shared)
     stage("05_x2e_full", lambda: dup_clusters(_pairs()))
-    stage("06_simhash", lambda: simhash(docs, "text").select("doc_id", "simhash"))
-    stage(
-        "07_x2f_full",
-        lambda: simhash_pairs(
-            simhash(docs, "text").select("doc_id", "simhash"), "doc_id"
-        ),
-    )
+    def _fingerprints():
+        # one bigint per document from the Arrow-batched kernel
+        return simhash(docs, "text").select("doc_id", "simhash")
+
+    stage("06_simhash", _fingerprints)
+    stage("07_x2f_full", lambda: simhash_pairs(_fingerprints(), "doc_id"))
     print(json.dumps(out))
 
 

@@ -255,6 +255,7 @@ def test_simhash_pairs_identical_and_disjoint(spark):
         "doc_id bigint, text string",
     )
     sh = simhash(df, "text").select("doc_id", "simhash")
+    assert dict(sh.dtypes)["simhash"] == "bigint"
     got = {
         (r["id_a"], r["id_b"]): r["hamming"]
         for r in simhash_pairs(sh, "doc_id").collect()
@@ -262,6 +263,49 @@ def test_simhash_pairs_identical_and_disjoint(spark):
     # Identical texts -> identical fingerprints -> hamming 0; the unrelated
     # doc must not pair with either at radius 3.
     assert got == {(1, 2): 0}
+
+
+def _signed64(u: int) -> int:
+    return u - (1 << 64) if u >= 1 << 63 else u
+
+
+def test_simhash_pairs_matches_brute_force_at_band_edges(spark):
+    """Exact recall and precision of the two-level banding against an
+    all-pairs popcount, on hand-built bigint fingerprints. Flip sets sit
+    on the sign bit (bit 0 = MSB), on both sides of the 16-bit band edges
+    (15|16, 31|32, 47|48) and of the 12-bit sub-band edges of each
+    band's complement (11|12 and 15|32 for band 1; 27|28, 39|40, 51|52
+    for band 0), at hamming 1-3 (kept) and 4 (dropped)."""
+    from data_lakes_tp2_student_spark.operators.dedup import simhash_pairs
+
+    flips = [
+        (0,), (63,), (0, 63), (15, 16), (31, 32), (47, 48), (11, 12),
+        (15, 32), (27, 28), (39, 40), (51, 52), (0, 16, 32), (15, 16, 47),
+        (11, 12, 13), (0, 16, 32, 48), (15, 16, 31, 32), (27, 28, 39, 40),
+    ]
+    bases = [0, (1 << 64) - 1, 1 << 63, 0x0123456789ABCDEF, 0xF0E1D2C3B4A59687]
+    fps = []
+    for base in bases:
+        fps.append(base)
+        for fl in flips:
+            fps.append(base ^ sum(1 << (63 - i) for i in fl))
+    rows = [(i, _signed64(u)) for i, u in enumerate(fps)]
+    df = spark.createDataFrame(rows, "doc_id bigint, simhash bigint")
+    want = {
+        (i, j): bin(fps[i] ^ fps[j]).count("1")
+        for i in range(len(fps))
+        for j in range(i + 1, len(fps))
+        if bin(fps[i] ^ fps[j]).count("1") <= 3
+    }
+    got = {
+        (r["id_a"], r["id_b"]): r["hamming"]
+        for r in simhash_pairs(df, "doc_id").collect()
+    }
+    assert got == want
+    # the sign bit counts as one flip, and four flips never pair
+    assert got[(0, 1)] == 1
+    assert (0, 15) not in got
+    assert set(got.values()) == {0, 1, 2, 3}
 
 
 def test_tfidf_rare_term_outranks_common(spark):

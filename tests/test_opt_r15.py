@@ -1,11 +1,12 @@
 """Round-15 optimization pins: the rewritten operator internals must stay
 value-identical to the shapes they replaced.
 
-- simhash: the shipped per-row fold vs an independent explode→64-sum-agg
-  reference implementation, on edge inputs (null text, empty text, single
-  word, duplicates). The explode form was the round-15 rewrite candidate,
-  measured-REJECTED on wall time (see operators/dedup.py:simhash docstring);
-  it stays here as a value oracle for the fold.
+- simhash: the shipped Arrow-batched bigint kernel, rendered as the
+  64-character bit string, vs an independent explode→64-sum-agg reference
+  implementation, on edge inputs (null text, empty text, single word,
+  duplicates, runs of spaces, tabs, CJK, emoji). The explode form was
+  measured-REJECTED on wall time (see PERF.md, "SimHash: one bigint per
+  document"); it stays here as a value oracle for the kernel.
 - dup_clusters: the star-forest early exit must (a) converge on an
   already-star input within ONE round (the old fingerprint loop needed a
   second confirmation round — max_iter=1 pins the new behavior), and
@@ -22,8 +23,8 @@ from data_lakes_tp2_student_spark.operators.dedup import dup_clusters, simhash
 
 def _explode_simhash(df, text_col):
     """Independent reference: explode words, 64 codegen'd ±1 sum-aggs per
-    doc, majority sign per bit (the round-15 rewrite candidate; kept as a
-    value oracle for the shipped per-row fold)."""
+    doc, majority sign per bit (a rejected rewrite candidate; kept as a
+    value oracle for the shipped kernel)."""
     words = df.select("doc_id", text_col).select(
         F.col("doc_id"),
         F.explode_outer(F.split(F.col(text_col), " ")).alias("_w"),
@@ -65,16 +66,28 @@ def test_simhash_fold_matches_explode_reference(spark):
             (5, "oneword"),
             (6, None),
             (7, "a  b"),  # double space -> empty-string word
+            (8, " lead and trail "),
+            (9, "tab\tseparated words"),  # tabs do not split
+            (10, "日本語 テスト 文書 です"),
+            (11, "emoji 😀 in 🎉 text"),
+            (12, "a b"),  # two words: every split bit is a tie -> 0
         ],
         "doc_id bigint, text string",
     )
     ref = {r.doc_id: r.simhash for r in _explode_simhash(df, "text").collect()}
+    fps = simhash(df, "text")
+    assert dict(fps.dtypes)["simhash"] == "bigint"
     got = {
         r.doc_id: r.simhash
-        for r in simhash(df, "text").select("doc_id", "simhash").collect()
+        for r in fps.select(
+            "doc_id", F.lpad(F.bin("simhash"), 64, "0").alias("simhash")
+        ).collect()
     }
     assert got == ref
-    assert len(got) == 7  # NULL text keeps its row (all-zeros fingerprint)
+    assert len(got) == 12
+    assert got[6] == "0" * 64  # NULL text keeps its row, fingerprint 0
+    # some fingerprint has bit 0 set, i.e. a negative bigint
+    assert any(v[0] == "1" for v in got.values())
 
 
 def test_dup_clusters_star_forest_converges_in_one_round(spark):

@@ -33,6 +33,8 @@ FUZZ_QUERIES = [
     "x4_quality_score",
     "x4_token_counts",
     "x2_minhash_pairs",
+    "x2c_simhash",
+    "x2f_simhash_pairs",
     "x32_substring_dedup",
     "x35_weighted_sample",
     "x43_stratified_weighted_sample",
