@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.similarity import cosine, sign_lsh_bucket, hyperplane_coefficients
+from ..operators.similarity import cosine_batch
 from ..operators.skew import salted_group_count_sum, salted_join
 from ..operators.tokenize import tokenize_chars, widen_tokens
 from ..registry import load, register
@@ -105,8 +105,8 @@ def x2d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos >= 0.99.
 
     Blocking here uses the planted id relation so the oracle is exact; the
-    operator-library scale path is `sign_lsh_bucket` blocking (x3b), which
-    identical/near-identical vectors always share."""
+    operator-library scale path is sign-LSH blocking (`knn_lsh`, x3b),
+    whose buckets identical/near-identical vectors always share."""
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     copies = emb.select(
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
@@ -123,7 +123,9 @@ def x2d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.vec_id").alias("id_a"),
             F.col("b.vec_id").alias("id_b"),
-            cosine(F.col("a.embedding"), F.col("b.embedding")).alias("cos_sim"),
+            cosine_batch(F.col("a.embedding"), F.col("b.embedding")).alias(
+                "cos_sim"
+            ),
         )
         .filter(F.col("cos_sim") >= 0.99)
     )
@@ -174,7 +176,3 @@ def x7b_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(dec2("l_extendedprice")).cast("double").alias("sum_price"),
     )
-
-
-# Silence unused-import lints for the scale-path helpers referenced in docs.
-_ = (sign_lsh_bucket, hyperplane_coefficients)

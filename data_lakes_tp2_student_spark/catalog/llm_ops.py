@@ -16,12 +16,13 @@ from ..operators.dedup import (
     simhash,
 )
 from ..operators.multimodal import (
-    attach_bmp_media,
     attach_fake_media,
-    attach_wav_media,
+    attach_media,
+    bmp_bytes,
     parse_bmp,
     parse_wav,
     sample_frames,
+    wav_bytes,
 )
 from ..operators.similarity import (
     hyperplane_coefficients,
@@ -537,15 +538,15 @@ def x5_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x5b_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x5 — REAL media decode (VERDICT r2 item 5): per-doc BMP payloads
-    (valid file header + 24-bit padded pixel rows, deterministic from
-    doc_id) are parsed back by struct.unpack inside an Arrow-batched
-    mapInPandas stage; the oracle predicts every recovered header field and
-    the first pixel byte arithmetically from doc_id, so the parse is fully
-    hash-checked. Scalar output columns only (array outputs crash the
-    driver canonicalizer)."""
+    """x5 — REAL media decode: per-doc BMP payloads (valid file header +
+    24-bit padded pixel rows, deterministic from doc_id) are parsed back by
+    struct.unpack inside the typed Arrow row-map (`map_rows`); the oracle
+    predicts every recovered header field and the first pixel byte
+    arithmetically from doc_id, so the parse is fully hash-checked. Scalar
+    output columns only (array outputs break the oracle comparison's
+    canonicalizer)."""
     docs = load(spark, sf_dir, "documents")
-    media = attach_bmp_media(docs, "doc_id")
+    media = attach_media(docs, "doc_id", bmp_bytes)
     return parse_bmp(media)
 
 
@@ -569,17 +570,17 @@ def x5b_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x5f_png_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x5 — REAL PNG decode, lib-free (VERDICT r3 item 6): per-doc PNG
-    payloads (CRC-correct chunks, zlib IDAT, every scanline filter type
-    0-4 across rows) are fully decoded — chunk walk, CRC check, inflate,
-    unfilter — inside Arrow-batched mapInPandas. The oracle predicts the
+    """x5 — REAL PNG decode, lib-free: per-doc PNG payloads (CRC-correct
+    chunks, zlib IDAT, every scanline filter type 0-4 across rows) are
+    fully decoded — chunk walk, CRC check, inflate, unfilter — inside the
+    typed Arrow row-map (`map_rows`). The oracle predicts the
     dims/depth/type AND the sum of all recovered pixel bytes arithmetically
     from doc_id, so a hash match proves the filter inversions byte-exactly.
     n_bytes is excluded: compressed size is not SQL-predictable."""
-    from ..operators.multimodal import attach_png_media, parse_png
+    from ..operators.multimodal import parse_png, png_bytes
 
     docs = load(spark, sf_dir, "documents")
-    media = attach_png_media(docs, "doc_id")
+    media = attach_media(docs, "doc_id", png_bytes)
     return parse_png(media).select(
         "doc_id", "valid", "width", "height", "bit_depth", "color_type",
         "px0", "px_sum",
@@ -617,10 +618,10 @@ def x5i_png_resize_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     image's pixel-byte sum arithmetically, so a hash match proves the
     whole cycle including the re-encoder's deflate+CRC output is
     byte-faithful — the contract a real thumbnailing stage must meet."""
-    from ..operators.multimodal import attach_png_media, parse_png, resize_png
+    from ..operators.multimodal import parse_png, png_bytes, resize_png
 
     docs = load(spark, sf_dir, "documents")
-    resized = resize_png(attach_png_media(docs, "doc_id"), factor=2)
+    resized = resize_png(attach_media(docs, "doc_id", png_bytes), factor=2)
     return parse_png(resized).select(
         "doc_id", "valid", "width", "height", "px0", "px_sum"
     )
@@ -654,15 +655,15 @@ _DHASH_SQL = """
 def x31_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x31 — PERCEPTUAL image hashing from REAL decoded pixels: each doc's
     BMP payload is decoded and dHashed (8×8 grayscale grid → 56 gradient
-    sign bits) inside Arrow-batched mapInPandas. The oracle recomputes the
+    sign bits) inside the typed Arrow row-map. The oracle recomputes the
     hash arithmetically from doc_id — grid sampling, row stride, and
     comparison order — so a hash match proves the pixel-path dHash
     bit-exactly. The point at 100 TB: image identity becomes a 8-byte
     integer, so image-level dedup joins shuffle hashes, never pixels."""
-    from ..operators.multimodal import attach_bmp_media, image_dhash
+    from ..operators.multimodal import image_dhash
 
     docs = load(spark, sf_dir, "documents")
-    return image_dhash(attach_bmp_media(docs, "doc_id"))
+    return image_dhash(attach_media(docs, "doc_id", bmp_bytes))
 
 
 @register(
@@ -682,16 +683,11 @@ def x31b_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SimHash text pipeline (x2c/x2f): the oracle brute-forces all pairs, the
     engine never does — banding keeps candidates O(collisions) at any
     corpus size."""
-    from ..operators.multimodal import (
-        attach_bmp_media,
-        dhash_pairs,
-        image_dhash,
-    )
+    from ..operators.multimodal import dhash_pairs, image_dhash
 
     docs = load(spark, sf_dir, "documents")
-    dh = image_dhash(attach_bmp_media(docs, "doc_id")).filter("valid").select(
-        "doc_id", "dhash"
-    )
+    media = attach_media(docs, "doc_id", bmp_bytes)
+    dh = image_dhash(media).filter("valid").select("doc_id", "dhash")
     return dhash_pairs(dh)
 
 
@@ -743,16 +739,11 @@ def x31c_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     5000 survive at sf0.01) — a property of the deterministic test data,
     not the operator; the oracle proves the clustering is exact either
     way."""
-    from ..operators.multimodal import (
-        attach_bmp_media,
-        dhash_dedup_keep,
-        image_dhash,
-    )
+    from ..operators.multimodal import dhash_dedup_keep, image_dhash
 
     docs = load(spark, sf_dir, "documents")
-    dh = image_dhash(attach_bmp_media(docs, "doc_id")).filter("valid").select(
-        "doc_id", "dhash"
-    )
+    media = attach_media(docs, "doc_id", bmp_bytes)
+    dh = image_dhash(media).filter("valid").select("doc_id", "dhash")
     keep_valid = dhash_dedup_keep(dh, max_hamming=2)
     dropped = dh.select("doc_id").join(keep_valid, "doc_id", "left_anti")
     return docs.join(dropped, "doc_id", "left_anti").select("doc_id")
@@ -793,15 +784,15 @@ def x31c_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x5h_audio_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x5 — SAMPLE-level audio statistics (x5d parses headers; this decodes
     the signal): per-doc WAV payloads have their 16-bit PCM data unpacked
-    to signed amplitudes inside Arrow-batched mapInPandas, emitting integer
+    to signed amplitudes inside the typed Arrow row-map, emitting integer
     sum-of-|amplitude| and peak — the clipping/silence screens of an audio
     corpus pipeline. The oracle recomputes both stats arithmetically from
     doc_id including the two's-complement sign decode, so a hash match
     proves sample-exact decoding."""
-    from ..operators.multimodal import attach_wav_media, audio_sample_stats
+    from ..operators.multimodal import audio_sample_stats
 
     docs = load(spark, sf_dir, "documents")
-    media = attach_wav_media(docs, "doc_id")
+    media = attach_media(docs, "doc_id", wav_bytes)
     return audio_sample_stats(media)
 
 
@@ -826,15 +817,15 @@ def x5g_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x5 — REAL GIF decode, lib-free (the LZW sibling of x5f's PNG
     inflate): per-doc GIF89a payloads are decoded end-to-end — header and
     descriptor parse, sub-block reassembly, full LZW decompression with
-    code-table growth and width changes — inside Arrow-batched
-    mapInPandas. The oracle predicts dims/table size AND the pixel-index
+    code-table growth and width changes — inside the typed Arrow
+    row-map. The oracle predicts dims/table size AND the pixel-index
     sum arithmetically from doc_id, so a hash match proves the LZW
     inverse byte-exactly. n_bytes excluded (compressed size is not
     SQL-predictable)."""
-    from ..operators.multimodal import attach_gif_media, parse_gif
+    from ..operators.multimodal import gif_bytes, parse_gif
 
     docs = load(spark, sf_dir, "documents")
-    media = attach_gif_media(docs, "doc_id")
+    media = attach_media(docs, "doc_id", gif_bytes)
     return parse_gif(media).select(
         "doc_id", "valid", "width", "height", "gct_size", "px0", "px_sum"
     )
@@ -859,11 +850,11 @@ def x5g_gif_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x5d_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x5 — REAL audio decode (the WAV twin of x5b's BMP parse): per-doc PCM
     WAV payloads (RIFF + fmt + data chunks, deterministic from doc_id) are
-    chunk-walked by struct.unpack inside Arrow-batched mapInPandas; the
+    chunk-walked by struct.unpack inside the typed Arrow row-map; the
     oracle predicts rate/channels/bits/sample-count/duration arithmetically
     from doc_id. Duration is integer microseconds — no float division."""
     docs = load(spark, sf_dir, "documents")
-    media = attach_wav_media(docs, "doc_id")
+    media = attach_media(docs, "doc_id", wav_bytes)
     return parse_wav(media)
 
 
@@ -1049,7 +1040,7 @@ def x5e_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import resize_bmp
 
     docs = load(spark, sf_dir, "documents")
-    media = attach_bmp_media(docs, "doc_id")
+    media = attach_media(docs, "doc_id", bmp_bytes)
     return parse_bmp(resize_bmp(media, factor=2))
 
 
@@ -1082,15 +1073,15 @@ def x5j_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-doc grayscale baseline JPEGs (standard Annex K Huffman tables,
     0xFF-stuffed entropy stream) are decoded end-to-end — marker walk,
     canonical Huffman decode, DC prediction, AC run-length, dequantize,
-    IDCT — inside Arrow-batched mapInPandas. Flat blocks + an all-ones
+    IDCT — inside the typed Arrow row-map. Flat blocks + an all-ones
     quant table make the round-trip lossless, so the oracle predicts the
     decoded luma sum arithmetically from doc_id and a hash match proves
     the entropy/IDCT math. n_bytes excluded (compressed size is not
     SQL-predictable)."""
-    from ..operators.jpeg import attach_jpeg_media, parse_jpeg
+    from ..operators.jpeg import jpeg_bytes, parse_jpeg
 
     docs = load(spark, sf_dir, "documents")
-    media = attach_jpeg_media(docs, "doc_id")
+    media = attach_media(docs, "doc_id", jpeg_bytes)
     return parse_jpeg(media).select(
         "doc_id", "valid", "width", "height", "n_components", "px0", "px_sum"
     )
@@ -1125,8 +1116,8 @@ def x31d_jpeg_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hamming-banded pairs -> clusters -> keep-one, x31b/x31c) is
     format-agnostic. The oracle recomputes every gradient-sign bit
     arithmetically from doc_id through the flat-block fixture."""
-    from ..operators.jpeg import attach_jpeg_media
+    from ..operators.jpeg import jpeg_bytes
     from ..operators.multimodal import image_dhash
 
     docs = load(spark, sf_dir, "documents")
-    return image_dhash(attach_jpeg_media(docs, "doc_id"))
+    return image_dhash(attach_media(docs, "doc_id", jpeg_bytes))

@@ -1171,10 +1171,14 @@ def x49_tar_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per member and the oracle predicts every member's name, size,
     and payload byte-sum arithmetically
     (operators/multimodal.py:parse_tar_members)."""
-    from ..operators.multimodal import attach_tar_media, parse_tar_members
+    from ..operators.multimodal import (
+        attach_media,
+        parse_tar_members,
+        tar_bytes,
+    )
 
     docs = load(spark, sf_dir, "documents")
-    return parse_tar_members(attach_tar_media(docs, "doc_id"))
+    return parse_tar_members(attach_media(docs, "doc_id", tar_bytes))
 
 
 @register(
@@ -1198,10 +1202,14 @@ def x49b_wds_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     the WebDataset contract: shard -> members -> (text, image, label)
     tuples. One groupBy on the member rows; at scale the shard scan
     parallelizes by file and no shuffle precedes this aggregation."""
-    from ..operators.multimodal import attach_tar_media, parse_tar_members
+    from ..operators.multimodal import (
+        attach_media,
+        parse_tar_members,
+        tar_bytes,
+    )
 
     docs = load(spark, sf_dir, "documents")
-    members = parse_tar_members(attach_tar_media(docs, "doc_id"))
+    members = parse_tar_members(attach_media(docs, "doc_id", tar_bytes))
     return members.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum("member_bytes").alias("total_bytes"),
@@ -1244,12 +1252,19 @@ def x49c_tar_jpeg_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard -> member -> entropy decode -> dequant -> IDCT, with the x5j
     arithmetic oracle verifying the decoded luma sum end-to-end. This is
     the exact data path of multimodal pretraining ingestion."""
+    from functools import partial
+
     from ..operators.jpeg import parse_jpeg
-    from ..operators.multimodal import attach_tar_media, parse_tar_members
+    from ..operators.multimodal import (
+        attach_media,
+        parse_tar_members,
+        tar_bytes,
+    )
 
     docs = load(spark, sf_dir, "documents")
     members = parse_tar_members(
-        attach_tar_media(docs, "doc_id", real_jpeg=True), emit_payload=True
+        attach_media(docs, "doc_id", partial(tar_bytes, real_jpeg=True)),
+        emit_payload=True,
     )
     jpgs = members.filter(
         F.col("valid") & F.col("member_name").endswith(".jpg")

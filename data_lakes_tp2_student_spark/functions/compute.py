@@ -1,4 +1,4 @@
-"""Compute-layout helpers.
+"""Compute-layout helpers, and `map_rows`, the typed per-row Python stage.
 
 `spread` decouples compute parallelism from input file layout: a scan of one
 parquet file (or a few large row groups) yields one task, so expression-heavy
@@ -9,6 +9,8 @@ parallelism; at cluster scale the same call evens out skewed file sizes.
 """
 
 from __future__ import annotations
+
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame
 
@@ -61,3 +63,37 @@ def eager(df: DataFrame) -> DataFrame:
     df = df.persist()
     df.count()
     return df
+
+
+def map_rows(
+    df: DataFrame, schema: str, fn: Callable[..., Iterable[tuple]]
+) -> DataFrame:
+    """Per-row flat-map in Arrow batches: ``fn(*row)`` runs once per input
+    row (values in ``df``'s column order, nulls as ``None``) and returns
+    zero or more output tuples in ``schema`` (DDL string) order.
+
+    Each output batch is built column by column with
+    ``pa.array(values, type=field.type)`` from the schema's Arrow types, so
+    bigint, binary, boolean and null values land exactly as ``fn`` returned
+    them. A pandas step would not: an int64 column holding one ``None``
+    becomes float64, which rounds any value above 2**53."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+
+    def run(batches: Iterable[Any]) -> Iterable[Any]:
+        for batch in batches:
+            values = zip(*batch.to_pydict().values())
+            rows = [out for row in values for out in fn(*row)]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([r[k] for r in rows], type=field.type)
+                    for k, field in enumerate(arrow)
+                ],
+                schema=arrow,
+            )
+
+    return df.mapInArrow(run, struct)

@@ -1,6 +1,5 @@
 """Lib-free baseline JPEG (ITU-T T.81) decode — and a deterministic
-encoder fixture — for the multimodal pipeline (SURVEY.md §2 x5, VERDICT r4
-item 4).
+encoder fixture — for the multimodal pipeline (SURVEY.md §2 x5).
 
 JPEG is the dominant real-corpus image format; the image-dedup chain
 (x31*) is only as good as its decoder coverage. No codec libs exist in
@@ -26,18 +25,17 @@ this container, so both directions are hand-rolled from the public spec:
   computed over the LUMA plane (component 0): the dHash/dedup path is
   luminance-based, so chroma planes are decoded but never converted.
 
-Scale shape: decode is Arrow-batched ``mapInPandas`` — map-only, no
-shuffle, no per-row JVM↔Python crossing; the IDCT is a numpy matmul per
+Scale shape: decode is one `functions.compute.map_rows` stage — map-only,
+no shuffle, no per-row JVM↔Python crossing; the IDCT is a numpy matmul per
 block (vectorized C, not a Python pixel loop).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from ..functions.compute import map_rows
 
 # --- standard Huffman tables (ITU-T T.81 Annex K.3, public spec) ---------
 
@@ -452,25 +450,6 @@ def _decode_scan(b, pos, w, h, nc, scan_tables, restart_interval):
 # --- DataFrame surface ---------------------------------------------------
 
 
-def attach_jpeg_media(df: DataFrame, id_col: str) -> DataFrame:
-    """One `jpeg_bytes` payload per row as a binary column (executor-side,
-    Arrow-batched) — same contract as `attach_bmp_media`."""
-    out_schema = "doc_id bigint, media binary"
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [int(x) for x in pdf["doc_id"]],
-                    "media": [jpeg_bytes(x) for x in pdf["doc_id"]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        build, schema=out_schema
-    )
-
-
 def parse_jpeg(media_df: DataFrame) -> DataFrame:
     """x5j — REAL baseline JPEG decode, lib-free: full entropy decode +
     dequant + IDCT of the luma plane (see module docstring for the exact
@@ -478,34 +457,25 @@ def parse_jpeg(media_df: DataFrame) -> DataFrame:
     pixel, and the luma sum (the content checksum the oracle predicts —
     proves the Huffman/IDCT math, not just the headers). Corruption or
     unsupported layouts degrade to valid=false, never a mid-batch throw."""
-    out_schema = (
+
+    def row(doc_id, b):
+        try:
+            d = _jpeg_decode(b)
+        except Exception:
+            d = None  # contract: a decoder bug must not kill the batch
+        w, h, nc, luma = d or (None,) * 4
+        ok = luma is not None
+        return [(
+            doc_id, ok, w, h, nc, len(b),
+            int(luma[0, 0]) if ok else None, int(luma.sum()) if ok else None,
+        )]
+
+    return map_rows(
+        media_df.select("doc_id", "media"),
         "doc_id bigint, valid boolean, width bigint, height bigint, "
-        "n_components bigint, n_bytes bigint, px0 bigint, px_sum bigint"
+        "n_components bigint, n_bytes bigint, px0 bigint, px_sum bigint",
+        row,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "valid", "width", "height", "n_components",
-                "n_bytes", "px0", "px_sum")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(payload)
-                try:
-                    d = _jpeg_decode(b)
-                except Exception:
-                    d = None  # contract: a decoder bug must not kill the batch
-                ok = d is not None and d[3] is not None
-                out["doc_id"].append(int(doc_id))
-                out["valid"].append(bool(ok))
-                out["width"].append(d[0] if d else None)
-                out["height"].append(d[1] if d else None)
-                out["n_components"].append(d[2] if d else None)
-                out["n_bytes"].append(len(b))
-                out["px0"].append(int(d[3][0, 0]) if ok else None)
-                out["px_sum"].append(int(d[3].sum()) if ok else None)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(run, schema=out_schema)
 
 
 def jpeg_luma_grid(b: bytes) -> int | None:

@@ -1,8 +1,8 @@
 """Compressed-audio and video-container METADATA extraction (SURVEY.md §2
-x5 family; VERDICT r5 item 5): a lib-free MP3 frame-header walk and an
-ISO-BMFF (MP4) box walk, both as Arrow-batched `mapInPandas` parsers over
-an opaque binary column — the same contract as the BMP/PNG/GIF/JPEG/WAV/TAR
-decoders in `multimodal.py` / `jpeg.py`.
+x5 family): a lib-free MP3 frame-header walk, an ISO-BMFF (MP4) box walk and
+an AVI (RIFF) chunk walk, each a per-row parser over an opaque binary column
+run through `functions.compute.map_rows` — the same contract as the
+BMP/PNG/GIF/JPEG/WAV/TAR decoders in `multimodal.py` / `jpeg.py`.
 
 Scope is deliberately metadata-only (frame counts, duration, bitrate,
 tracks, codecs) — no PCM/YUV decode: that is the part a real corpus
@@ -21,10 +21,11 @@ of `multimodal.bmp_bytes` (x5b/a10).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from ..functions.compute import map_rows
+from .jpeg import jpeg_bytes, jpeg_dims
 
 # MPEG-1 Layer III bitrate table (kbps), header index 1..14 (0 = free,
 # 15 = bad) and the three MPEG-1 sample rates (index 3 = reserved).
@@ -143,35 +144,11 @@ def parse_mp3(media_df: DataFrame) -> DataFrame:
     """x5k — MP3 frame-header walk over (doc_id, media): frame count,
     duration (sum of per-frame integer microseconds — partition-order
     stable), mean bitrate, CBR/VBR flag, ID3v2 presence. No PCM decode."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                {"doc_id": int(d), **_mp3_walk(bytes(m))}
-                for d, m in zip(pdf["doc_id"], pdf["media"])
-            ]
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "valid", "n_frames", "sample_rate",
-                "bitrate_kbps", "duration_us", "has_id3", "is_vbr",
-            ])
-
-    return media_df.mapInPandas(run, schema=MP3_SCHEMA)
-
-
-def attach_mp3_media(df: DataFrame, id_col: str) -> DataFrame:
-    """One `mp3_bytes` payload per row (executor-side, Arrow-batched)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [int(x) for x in pdf["doc_id"]],
-                    "media": [mp3_bytes(x) for x in pdf["doc_id"]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        build, schema="doc_id bigint, media binary"
+    # the walker's dict keys are in MP3_SCHEMA order
+    return map_rows(
+        media_df.select("doc_id", "media"),
+        MP3_SCHEMA,
+        lambda doc_id, b: [(doc_id, *_mp3_walk(b).values())],
     )
 
 
@@ -355,40 +332,16 @@ def parse_mp4(media_df: DataFrame) -> DataFrame:
     (trak→mdia→hdlr / →minf→stbl→stsd), total mdat payload. Handles
     64-bit largesize and size-0 (to-end) boxes; malformed sizes →
     valid=false."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                {"doc_id": int(d), **_mp4_walk(bytes(m))}
-                for d, m in zip(pdf["doc_id"], pdf["media"])
-            ]
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "valid", "brand", "n_top_boxes", "duration_ms",
-                "n_tracks", "video_codec", "audio_codec", "mdat_bytes",
-            ])
-
-    return media_df.mapInPandas(run, schema=MP4_SCHEMA)
-
-
-def attach_mp4_media(df: DataFrame, id_col: str) -> DataFrame:
-    """One `mp4_bytes` payload per row (executor-side, Arrow-batched)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [int(x) for x in pdf["doc_id"]],
-                    "media": [mp4_bytes(x) for x in pdf["doc_id"]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        build, schema="doc_id bigint, media binary"
+    # the walker's dict keys are in MP4_SCHEMA order
+    return map_rows(
+        media_df.select("doc_id", "media"),
+        MP4_SCHEMA,
+        lambda doc_id, b: [(doc_id, *_mp4_walk(b).values())],
     )
 
 
 # ---------------------------------------------------------------------------
-# AVI / RIFF (MJPEG video) — round 7 (VERDICT r6 item 3)
+# AVI / RIFF (MJPEG video)
 # ---------------------------------------------------------------------------
 
 def _riff_chunk(fourcc: bytes, payload: bytes) -> bytes:
@@ -411,8 +364,6 @@ def avi_bytes(i: int) -> bytes:
     '00dc'×n)). The same container-in-container fixture contract as the
     TAR->JPEG chain (x49c): a SQL oracle predicts every decoded frame's
     luma sum arithmetically through BOTH layers."""
-    from .jpeg import jpeg_bytes, jpeg_dims
-
     i = int(i)
     n_frames = i % 3 + 1
     fps = 25 + 5 * (i % 2)
@@ -578,19 +529,12 @@ def parse_avi(media_df: DataFrame) -> DataFrame:
     codec fourcc from the strl/strh header, actual '..dc' frame-chunk
     count from movi. Metadata-only single pass; corrupt input degrades
     to an all-null valid=false row, never a throw."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                {"doc_id": int(d), **_avi_walk(bytes(m))[0]}
-                for d, m in zip(pdf["doc_id"], pdf["media"])
-            ]
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "valid", "n_streams", "width", "height", "fps",
-                "declared_frames", "n_frames", "codec",
-            ])
-
-    return media_df.mapInPandas(run, schema=AVI_SCHEMA)
+    # the walker's dict keys are in AVI_SCHEMA order
+    return map_rows(
+        media_df.select("doc_id", "media"),
+        AVI_SCHEMA,
+        lambda doc_id, b: [(doc_id, *_avi_walk(b)[0].values())],
+    )
 
 
 def parse_avi_frames(media_df: DataFrame) -> DataFrame:
@@ -599,39 +543,13 @@ def parse_avi_frames(media_df: DataFrame) -> DataFrame:
     JPEG, feedable straight into operators/jpeg.py:parse_jpeg — the real
     frame-sampling path `multimodal.sample_frames` stubs with byte
     slices). Invalid containers contribute zero rows (filter upstream
-    with parse_avi for the per-file verdict). Arrow-batched mapInPandas;
-    the one-to-many expansion happens executor-side with no shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            nos: list[int] = []
-            payloads: list[bytes] = []
-            for d, m in zip(pdf["doc_id"], pdf["media"]):
-                _meta, frames = _avi_walk(bytes(m), want_frames=True)
-                for j, fr in enumerate(frames):
-                    ids.append(int(d))
-                    nos.append(j)
-                    payloads.append(fr)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_no": nos, "frame": payloads}
-            )
-
-    return media_df.mapInPandas(run, schema=AVI_FRAMES_SCHEMA)
-
-
-def attach_avi_media(df: DataFrame, id_col: str) -> DataFrame:
-    """One `avi_bytes` payload per row (executor-side, Arrow-batched)."""
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [int(x) for x in pdf["doc_id"]],
-                    "media": [avi_bytes(x) for x in pdf["doc_id"]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        build, schema="doc_id bigint, media binary"
+    with parse_avi for the per-file verdict). The one-to-many expansion
+    happens executor-side with no shuffle."""
+    return map_rows(
+        media_df.select("doc_id", "media"),
+        AVI_FRAMES_SCHEMA,
+        lambda doc_id, b: [
+            (doc_id, j, frame)
+            for j, frame in enumerate(_avi_walk(b, want_frames=True)[1])
+        ],
     )

@@ -1,25 +1,39 @@
 """Multimodal-column operators (SURVEY.md §2 x5).
 
-Media (image/audio/video) are opaque `binary` columns plus a typed metadata
-struct; decode / feature-extract run as Arrow-batched pandas stages via
-``mapInPandas``. The image/audio codec libraries are NOT in this container,
-so the decode step is a clearly-marked deterministic stub — the Spark-side
-plumbing (schema, batch iteration, partitioning) is real and tested, and a
-real decoder drops in by replacing ``_decode_stub`` only.
+Media (image, audio, archive) are opaque ``binary`` columns. Each format
+has a fixture generator ``<fmt>_bytes(i)`` that builds a real,
+spec-conformant file from an integer id, so a SQL oracle predicts every
+decoded field arithmetically, and a lib-free decoder written as a per-row
+function of ``(doc_id, media)``. `attach_media` materializes fixtures and
+every decoder runs through `functions.compute.map_rows`: one typed Arrow
+row-map, map-only, no shuffle. Each decoder keeps its own validity rules;
+an invalid payload becomes a ``valid=false`` row, never a mid-batch throw.
+`attach_fake_media` and `sample_frames` are the pure-expression path (x5c).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import struct
+import zlib
+from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-MEDIA_SCHEMA = (
-    "doc_id bigint, media binary, media_type string, "
-    "meta struct<width:int, height:int, n_bytes:int>"
-)
+from ..functions.compute import map_rows
+from .jpeg import jpeg_bytes, jpeg_luma_grid
+
+
+def attach_media(
+    df: DataFrame, id_col: str, make: Callable[[int], bytes]
+) -> DataFrame:
+    """``(doc_id bigint, media binary)`` with one ``make(id)`` payload per
+    row, built executor-side; ``make`` is a fixture generator such as
+    `bmp_bytes`, `wav_bytes` or `tar_bytes`."""
+    return map_rows(
+        df.select(F.col(id_col).alias("doc_id")),
+        "doc_id bigint, media binary",
+        lambda i: [(i, make(i))],
+    )
 
 
 def attach_fake_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -38,41 +52,12 @@ def attach_fake_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _decode_stub(payload: bytes) -> list[float]:
-    """STUB decoder — deterministic fake 'pixel features' from the first 4
-    bytes. A real implementation would `PIL.Image.open(io.BytesIO(payload))`
-    etc.; those libs are not in this image."""
-    head = payload[:4].ljust(4, b"\0")
-    return [float(b) / 255.0 for b in head]
-
-
-def extract_features(media_df: DataFrame) -> DataFrame:
-    """x5 — per-row media 'decode' + feature extraction via mapInPandas:
-    Arrow batches in, vectorized python per partition (one interpreter setup
-    per batch, not per row — the scalable UDF shape)."""
-    out_schema = "doc_id bigint, n_bytes int, features array<float>"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": [len(m) for m in pdf["media"]],
-                    "features": [_decode_stub(m) for m in pdf["media"]],
-                }
-            )
-
-    return media_df.mapInPandas(run, schema=out_schema)
-
-
 def bmp_bytes(i: int) -> bytes:
     """A REAL (tiny) BMP file — valid BITMAPFILEHEADER + BITMAPINFOHEADER +
     24-bit pixel rows with standard 4-byte row padding — with dimensions and
     pixel bytes derived deterministically from ``i``. The fixture generator
     for `parse_bmp`/`resize_bmp`: a SQL oracle can predict every recovered
     field from ``i`` without seeing the binary."""
-    import struct
-
     i = int(i)
     width = i % 16 + 1
     height = i % 12 + 1
@@ -88,71 +73,36 @@ def bmp_bytes(i: int) -> bytes:
     return header + px
 
 
-def attach_bmp_media(df: DataFrame, id_col: str) -> DataFrame:
-    """One `bmp_bytes` payload per row as a binary column (executor-side,
-    Arrow-batched)."""
-    out_schema = "doc_id bigint, media binary"
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [int(x) for x in pdf["doc_id"]],
-                    "media": [bmp_bytes(x) for x in pdf["doc_id"]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        build, schema=out_schema
-    )
-
-
 def parse_bmp(media_df: DataFrame) -> DataFrame:
-    """x5 — REAL media decode for one trivial format (VERDICT r2 item 5):
-    parse the BMP headers in pure Python (struct.unpack over the binary
-    column, Arrow-batched via mapInPandas) and emit SCALAR feature columns:
-    magic validity, dimensions, bit depth, declared vs actual size, and the
-    first pixel byte (proves the pixel-array offset is honored). A PIL/ffmpeg
-    decoder drops in with the same mapInPandas contract for formats whose
-    libs this container lacks."""
-    import struct
+    """x5 — REAL media decode for one trivial format: parse the BMP headers
+    in pure Python (struct.unpack over the binary column) and emit SCALAR
+    feature columns: magic validity, dimensions, bit depth, declared vs
+    actual size, and the first pixel byte (proves the pixel-array offset is
+    honored)."""
 
-    out_schema = (
+    def row(doc_id, b):
+        ok = len(b) >= 54 and b[:2] == b"BM"
+        if ok:
+            file_size, _, _, offset = struct.unpack("<IHHI", b[2:14])
+            _, width, height, _, bpp = struct.unpack("<IiiHH", b[14:30])
+            ok = file_size == len(b) and offset < len(b)
+        if not ok:
+            return [(doc_id, False, None, None, None, len(b), None)]
+        return [(doc_id, True, width, height, bpp, len(b), b[offset])]
+
+    return map_rows(
+        media_df.select("doc_id", "media"),
         "doc_id bigint, valid boolean, width bigint, height bigint, "
-        "bpp bigint, n_bytes bigint, px0 bigint"
+        "bpp bigint, n_bytes bigint, px0 bigint",
+        row,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("doc_id", "valid", "width", "height", "bpp", "n_bytes", "px0")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(payload)
-                width = height = bpp = None
-                offset = 0
-                ok = len(b) >= 54 and b[:2] == b"BM"
-                if ok:
-                    file_size, _, _, offset = struct.unpack("<IHHI", b[2:14])
-                    _, width, height, _, bpp = struct.unpack("<IiiHH", b[14:30])
-                    ok = file_size == len(b) and offset < len(b)
-                out["doc_id"].append(int(doc_id))
-                out["valid"].append(bool(ok))
-                out["width"].append(width if ok else None)
-                out["height"].append(height if ok else None)
-                out["bpp"].append(bpp if ok else None)
-                out["n_bytes"].append(len(b))
-                out["px0"].append(b[offset] if ok else None)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(run, schema=out_schema)
 
 
 def resize_bmp(media_df: DataFrame, factor: int = 2) -> DataFrame:
     """x5 — REAL media resize for the BMP format: nearest-neighbor
     downsample by an integer factor, done by parsing the pixel array and
     rebuilding a VALID BMP (new dims, new row stride with standard 4-byte
-    padding, corrected size fields). binary→binary in Arrow batches — the
-    same contract a PIL/ffmpeg resize drops into. Output re-parses with
+    padding, corrected size fields), binary→binary. Output re-parses with
     `parse_bmp`, so the whole decode→transform→decode chain is
     oracle-checkable (dims are ceil(w/f), ceil(h/f); the first stored
     pixel survives by construction).
@@ -160,48 +110,37 @@ def resize_bmp(media_df: DataFrame, factor: int = 2) -> DataFrame:
     Invalid or unsupported payloads (truncated, wrong magic, size
     mismatch, non-24bpp) pass through UNCHANGED — never throw mid-batch,
     never silently corrupt (the pixel loop assumes 3 bytes/px)."""
-    import struct
-
-    out_schema = "doc_id bigint, media binary"
     f = int(factor)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_media = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(payload)
-                # Shared 24bpp gate (incl. full-pixel-buffer-present check
-                # — a consistent-but-truncated file must pass through, not
-                # resize empty slices into a corrupt output).
-                g = _bmp_gate24(b)
-                if g is None:
-                    out_id.append(int(doc_id))
-                    out_media.append(b)
-                    continue
-                w, h, offset, stride = g
-                bpp = 24
-                w2, h2 = (w + f - 1) // f, (h + f - 1) // f
-                stride2 = (bpp * w2 + 31) // 32 * 4
-                px = b[offset:]
-                rows = []
-                for r in range(0, h, f):
-                    row = px[r * stride : r * stride + w * 3]
-                    kept = b"".join(
-                        row[c * 3 : c * 3 + 3] for c in range(0, w, f)
-                    )
-                    rows.append(kept.ljust(stride2, b"\0"))
-                data = b"".join(rows)
-                header = struct.pack(
-                    "<2sIHHI", b"BM", 54 + len(data), 0, 0, 54
-                ) + struct.pack(
-                    "<IiiHHIIiiII",
-                    40, w2, h2, 1, bpp, 0, len(data), 2835, 2835, 0, 0,
-                )
-                out_id.append(int(doc_id))
-                out_media.append(header + data)
-            yield pd.DataFrame({"doc_id": out_id, "media": out_media})
+    def row(doc_id, b):
+        # Shared 24bpp gate (incl. full-pixel-buffer-present check — a
+        # consistent-but-truncated file must pass through, not resize
+        # empty slices into a corrupt output).
+        g = _bmp_gate24(b)
+        if g is None:
+            return [(doc_id, b)]
+        w, h, offset, stride = g
+        bpp = 24
+        w2, h2 = (w + f - 1) // f, (h + f - 1) // f
+        stride2 = (bpp * w2 + 31) // 32 * 4
+        px = b[offset:]
+        rows = []
+        for r in range(0, h, f):
+            line = px[r * stride : r * stride + w * 3]
+            kept = b"".join(line[c * 3 : c * 3 + 3] for c in range(0, w, f))
+            rows.append(kept.ljust(stride2, b"\0"))
+        data = b"".join(rows)
+        header = struct.pack(
+            "<2sIHHI", b"BM", 54 + len(data), 0, 0, 54
+        ) + struct.pack(
+            "<IiiHHIIiiII",
+            40, w2, h2, 1, bpp, 0, len(data), 2835, 2835, 0, 0,
+        )
+        return [(doc_id, header + data)]
 
-    return media_df.mapInPandas(run, schema=out_schema)
+    return map_rows(
+        media_df.select("doc_id", "media"), "doc_id bigint, media binary", row
+    )
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -224,9 +163,6 @@ def _png_decode(b: bytes):
     a valid container whose subset we don't decode (non-8-bit-RGB,
     interlaced); ``(w, h, 8, 2, rows)`` with the recovered scanlines
     otherwise. Single source of truth for `parse_png` and `resize_png`."""
-    import struct
-    import zlib
-
     if len(b) < 8 or b[:8] != _PNG_SIG:
         return None
     pos, ihdr, idat = 8, None, b""
@@ -293,8 +229,6 @@ def _bmp_gate24(b: bytes):
     (`resize_bmp`, `image_dhash`): magic, size-field match, in-range pixel
     offset, positive dims, 24bpp, AND the full declared pixel buffer
     present. Returns ``(w, h, offset, stride)`` or ``None``."""
-    import struct
-
     if len(b) < 54 or b[:2] != b"BM":
         return None
     file_size, _, _, offset = struct.unpack("<IHHI", b[2:14])
@@ -313,9 +247,6 @@ def _bmp_gate24(b: bytes):
 
 
 def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(body))
         + ctype
@@ -331,9 +262,6 @@ def png_bytes(i: int) -> bytes:
     as `bmp_bytes`, so a SQL oracle predicts every decoded field). Each row
     uses scanline filter ``row % 5``, so decoding exercises ALL five PNG
     filter types (None/Sub/Up/Average/Paeth), not just the trivial one."""
-    import struct
-    import zlib
-
     i = int(i)
     width, height = i % 16 + 1, i % 12 + 1
     bpp = 3  # 8-bit RGB
@@ -371,72 +299,34 @@ def png_bytes(i: int) -> bytes:
     )
 
 
-def attach_png_media(df: DataFrame, id_col: str) -> DataFrame:
-    """One `png_bytes` payload per row as a binary column (executor-side,
-    Arrow-batched) — same contract as `attach_bmp_media`."""
-    out_schema = "doc_id bigint, media binary"
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [int(x) for x in pdf["doc_id"]],
-                    "media": [png_bytes(x) for x in pdf["doc_id"]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        build, schema=out_schema
-    )
-
-
 def parse_png(media_df: DataFrame) -> DataFrame:
-    """x5 — REAL PNG decode, lib-free (VERDICT r3 item 6): walk the chunk
-    list with CRC verification, inflate the concatenated IDAT stream with
-    stdlib zlib, and UNFILTER every scanline (all five filter types) to
-    recover the actual pixel bytes. Supports the non-interlaced 8-bit RGB
+    """x5 — REAL PNG decode, lib-free: walk the chunk list with CRC
+    verification, inflate the concatenated IDAT stream with stdlib zlib,
+    and UNFILTER every scanline (all five filter types) to recover the
+    actual pixel bytes. Supports the non-interlaced 8-bit RGB
     subset; anything else (or any corruption: bad signature, bad CRC, short
     pixel data) degrades to valid=false — never a mid-batch throw. Emits
     scalar features: dims, bit depth, color type, first recovered pixel
     byte, and the sum of all recovered pixel bytes (a content checksum the
     oracle can predict — proves the unfilter math, not just the headers)."""
-    out_schema = (
+
+    def row(doc_id, b):
+        # a valid container of an unsupported subset (rows None) reports
+        # its headers with valid=false
+        w, h, depth, ctype_i, rows = _png_decode(b) or (None,) * 5
+        ok = rows is not None
+        return [(
+            doc_id, ok, w, h, depth, ctype_i, len(b),
+            rows[0][0] if ok else None, sum(map(sum, rows)) if ok else None,
+        )]
+
+    return map_rows(
+        media_df.select("doc_id", "media"),
         "doc_id bigint, valid boolean, width bigint, height bigint, "
         "bit_depth bigint, color_type bigint, n_bytes bigint, px0 bigint, "
-        "px_sum bigint"
+        "px_sum bigint",
+        row,
     )
-
-    def decode(b: bytes):
-        d = _png_decode(b)
-        if d is None:
-            return None
-        w, h, depth, ctype_i, rows = d
-        if rows is None:
-            # valid container, unsupported subset — report headers only
-            return (w, h, depth, ctype_i, None, None)
-        return (w, h, depth, ctype_i, rows[0][0], sum(map(sum, rows)))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "valid", "width", "height", "bit_depth",
-                "color_type", "n_bytes", "px0", "px_sum")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(payload)
-                d = decode(b)
-                ok = d is not None and d[4] is not None
-                out["doc_id"].append(int(doc_id))
-                out["valid"].append(bool(ok))
-                out["width"].append(d[0] if d else None)
-                out["height"].append(d[1] if d else None)
-                out["bit_depth"].append(d[2] if d else None)
-                out["color_type"].append(d[3] if d else None)
-                out["n_bytes"].append(len(b))
-                out["px0"].append(d[4] if ok else None)
-                out["px_sum"].append(d[5] if ok else None)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(run, schema=out_schema)
 
 
 def _lzw_encode(data: bytes, min_code_size: int = 8) -> bytes:
@@ -547,8 +437,6 @@ def gif_bytes(i: int) -> bytes:
     and pixel indices derived deterministically from ``i`` (same i→pixel
     rule as `bmp_bytes`/`png_bytes`, so a SQL oracle predicts every
     decoded field)."""
-    import struct
-
     i = int(i)
     width, height = i % 16 + 1, i % 12 + 1
     indices = bytes((i * 7 + j) % 256 for j in range(width * height))
@@ -566,25 +454,6 @@ def gif_bytes(i: int) -> bytes:
     return out + b"\x00\x3b"
 
 
-def attach_gif_media(df: DataFrame, id_col: str) -> DataFrame:
-    """One `gif_bytes` payload per row as a binary column (executor-side,
-    Arrow-batched) — same contract as `attach_bmp_media`."""
-    out_schema = "doc_id bigint, media binary"
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": [int(x) for x in pdf["doc_id"]],
-                    "media": [gif_bytes(x) for x in pdf["doc_id"]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        build, schema=out_schema
-    )
-
-
 def parse_gif(media_df: DataFrame) -> DataFrame:
     """x5 — REAL GIF decode, lib-free: parse the header/descriptors, walk
     the data sub-blocks, and run a full LZW decompression (code-table
@@ -594,12 +463,6 @@ def parse_gif(media_df: DataFrame) -> DataFrame:
     valid=false — never a mid-batch throw. Emits scalar features: dims,
     color-table size, first pixel index, and the sum of all pixel indices
     (an oracle-predictable content checksum proving the LZW inverse)."""
-    import struct
-
-    out_schema = (
-        "doc_id bigint, valid boolean, width bigint, height bigint, "
-        "gct_size bigint, n_bytes bigint, px0 bigint, px_sum bigint"
-    )
 
     def decode(b: bytes):
         if len(b) < 13 or b[:6] not in (b"GIF87a", b"GIF89a"):
@@ -642,123 +505,81 @@ def parse_gif(media_df: DataFrame) -> DataFrame:
             return None
         return (w_s, h_s, gct, indices[0], sum(indices))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "valid", "width", "height", "gct_size",
-                "n_bytes", "px0", "px_sum")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(payload)
-                d = decode(b)
-                ok = d is not None and d[3] is not None
-                out["doc_id"].append(int(doc_id))
-                out["valid"].append(bool(ok))
-                out["width"].append(d[0] if d else None)
-                out["height"].append(d[1] if d else None)
-                out["gct_size"].append(d[2] if d else None)
-                out["n_bytes"].append(len(b))
-                out["px0"].append(d[3] if ok else None)
-                out["px_sum"].append(d[4] if ok else None)
-            yield pd.DataFrame(out)
+    def row(doc_id, b):
+        # an unsupported layout reports its headers with valid=false
+        w, h, gct, px0, px_sum = decode(b) or (None,) * 5
+        return [(doc_id, px0 is not None, w, h, gct, len(b), px0, px_sum)]
 
-    return media_df.mapInPandas(run, schema=out_schema)
-
-
-def attach_wav_media(df: DataFrame, id_col: str) -> DataFrame:
-    """Build a REAL (tiny) PCM WAV file per row — RIFF header + fmt chunk +
-    data chunk — with rate/channels/sample-count derived deterministically
-    from the id. Fixture for `parse_wav` (same contract as
-    `attach_bmp_media`/`parse_bmp`): the parser must recover these fields
-    from the bytes; a SQL oracle predicts them from the id."""
-    import struct
-
-    out_schema = "doc_id bigint, media binary"
-    rates = (8000, 16000, 22050, 44100)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows_id, rows_media = [], []
-        for pdf in batches:
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                rate = rates[i % 4]
-                channels = i % 2 + 1
-                bits = 16
-                n_samples = i % 50 + 1
-                block = channels * bits // 8
-                data = bytes(
-                    (i * 11 + j) % 256 for j in range(n_samples * block)
-                )
-                fmt = struct.pack(
-                    "<4sIHHIIHH", b"fmt ", 16, 1, channels, rate,
-                    rate * block, block, bits,
-                )
-                payload = fmt + struct.pack("<4sI", b"data", len(data)) + data
-                riff = struct.pack("<4sI4s", b"RIFF", 4 + len(payload), b"WAVE")
-                rows_id.append(i)
-                rows_media.append(riff + payload)
-        yield pd.DataFrame({"doc_id": rows_id, "media": rows_media})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        build, schema=out_schema
+    return map_rows(
+        media_df.select("doc_id", "media"),
+        "doc_id bigint, valid boolean, width bigint, height bigint, "
+        "gct_size bigint, n_bytes bigint, px0 bigint, px_sum bigint",
+        row,
     )
+
+
+def wav_bytes(i: int) -> bytes:
+    """A REAL (tiny) 16-bit PCM WAV file — RIFF header + fmt chunk + data
+    chunk — with sample rate ``(8000, 16000, 22050, 44100)[i % 4]``,
+    ``i % 2 + 1`` channels, ``i % 50 + 1`` samples and sample bytes all
+    derived deterministically from ``i``. The fixture generator for
+    `parse_wav`/`audio_sample_stats`: a SQL oracle predicts every decoded
+    field from ``i``."""
+    i = int(i)
+    rate = (8000, 16000, 22050, 44100)[i % 4]
+    channels, bits = i % 2 + 1, 16
+    block = channels * bits // 8
+    data = bytes((i * 11 + j) % 256 for j in range((i % 50 + 1) * block))
+    fmt = struct.pack(
+        "<4sIHHIIHH", b"fmt ", 16, 1, channels, rate, rate * block, block, bits
+    )
+    payload = fmt + struct.pack("<4sI", b"data", len(data)) + data
+    return struct.pack("<4sI4s", b"RIFF", 4 + len(payload), b"WAVE") + payload
 
 
 def parse_wav(media_df: DataFrame) -> DataFrame:
     """x5 — REAL audio decode for one trivial format: walk the RIFF chunk
-    list (struct.unpack over the binary column, Arrow-batched via
-    mapInPandas) and emit SCALAR features: validity, sample rate, channels,
-    bit depth, sample count, and duration in exact microseconds (integer —
-    no float division, engine-portable)."""
-    import struct
+    list (struct.unpack over the binary column) and emit SCALAR features:
+    validity, sample rate, channels, bit depth, sample count, and duration
+    in exact microseconds (integer — no float division, engine-portable)."""
 
-    out_schema = (
+    def row(doc_id, b):
+        rate = ch = bits = n_samples = dur = None
+        ok = (
+            len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"WAVE"
+            and struct.unpack("<I", b[4:8])[0] == len(b) - 8
+        )
+        if ok:
+            pos, ok = 12, False
+            while pos + 8 <= len(b):
+                cid, sz = struct.unpack("<4sI", b[pos:pos + 8])
+                body = b[pos + 8:pos + 8 + sz]
+                if cid == b"fmt " and sz >= 16:
+                    _, ch, rate, _, block, bits = struct.unpack(
+                        "<HHIIHH", body[:16]
+                    )
+                elif cid == b"data" and rate:
+                    # Guard a corrupt fmt chunk (channels=0 / bits<8 would
+                    # make block-align 0 → ZeroDivisionError); and count the
+                    # bytes actually PRESENT, not the declared chunk size —
+                    # an inner chunk can over-declare while the RIFF size
+                    # still matches.
+                    block_align = ch * bits // 8
+                    if block_align > 0:
+                        n_samples = len(body) // block_align
+                        dur = n_samples * 1_000_000 // rate
+                        ok = True
+                pos += 8 + sz + (sz & 1)  # RIFF chunks pad to even
+        if not ok:
+            return [(doc_id, False, None, None, None, None, None)]
+        return [(doc_id, True, rate, ch, bits, n_samples, dur)]
+
+    return map_rows(
+        media_df.select("doc_id", "media"),
         "doc_id bigint, valid boolean, sample_rate bigint, channels bigint, "
-        "bits bigint, n_samples bigint, duration_us bigint"
+        "bits bigint, n_samples bigint, duration_us bigint",
+        row,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "valid", "sample_rate", "channels", "bits",
-                "n_samples", "duration_us")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(payload)
-                rate = ch = bits = n_samples = dur = None
-                ok = (
-                    len(b) >= 12 and b[:4] == b"RIFF" and b[8:12] == b"WAVE"
-                    and struct.unpack("<I", b[4:8])[0] == len(b) - 8
-                )
-                if ok:
-                    pos, ok = 12, False
-                    while pos + 8 <= len(b):
-                        cid, sz = struct.unpack("<4sI", b[pos:pos + 8])
-                        body = b[pos + 8:pos + 8 + sz]
-                        if cid == b"fmt " and sz >= 16:
-                            _, ch, rate, _, block, bits = struct.unpack(
-                                "<HHIIHH", body[:16]
-                            )
-                        elif cid == b"data" and rate:
-                            # Guard a corrupt fmt chunk (channels=0 / bits<8
-                            # would make block-align 0 → ZeroDivisionError);
-                            # and count the bytes actually PRESENT, not the
-                            # declared chunk size — an inner chunk can
-                            # over-declare while the RIFF size still matches.
-                            block_align = ch * bits // 8
-                            if block_align > 0:
-                                n_samples = len(body) // block_align
-                                dur = n_samples * 1_000_000 // rate
-                                ok = True
-                        pos += 8 + sz + (sz & 1)  # RIFF chunks pad to even
-                out["doc_id"].append(int(doc_id))
-                out["valid"].append(bool(ok))
-                out["sample_rate"].append(rate if ok else None)
-                out["channels"].append(ch if ok else None)
-                out["bits"].append(bits if ok else None)
-                out["n_samples"].append(n_samples if ok else None)
-                out["duration_us"].append(dur if ok else None)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(run, schema=out_schema)
 
 
 def resize_png(media_df: DataFrame, factor: int = 2) -> DataFrame:
@@ -766,46 +587,36 @@ def resize_png(media_df: DataFrame, factor: int = 2) -> DataFrame:
     unfilter), nearest-neighbor downsample by an integer factor, and
     RE-ENCODE a valid zlib-compressed PNG (filter-0 scanlines, correct
     CRCs) — the full decode→transform→encode cycle a media pipeline runs,
-    binary→binary in Arrow batches. Output re-parses with `parse_png`, so
-    the whole chain is oracle-checkable. Invalid/unsupported payloads pass
-    through unchanged (same policy as `resize_bmp`)."""
-    import struct
-    import zlib
-
-    out_schema = "doc_id bigint, media binary"
+    binary→binary. Output re-parses with `parse_png`, so the whole chain is
+    oracle-checkable. Invalid/unsupported payloads pass through unchanged
+    (same policy as `resize_bmp`)."""
     f = int(factor)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_media = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(payload)
-                d = _png_decode(b)
-                if d is None or d[4] is None:
-                    out_id.append(int(doc_id))
-                    out_media.append(b)
-                    continue
-                w, h, _, _, rows = d
-                w2, h2 = (w + f - 1) // f, (h + f - 1) // f
-                scan = b"".join(
-                    b"\x00"
-                    + b"".join(
-                        rows[r * f][c * f * 3 : c * f * 3 + 3]
-                        for c in range(w2)
-                    )
-                    for r in range(h2)
-                )
-                ihdr = struct.pack(">IIBBBBB", w2, h2, 8, 2, 0, 0, 0)
-                out_id.append(int(doc_id))
-                out_media.append(
-                    _PNG_SIG
-                    + _png_chunk(b"IHDR", ihdr)
-                    + _png_chunk(b"IDAT", zlib.compress(scan))
-                    + _png_chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": out_id, "media": out_media})
+    def row(doc_id, b):
+        d = _png_decode(b)
+        if d is None or d[4] is None:
+            return [(doc_id, b)]
+        w, h, _, _, rows = d
+        w2, h2 = (w + f - 1) // f, (h + f - 1) // f
+        scan = b"".join(
+            b"\x00"
+            + b"".join(
+                rows[r * f][c * f * 3 : c * f * 3 + 3] for c in range(w2)
+            )
+            for r in range(h2)
+        )
+        ihdr = struct.pack(">IIBBBBB", w2, h2, 8, 2, 0, 0, 0)
+        return [(
+            doc_id,
+            _PNG_SIG
+            + _png_chunk(b"IHDR", ihdr)
+            + _png_chunk(b"IDAT", zlib.compress(scan))
+            + _png_chunk(b"IEND", b""),
+        )]
 
-    return media_df.mapInPandas(run, schema=out_schema)
+    return map_rows(
+        media_df.select("doc_id", "media"), "doc_id bigint, media binary", row
+    )
 
 
 def image_dhash(media_df: DataFrame) -> DataFrame:
@@ -823,9 +634,6 @@ def image_dhash(media_df: DataFrame) -> DataFrame:
     (`operators.jpeg`) and sample the luma plane — same grid, same bit
     layout, so the downstream hamming-banded dedup chain (x31b/x31c) is
     format-agnostic."""
-    from .jpeg import jpeg_luma_grid
-
-    out_schema = "doc_id bigint, valid boolean, dhash bigint"
 
     def one(b: bytes):
         if b[:2] == b"\xff\xd8":
@@ -846,17 +654,15 @@ def image_dhash(media_df: DataFrame) -> DataFrame:
                     dhash |= 1 << (gr * 7 + gc)
         return dhash
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "valid": [], "dhash": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                d = one(bytes(payload))
-                out["doc_id"].append(int(doc_id))
-                out["valid"].append(d is not None)
-                out["dhash"].append(d)
-            yield pd.DataFrame(out)
+    def row(doc_id, b):
+        d = one(b)
+        return [(doc_id, d is not None, d)]
 
-    return media_df.mapInPandas(run, schema=out_schema)
+    return map_rows(
+        media_df.select("doc_id", "media"),
+        "doc_id bigint, valid boolean, dhash bigint",
+        row,
+    )
 
 
 def dhash_rep_pairs(
@@ -1035,12 +841,6 @@ def audio_sample_stats(media_df: DataFrame) -> DataFrame:
     pipeline runs. Integer outputs keep the oracle exact (no float RMS
     rounding to argue about); invalid/non-16-bit payloads degrade to
     valid=false rows, never a mid-batch throw."""
-    import struct
-
-    out_schema = (
-        "doc_id bigint, valid boolean, n_values bigint, abs_sum bigint, "
-        "peak bigint"
-    )
 
     def decode(b: bytes):
         ok = (
@@ -1064,50 +864,16 @@ def audio_sample_stats(media_df: DataFrame) -> DataFrame:
         vals = struct.unpack(f"<{n}h", data[: n * 2])
         return (n, sum(abs(v) for v in vals), max((abs(v) for v in vals), default=0))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "valid", "n_values", "abs_sum", "peak")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                d = decode(bytes(payload))
-                out["doc_id"].append(int(doc_id))
-                out["valid"].append(d is not None)
-                out["n_values"].append(d[0] if d else None)
-                out["abs_sum"].append(d[1] if d else None)
-                out["peak"].append(d[2] if d else None)
-            yield pd.DataFrame(out)
+    def row(doc_id, b):
+        n, abs_sum, peak = decode(b) or (None,) * 3
+        return [(doc_id, n is not None, n, abs_sum, peak)]
 
-    return media_df.mapInPandas(run, schema=out_schema)
-
-
-def resize_media(media_df: DataFrame, max_bytes: int = 32) -> DataFrame:
-    """x5 — media 'resize' via mapInPandas: payload truncated to a byte
-    budget, metadata struct rewritten to match (STUB for a real
-    interpolating resize — swap the body, keep the schema/batch contract).
-    The shape is the important part at scale: binary in → binary out in
-    Arrow batches, no JVM<->Python per-row crossings, output schema typed so
-    downstream stages stay columnar."""
-    out_schema = MEDIA_SCHEMA
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            clipped = [bytes(m)[:max_bytes] for m in pdf["media"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media": clipped,
-                    "media_type": pdf["media_type"],
-                    "meta": [
-                        {
-                            "width": len(m) % 64,
-                            "height": len(m) % 48,
-                            "n_bytes": len(m),
-                        }
-                        for m in clipped
-                    ],
-                }
-            )
-
-    return media_df.mapInPandas(run, schema=out_schema)
+    return map_rows(
+        media_df.select("doc_id", "media"),
+        "doc_id bigint, valid boolean, n_values bigint, abs_sum bigint, "
+        "peak bigint",
+        row,
+    )
 
 
 def sample_frames(media_df: DataFrame, n_frames: int = 4) -> DataFrame:
@@ -1157,46 +923,25 @@ def _tar_header(name: bytes, size: int) -> bytes:
     return bytes(h)
 
 
-def attach_tar_media(
-    df: DataFrame, id_col: str, real_jpeg: bool = False
-) -> DataFrame:
-    """Build a REAL (tiny) POSIX ustar TAR shard per row — the WebDataset
-    container convention: members share a basename and differ by
-    extension ({basename}.txt / .jpg / .cls), (id % 3 + 1) members, with
-    name, size, and payload bytes all deterministic functions of the id
-    so a SQL oracle can predict every member's byte sum. Same fixture
-    contract as attach_bmp_media/attach_wav_media. With ``real_jpeg``
-    the .jpg member carries an actual decodable baseline JPEG
-    (operators/jpeg.py:jpeg_bytes) instead of synthetic bytes — the
-    format-in-format fixture for the shard -> member -> decode chain."""
-    out_schema = "doc_id bigint, media binary"
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                buf = bytearray()
-                for j in range(i % 3 + 1):
-                    if real_jpeg and _TAR_EXTS[j] == "jpg":
-                        from .jpeg import jpeg_bytes
-
-                        payload = jpeg_bytes(i)
-                    else:
-                        payload = _tar_member_payload(i, j)
-                    name = f"{i:08d}.{_TAR_EXTS[j]}".encode()
-                    buf += _tar_header(name, len(payload))
-                    buf += payload
-                    if len(payload) % 512:
-                        buf += b"\x00" * (512 - len(payload) % 512)
-                buf += b"\x00" * 1024  # end-of-archive
-                ids.append(i)
-                blobs.append(bytes(buf))
-            yield pd.DataFrame({"doc_id": ids, "media": blobs})
-
-    return df.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        build, out_schema
-    )
+def tar_bytes(i: int, real_jpeg: bool = False) -> bytes:
+    """A REAL (tiny) POSIX ustar TAR shard — the WebDataset container
+    convention: members share a basename and differ by extension
+    ({basename}.txt / .jpg / .cls), (i % 3 + 1) members, with name, size,
+    and payload bytes all deterministic functions of ``i`` so a SQL oracle
+    can predict every member's byte sum. With ``real_jpeg`` the .jpg member
+    carries an actual decodable baseline JPEG (`jpeg.jpeg_bytes`) instead
+    of synthetic bytes — the format-in-format fixture for the shard ->
+    member -> decode chain."""
+    i = int(i)
+    buf = bytearray()
+    for j in range(i % 3 + 1):
+        if real_jpeg and _TAR_EXTS[j] == "jpg":
+            payload = jpeg_bytes(i)
+        else:
+            payload = _tar_member_payload(i, j)
+        buf += _tar_header(f"{i:08d}.{_TAR_EXTS[j]}".encode(), len(payload))
+        buf += payload + b"\x00" * (-len(payload) % 512)
+    return bytes(buf) + b"\x00" * 1024  # end-of-archive
 
 
 def parse_tar_members(
@@ -1217,13 +962,13 @@ def parse_tar_members(
         "doc_id bigint, member_name string, member_bytes bigint, "
         "payload_sum bigint, valid boolean"
     )
+    n_cols = 5
     if emit_payload:  # the downstream-decode shape (bytes survive)
         out_schema += ", payload binary"
+        n_cols = 6
 
     def members(b: bytes):
         if b[:2] == b"\x1f\x8b":  # gzip-wrapped shard (.tar.gz)
-            import zlib
-
             try:
                 b = zlib.decompress(b, wbits=31)
             except zlib.error:
@@ -1252,33 +997,13 @@ def parse_tar_members(
                 pos += 512 - size % 512
         return None  # ran off the end without the zero-block terminator
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = ["doc_id", "member_name", "member_bytes",
-                    "payload_sum", "valid"]
-            if emit_payload:
-                cols.append("payload")
-            out = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                i = int(doc_id)
-                ms = members(bytes(payload))
-                if ms is None:
-                    out["doc_id"].append(i)
-                    out["member_name"].append(None)
-                    out["member_bytes"].append(None)
-                    out["payload_sum"].append(None)
-                    out["valid"].append(False)
-                    if emit_payload:
-                        out["payload"].append(None)
-                    continue
-                for name, size, psum, body in ms:
-                    out["doc_id"].append(i)
-                    out["member_name"].append(name)
-                    out["member_bytes"].append(size)
-                    out["payload_sum"].append(psum)
-                    out["valid"].append(True)
-                    if emit_payload:
-                        out["payload"].append(body)
-            yield pd.DataFrame(out)
+    def rows(doc_id, b):
+        ms = members(b)
+        if ms is None:
+            return [(doc_id, None, None, None, False, None)[:n_cols]]
+        return [
+            (doc_id, name, size, psum, True, body)[:n_cols]
+            for name, size, psum, body in ms
+        ]
 
-    return media_df.mapInPandas(run, out_schema)
+    return map_rows(media_df.select("doc_id", "media"), out_schema, rows)

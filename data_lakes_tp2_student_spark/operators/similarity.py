@@ -1,15 +1,10 @@
 """Vector similarity search (SURVEY.md §2 x3): brute-force cosine top-k as
 the exact baseline, and a sign-LSH bucketed variant as the scale path.
 
-Two cosine implementations, same bit-exact result:
-- `cosine` — pure column expression (`zip_with` + `aggregate` fold): zero
-  Python, but Spark evaluates higher-order-function lambdas interpreted
-  (~5 ms/row measured), fine for small candidate sets;
-- `cosine_batch` — Arrow-vectorized pandas_udf used in the scoring hot path:
-  numpy columns, looping over DIMENSIONS (64) while vectorizing over ROWS,
-  which reproduces the exact left-fold float64 addition order of both the
-  expression form and the DuckDB oracle's list fold — so the speedup never
-  costs a value-hash mismatch. ~10× less CPU at sf0.1.
+Cosine is `cosine_batch`, an Arrow-vectorized pandas_udf: numpy columns,
+looping over DIMENSIONS (64) while vectorizing over ROWS, which reproduces
+the exact left-fold float64 addition order of the DuckDB oracle's list fold,
+so scores are bit-identical to the oracle's.
 
 Scale design: brute force is a broadcast of the (small) query set against the
 corpus — linear scans parallelize perfectly but cost O(|corpus|·|queries|);
@@ -31,30 +26,15 @@ from pyspark.sql.functions import pandas_udf
 from ..functions.compute import spread
 
 
-def cosine(a: str | Column, b: str | Column, decimals: int = 7) -> Column:
-    """Cosine similarity between two float-array columns, computed in double
-    (sequential fold over the list — identical order in any engine)."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-
-    def dsum(col: Column) -> Column:
-        return F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x)
-
-    dot = dsum(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")))
-    na = dsum(F.transform(a, lambda x: x.cast("double") * x.cast("double")))
-    nb = dsum(F.transform(b, lambda x: x.cast("double") * x.cast("double")))
-    return F.round(dot / (F.sqrt(na) * F.sqrt(nb)), decimals)
-
-
 def _cosine_raw_fn(a: pd.Series, b: pd.Series) -> pd.Series:
     """Unrounded cosine per row, Arrow-batched.
 
     Sequential accumulation over dimension index (vectorized across the
     batch) = the exact IEEE-754 order of a left fold `acc + x_i*y_i` from
-    0.0 — bit-identical to the `aggregate` expression and to DuckDB's
-    `list_sum(list_transform(...))`. float32 inputs are widened to float64
-    first (exact). Rounding stays OUTSIDE the UDF so engine-native `round`
-    semantics keep matching the oracle."""
+    0.0 — bit-identical to DuckDB's `list_sum(list_transform(...))`.
+    float32 inputs are widened to float64 first (exact). Rounding stays
+    OUTSIDE the UDF so engine-native `round` semantics keep matching the
+    oracle."""
     import numpy as np
 
     if len(a) == 0:
@@ -62,9 +42,8 @@ def _cosine_raw_fn(a: pd.Series, b: pd.Series) -> pd.Series:
 
     def fold(u, v):  # per-row fallback, same left-fold order
         if len(u) != len(v):
-            # the `cosine` expression form zip_with-pads with null ->
-            # null result; truncating here would silently diverge
-            # (review r6)
+            # a length mismatch is NULL (a `zip_with` fold pads with
+            # null); truncating here would silently diverge
             return None
         d = na = nb = 0.0
         for x, y in zip(u, v):
@@ -78,8 +57,8 @@ def _cosine_raw_fn(a: pd.Series, b: pd.Series) -> pd.Series:
     except ValueError:  # ragged batch (mixed dims) — row-at-a-time
         return pd.Series([fold(u, v) for u, v in zip(a, b)], dtype=object)
     if A.shape[1] != B.shape[1]:
-        # uniform but mismatched dims: expression form is NULL per row
-        # (review r6: B[:, i] used to raise IndexError mid-task)
+        # uniform but mismatched dims: NULL per row (B[:, i] would raise
+        # IndexError mid-task)
         return pd.Series([None] * A.shape[0], dtype=object)
     n = A.shape[0]
     dot, na, nb = np.zeros(n), np.zeros(n), np.zeros(n)
@@ -95,7 +74,9 @@ _cosine_raw = None  # built lazily: pandas_udf needs an active SparkSession
 
 
 def cosine_batch(a: str | Column, b: str | Column, decimals: int = 7) -> Column:
-    """Vectorized cosine (pandas_udf hot path), rounded like `cosine`."""
+    """Cosine similarity between two float-array columns, computed in
+    double by one Arrow-batched left fold per row, rounded to
+    ``decimals`` by the engine."""
     global _cosine_raw
     if _cosine_raw is None:
         _cosine_raw = pandas_udf(_cosine_raw_fn, "double")
@@ -155,37 +136,16 @@ def hyperplane_coefficients(
     return out
 
 
-def sign_lsh_bucket(
-    vec_col: str | Column, coefficients: list[list[float]]
-) -> Column:
-    """Bit-string bucket id: sign of the projection on each hyperplane."""
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bits = []
-    for row in coefficients:
-        coef = F.array(*[F.lit(c) for c in row])
-        proj = F.aggregate(
-            F.zip_with(vec, coef, lambda x, c: x.cast("double") * c),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
 def lsh_buckets_batch(
     vec_col: str, per_table: list[list[list[float]]]
 ) -> Column:
     """All tables' sign-LSH buckets in ONE Arrow-batched pass: returns an
     ``array<string>`` of bucket ids (index = table).
 
-    The expression form (`sign_lsh_bucket` × tables) evaluates
-    tables×planes interpreted `aggregate(zip_with(...))` folds per vector —
-    the hot cost of multi-table LSH at 8 tables (measured: the corpus-side
-    bucket computation dominated x3b). This UDF accumulates every
-    projection with the SAME sequential-over-dimensions float64 left-fold
-    order (vectorized across rows and planes), the `cosine_batch` trick —
-    bit-identical signs, so swapping it in can never flip a bucket vs the
-    expression form or the DuckDB oracle. Coefficients are exact ±1.0."""
+    Every projection accumulates in the sequential-over-dimensions float64
+    left-fold order (vectorized across rows and planes), the `cosine_batch`
+    trick — bit-identical signs to the DuckDB oracle's per-plane list fold,
+    so a bucket can never flip. Coefficients are exact ±1.0."""
     import numpy as np
 
     flat = [row for coefs in per_table for row in coefs]
@@ -197,9 +157,9 @@ def lsh_buckets_batch(
         bits = []
         for row in flat:
             if len(u) != len(row):
-                # expression form: zip_with pads with null -> proj null ->
-                # CASE WHEN null fails -> bit '0'; truncating the fold
-                # here would bucket the vector differently (review r6)
+                # a length mismatch is a null projection (a `zip_with`
+                # fold pads with null) -> CASE WHEN null fails -> bit '0';
+                # truncating the fold would bucket the vector differently
                 bits.append(False)
                 continue
             acc = 0.0
@@ -384,7 +344,7 @@ def knn_lsh(
 
     Two hot-path choices (r5, measured): all tables' buckets come from ONE
     Arrow-batched numpy pass (`lsh_buckets_batch` — bit-identical signs to
-    the expression form, see its docstring) instead of tables×planes
+    the oracle's fold, see its docstring) instead of tables×planes
     interpreted HOF folds; and the exact cosine is computed BEFORE the
     per-pair dedup, so the dedup shuffle carries (query, neighbor, score)
     scalars instead of two 64-dim vectors per row — a table-colliding pair

@@ -182,8 +182,9 @@ def test_jpeg_and_bmp_dhash_share_chain(spark):
     """The x31 dedup chain is format-agnostic: identical JPEG payloads
     pair at hamming 0 through the SAME dhash_pairs operator the BMP chain
     uses."""
-    from data_lakes_tp2_student_spark.operators.jpeg import attach_jpeg_media
+    from data_lakes_tp2_student_spark.operators.jpeg import jpeg_bytes
     from data_lakes_tp2_student_spark.operators.multimodal import (
+        attach_media,
         dhash_pairs,
         image_dhash,
     )
@@ -196,7 +197,7 @@ def test_jpeg_and_bmp_dhash_share_chain(spark):
     # 256) -> i and i+768 produce identical images (768 = lcm(3,2,256)...
     # actually i+768: 768%3=0, 768%2=0, 768*17%256=0) -> identical payloads.
     df = spark.createDataFrame([(0,), (768,), (1,)], "doc_id long")
-    dh = image_dhash(attach_jpeg_media(df, "doc_id")).filter("valid")
+    dh = image_dhash(attach_media(df, "doc_id", jpeg_bytes)).filter("valid")
     rows = {r.doc_id: r.dhash for r in dh.collect()}
     assert rows[0] == rows[768]
     pairs = dhash_pairs(dh.select("doc_id", "dhash"), max_hamming=0).collect()

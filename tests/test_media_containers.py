@@ -159,16 +159,17 @@ def test_mp4_v1_mvhd_64bit_duration():
 
 def test_spark_end_to_end_mp3_mp4(spark):
     from data_lakes_tp2_student_spark.operators.media_containers import (
-        attach_mp3_media,
-        attach_mp4_media,
+        mp3_bytes,
+        mp4_bytes,
         parse_mp3,
         parse_mp4,
     )
+    from data_lakes_tp2_student_spark.operators.multimodal import attach_media
 
     ids = spark.range(12).selectExpr("id AS doc_id")
-    mp3 = parse_mp3(attach_mp3_media(ids, "doc_id")).collect()
+    mp3 = parse_mp3(attach_media(ids, "doc_id", mp3_bytes)).collect()
     assert len(mp3) == 12 and all(r.valid for r in mp3)
-    mp4 = parse_mp4(attach_mp4_media(ids, "doc_id")).collect()
+    mp4 = parse_mp4(attach_media(ids, "doc_id", mp4_bytes)).collect()
     assert len(mp4) == 12 and all(r.valid for r in mp4)
 
 
@@ -317,15 +318,16 @@ def test_avi_odd_sized_frame_chunk_word_alignment():
 
 def test_spark_end_to_end_avi(spark):
     from data_lakes_tp2_student_spark.operators.media_containers import (
-        attach_avi_media,
+        avi_bytes,
         parse_avi,
         parse_avi_frames,
     )
+    from data_lakes_tp2_student_spark.operators.multimodal import attach_media
 
     ids = spark.range(9).selectExpr("id AS doc_id")
-    meta = parse_avi(attach_avi_media(ids, "doc_id")).collect()
+    meta = parse_avi(attach_media(ids, "doc_id", avi_bytes)).collect()
     assert len(meta) == 9 and all(r.valid for r in meta)
-    frames = parse_avi_frames(attach_avi_media(ids, "doc_id")).collect()
+    frames = parse_avi_frames(attach_media(ids, "doc_id", avi_bytes)).collect()
     assert len(frames) == sum(i % 3 + 1 for i in range(9))
 
 

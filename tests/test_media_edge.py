@@ -7,12 +7,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from data_lakes_tp2_student_spark.operators.multimodal import (
-    attach_bmp_media,
-    attach_wav_media,
+    attach_media,
     bmp_bytes,
+    image_dhash,
     parse_bmp,
     parse_wav,
     resize_bmp,
+    wav_bytes,
 )
 
 
@@ -38,8 +39,8 @@ def test_parse_bmp_rejects_truncated_and_corrupt(spark):
 
 
 def test_parse_wav_rejects_truncated_and_corrupt(spark):
-    wav_rows = attach_wav_media(
-        spark.createDataFrame([(7,)], "doc_id long"), "doc_id"
+    wav_rows = attach_media(
+        spark.createDataFrame([(7,)], "doc_id long"), "doc_id", wav_bytes
     ).collect()
     good = bytes(wav_rows[0].media)
     rows = [
@@ -60,7 +61,7 @@ def test_resize_bmp_factor_larger_than_dims(spark):
     """factor >> dims must still yield a valid 1x1 image that re-parses,
     with the first stored pixel surviving."""
     df = spark.createDataFrame([(0,)], "doc_id long")  # 1x1 source image
-    media = attach_bmp_media(df, "doc_id")
+    media = attach_media(df, "doc_id", bmp_bytes)
     out = parse_bmp(resize_bmp(media, factor=20)).collect()[0]
     assert out.valid and out.width == 1 and out.height == 1
     assert out.px0 == 0  # (0*7+0) % 256
@@ -68,7 +69,7 @@ def test_resize_bmp_factor_larger_than_dims(spark):
 
 def test_resize_bmp_idempotent_at_factor_one(spark):
     df = spark.createDataFrame([(9,)], "doc_id long")
-    media = attach_bmp_media(df, "doc_id")
+    media = attach_media(df, "doc_id", bmp_bytes)
     orig = parse_bmp(media).collect()[0]
     same = parse_bmp(resize_bmp(media, factor=1)).collect()[0]
     assert (orig.width, orig.height, orig.n_bytes, orig.px0) == (
@@ -81,7 +82,7 @@ def test_resize_bmp_idempotent_at_factor_one(spark):
 
 def test_resize_halves_dimensions_and_reparses(spark):
     df = spark.createDataFrame([(15,)], "doc_id long")  # 16x4 image
-    media = attach_bmp_media(df, "doc_id")
+    media = attach_media(df, "doc_id", bmp_bytes)
     out = parse_bmp(resize_bmp(media, factor=2)).collect()[0]
     assert out.valid
     assert out.width == (15 % 16 + 1 + 1) // 2
@@ -293,14 +294,10 @@ def test_image_dhash_identical_images_pair_at_zero(spark):
     """Identical fixture images (same id mod 768: same dims AND same pixel
     pattern) must hash identically and pair at hamming 0; corrupt payloads
     degrade to valid=false."""
-    from data_lakes_tp2_student_spark.operators.multimodal import (
-        attach_bmp_media,
-        dhash_pairs,
-        image_dhash,
-    )
+    from data_lakes_tp2_student_spark.operators.multimodal import dhash_pairs
 
     df = spark.createDataFrame([(5,), (773,), (10,)], "doc_id long")  # 773 = 5+768
-    dh = image_dhash(attach_bmp_media(df, "doc_id"))
+    dh = image_dhash(attach_media(df, "doc_id", bmp_bytes))
     vals = {r.doc_id: r.dhash for r in dh.collect()}
     assert vals[5] == vals[773]
     pairs = {
@@ -311,6 +308,24 @@ def test_image_dhash_identical_images_pair_at_zero(spark):
 
     bad = image_dhash(_media_df(spark, [(1, b"XX"), (2, b"")])).collect()
     assert all(not r.valid and r.dhash is None for r in bad)
+
+
+def test_image_dhash_exact_next_to_invalid_row_in_one_batch(spark):
+    """An 8×8 image whose stored rows all rise left to right sets all 56
+    gradient bits. In the same Arrow batch as an invalid payload (null
+    dhash) the hash must still come back exactly: an int64 column holding
+    a null that passes through float64 rounds (1 << 56) - 1 to 1 << 56."""
+    import struct
+
+    w = h = 8  # 24 bytes per row: no row padding
+    px = bytes(v for _ in range(h) for c in range(w) for v in (c * 30, 0, 0))
+    bmp = struct.pack("<2sIHHI", b"BM", 54 + len(px), 0, 0, 54) + struct.pack(
+        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(px), 2835, 2835, 0, 0
+    )
+    df = _media_df(spark, [(1, bmp + px), (2, b"junk")]).coalesce(1)
+    out = {r.doc_id: r for r in image_dhash(df).collect()}
+    assert out[1].valid and out[1].dhash == (1 << 56) - 1
+    assert not out[2].valid and out[2].dhash is None
 
 
 def test_audio_sample_stats_sign_decode_and_invalid(spark):
@@ -417,7 +432,10 @@ def test_parse_gif_skips_extension_blocks(spark):
 
 def test_attach_bmp_media_matches_bmp_bytes(spark):
     df = spark.createDataFrame([(3,), (12,)], "doc_id long")
-    rows = {r.doc_id: bytes(r.media) for r in attach_bmp_media(df, "doc_id").collect()}
+    rows = {
+        r.doc_id: bytes(r.media)
+        for r in attach_media(df, "doc_id", bmp_bytes).collect()
+    }
     assert rows[3] == bmp_bytes(3) and rows[12] == bmp_bytes(12)
 
 
@@ -425,7 +443,7 @@ def test_parse_is_distributed_expression(spark):
     """The parse runs per-batch on executors: a 200-row input keeps its
     partitioning and produces exactly one output row per input row."""
     df = spark.range(200).select(F.col("id").alias("doc_id"))
-    media = attach_bmp_media(df.repartition(8), "doc_id")
+    media = attach_media(df.repartition(8), "doc_id", bmp_bytes)
     parsed = parse_bmp(media)
     assert parsed.count() == 200
     assert parsed.filter(~F.col("valid")).count() == 0

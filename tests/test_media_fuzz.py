@@ -59,7 +59,7 @@ def test_png_decode_never_throws_on_fuzz():
 
 
 def test_gif_bmp_parse_never_throw_on_fuzz(spark):
-    """GIF/BMP decode closures live inside the mapInPandas runners — fuzz
+    """GIF/BMP decode closures live inside the per-row map functions — fuzz
     them through the DataFrame surface in two batches (one per format),
     asserting every mutant lands as a row."""
     from data_lakes_tp2_student_spark.operators.multimodal import (
@@ -87,26 +87,13 @@ def test_degenerate_payloads(payload):
 
 def test_wav_parse_and_stats_never_throw_on_fuzz(spark):
     """WAV chunk-walk + PCM sample decode under the same mutation battery."""
-    import struct
-
     from data_lakes_tp2_student_spark.operators.multimodal import (
         audio_sample_stats,
         parse_wav,
+        wav_bytes,
     )
 
-    # rebuild the attach_wav_media payload shape for one id
-    i = 13
-    rate, channels, bits = 22050, 2, 16
-    n_samples = i % 50 + 1
-    block = channels * bits // 8
-    data = bytes((i * 11 + j) % 256 for j in range(n_samples * block))
-    fmt = struct.pack(
-        "<4sIHHIIHH", b"fmt ", 16, 1, channels, rate, rate * block, block, bits
-    )
-    payload = fmt + struct.pack("<4sI", b"data", len(data)) + data
-    wav = struct.pack("<4sI4s", b"RIFF", 4 + len(payload), b"WAVE") + payload
-
-    rows = [(k, m) for k, m in enumerate(_mutations(wav, seed=500))]
+    rows = [(k, m) for k, m in enumerate(_mutations(wav_bytes(13), seed=500))]
     df = spark.createDataFrame(rows, "doc_id long, media binary")
     assert parse_wav(df).count() == len(rows)
     assert audio_sample_stats(df).count() == len(rows)

@@ -385,21 +385,6 @@ def test_lang_id_separates_real_language_text(spark):
         assert got[doc_id] == expected, (doc_id, got[doc_id], expected)
 
 
-def test_resize_media_truncates_and_rewrites_meta(spark):
-    from data_lakes_tp2_student_spark.operators.multimodal import (
-        attach_fake_media,
-        resize_media,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "x" * 100), (2, "short")], "doc_id bigint, text string"
-    )
-    media = attach_fake_media(df, "doc_id", "text")
-    out = {r["doc_id"]: r for r in resize_media(media, max_bytes=10).collect()}
-    assert len(out[1]["media"]) == 10 and out[1]["meta"]["n_bytes"] == 10
-    assert len(out[2]["media"]) == 5  # shorter than budget -> untouched
-
-
 def test_sample_frames_bounded_and_deterministic(spark):
     from data_lakes_tp2_student_spark.operators.multimodal import (
         attach_fake_media,

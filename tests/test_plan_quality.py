@@ -409,7 +409,7 @@ def test_join_strategy_hints_steer_the_planner(spark):
 def test_x5m_avi_chain_is_shuffle_free_and_column_pruned(spark):
     """The x5m container->decode chain must stay a straight map pipeline:
     column-pruned scan (only doc_id read from documents), three Arrow
-    mapInPandas stages (attach -> frame demux -> JPEG decode), and ZERO
+    map stages (attach -> frame demux -> JPEG decode), and ZERO
     exchanges — at 100 TB the decode work scales with input splits and
     nothing shuffles binary payloads."""
     from data_lakes_tp2_student_spark.catalog import REGISTRY
@@ -419,5 +419,5 @@ def test_x5m_avi_chain_is_shuffle_free_and_column_pruned(spark):
     p = df._jdf.queryExecution().executedPlan().toString()
     p = p.split("== Initial Plan ==")[0]
     assert "Exchange" not in p, p
-    assert p.count("MapInPandas") == 3, p
+    assert p.count("MapInArrow") == 3, p
     assert "ReadSchema: struct<doc_id:bigint>" in p, p  # pruned to the id

@@ -291,13 +291,14 @@ class TestTarParsing:
         import tarfile
 
         from data_lakes_tp2_student_spark.operators.multimodal import (
-            attach_tar_media,
+            attach_media,
+            tar_bytes,
         )
 
         docs = spark.range(5, 9).select(F.col("id").alias("doc_id"))
         blobs = {
             r.doc_id: bytes(r.media)
-            for r in attach_tar_media(docs, "doc_id").collect()
+            for r in attach_media(docs, "doc_id", tar_bytes).collect()
         }
         for i, blob in blobs.items():
             with tarfile.open(fileobj=io.BytesIO(blob)) as tf:
