@@ -1,6 +1,7 @@
-"""The manifest table as a registered DataFrame format: `manifest`
-(round 8) — batch reader, batch writer, and streaming SINK (the
-streaming SOURCE lives in streaming/source.py as `manifest_stream`).
+"""The manifest table as a registered DataFrame format: `manifest` —
+batch reader, batch writer, and streaming SINK. The streaming SOURCE,
+`manifest_stream`, lives in streaming/source.py and shares this
+module's scan: `_plan` and `_scan`.
 
 Delta parity for the idiomatic entry points:
 
@@ -10,48 +11,39 @@ Delta parity for the idiomatic entry points:
     (df2.write.format("manifest").mode("append")
         .option("path", root).save())
 
-built on Spark 4's Python Data Source API (SPARK-44076, public). The
-READER plans size-packed input partitions from the pinned snapshot's
-manifest — and implements `pushFilters` (SPARK-48921): Spark
+built on Spark 4's Python Data Source API (SPARK-44076, public).
+
+READ. The batch reader implements `pushFilters` (SPARK-48921): Spark
 hands the scan's predicates down before planning, the reader prunes
 files against the manifest's partition values and recorded [min, max]
 column stats (the same data skipping `ManifestTable.read`'s explicit
 `partition_filter`/`range_filter` arguments expose), then RETURNS every
 filter so Spark still applies it row-level — file skipping is an
-over-approximation, never a row filter. Deletion vectors are applied
-executor-side: a DV'd file's partition carries its DV parquet paths and
-masks deleted positions out of the Arrow table before yielding.
+over-approximation, never a row filter. `_plan` size-packs the kept
+files (`pack_by_size`) into `_ScanPartition`s that carry each file's
+partition values, DV paths and the column mapping. `_scan` runs on the
+executor: it reads each of the partition's DV parquets once through
+`io/dv.py`, drops the deleted positions from each file's Arrow table,
+and projects it to the snapshot's schema.
 
-The WRITER is the Arrow fast path (`DataSourceArrowWriter`): each
-executor task streams its record batches straight into one parquet file
-per partition value inside the table's `txn=<id>` staging dir (Hive
-layout, partition columns as directories, exactly like the Spark-write
-path), computes the footer [min, max] stats locally, and ships only the
-manifest ENTRIES back as its commit message. The driver then publishes
-all entries through `ManifestTable._commit_files` — the same constraint
-validation, layout compatibility, schema-evolution check, and
-version-race loop every other commit takes, so a DataSource write is
-atomic, conflict-checked, and isolated exactly like `commit_append`.
-`abort()` deletes the txn dir; a crash before commit leaves only an
-orphan dir that `vacuum` reaps.
+WRITE. The writer is the Arrow fast path (`DataSourceArrowWriter`):
+each executor task streams its record batches straight into one parquet
+file per partition value inside the table's `txn=<id>` staging dir
+(Hive layout, partition columns as directories, exactly like the
+Spark-write path) and ships only the manifest ENTRIES back as its
+commit message. The driver then publishes all entries through
+`ManifestTable._commit_files` — the same constraint validation, layout
+compatibility, schema-evolution check, and version-race loop every
+other commit takes, so a DataSource write is atomic, conflict-checked,
+and isolated exactly like `commit_append`. `abort()` deletes the txn
+dir; a crash before commit leaves only an orphan dir that `vacuum`
+reaps. s3:// roots have each executor task stage in a task-local temp
+dir and PUT its own files to the table's `data/txn=<id>/` prefix; a
+losing speculative attempt's uploaded objects are swept by one LIST
+over the txn prefix before publish.
 
-Reference tie-in: the reference reads/writes its zones with bare
-pandas/boto3 (build/unpack_to_raw.py:17-22, src/process_to_curated.py);
-this is the engine-native format registration those scripts would use.
-
-Scale shape: planning is driver-side O(files in snapshot) over the JSON
-manifest (no storage listing); reads are file-per-task Arrow streams;
-writes never funnel through the driver — data stays on executors, only
-O(files) metadata rides the commit messages. Local roots stage through
-the shared POSIX namespace (on a real cluster: NFS/Lustre); s3:// roots
-(round 10) have each executor task stage in a task-local temp dir and
-PUT its own files to the table's `data/txn=<id>/` prefix — the driver
-publishes the same conditional-put commit, and a losing speculative
-attempt's uploaded objects are swept by one LIST over the txn prefix
-before publish.
-
-Surface boundaries Spark itself enforces (both fail LOUD with
-actionable messages, verified): save modes are append/overwrite only
+Surface boundaries Spark itself enforces (both fail loud with
+actionable messages): save modes are append/overwrite only
 (`UNSUPPORTED_DATA_SOURCE_SAVE_MODE` for error/ignore), and the native
 `df.write.partitionBy(...)` clause is rejected for Python data sources
 ("provided partitioning ... does not match") — declare the layout with
@@ -59,16 +51,13 @@ actionable messages, verified): save modes are append/overwrite only
 (batch) / `txnAppId` (streaming, version = batchId) give Delta-style
 idempotent writes via the log's txn action.
 
-PERFORMANCE BOUNDARY (PERF.md #42, pinned #45): this format is the
-INTEROP surface — every batch crosses Python→JVM through Arrow, which
-measures ~3× the native scan on this host. For hot-path reads, use
-`ManifestTable(root).read(spark, ...)`: it resolves the same snapshot
-(time travel, DV application, mapping, skipping) into a NATIVE parquet
-scan that stays inside whole-stage codegen. Reach for
-`spark.read.format("manifest")` when you need the registered-format
-ergonomics (SQL `USING`, option-driven tooling, writers), not raw scan
-speed; `tests/test_datasource.py::test_native_read_path_stays_native`
-pins that the fast path never silently routes through here.
+Performance boundary: this format is the interop surface. Every batch
+crosses Python→JVM through Arrow, measured at about 3× the native
+scan (PERF.md). For hot-path reads use `ManifestTable(root).read(spark,
+...)`, which resolves the same snapshot (time travel, DVs, mapping,
+skipping) into a native parquet scan;
+`tests/test_datasource.py::test_native_read_path_stays_native` pins
+that the fast path never routes through here.
 """
 
 from __future__ import annotations
@@ -88,7 +77,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from .logstore import LocalLogStore
-from .manifest import HIVE_NULL, ManifestTable, _file_stats
+from .manifest import HIVE_NULL, ManifestTable, _file_entry
 from .prune import _path_value, from_filters, keep
 
 
@@ -210,19 +199,17 @@ def _project(arrow_table, want, partition: dict | None = None, mapping: dict | N
 
 
 def pack_by_size(sizes: list) -> list[list[int]]:
-    """Spark FilePartition-style size packing, shared by the batch scan
-    and the streaming source (round 15, VERDICT r14 item 2): group file
-    indices into bins of at most maxSplitBytes = min(maxPartitionBytes,
-    max(openCost, totalCost/parallelism)) — big tables split at 128 MB
-    like a native scan; small many-file tables spread across the
-    available cores instead of one Python-worker round-trip per FILE
-    (DATAPLANE_r14 measured that floor at ~1 s for 512-8192-file
-    tables; DATAPLANE_r15 reads flat ~0.55-0.86 s after packing).
-    `sizes` entries may be None (legacy manifest entries without
-    `bytes`) — costed at openCost like Spark costs unknown smalls.
-    Parallelism proxy: SPARK_GRAFT_CPUS (this runs in a driver-side
-    Python worker with no JVM gateway, so sc.defaultParallelism is
-    unreachable), falling back to the machine's cores."""
+    """Spark FilePartition-style size packing for both `manifest`
+    readers: group file indices into bins of at most maxSplitBytes =
+    min(maxPartitionBytes, max(openCost, totalCost/parallelism)). Big
+    tables split at 128 MB like a native scan; small many-file tables
+    spread across the available cores instead of one Python-worker
+    round-trip per file. `sizes` entries may be None (legacy manifest
+    entries without `bytes`), costed at openCost like Spark costs
+    unknown small files. Parallelism proxy: SPARK_GRAFT_CPUS (this runs
+    in a driver-side Python worker with no JVM gateway, so
+    sc.defaultParallelism is unreachable), falling back to the
+    machine's cores."""
     open_cost = 4 * 1024 * 1024  # Spark's files.openCostInBytes
     max_part = 128 * 1024 * 1024  # Spark's files.maxPartitionBytes
     costs = [(s or open_cost) + open_cost for s in sizes]
@@ -246,18 +233,68 @@ def pack_by_size(sizes: list) -> list[list[int]]:
 
 class _ScanPartition(InputPartition):
     """One or more data files read by a single task: absolute path,
-    manifest-relative path (the DV join key), the entry's partition
-    values (Hive layout keeps them out of the file), and the file's
+    manifest-relative path (the DV key), the entry's partition values
+    (Hive layout keeps them out of the file), and the file's
     deletion-vector parquet paths. `more` carries the additional
     (path, rel, partition, dv_paths) tuples `pack_by_size` put in the
-    same bin."""
+    same bin. `mapping` (logical→physical column names, {} = identity)
+    rides the partition, not the reader: a reader may be pickled to
+    executors before the driver resolves it, while partitions are
+    pickled fresh for each scan or micro-batch."""
 
-    def __init__(self, path: str, rel: str, partition: dict, dv_paths: tuple, more: tuple = ()):
+    def __init__(
+        self, path: str, rel: str, partition: dict, dv_paths: tuple,
+        mapping: dict, more: tuple = (),
+    ):
         self.path = path
         self.rel = rel
         self.partition = partition
         self.dv_paths = dv_paths
+        self.mapping = mapping
         self.more = more
+
+
+def _plan(store, entries: list[dict], mapping: dict) -> list[_ScanPartition]:
+    """Size-packed scan partitions over manifest file `entries`, with
+    data and DV paths resolved through `store`."""
+    if not entries:
+        return []
+    _base, paths = store.resolve_read([e["path"] for e in entries])
+    dv_rels = sorted({r for e in entries for r in e.get("dv", ())})
+    local = dict(zip(dv_rels, store.resolve_read(dv_rels)[1]))
+    files = [
+        (p, e["path"], e["partition"], tuple(local[r] for r in e.get("dv", ())))
+        for e, p in zip(entries, paths)
+    ]
+    return [
+        _ScanPartition(*files[b[0]], mapping, more=tuple(files[i] for i in b[1:]))
+        for b in pack_by_size([e.get("bytes") for e in entries])
+    ]
+
+
+def _scan(schema: StructType, partition: _ScanPartition):
+    """Executor side of both `manifest` readers: each file of the
+    partition as Arrow batches, deleted positions dropped, projected to
+    `schema`. The partition's DV parquets are each read once."""
+    if not partition.path:
+        return
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .dv import dead_positions, drop_dead
+
+    want = to_arrow_schema(schema)
+    files = (
+        (partition.path, partition.rel, partition.partition, partition.dv_paths),
+        *partition.more,
+    )
+    dead = dead_positions({rel: dvs for _p, rel, _part, dvs in files if dvs})
+    for path, rel, part, _dvs in files:
+        table = pq.read_table(path)
+        if rel in dead:
+            table = drop_dead(table, dead[rel])
+        yield from _project(table, want, part, partition.mapping).to_batches()
 
 
 class ManifestBatchReader(DataSourceReader):
@@ -266,9 +303,6 @@ class ManifestBatchReader(DataSourceReader):
         table = _open_table(options)
         self._table = table
         self._m = table.manifest(_resolve_version(table, options))
-        # logical→physical resolution for projection (round 9 column
-        # mapping); {} = identity
-        self._mapping = self._m.get("column_mapping") or {}
         self._pred = None  # pushed-filter predicate (see pushFilters)
 
     def __getstate__(self):
@@ -294,61 +328,14 @@ class ManifestBatchReader(DataSourceReader):
         """Size-packed bins (`pack_by_size`) of the files the pushed
         filters cannot rule out."""
         files = keep(self._m, self._m["files"], self._pred)
-        if not files:
-            # Spark requires at least one partition; an empty one yields
-            # nothing (read() returns immediately on a None path)
-            return [_ScanPartition("", "", {}, ())]
-        _base, paths = self._table.store.resolve_read(
-            [e["path"] for e in files]
-        )
-        structs = []
-        for e, p in zip(files, paths):
-            dv = e.get("dv") or []
-            dv_paths = (
-                tuple(self._table.store.resolve_read(sorted(dv))[1])
-                if dv
-                else ()
-            )
-            structs.append((p, e["path"], e["partition"], dv_paths))
-        return [
-            _ScanPartition(*structs[bin[0]], more=tuple(structs[i] for i in bin[1:]))
-            for bin in pack_by_size([e.get("bytes") for e in files])
-        ]
+        # Spark requires at least one partition; a path-less one yields
+        # nothing
+        return _plan(
+            self._table.store, files, self._m.get("column_mapping") or {}
+        ) or [_ScanPartition("", "", {}, (), {})]
 
     def read(self, partition: _ScanPartition):
-        """Executor-side: each file's Arrow batches, DV positions masked
-        out, projected to the snapshot's cumulative table schema."""
-        if not partition.path:
-            return
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        want = to_arrow_schema(self._schema)
-        first = (
-            partition.path, partition.rel, partition.partition,
-            partition.dv_paths,
-        )
-        for path, rel, part, dv_paths in (first, *partition.more):
-            table = pq.read_table(path)
-            if dv_paths:
-                masks = []
-                for dvp in dv_paths:
-                    dv = pq.read_table(dvp, columns=["file", "pos"])
-                    dv = dv.filter(pc.equal(dv["file"], rel))
-                    masks.append(dv["pos"].to_numpy(zero_copy_only=False))
-                dead = (
-                    np.concatenate(masks) if masks else np.array([], dtype=int)
-                )
-                keep = np.ones(len(table), dtype=bool)
-                keep[dead.astype(int)] = False
-                table = table.filter(pa.array(keep))
-            out = _project(table, want, part, self._mapping)
-            for batch in out.to_batches():
-                yield batch
+        return _scan(self._schema, partition)
 
 
 class _CommitEntries(WriterCommitMessage):
@@ -571,32 +558,26 @@ class _StagedWriterBase:
                         [f.name for f in data_schema]
                     )
                 )
-        import pyarrow.parquet as _pq
-
         entries = []
         for key, w in writers.items():
             w.close()
-            p = paths[key]
-            entry = {
-                "path": posixpath.join(rel_prefix, os.path.relpath(p, stage)),
-                "partition": {
-                    # "" folds into the Hive default partition (null),
-                    # matching the entry _parse_partition would record
-                    c: (
-                        None
-                        if v is None or _path_value(v) == ""
-                        else _path_value(v)
-                    )
-                    for c, v in zip(self._partition_by, key)
-                },
-                "bytes": os.path.getsize(p),
-                # footer-only row count — keeps row_count() metadata-only
-                # for DataSource-written tables too (round 9)
-                "rows": _pq.ParquetFile(p).metadata.num_rows,
-            }
-            if self._stats_cols:
-                entry["stats"] = _file_stats(p, self._stats_cols)
-            entries.append(entry)
+            entries.append(
+                _file_entry(
+                    paths[key],
+                    posixpath.join(rel_prefix, os.path.relpath(paths[key], stage)),
+                    {
+                        # "" folds into the Hive default partition (null),
+                        # matching the entry _parse_partition would record
+                        c: (
+                            None
+                            if v is None or _path_value(v) == ""
+                            else _path_value(v)
+                        )
+                        for c, v in zip(self._partition_by, key)
+                    },
+                    self._stats_cols,
+                )
+            )
         self._upload_stage(
             stage, [(paths[key], e["path"]) for key, e in zip(writers, entries)]
         )

@@ -266,6 +266,26 @@ def _file_stats(path: str, cols: list[str]) -> dict[str, list]:
     return out
 
 
+def _file_entry(
+    local: str, rel: str, partition: dict, stats_cols: list[str] | None
+) -> dict:
+    """The manifest entry of a freshly written data file: its
+    table-relative `path`, `partition` values, `bytes` on disk, footer
+    `rows` (so `row_count()` and `compact()` never touch the backend),
+    and footer `stats` when `stats_cols` is set."""
+    import pyarrow.parquet as pq
+
+    entry = {
+        "path": rel,
+        "partition": partition,
+        "bytes": os.path.getsize(local),
+        "rows": pq.ParquetFile(local).metadata.num_rows,
+    }
+    if stats_cols:
+        entry["stats"] = _file_stats(local, stats_cols)
+    return entry
+
+
 def _parse_partition(rel_path: str) -> dict[str, str | None]:
     """Partition values from a relative file path's `k=v` dir segments
     (Hive layout; `txn` is the commit id, not a table partition)."""
@@ -630,24 +650,10 @@ class ManifestTable:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.store.txn_stage_dir(txn))
-        import pyarrow.parquet as pq
-
-        entries = []
-        for rel, local in self.store.finalize_txn(txn):
-            entry = {
-                "path": rel,
-                "partition": _parse_partition(rel),
-                # recorded so compact() never needs a per-file stat/HEAD
-                # round-trip against the backend (Delta records size too)
-                "bytes": os.path.getsize(local),
-                # footer-only row count (round 9): makes count(*) a
-                # metadata answer — row_count() — like Delta's numRecords
-                "rows": pq.ParquetFile(local).metadata.num_rows,
-            }
-            if stats_cols:
-                entry["stats"] = _file_stats(local, stats_cols)
-            entries.append(entry)
-        return txn, entries
+        return txn, [
+            _file_entry(local, rel, _parse_partition(rel), stats_cols)
+            for rel, local in self.store.finalize_txn(txn)
+        ]
 
     # ---------- commits ----------
 
@@ -1912,13 +1918,17 @@ class ManifestTable:
             range_filter=range_filter,
         )
 
-    def _write_dv(self, spark: SparkSession, dv_df: DataFrame) -> tuple[str, str, list[str]]:
+    def _write_dv(
+        self, dv_df: DataFrame, files: list[dict]
+    ) -> tuple[str, str, list[str]]:
         """Write a deletion-vector parquet (`file` string, `pos` bigint)
         into a fresh txn dir; return (txn name, table-relative DV path,
-        sorted distinct file paths the DV covers). coalesce(1): a DV is
-        positions-only — two columns bounded by the DELETED row count,
-        not table size — so one file keeps the reader's broadcast side a
-        single footer fetch."""
+        sorted paths of the `files` entries the DV covers). coalesce(1): a
+        DV is positions-only — two columns bounded by the DELETED row
+        count, not table size — so one file keeps the reader's broadcast
+        side a single footer fetch."""
+        from .dv import dead_positions
+
         txn = uuid.uuid4().hex
         dv_df.coalesce(1).write.parquet(self.store.txn_stage_dir(txn))
         written = [
@@ -1926,13 +1936,9 @@ class ManifestTable:
         ]
         if len(written) != 1:  # coalesce(1) wrote exactly one part file
             raise RuntimeError(f"DV write produced {len(written)} files")
-        import pyarrow.parquet as pq
-
         local = self.store.resolve_read(written)[1][0]
-        covered = sorted(
-            set(pq.read_table(local, columns=["file"])["file"].to_pylist())
-        )
-        return f"txn={txn}", written[0], covered
+        dead = dead_positions({e["path"]: [local] for e in files})
+        return f"txn={txn}", written[0], sorted(f for f, p in dead.items() if len(p))
 
     def _drop_uncommitted_dv(self, dv_rel: str) -> None:
         """Best-effort delete of the txn dir holding a staged DV parquet
@@ -1950,71 +1956,28 @@ class ManifestTable:
     def _merge_stacked_dvs(
         self, txn: str, dv_rel: str, hit: list[str], m: dict
     ) -> str:
-        """Fold STACKED deletion vectors at commit time (round 14, VERDICT
-        r13 item 1): when any hit file already carries DVs, their positions
-        for the hit files plus the fresh DV's rows are rewritten as ONE
-        merged DV parquet, and the caller points every hit file's `dv`
-        list at just it — a repeatedly-deleted file keeps dv depth exactly
-        1 (Delta merges its per-file DV bitmaps on every write the same
-        way). Cost is O(previously-deleted rows of the hit files), never
-        table data. Old DV parquets stay on disk for time travel (vacuum
-        collects them once no live version references them); an old rel
-        shared with a NON-hit file keeps being referenced by that file,
-        and its rows for the re-pointed hit files are harmlessly redundant
-        with the merged DV under the reader's anti-join. Returns the DV
-        rel the commit should reference; when no hit file has prior DVs
-        the fresh rel passes through untouched."""
-        merge_files = {
-            e["path"]
-            for e in m["files"]
-            if e["path"] in set(hit) and e.get("dv")
-        }
-        if not merge_files:
-            return dv_rel
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+        """Fold stacked deletion vectors at commit time: when any hit
+        file already carries DVs, each hit file's dead positions (its own
+        DVs plus the fresh one) are written as ONE merged DV parquet, and
+        the caller points every hit file's `dv` list at just it, so a
+        repeatedly-deleted file keeps dv depth 1. Cost is
+        O(previously-deleted rows of the hit files), never table data.
+        Old DV parquets stay on disk for time travel; an old rel shared
+        with a non-hit file keeps being referenced by that file. Returns
+        the DV rel the commit should reference; when no hit file has
+        prior DVs the fresh rel passes through untouched."""
+        from .dv import write_positions
 
-        old_rels = sorted(
-            {
-                r
-                for e in m["files"]
-                if e["path"] in merge_files
-                for r in e.get("dv", ())
-            }
+        by_path = {e["path"]: e for e in m["files"]}
+        if not any(by_path[f].get("dv") for f in hit):
+            return dv_rel
+        dead = self._dead_positions(
+            [{"path": f, "dv": [*by_path[f].get("dv", ()), dv_rel]} for f in hit]
         )
-        _, old_paths = self.store.resolve_read(old_rels)
-        hit_arr = pa.array(sorted(merge_files), pa.string())
-        parts = []
-        for p in old_paths:
-            t = pq.read_table(p, columns=["file", "pos"])
-            t = t.filter(pc.is_in(t["file"], hit_arr))
-            if t.num_rows:
-                parts.append(t)
-        _, new_paths = self.store.resolve_read([dv_rel])
-        parts.append(pq.read_table(new_paths[0], columns=["file", "pos"]))
-        # permissive: DV parquets from different writers may disagree on
-        # field NULLABILITY (Spark writes provenance-derived file/pos as
-        # required; a sessionless commit-callback writer stages nullable
-        # by pyarrow default) — unify instead of ArrowInvalid (surfaced
-        # by the r15 cross-process DV race worker)
-        merged = pa.concat_tables(parts, promote_options="permissive")
-        # distinct (file, pos) — LOAD-BEARING, not defensive (review
-        # r14): a prior merge leaves a merged rel whose rows for file A
-        # duplicate A's rows in an older shared rel that file C still
-        # references; when a later delete hits A and C together, BOTH
-        # rels land in old_rels and their A-rows concatenate twice.
-        # The reader's anti-join is set-semantics either way, but
-        # row_count()'s per-file position subtraction would
-        # over-subtract on duplicates.
-        merged = merged.group_by(["file", "pos"]).aggregate([])
         mtxn = uuid.uuid4().hex
         stage = self.store.txn_stage_dir(mtxn)
         os.makedirs(stage, exist_ok=True)
-        pq.write_table(
-            merged.sort_by([("file", "ascending"), ("pos", "ascending")]),
-            os.path.join(stage, "dv-merged.parquet"),
-        )
+        write_positions(os.path.join(stage, "dv-merged.parquet"), dead)
         written = [rel for rel, _local in self.store.finalize_txn(mtxn)]
         # the provisional un-merged DV was never referenced by any commit
         self.store.delete_txn_dir(txn)
@@ -2040,10 +2003,10 @@ class ManifestTable:
             F.coalesce(cond.cast("boolean"), F.lit(False))
         )
         txn, dv_rel, hit = self._write_dv(
-            spark,
             matched.select(
                 F.col("_rel").alias("file"), F.col("_pos").alias("pos")
             ),
+            files,
         )
         if not hit:
             self.store.delete_txn_dir(txn)  # empty DV: no-op, no commit
@@ -2158,6 +2121,33 @@ class ManifestTable:
             include_preimage=include_preimage,
         )
 
+    def _entry_bytes(self, e: dict) -> int:
+        """A file entry's recorded size; a backend stat for entries that
+        predate the `bytes` field."""
+        return e["bytes"] if "bytes" in e else self.store.file_size(e["path"])
+
+    def _entry_rows(self, e: dict) -> int:
+        """A file entry's recorded row count; one footer read for entries
+        that predate the `rows` field."""
+        if "rows" in e:
+            return e["rows"]
+        import pyarrow.parquet as pq
+
+        return pq.ParquetFile(
+            self.store.resolve_read([e["path"]])[1][0]
+        ).metadata.num_rows
+
+    def _dead_positions(self, files: list[dict]) -> dict:
+        """`dv.dead_positions` for the DV-carrying entries of `files`:
+        {file path: sorted distinct deleted positions}."""
+        from .dv import dead_positions
+
+        rels = sorted({r for e in files for r in e.get("dv", ())})
+        local = dict(zip(rels, self.store.resolve_read(rels)[1]))
+        return dead_positions(
+            {e["path"]: [local[r] for r in e["dv"]] for e in files if e.get("dv")}
+        )
+
     def compact(
         self,
         spark: SparkSession,
@@ -2170,11 +2160,11 @@ class ManifestTable:
         time-travel until vacuum). The streaming sink's many per-batch
         txn dirs fold into one — readers switch atomically. Returns the
         new version. A commit landing between the snapshot read and the
-        publish now ABORTS this compaction with ConcurrentWriteConflict
-        (round 7 — it used to clobber); just re-run it.
+        publish ABORTS this compaction with ConcurrentWriteConflict; just
+        re-run it.
 
         With `small_file_bytes` set, compaction is FILE-SELECTIVE
-        (round 8 — Delta's OPTIMIZE shape): only files SMALLER than the
+        (Delta's OPTIMIZE shape): only files SMALLER than the
         threshold, plus any file carrying a deletion vector (whose
         deletes this rewrite materializes), are read and rewritten;
         every other file carries over by reference in a `remove: files`
@@ -2191,24 +2181,23 @@ class ManifestTable:
         if latest is None:
             raise FileNotFoundError(f"no committed version at {self.root}")
         m = self.manifest(latest)
-
-        def size(e: dict) -> int:
-            # size recorded at commit (round 8); backend stat only for
-            # legacy entries that predate the `bytes` field
-            return e["bytes"] if "bytes" in e else self.store.file_size(e["path"])
-
         part_by = m["partition_by"] or None
         if small_file_bytes is None:
             chosen = m["files"]
             df = self.read(spark, version=latest)
         else:
             chosen = [
-                e for e in m["files"] if size(e) < small_file_bytes or e.get("dv")
+                e
+                for e in m["files"]
+                if self._entry_bytes(e) < small_file_bytes or e.get("dv")
             ]
             if len(chosen) < 2 and not any(e.get("dv") for e in chosen):
                 return latest
             df = self._load_snapshot(spark, m, chosen)
-        n = max(1, math.ceil(sum(size(e) for e in chosen) / target_file_bytes))
+        n = max(
+            1,
+            math.ceil(sum(map(self._entry_bytes, chosen)) / target_file_bytes),
+        )
         # On a partitioned table, hash-distribute BY the partition columns
         # so each value lands in one task → ~one file per partition; a
         # plain repartition(n) scatters every partition's rows across all
@@ -2236,24 +2225,18 @@ class ManifestTable:
         min_deleted_ratio: float = 0.0,
         target_file_bytes: int = 128 * 1024 * 1024,
     ) -> int:
-        """REORG TABLE ... APPLY (PURGE) analog (round 14, VERDICT r13
-        item 1): MATERIALIZE deletion vectors into rewritten data files
-        for every file whose recorded deleted-row fraction is ≥
-        `min_deleted_ratio` (0.0 = every DV-carrying file — a full purge;
-        0.3 = only files at least 30% dead, Delta's default REORG
-        threshold neighborhood). Chosen files are read DV-applied and
-        rewritten into ~target-size files; everything else carries over
-        by reference. Selection cost is O(deleted rows) — the per-file
-        dead counts come from the DV parquets themselves (positions-only,
-        bounded by deletes), never a data scan. At 100 TB this is the
-        lever that keeps the read-side anti-join relation small: without
-        it a delete-heavy table's DV relation grows until the broadcast
-        no longer fits. No DV-carrying file past the threshold → no-op
-        returning the current version. Conflict semantics match compact:
-        any racing commit aborts with ConcurrentWriteConflict."""
+        """REORG TABLE ... APPLY (PURGE) analog: materialize deletion
+        vectors into rewritten data files for every file whose deleted-row
+        fraction is ≥ `min_deleted_ratio` (0.0 = every DV-carrying file,
+        a full purge; 0.3 = only files at least 30% dead). Chosen files
+        are read DV-applied and rewritten into ~target-size files;
+        everything else carries over by reference. Selection reads only
+        the DV parquets (positions-only, bounded by deletes), never data,
+        and keeps the read-side anti-join relation small on delete-heavy
+        tables. No DV-carrying file past the threshold → no-op returning
+        the current version. Conflict semantics match compact: any racing
+        commit aborts with ConcurrentWriteConflict."""
         import math
-
-        import pyarrow.parquet as pq
 
         latest = self.latest_version()
         if latest is None:
@@ -2263,46 +2246,14 @@ class ManifestTable:
         if not dved:
             return latest
         if min_deleted_ratio <= 0:
-            chosen = dved  # full purge: every DV-carrying file, even
-            # legacy entries that predate the `rows` field — no need to
-            # count dead positions to select them
+            chosen = dved  # full purge: no need to count dead positions
         else:
-            dv_rels = sorted({r for e in dved for r in e.get("dv", ())})
-            _, dv_paths = self.store.resolve_read(dv_rels)
-            dead: dict[str, set] = {}
-            rel_of = dict(zip(dv_rels, dv_paths))
-            want = {e["path"] for e in dved}
-            ref_by: dict[str, set] = {}
-            for e in dved:
-                for r in e.get("dv", ()):
-                    ref_by.setdefault(r, set()).add(e["path"])
-            for r in dv_rels:
-                t = pq.read_table(rel_of[r], columns=["file", "pos"])
-                for f, p in zip(
-                    t["file"].to_pylist(), t["pos"].to_pylist()
-                ):
-                    # count a position only against files that actually
-                    # REFERENCE this DV (a merged rel's redundant rows
-                    # for a since-re-pointed file must not double-count)
-                    if f in want and f in ref_by.get(r, ()):
-                        dead.setdefault(f, set()).add(p)
-            # legacy entries without the r9 `rows` field fall back to
-            # one footer read — same policy as row_count(); without it
-            # a 100%-dead legacy file could never pass the threshold
-            # and its DV would bloat the read-side relation forever
-            # (review r14)
-            def rows_of(e: dict) -> int:
-                if "rows" in e:
-                    return e["rows"]
-                _b, paths = self.store.resolve_read([e["path"]])
-                return pq.ParquetFile(paths[0]).metadata.num_rows
-
+            dead = self._dead_positions(dved)
             chosen = [
                 e
                 for e in dved
-                if (n_rows := rows_of(e))
-                and len(dead.get(e["path"], ())) / n_rows
-                >= min_deleted_ratio
+                if (n_rows := self._entry_rows(e))
+                and len(dead[e["path"]]) / n_rows >= min_deleted_ratio
             ]
         if not chosen:
             return latest
@@ -2311,17 +2262,7 @@ class ManifestTable:
         n = max(
             1,
             math.ceil(
-                sum(
-                    # size recorded at commit; backend stat only for
-                    # legacy entries (same fallback as compact —
-                    # review r14: a missing `bytes` summed as 0 would
-                    # collapse a large purge into one output file)
-                    e["bytes"]
-                    if "bytes" in e
-                    else self.store.file_size(e["path"])
-                    for e in chosen
-                )
-                / target_file_bytes
+                sum(map(self._entry_bytes, chosen)) / target_file_bytes
             ),
         )
         df = df.repartition(n, *part_by) if part_by else df.repartition(n)
@@ -2366,45 +2307,17 @@ class ManifestTable:
         return self._commit(df, part_by, "optimize", "all", base=latest)
 
     def row_count(self, version: int | None = None) -> int:
-        """``SELECT count(*)`` answered from METADATA — no data-page
-        scan (round 9; Delta answers counts from `numRecords` the same
-        way). Entries record the parquet footer's num_rows at commit
-        since r9; legacy entries pay one footer read each (never data
-        pages). Files carrying deletion vectors subtract their recorded
-        positions — sound because a later DELETE evaluates over the
-        DV-applied live rows, so a position can never appear in two of
-        a file's DVs. At 100 TB this is the difference between a free
-        answer and a full-table scan."""
+        """``SELECT count(*)`` answered from metadata, with no data-page
+        scan: each entry's recorded footer row count (one footer read for
+        legacy entries without `rows`) minus its distinct DV positions,
+        each DV parquet read once."""
         if version is None:
             version = self.latest_version()
         if version is None:
             raise FileNotFoundError(f"no committed version at {self.root}")
-        import pyarrow.parquet as pq
-
-        m = self.manifest(version)
-        files = m["files"]
-        total = 0
-        legacy = [e for e in files if "rows" not in e]
-        footer = {}
-        if legacy:
-            _b, paths = self.store.resolve_read([e["path"] for e in legacy])
-            for e, p in zip(legacy, paths):
-                footer[e["path"]] = pq.ParquetFile(p).metadata.num_rows
-        for e in files:
-            total += e["rows"] if "rows" in e else footer[e["path"]]
-        dv_rels = sorted({d for e in files for d in e.get("dv", ())})
-        if dv_rels:
-            import pyarrow.compute as pc
-
-            _b, dv_paths = self.store.resolve_read(dv_rels)
-            dv_of = dict(zip(dv_rels, dv_paths))
-            for e in files:
-                for d in e.get("dv", ()):
-                    t = pq.read_table(dv_of[d], columns=["file"])
-                    total -= int(
-                        pc.sum(pc.equal(t["file"], e["path"])).as_py() or 0
-                    )
-        return total
+        files = self.manifest(version)["files"]
+        dead = self._dead_positions(files)
+        return sum(map(self._entry_rows, files)) - sum(map(len, dead.values()))
 
     def describe_detail(self) -> dict:
         """Delta `DESCRIBE DETAIL`: one dict of table-level facts derived
@@ -2478,7 +2391,9 @@ class ManifestTable:
         )
         txn = uuid.uuid4().hex
         stage = dest.store.txn_stage_dir(txn)
-        carried: dict[str, dict] = {}  # staged local path -> source entry
+        # staged local path -> source entry to carry, None = materialized
+        carried: dict[str, dict | None] = {}
+        dead = self._dead_positions(m["files"])
         _b, paths = self.store.resolve_read([e["path"] for e in m["files"]])
         for e, src in zip(m["files"], paths):
             # keep the partition dirs (everything between txn=<id> and
@@ -2489,49 +2404,31 @@ class ManifestTable:
             os.makedirs(d, exist_ok=True)
             out = os.path.join(d, f"part-{uuid.uuid4().hex}.parquet")
             if e.get("dv"):
-                import pyarrow as pa
-                import pyarrow.compute as pc
                 import pyarrow.parquet as pq
 
-                table = pq.read_table(src)
-                _db, dv_paths = self.store.resolve_read(sorted(e["dv"]))
-                keep = [True] * len(table)
-                for dvp in dv_paths:
-                    dv = pq.read_table(dvp, columns=["file", "pos"])
-                    dv = dv.filter(pc.equal(dv["file"], e["path"]))
-                    for p in dv["pos"].to_pylist():
-                        keep[p] = False
-                materialized = table.filter(pa.array(keep))
-                pq.write_table(materialized, out)
-                entry_meta = {
-                    "bytes": os.path.getsize(out),
-                    "rows": len(materialized),
-                }
-                if self.stats_cols:
-                    cmap = self._mapping_of(src_entry) or {}
-                    entry_meta["stats"] = _file_stats(
-                        out, [cmap.get(c, c) for c in self.stats_cols]
-                    )
+                from .dv import drop_dead
+
+                pq.write_table(drop_dead(pq.read_table(src), dead[e["path"]]), out)
+                carried[os.path.abspath(out)] = None
             else:
                 shutil.copyfile(src, out)
-                entry_meta = {"bytes": e.get("bytes", os.path.getsize(out))}
-                if "rows" in e:
-                    entry_meta["rows"] = e["rows"]
-                if "stats" in e:
-                    entry_meta["stats"] = e["stats"]
-            carried[os.path.abspath(out)] = entry_meta
+                carried[os.path.abspath(out)] = e
+        cmap = self._mapping_of(src_entry) or {}
+        stats_cols = [cmap.get(c, c) for c in self.stats_cols]
         entries = []
         for rel, local in dest.store.finalize_txn(txn):
-            meta = carried[os.path.abspath(local)]
+            e = carried[os.path.abspath(local)]
+            if e is None:
+                entries.append(
+                    _file_entry(local, rel, _parse_partition(rel), stats_cols)
+                )
+                continue
             entry = {
                 "path": rel,
                 "partition": _parse_partition(rel),
-                "bytes": meta["bytes"],
+                "bytes": e.get("bytes", os.path.getsize(local)),
             }
-            if "rows" in meta:
-                entry["rows"] = meta["rows"]
-            if "stats" in meta:
-                entry["stats"] = meta["stats"]
+            entry.update({k: e[k] for k in ("rows", "stats") if k in e})
             entries.append(entry)
         dest._commit_files(
             None,

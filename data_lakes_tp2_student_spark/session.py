@@ -14,11 +14,14 @@ partition-aware so the same plans hold at 100 TB.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 _MIB = 1 << 20
+_log = logging.getLogger("spark_graft")
+_config_logged = False
 
 
 def auto_max_partition_bytes(total_input_bytes: int, cores: int) -> int:
@@ -85,22 +88,45 @@ def get_spark(
     """Build (or reuse) the session.
 
     Note: ``getOrCreate`` returns an existing session unchanged, so configs
-    only apply to the first call in a process.
+    only apply to the first call in a process. The derived config is
+    logged once per process on the ``spark_graft`` logger, with a
+    WARNING when the input-size probe finds no parquet bytes.
     """
+    global _config_logged
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "*"))
     # NB parenthesized: the r13 form `os.cpu_count() or 32 if ... else
     # int(cpus)` parsed as `cpu_count() or (...)` and silently read the
     # machine's core count even when SPARK_GRAFT_CPUS was set lower.
     n_cores = (os.cpu_count() or 32) if cpus == "*" else int(cpus)
-    input_bytes = _dir_parquet_bytes(
+    sf_dir = (
         os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
+    input_bytes = _dir_parquet_bytes(sf_dir)
     shuffle_partitions = str(
         shuffle_partitions
         or os.environ.get("SPARK_SHUFFLE_PARTITIONS")
         or auto_shuffle_partitions(input_bytes, n_cores)
     )
+    max_partition_bytes = os.environ.get(
+        "SPARK_FILES_MAX_PARTITION_BYTES"
+    ) or str(auto_max_partition_bytes(input_bytes, n_cores))
     driver_memory = driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    if not _config_logged:
+        _config_logged = True
+        if not input_bytes:
+            _log.warning(
+                "input-size probe read 0 parquet bytes from %s; derived "
+                "shuffle partitions and split size sit at their floors "
+                "unless SPARK_SHUFFLE_PARTITIONS or "
+                "SPARK_FILES_MAX_PARTITION_BYTES override them",
+                sf_dir,
+            )
+        _log.info(
+            "session config: cores=%d probed_bytes=%d probe_dir=%s "
+            "shuffle_partitions=%s maxPartitionBytes=%s driver_memory=%s",
+            n_cores, input_bytes, sf_dir, shuffle_partitions,
+            max_partition_bytes, driver_memory,
+        )
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -114,21 +140,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Scan-split sizing (round 12 profiled the bench's worst
-        # fixed-overhead rows as scan under-parallelism: q1 1.31→1.01 s,
-        # x2b 2.47→1.57 s at 16 MB splits; round 13, VERDICT r12 item 4,
-        # derives the size from the session's expected input instead of
-        # pinning 16 MB): ~2 tasks per core over $SPARK_GRAFT_SF_DIR's
-        # parquet bytes, clamped [16 MiB, 128 MiB]. This is a LOCAL-mode
-        # default: a real cluster at 100 TB wants 128 MB+ (set
-        # SPARK_FILES_MAX_PARTITION_BYTES, or pass extra_conf) — scan
-        # tasks there are bounded by file/row-group layout, not by a
-        # 32-core box reading one file.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_FILES_MAX_PARTITION_BYTES")
-            or str(auto_max_partition_bytes(input_bytes, n_cores)),
-        )
+        # Scan-split size: ~2 tasks per core over $SPARK_GRAFT_SF_DIR's
+        # parquet bytes, clamped [16 MiB, 128 MiB]. A local-mode
+        # default: a cluster wants 128 MB+ (set
+        # SPARK_FILES_MAX_PARTITION_BYTES, or pass extra_conf), where
+        # scan tasks are bounded by file and row-group layout.
+        .config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
         # Spark still defaults timestamps to deprecated INT96, which
         # carries NO parquet footer min/max — every timestamp column
         # would silently lose data skipping (manifest stats AND Spark's

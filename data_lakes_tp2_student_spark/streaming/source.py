@@ -1,15 +1,16 @@
-"""The manifest table as a Structured Streaming SOURCE (round 8).
+"""The manifest table as a Structured Streaming SOURCE.
 
 Delta parity: `spark.readStream.format("delta")` turns a lake table into
 an unbounded stream of its committed appends. This module gives the
 manifest table the same role through Spark 4's Python Data Source API
-(SPARK-44076, public): offsets ARE commit versions, each micro-batch is
-exactly the data files ADDED by versions (start, end], size-packed into
-input partitions by the shared pack_by_size rule (round 15) — so the
-read parallelizes by data size like a native parquet scan, never one
-task per small file, and the exactly-once contract falls out of the offset log
-(Spark checkpoints the last processed version; a restart resumes from
-it; replays re-read the same immutable files).
+(SPARK-44076, public): offsets ARE commit versions, and each micro-batch
+is exactly the data files ADDED by versions (start, end]. Planning and
+the executor-side read are the batch `manifest` reader's own
+(`io/datasource.py`: `_plan` size-packs the files into `_ScanPartition`s,
+`_scan` reads them), so a micro-batch parallelizes by data size like a
+native parquet scan. The exactly-once contract falls out of the offset
+log (Spark checkpoints the last processed version; a restart resumes
+from it; replays re-read the same immutable files).
 
 Change commits (overwrite / row-level delete-update / merge /
 replace_partitions / compact / restore) REWRITE data, which an
@@ -27,19 +28,20 @@ Scale shape: offset resolution and partition planning are driver-side
 O(Δ versions) metadata ops on the JSON log; the data path is
 size-binned pyarrow batch reads (Arrow all the way into Spark),
 no driver materialization. The local LogStore serves files in place;
-object-store tables stream through the store's immutable-file cache.
+object-store tables stream through the store's driver-local
+immutable-file cache, so an S3-backed stream is a single-node
+(local[N]) shape here, the same boundary io/logstore.py documents for
+batch reads.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 from pyspark.sql.types import StructType
+
+from ..io.datasource import _nullable, _open_table, _plan, _scan
 
 # actions whose entries only ADD data relative to their parent — safe for
 # an append-only stream. Everything else rewrites (or rolls back) rows.
@@ -57,40 +59,6 @@ _METADATA_ACTIONS = {
     "rename_column",
     "drop_column",
 }
-
-
-class _FilePartition(InputPartition):
-    def __init__(
-        self, path: str, partition: dict, mapping: dict, more: tuple = ()
-    ):
-        self.path = path
-        # the entry's partition values: Hive-layout data files don't
-        # store partition columns — a plain file read would stream them
-        # as nulls on partitioned tables (round-8 review find)
-        self.partition = partition
-        # logical→physical column mapping rides the PARTITION, not the
-        # reader: the reader object may be pickled to executors before
-        # the driver resolves the mapping, but partitions are pickled
-        # fresh each micro-batch
-        self.mapping = mapping
-        # additional (path, partition) pairs this task also reads
-        # (round 15: micro-batch file list is size-packed by the shared
-        # pack_by_size rule, so a commit that added thousands of small
-        # files no longer costs one Python-worker round-trip per file)
-        self.more = more
-
-
-def _open_table(options: dict):
-    """Construct the table from stream options — shared with the batch
-    format (io/datasource.py; one copy of the s3:// option plumbing).
-    NOTE: the S3 store reads hydrate a driver-local file cache, so the
-    S3-backed stream is a single-node (local[N]) shape in this
-    environment — a multi-node cluster should read via s3a paths once
-    the hadoop-aws jars exist (the same boundary io/logstore.py
-    documents for batch reads)."""
-    from ..io.datasource import _open_table as _open
-
-    return _open(options)
 
 
 class ManifestStreamReader(DataSourceStreamReader):
@@ -219,15 +187,14 @@ class ManifestStreamReader(DataSourceStreamReader):
                 if latest is not None
                 else {}
             )
-        parts: list[_FilePartition] = []
-        rels: list[str] = []
+        adds: list[dict] = []
         for v in range(start["version"] + 1, end["version"] + 1):
             entry = self._table._raw(v)
             action = entry.get("action", "?")
-            adds, remove = self._table._entry_delta(entry)
+            added, remove = self._table._entry_delta(entry)
             if v > 0 and action not in _APPEND_ACTIONS:
                 if action in _METADATA_ACTIONS or not (
-                    adds or remove.get("kind") not in (None, "none")
+                    added or remove.get("kind") not in (None, "none")
                 ):
                     continue  # nothing moved — nothing to stream
                 if self._skip_changes:
@@ -245,59 +212,11 @@ class ManifestStreamReader(DataSourceStreamReader):
                     f"true to stream only appends, or consume "
                     f"changes_since() for CDC semantics."
                 )
-            rels.extend(
-                (e["path"], e["partition"], e.get("bytes")) for e in adds
-            )
-        if rels:
-            from ..io.datasource import pack_by_size
+            adds.extend(added)
+        return _plan(self._table.store, adds, self._mapping)
 
-            _base, paths = self._table.store.resolve_read(
-                [r for r, _p, _b in rels]
-            )
-            structs = [
-                (p, part) for p, (_r, part, _b) in zip(paths, rels)
-            ]
-            # size-packed bins (round 15, shared rule with the batch
-            # scan): task count follows the micro-batch's DATA size,
-            # not its file count — a backfill batch spanning thousands
-            # of small-file commits reads in ~core-count tasks instead
-            # of one Python-worker round-trip per file
-            bins = pack_by_size([b for _r, _p, b in rels])
-            parts = [
-                _FilePartition(
-                    *structs[bin[0]],
-                    self._mapping,
-                    more=tuple(structs[i] for i in bin[1:]),
-                )
-                for bin in bins
-            ]
-        return parts
-
-    def read(self, partition: _FilePartition):
-        """Executor-side: one parquet file → arrow batches projected to
-        the stream schema — partition columns filled from the manifest
-        entry's values (Hive layout keeps them out of the file), columns
-        an older file predates padded with typed nulls (add-only
-        evolution guarantees no column ever narrows)."""
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from ..io.datasource import _project
-
-        arrow_schema = to_arrow_schema(self._schema)
-        for path, part in (
-            (partition.path, partition.partition),
-            *partition.more,
-        ):
-            out = _project(
-                pq.read_table(path),
-                arrow_schema,
-                part,
-                partition.mapping,
-            )
-            for batch in out.to_batches():
-                yield batch
+    def read(self, partition):
+        return _scan(self._schema, partition)
 
     def commit(self, end: dict) -> None:
         # durable progress lives in Spark's offset checkpoint; remember
@@ -320,8 +239,6 @@ class ManifestStreamDataSource(DataSource):
             raise FileNotFoundError(
                 f"no committed version at {self.options['path']}"
             )
-        from ..io.datasource import _nullable
-
         # nullable like every file source: pre-evolution files are
         # null-padded for added columns, and a non-nullable field would
         # make Spark throw on the padded batches

@@ -248,10 +248,11 @@ def phase_delete_or_disjuncts(spark, tab, n_files: int) -> dict:
 def phase_dv_stack(spark, tab, n_files: int, depths: list[int]) -> list[dict]:
     """Stack D deletion vectors (each a distinct single-row DV delete,
     each in a DIFFERENT file so no commit-time merge collapses them)
-    and time the full read at each depth — expected ~FLAT since the
-    round-14 single-scan read: one directory-coalesced data scan plus
-    one broadcast anti-join whose build side is bounded by deleted
-    rows, whatever D and F are."""
+    and time three counts at each depth: the native read (one
+    directory-coalesced scan plus one broadcast anti-join, expected ~flat
+    in D and F), the registered `manifest` format (DVs applied per task
+    through io/dv.py) and the metadata-only `row_count()` (each DV
+    parquet read once). All three must agree."""
     before = tab.latest_version()
     done = 0
     version_at: dict[int, int] = {}
@@ -260,33 +261,41 @@ def phase_dv_stack(spark, tab, n_files: int, depths: list[int]) -> list[dict]:
             tab.delete_where(spark, f"id = {done * ROWS_PER_FILE + 1}", mode="dv")
             done += 1
         version_at[depth] = tab.latest_version()
-    # INTERLEAVED best-of-3 over VERSION-PINNED reads (round 14): the
-    # depths used to be measured sequentially (all samples of depth 0,
-    # then 16, then 64), so a host burst landing on one depth's window
-    # skewed that ratio — two same-HEAD runs read 5.5 s and 9.4 s for
-    # the SAME (8192, dv64) cell. Reading each depth's committed VERSION
-    # once per rep samples all depths under the same host conditions;
-    # min-of-3 still shields point jitter.
-    best = {d: float("inf") for d in depths}
-    rows_of = {}
+    counts = {
+        "sec": lambda v: tab.read(spark, version=v).count(),
+        "format_sec": lambda v: spark.read.format("manifest")
+        .option("path", tab.root)
+        .option("versionAsOf", v)
+        .load()
+        .count(),
+        "row_count_sec": lambda v: tab.row_count(v),
+    }
+    # Interleaved min-of-3 over version-pinned reads: each rep reads
+    # every depth with every reader, so a host burst cannot land on one
+    # depth's or one reader's samples only.
+    best = {(d, k): float("inf") for d in depths for k in counts}
+    rows_of: dict[tuple, int] = {}
     for _ in range(3):
         for depth in sorted(depths):
-            n, t = timed(
-                lambda v=version_at[depth]: tab.read(spark, version=v).count()
-            )
-            best[depth] = min(best[depth], t)
-            rows_of[depth] = n
-    out = [
-        {
-            "op": "read_with_stacked_dvs",
-            "files": n_files,
-            "dvs": depth,
-            "sec": round(best[depth], 3),
-            "rows": rows_of[depth],
-            "expected": "~flat: single scan + one bounded anti-join",
-        }
-        for depth in sorted(depths)
-    ]
+            for key, count in counts.items():
+                n, t = timed(count, version_at[depth])
+                best[depth, key] = min(best[depth, key], t)
+                rows_of[depth, key] = n
+    out = []
+    for depth in sorted(depths):
+        n = {rows_of[depth, k] for k in counts}
+        if len(n) != 1:
+            raise RuntimeError(f"counts disagree at {depth} DVs: {rows_of}")
+        out.append(
+            {
+                "op": "read_with_stacked_dvs",
+                "files": n_files,
+                "dvs": depth,
+                **{k: round(best[depth, k], 3) for k in counts},
+                "rows": n.pop(),
+                "expected": "~flat: single scan + one bounded anti-join",
+            }
+        )
     tab.restore(before)
     return out
 

@@ -14,6 +14,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from data_lakes_tp2_student_spark.io.datasource import ManifestDataSource
 from data_lakes_tp2_student_spark.io.manifest import ManifestTable
 
 N = 16  # id space; initial table has one row per id across 4 files
@@ -77,6 +78,16 @@ def test_random_rowlevel_sequences_match_model(spark, tmp_path_factory, ops):
             (r.id, r.v) for r in tab.read(spark, version=ver).collect()
         )
         assert got == sorted(snap.items()), f"version {ver} diverged"
+    # the latest version through the two readers that apply DVs in
+    # Python (io/dv.py) instead of the anti-join: the registered format
+    # and a deep clone, which materializes every DV
+    spark.dataSource.register(ManifestDataSource)
+    fmt = spark.read.format("manifest").option("path", tab.root).load()
+    assert sorted((r.id, r.v) for r in fmt.collect()) == sorted(model.items())
+    clone = tab.clone_to(str(tmp_path_factory.mktemp("dvclone") / "c"))
+    got = sorted((r.id, r.v) for r in clone.read(spark).collect())
+    assert got == sorted(model.items())
+    assert clone.row_count() == len(model)
 
 
 @pytest.mark.parametrize("seed", [0])
