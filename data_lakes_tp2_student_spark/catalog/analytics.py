@@ -1,17 +1,26 @@
-"""Time-series / product-analytics coverage sweep: resample+gap-fill,
-funnel, cohort retention, quantile bucketing, stratified sampling, and
-per-class embedding centroids.
+"""Time-series, product, graph and clustering analytics (SURVEY.md §2
+group X11–X21, x36/x40 graphs, x45/x46/x48) and the J UDF/UDAF/UDTF
+surface (j4–j6): resample+gap-fill, funnel, cohort retention, embedding
+centroids, PMI co-occurrence, event transitions, data-quality audit, BM25
+top-k, balanced sampling, kNN-graph triangles and label propagation,
+interval concurrency, k-means, first-touch attribution, and Python UDTF,
+grouped-aggregate and grouped-map UDFs.
 
-These extend SURVEY.md §2 groups E/F/X with the event-table analytics a
-training-data pipeline runs next to its relational workload. Every query is
-DuckDB-oracle-checked; scale notes are per-query docstrings.
+These are the event-table analytics a training-data pipeline runs next to
+its relational workload. Every query is DuckDB-oracle-checked; scale notes
+are per-query docstrings.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions.compute import eager
+from ..operators.graph import label_propagation, triangle_count
+from ..operators.similarity import knn_bruteforce
 from ..registry import load, register
+from .near_dup import sql_cos
 
 
 @register(
@@ -160,223 +169,52 @@ def x13_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "e3c_ntile_buckets",
+    "x15_embedding_centroids",
     oracle="""
-    WITH q AS (SELECT o_orderpriority,
-                      CAST(o_totalprice AS DECIMAL(18,2)) AS p,
-                      ntile(4) OVER (PARTITION BY o_orderpriority
-                                     ORDER BY o_totalprice, o_orderkey)
-                          AS quartile
-               FROM orders)
-    SELECT o_orderpriority, CAST(quartile AS BIGINT) AS quartile,
-           count(*) AS n, CAST(sum(p) AS DOUBLE) AS sum_price
-    FROM q GROUP BY o_orderpriority, quartile
+    WITH flat AS (SELECT label, CAST(t.pos AS INT) AS pos,
+                         embedding[CAST(t.pos AS INT) + 1] AS val
+                  FROM embeddings, unnest(range(len(embedding))) AS t(pos)),
+    q AS (SELECT label, pos,
+                 CAST(least(greatest(floor(CAST(val AS DOUBLE) * 1000000),
+                                     -1000000000000.0), 1000000000000.0)
+                      AS BIGINT) AS qv
+          FROM flat)
+    SELECT label, pos, count(*) AS n,
+           CAST(sum(qv) AS DOUBLE) / count(*) / 1000000.0 AS centroid
+    FROM q GROUP BY label, pos
     """,
 )
-def e3c_ntile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """e3 extension — ntile quantile bucketing: quartiles of order value per
-    priority class, then per-bucket count + exact decimal sum (emitted as
-    double for pandas-landing portability).
+def x15_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x15 — per-label embedding centroid (the class-prototype step of IVF /
+    dedup clustering), computed per dimension.
 
-    Scale shape (two-phase rank, no per-group single-task sort): a naive
-    `ntile OVER (PARTITION BY o_orderpriority)` makes each of the ~5 priority
-    values ONE window task sorting ~20% of the table — a straggler at 100 TB.
-    Instead: (1) band rows by a DETERMINISTIC pure function of the sort key
-    (value-range slices from the global min/max — not repartitionByRange +
-    spark_partition_id, whose sampled boundaries may differ between the two
-    plan branches that reference them); (2) per-(band, group) counts give
-    each band's rank offset (tiny aggregate, broadcast); (3) per-band local
-    row_number + offset = exact global rank — each window task sorts only
-    its band; (4) ntile is pure arithmetic on (rank, group count). Bucket
-    assignment is engine-portable because (o_totalprice, o_orderkey) is a
-    total order and bands are monotone in it."""
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        "o_orderkey",
-        "o_totalprice",
-        F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
-    )
-    slices = 32
-    stats = o.agg(
-        F.min("o_totalprice").alias("_lo"), F.max("o_totalprice").alias("_hi")
-    )
-    band = F.least(
-        F.lit(slices - 1),
-        F.floor(
-            (F.col("o_totalprice") - F.col("_lo"))
-            / ((F.col("_hi") - F.col("_lo") + F.lit(1e-6)) / slices)
-        ),
-    ).cast("int")
-    banded = o.crossJoin(F.broadcast(stats)).withColumn("_band", band)
-    # Tiny: (band, group) row counts -> cumulative offset per band, and
-    # the group totals off the SAME window pass (round 16, guide §2.4):
-    # the two frames share one partitionBy, so both window functions ride
-    # one exchange+sort of the ~(slices × |priorities|)-row aggregate —
-    # the previous separate `totals` branch recomputed the whole
-    # banded→pc chain (scan + two exchanges) and paid a second broadcast
-    # join below.
-    pc = banded.groupBy("_band", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-    w_off = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy("_band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = Window.partitionBy("o_orderpriority")
-    offsets = pc.select(
-        "_band",
-        "o_orderpriority",
-        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_cnt").over(w_tot).alias("_n"),
-    )
-    # Local sort covers only one band (bands are disjoint and monotone in
-    # the total order, so offset + local row_number is the exact global
-    # rank; a same-price tie can never straddle bands).
-    w_local = Window.partitionBy("_band", "o_orderpriority").orderBy(
-        "o_totalprice", "o_orderkey"
-    )
-    ranked = (
-        banded.withColumn("_lrn", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), ["_band", "o_orderpriority"])
-        .withColumn("_rn", F.col("_off") + F.col("_lrn"))
-    )
-    # ntile(k): first (n % k) buckets hold ceil(n/k) rows, the rest floor.
-    k = 4
-    q_sz = F.col("_n") / k  # floor via div below
-    big = (F.col("_n") % k) * (F.floor(q_sz) + 1)
-    quartile = F.when(
-        F.col("_rn") <= big, F.ceil(F.col("_rn") / (F.floor(q_sz) + 1))
-    ).otherwise(
-        (F.col("_n") % k)
-        + F.ceil((F.col("_rn") - big) / F.greatest(F.floor(q_sz), F.lit(1)))
-    )
-    return (
-        ranked.withColumn("quartile", quartile.cast("bigint"))
-        .groupBy("o_orderpriority", "quartile")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("p").cast("double").alias("sum_price"),
+    Engine-portable float math: summing raw doubles is order-dependent, so
+    each value is fixed-point-quantized (floor(val·1e6) — exact IEEE multiply
+    + exact floor) and summed as BIGINT; the average divides once, in a fixed
+    order, in double. Result is bit-identical under any partitioning and in
+    any engine. Scale shape: posexplode fans out dim× rows but they partial-
+    aggregate map-side down to labels × dims before the one shuffle."""
+    e = load(spark, sf_dir, "embeddings")
+    flat = e.select("label", F.posexplode("embedding").alias("pos", "val"))
+    # clamp to +-1e12 (coords beyond +-1e6 saturate): a garbage row must
+    # not ANSI-overflow the BIGINT sum and kill the job at scale
+    q = flat.select(
+        "label",
+        "pos",
+        F.least(
+            F.greatest(
+                F.floor(F.col("val").cast("double") * 1000000), F.lit(-1e12)
+            ),
+            F.lit(1e12),
         )
+        .cast("bigint")
+        .alias("qv"),
     )
-
-
-@register(
-    "f6_stratified_sample",
-    oracle="""
-    WITH r AS (SELECT source, doc_id,
-                      row_number() OVER (
-                          PARTITION BY source
-                          ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-                          AS rn
-               FROM documents)
-    SELECT source, doc_id, rn FROM r WHERE rn <= 5
-    """,
-)
-def f6_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """f-group extension — deterministic stratified sample: exactly k rows
-    per stratum, chosen by md5-hash order (so the sample is stable under any
-    partitioning AND reproducible by any engine — the same portability trick
-    as the e2 split shuffle key).
-
-    Scale shape: one hash exchange by stratum, and Catalyst inserts
-    WindowGroupLimit (verified in tests/test_plan_quality.py): each map task
-    keeps only its local top-k per stratum before shuffling, so the exchange
-    carries ~k·strata rows, never the table."""
-    d = load(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    return (
-        d.select(
-            "source", "doc_id", F.row_number().over(w).cast("bigint").alias("rn")
-        )
-        .filter(F.col("rn") <= 5)
-    )
-
-
-@register(
-    "d8b_group_median",
-    oracle="""
-    SELECT o_orderpriority,
-           round(median(o_totalprice), 6) AS median_price,
-           count(*) AS n
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def d8b_group_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """d8 extension — exact per-group median (the grouped form of the
-    notebook's global median, data_analysis.ipynb:261 in the reference).
-    Exact median sorts within groups; at 100 TB swap for
-    percentile_approx (d8x) — the API shape is identical."""
-    o = load(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.round(F.median("o_totalprice"), 6).alias("median_price"),
+    return q.groupBy("label", "pos").agg(
         F.count(F.lit(1)).alias("n"),
-    )
-
-
-@register(
-    "d8c_group_quantiles",
-    oracle="""
-    SELECT o_orderpriority,
-           round(quantile_cont(o_totalprice, 0.25), 6) AS q25,
-           round(quantile_cont(o_totalprice, 0.50), 6) AS q50,
-           round(quantile_cont(o_totalprice, 0.75), 6) AS q75
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def d8c_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """d8 extension — exact multi-quantile per group, emitted as SCALAR
-    q25/q50/q75 columns (array outputs crash the driver's canonicalizer —
-    VERDICT r2 item 3). Internally still ONE array-valued percentile
-    aggregate (one sort per group serves all three cut points; both engines
-    share the linear-interpolation definition — verified bit-exact, the
-    round(…,6) is belt-and-braces). At 100 TB swap for percentile_approx
-    with the identical call shape."""
-    o = load(spark, sf_dir, "orders")
-    qs = o.groupBy("o_orderpriority").agg(
-        F.expr("percentile(o_totalprice, array(0.25, 0.5, 0.75))").alias("_qs")
-    )
-    return qs.select(
-        "o_orderpriority",
-        F.round(F.col("_qs")[0], 6).alias("q25"),
-        F.round(F.col("_qs")[1], 6).alias("q50"),
-        F.round(F.col("_qs")[2], 6).alias("q75"),
-    )
-
-
-@register(
-    "h5b_string_functions",
-    oracle="""
-    SELECT doc_id,
-           upper(source) AS src_up,
-           lpad(CAST(doc_id AS VARCHAR), 8, '0') AS id_pad,
-           substring(text, 1, 10) AS prefix10,
-           concat_ws('|', lang, source) AS lang_src,
-           replace(substring(text, 1, 20), ' ', '_') AS snake20,
-           length(text) - length(replace(text, ' ', '')) AS n_spaces
-    FROM documents
-    """,
-)
-def h5b_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """h5 — string scalar set: case, padding, substring, multi-column
-    concat, replace, and occurrence counting via length delta (all
-    JVM-side, whole-stage codegen — the reference does string work
-    row-at-a-time in Python, e.g. .apply(len))."""
-    d = load(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.upper("source").alias("src_up"),
-        F.lpad(F.col("doc_id").cast("string"), 8, "0").alias("id_pad"),
-        F.substring("text", 1, 10).alias("prefix10"),
-        F.concat_ws("|", "lang", "source").alias("lang_src"),
-        F.replace(
-            F.substring("text", 1, 20), F.lit(" "), F.lit("_")
-        ).alias("snake20"),
-        (
-            F.length("text") - F.length(F.replace("text", F.lit(" "), F.lit("")))
-        ).alias("n_spaces"),
+        (F.sum("qv").cast("double") / F.count(F.lit(1)) / F.lit(1000000.0)).alias(
+            "centroid"
+        ),
     )
 
 
@@ -412,22 +250,17 @@ def x16_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id only. PMI math stays in exact integers until one fixed-order
     double divide + ln, so it is engine- and partitioning-portable.
 
-    Persisting the multiply-referenced subtrees here was measured-REJECTED
-    (PERF.md #17, re-confirmed round 16: `eager(words)` best 1.55 s vs
-    1.20 s plain in the same session) — the recomputed explode+distinct is
-    cheaper than the cache write+read+materialize round-trip at this
-    shape, and the r4 ">2× baseline" flag was median-vs-best-of bias, not
-    a plan defect (best-of 1.16 s vs the 0.72 s best-of-2 baseline row).
+    Persisting the multiply-referenced subtrees here was measured and
+    rejected (PERF.md #17): the recomputed explode+distinct is cheaper
+    than the cache write+read+materialize round-trip at this shape.
 
-    Round 16 (guide §2.4, the r15 one-exchange shingle trick): the DOCS
-    are hash-partitioned by doc_id BEFORE the explode — Generate preserves
-    partitioning, so the (doc_id, word) dedup aggregates exchange-free and
-    each copy of the subtree exchanges document rows, not word rows. The
-    wa⋈wb self-join on doc_id then sees two co-partitioned children and
-    plans with ZERO extra exchange (plan: the word-row hash exchanges are
-    gone; sf0.1 a wash — best 1.20 vs 1.19 s — but the 10× fixture reads
-    best 3.57 → 1.69 s, and at 100 TB the self-join no longer reshuffles
-    the exploded corpus)."""
+    The DOCS are hash-partitioned by doc_id BEFORE the explode — Generate
+    preserves partitioning, so the (doc_id, word) dedup aggregates
+    exchange-free and each copy of the subtree exchanges document rows,
+    not word rows. The wa⋈wb self-join on doc_id then sees two
+    co-partitioned children and plans with ZERO extra exchange; at 100 TB
+    the self-join never reshuffles the exploded corpus (PERF.md "Catalog
+    by operator group" has the timings)."""
     docs = load(spark, sf_dir, "documents")
     words = (
         docs.repartition("doc_id")
@@ -470,40 +303,6 @@ def x16_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "c6b_interval_join_banded",
-    oracle="""
-    WITH p AS (SELECT event_id AS purchase_id, epoch_us(ts) AS p_us
-               FROM events WHERE event_type = 'purchase'),
-    v AS (SELECT event_id AS view_id, epoch_us(ts) AS v_us
-          FROM events WHERE event_type = 'view')
-    SELECT p.purchase_id, v.view_id, p.p_us - v.v_us AS us_apart
-    FROM p JOIN v ON abs(p.p_us - v.v_us) <= 300000000
-    """,
-)
-def c6b_interval_join_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """c6 scale path — purchases × views within ±5 minutes, both sides
-    fact-sized: the banded-equi-join form of a range join (see
-    operators/windows.py:banded_interval_join for the scale argument). The
-    oracle states the plain |Δt| ≤ tolerance predicate — banding is pure
-    execution strategy, invisible in the result."""
-    from ..operators.windows import banded_interval_join
-
-    ev = load(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.unix_micros("ts").alias("p_us"),
-    )
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"),
-        F.unix_micros("ts").alias("v_us"),
-    )
-    joined = banded_interval_join(p, v, "p_us", "v_us", 300_000_000)
-    return joined.select(
-        "purchase_id", "view_id", (F.col("p_us") - F.col("v_us")).alias("us_apart")
-    )
-
-
-@register(
     "x17_event_transitions",
     oracle="""
     WITH o AS (SELECT user_id, event_type,
@@ -531,61 +330,6 @@ def x17_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         o.groupBy("prev", F.col("event_type").alias("next"))
         .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def _hex6(strtype: str) -> str:
-    """First 6 md5 hex digits of doc_id as an integer in [0, 16^6) — the
-    engine-portable uniform hash fraction (`strtype` differs per dialect:
-    STRING for Spark, VARCHAR for DuckDB)."""
-    return (
-        "CAST("
-        + " + ".join(
-            f"(instr('0123456789abcdef', "
-            f"substr(md5(CAST(doc_id AS {strtype})), {i + 1}, 1)) - 1)"
-            f" * {16 ** (5 - i)}"
-            for i in range(6)
-        )
-        + " AS BIGINT)"
-    )
-
-
-@register(
-    "x21_balanced_sample",
-    oracle=f"""
-    WITH counts AS (SELECT lang, count(*) AS n_cls FROM documents GROUP BY lang),
-    scored AS (
-        SELECT d.doc_id, d.lang,
-               {_hex6('VARCHAR')} AS hexval,
-               CAST(floor(least(1.0, 100.0 / c.n_cls) * 16777216.0) AS BIGINT)
-                   AS keep_below
-        FROM documents d JOIN counts c USING (lang)
-    )
-    SELECT doc_id, lang FROM scored WHERE hexval < keep_below
-    """,
-)
-def x21_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x21 — class-balanced deterministic downsampling: each language keeps
-    ~min(1, target/|class|) of its rows, so hot classes shrink toward the
-    target while rare classes pass through whole — the data-mixing step that
-    applies d9-style class weights at the ROW level when building a training
-    corpus.
-
-    The keep decision is a pure function of the row key: the first 6 md5 hex
-    digits as an integer in [0, 16^6), kept when below floor(p·16^6) — same
-    digits, same arithmetic, in any engine at any parallelism (`sample()`'s
-    seed is partition-dependent and not portable). Scale shape: class counts
-    are a broadcast dim; the filter is a codegen'd scan predicate."""
-    d = load(spark, sf_dir, "documents")
-    counts = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_cls"))
-    hexval = F.expr(_hex6("STRING"))
-    keep_below = F.floor(
-        F.least(F.lit(1.0), F.lit(100.0) / F.col("n_cls")) * F.lit(16777216.0)
-    ).cast("bigint")
-    return (
-        d.join(F.broadcast(counts), "lang")
-        .filter(hexval < keep_below)
-        .select("doc_id", "lang")
     )
 
 
@@ -755,51 +499,652 @@ def x19_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _hex6(strtype: str) -> str:
+    """First 6 md5 hex digits of doc_id as an integer in [0, 16^6) — the
+    engine-portable uniform hash fraction (`strtype` differs per dialect:
+    STRING for Spark, VARCHAR for DuckDB)."""
+    return (
+        "CAST("
+        + " + ".join(
+            f"(instr('0123456789abcdef', "
+            f"substr(md5(CAST(doc_id AS {strtype})), {i + 1}, 1)) - 1)"
+            f" * {16 ** (5 - i)}"
+            for i in range(6)
+        )
+        + " AS BIGINT)"
+    )
+
+
 @register(
-    "x15_embedding_centroids",
-    oracle="""
-    WITH flat AS (SELECT label, CAST(t.pos AS INT) AS pos,
-                         embedding[CAST(t.pos AS INT) + 1] AS val
-                  FROM embeddings, unnest(range(len(embedding))) AS t(pos)),
-    q AS (SELECT label, pos,
-                 CAST(least(greatest(floor(CAST(val AS DOUBLE) * 1000000),
-                                     -1000000000000.0), 1000000000000.0)
-                      AS BIGINT) AS qv
-          FROM flat)
-    SELECT label, pos, count(*) AS n,
-           CAST(sum(qv) AS DOUBLE) / count(*) / 1000000.0 AS centroid
-    FROM q GROUP BY label, pos
+    "x21_balanced_sample",
+    oracle=f"""
+    WITH counts AS (SELECT lang, count(*) AS n_cls FROM documents GROUP BY lang),
+    scored AS (
+        SELECT d.doc_id, d.lang,
+               {_hex6('VARCHAR')} AS hexval,
+               CAST(floor(least(1.0, 100.0 / c.n_cls) * 16777216.0) AS BIGINT)
+                   AS keep_below
+        FROM documents d JOIN counts c USING (lang)
+    )
+    SELECT doc_id, lang FROM scored WHERE hexval < keep_below
     """,
 )
-def x15_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x15 — per-label embedding centroid (the class-prototype step of IVF /
-    dedup clustering), computed per dimension.
+def x21_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x21 — class-balanced deterministic downsampling: each language keeps
+    ~min(1, target/|class|) of its rows, so hot classes shrink toward the
+    target while rare classes pass through whole — the data-mixing step that
+    applies d9-style class weights at the ROW level when building a training
+    corpus.
 
-    Engine-portable float math: summing raw doubles is order-dependent, so
-    each value is fixed-point-quantized (floor(val·1e6) — exact IEEE multiply
-    + exact floor) and summed as BIGINT; the average divides once, in a fixed
-    order, in double. Result is bit-identical under any partitioning and in
-    any engine. Scale shape: posexplode fans out dim× rows but they partial-
-    aggregate map-side down to labels × dims before the one shuffle."""
-    e = load(spark, sf_dir, "embeddings")
-    flat = e.select("label", F.posexplode("embedding").alias("pos", "val"))
-    # clamp to +-1e12 (coords beyond +-1e6 saturate): a garbage row must
-    # not ANSI-overflow the BIGINT sum and kill the job at scale
-    q = flat.select(
-        "label",
-        "pos",
-        F.least(
-            F.greatest(
-                F.floor(F.col("val").cast("double") * 1000000), F.lit(-1e12)
-            ),
-            F.lit(1e12),
-        )
-        .cast("bigint")
-        .alias("qv"),
+    The keep decision is a pure function of the row key: the first 6 md5 hex
+    digits as an integer in [0, 16^6), kept when below floor(p·16^6) — same
+    digits, same arithmetic, in any engine at any parallelism (`sample()`'s
+    seed is partition-dependent and not portable). Scale shape: class counts
+    are a broadcast dim; the filter is a codegen'd scan predicate."""
+    d = load(spark, sf_dir, "documents")
+    counts = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_cls"))
+    hexval = F.expr(_hex6("STRING"))
+    keep_below = F.floor(
+        F.least(F.lit(1.0), F.lit(100.0) / F.col("n_cls")) * F.lit(16777216.0)
+    ).cast("bigint")
+    return (
+        d.join(F.broadcast(counts), "lang")
+        .filter(hexval < keep_below)
+        .select("doc_id", "lang")
     )
-    return q.groupBy("label", "pos").agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.sum("qv").cast("double") / F.count(F.lit(1)) / F.lit(1000000.0)).alias(
-            "centroid"
+
+
+# ------------------------------------------------- x36 triangle counting
+
+_TRI_N = 200
+
+
+# 3-NN similarity graph over the first 200 embeddings — shared by the
+# graph-analytics oracles (x36 triangles, x40 label propagation)
+_KNN_EDGES_CTE = f"""
+    sub AS (SELECT vec_id, embedding FROM embeddings
+            WHERE vec_id < {_TRI_N}),
+    scored AS (
+        SELECT q.vec_id AS qid, e.vec_id AS nid,
+               row_number() OVER (
+                   PARTITION BY q.vec_id
+                   ORDER BY {sql_cos('e.embedding', 'q.embedding')} DESC,
+                            e.vec_id
+               ) AS rn
+        FROM sub e CROSS JOIN sub q
+        WHERE e.vec_id <> q.vec_id
+    ),
+    knn AS (SELECT qid, nid FROM scored WHERE rn <= 3),
+    edges AS (SELECT DISTINCT least(qid, nid) AS u, greatest(qid, nid) AS v
+              FROM knn)
+"""
+
+
+def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _TRI_N)
+    nn = knn_bruteforce(emb, emb, k=3)
+    return nn.select(
+        F.least("query_id", "neighbor_id").alias("id_a"),
+        F.greatest("query_id", "neighbor_id").alias("id_b"),
+    ).distinct()
+
+
+@register(
+    "x36_triangle_count",
+    oracle=f"""
+    WITH {_KNN_EDGES_CTE},
+    sym AS (SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges),
+    deg AS (SELECT u, count(*) AS deg FROM sym GROUP BY u),
+    oriented AS (
+        SELECT s.u AS a, s.v AS b
+        FROM sym s
+        JOIN deg da ON da.u = s.u
+        JOIN deg db ON db.u = s.v
+        WHERE (da.deg < db.deg) OR (da.deg = db.deg AND s.u < s.v)
+    ),
+    wedges AS (
+        SELECT o1.a AS r, o1.b AS x, o2.b AS y
+        FROM oriented o1 JOIN oriented o2 ON o1.a = o2.a AND o1.b < o2.b
+    ),
+    closed AS (
+        SELECT w.r, w.x, w.y
+        FROM wedges w JOIN edges e ON e.u = w.x AND e.v = w.y
+    ),
+    tri AS (
+        SELECT u, count(*) AS triangles FROM (
+            SELECT r AS u FROM closed
+            UNION ALL SELECT x AS u FROM closed
+            UNION ALL SELECT y AS u FROM closed
+        ) GROUP BY u
+    )
+    SELECT deg.u AS doc_id, deg.deg AS degree,
+           CAST(coalesce(tri.triangles, 0) AS BIGINT) AS triangles,
+           round(coalesce(tri.triangles, 0) * 2.0
+                 / (deg.deg * (deg.deg - 1)), 6) AS clustering
+    FROM deg LEFT JOIN tri ON tri.u = deg.u
+    WHERE deg.deg >= 2
+    """,
+)
+def x36_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x36 — per-node triangles + local clustering coefficient over the
+    3-NN graph of the first 200 embeddings (an undirected similarity
+    graph with real triangles). Degree-ordered orientation caps wedge
+    fan-out at O(sqrt(m)) per node — the skew-proof distributed triangle
+    algorithm (operators/graph.py:triangle_count)."""
+    return triangle_count(_knn_edges(spark, sf_dir))
+
+
+# --------------------------------------------- x40 label propagation (LPA)
+
+
+@register(
+    "x40_label_propagation",
+    oracle=f"""
+    WITH {_KNN_EDGES_CTE},
+    nodes AS (SELECT DISTINCT u FROM (SELECT u FROM edges UNION ALL SELECT v AS u FROM edges)),
+    sym AS (SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges),
+    l0 AS (SELECT u AS node, u AS label FROM nodes)
+    , c1 AS (
+        SELECT s.u, l.label, count(*) AS c
+        FROM sym s JOIN l0 l ON l.node = s.v
+        GROUP BY s.u, l.label
+    ),
+    l1 AS (
+        SELECT u AS node, label FROM (
+            SELECT u, label,
+                   row_number() OVER (PARTITION BY u ORDER BY c DESC, label)
+                       AS rn
+            FROM c1
+        ) WHERE rn = 1
+    )
+    , c2 AS (
+        SELECT s.u, l.label, count(*) AS c
+        FROM sym s JOIN l1 l ON l.node = s.v
+        GROUP BY s.u, l.label
+    ),
+    l2 AS (
+        SELECT u AS node, label FROM (
+            SELECT u, label,
+                   row_number() OVER (PARTITION BY u ORDER BY c DESC, label)
+                       AS rn
+            FROM c2
+        ) WHERE rn = 1
+    )
+    , c3 AS (
+        SELECT s.u, l.label, count(*) AS c
+        FROM sym s JOIN l2 l ON l.node = s.v
+        GROUP BY s.u, l.label
+    ),
+    l3 AS (
+        SELECT u AS node, label FROM (
+            SELECT u, label,
+                   row_number() OVER (PARTITION BY u ORDER BY c DESC, label)
+                       AS rn
+            FROM c3
+        ) WHERE rn = 1
+    )
+    SELECT node AS doc_id, label AS community FROM l3
+    """,
+)
+def x40_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x40 — deterministic label-propagation communities over the same
+    3-NN similarity graph as x36: 3 synchronous rounds, most-frequent
+    neighbor label, ties to the smallest label. Companion to the
+    connected-components clustering (x2e) — LPA splits dense subregions
+    that CC merges (operators/graph.py:label_propagation)."""
+    return label_propagation(_knn_edges(spark, sf_dir), iterations=3)
+
+
+# -------------------------------- x45 sweep-line interval concurrency
+
+
+@register(
+    "x45_max_concurrency",
+    oracle="""
+    WITH pts AS (
+        SELECT event_type, ts AS t, 1 AS delta, event_id FROM events
+        UNION ALL
+        SELECT event_type, ts + INTERVAL 10 MINUTE AS t, -1 AS delta,
+               event_id
+        FROM events
+    ),
+    running AS (
+        SELECT event_type,
+               sum(delta) OVER (
+                   PARTITION BY event_type
+                   ORDER BY t, delta, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS live
+        FROM pts
+    )
+    SELECT event_type, CAST(max(live) AS BIGINT) AS max_concurrent
+    FROM running GROUP BY event_type
+    """,
+)
+def x45_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x45 — sweep-line interval concurrency: each event holds a
+    10-minute half-open interval; +1/-1 boundary points, a running sum in
+    boundary order, and the per-type max is the peak number of
+    simultaneously-open intervals. Ends sort BEFORE starts at the same
+    instant (delta ascending), which encodes half-open semantics; the
+    residual tie on event_id makes every prefix engine-identical. The
+    classic capacity-planning query, one window — no self-join on
+    overlap (the O(n^2) formulation c6 would need).
+
+    Scale: the window partitions by type; within a hot type the sort is
+    the same single-key ordered aggregation any engine needs — at 100 TB
+    pre-bucket by coarse time range and take per-range maxima plus
+    boundary corrections (two-phase, same trick as e3c's rank)."""
+    ev = load(spark, sf_dir, "events")
+    pts = ev.select(
+        "event_type", F.col("ts").alias("t"), F.lit(1).alias("delta"), "event_id"
+    ).unionByName(
+        ev.select(
+            "event_type",
+            (F.col("ts") + F.expr("INTERVAL 10 MINUTES")).alias("t"),
+            F.lit(-1).alias("delta"),
+            "event_id",
+        )
+    )
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("t", "delta", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        pts.withColumn("live", F.sum("delta").over(w))
+        .groupBy("event_type")
+        .agg(F.max("live").cast("bigint").alias("max_concurrent"))
+    )
+
+
+# ------------------------------------ x46 Lloyd k-means (fixed-point)
+
+_KM_K = 8
+
+
+_KM_FP = 10**7
+
+
+def _km_oracle() -> str:
+    head = f"""
+    WITH vecl AS (
+        SELECT vec_id, unnest(range(0, len(embedding))) AS dim, embedding
+        FROM embeddings
+    ),
+    q AS (
+        SELECT vec_id, dim,
+               CAST(least(greatest(
+                        floor(CAST(embedding[CAST(dim AS INT) + 1] AS DOUBLE)
+                              * {_KM_FP}.0),
+                        -180000000.0), 180000000.0) AS BIGINT) AS qx
+        FROM vecl
+    ),
+    c0 AS (SELECT vec_id AS cluster, dim, qx AS qc FROM q
+           WHERE vec_id < {_KM_K})"""
+    steps = []
+    for i in (1, 2):
+        steps.append(f"""
+    d{i} AS (
+        SELECT q.vec_id, c.cluster,
+               sum((q.qx - c.qc) * (q.qx - c.qc)) AS d
+        FROM q JOIN c{i-1} c USING (dim)
+        GROUP BY q.vec_id, c.cluster
+    ),
+    a{i} AS (
+        SELECT vec_id, cluster FROM (
+            SELECT vec_id, cluster,
+                   row_number() OVER (
+                       PARTITION BY vec_id ORDER BY d, cluster) AS rn
+            FROM d{i}
+        ) WHERE rn = 1
+    ),
+    c{i} AS (
+        SELECT a.cluster, q.dim, sum(q.qx) // count(*) AS qc
+        FROM q JOIN a{i} a USING (vec_id)
+        GROUP BY a.cluster, q.dim
+    )""")
+    return (
+        head + "," + ",".join(steps)
+        + "\n    SELECT vec_id, CAST(cluster AS BIGINT) AS cluster FROM a2"
+    )
+
+
+@register("x46_kmeans", oracle=_km_oracle())
+def x46_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x46 — Lloyd k-means over the embeddings (k=8, two assign/update
+    rounds, deterministic init = the first k vectors), entirely in
+    DataFrame ops with FIXED-POINT math: coordinates quantize to BIGINT
+    (1e-7 grid), distances are integer squared-Euclidean sums, centroid
+    means use truncating integer division — every engine computes
+    bit-identical assignments under any partitioning (float centroids
+    would drift with shuffle order; Spark `div` and DuckDB `//` both
+    truncate toward zero, verified).
+
+    Scale shape: vectors live in LONG form (id, dim, qx) — the distance
+    pass is an equi-join on dim against the k x dims centroid table
+    (broadcast: k*dims rows regardless of corpus), partial-aggregated by
+    (id, cluster); the update is one groupBy (cluster, dim). Per round:
+    two shuffles, both corpus-pass-bounded; lineage stays bounded by the
+    fixed round count like `pagerank`. The IVF cells (x3c) reuse exactly
+    this assignment topology with unrefined centroids."""
+    emb = load(spark, sf_dir, "embeddings")
+    vec = (
+        emb.select("vec_id", F.posexplode("embedding").alias("dim", "_x"))
+        .select(
+            "vec_id",
+            F.col("dim").cast("bigint").alias("dim"),
+            # clamp to +-1.8e8 (coords beyond +-18 saturate): 64 squared
+            # diffs of clamped values stay under Long.MAX, so one garbage
+            # vector cannot ANSI-overflow the distance sum mid-job
+            F.least(
+                F.greatest(
+                    F.floor(F.col("_x").cast("double") * _KM_FP),
+                    F.lit(-1.8e8),
+                ),
+                F.lit(1.8e8),
+            )
+            .cast("bigint")
+            .alias("qx"),
+        )
+    )
+    # eager, not bare persist: the first iteration's broadcast build of
+    # `cent` is a separate job racing the main consumers over the uncached
+    # explode/quantize subtree (compute.eager documents the stampede)
+    vec = eager(vec)
+    cent = vec.filter(F.col("vec_id") < _KM_K).select(
+        F.col("vec_id").alias("cluster"), "dim", F.col("qx").alias("qc")
+    )
+    assign = None
+    for _ in range(2):
+        dist = (
+            vec.join(F.broadcast(cent), "dim")
+            .groupBy("vec_id", "cluster")
+            .agg(
+                F.sum(
+                    (F.col("qx") - F.col("qc")) * (F.col("qx") - F.col("qc"))
+                ).alias("d")
+            )
+        )
+        w = Window.partitionBy("vec_id").orderBy("d", "cluster")
+        assign = (
+            dist.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("vec_id", "cluster")
+        )
+        cent = (
+            vec.join(assign, "vec_id")
+            .groupBy("cluster", "dim")
+            .agg(F.expr("sum(qx) div count(1)").alias("qc"))
+        )
+    return assign.select("vec_id", F.col("cluster").cast("bigint").alias("cluster"))
+
+
+# ---------------------------- x48 first-touch attribution (banded join)
+
+_ATTR_W_US = 30 * 60 * 1_000_000  # 30-minute lookback
+
+
+@register(
+    "x48_first_touch_attribution",
+    oracle=f"""
+    WITH p AS (SELECT user_id, event_id AS purchase_id, epoch_us(ts) AS pus
+               FROM events WHERE event_type = 'purchase'),
+    t AS (SELECT user_id, event_type, event_id AS tid, epoch_us(ts) AS tus
+          FROM events WHERE event_type <> 'purchase'),
+    cand AS (
+        SELECT p.purchase_id, t.event_type, t.tus, t.tid
+        FROM p JOIN t ON t.user_id = p.user_id
+         AND t.tus < p.pus AND t.tus >= p.pus - {_ATTR_W_US}
+    ),
+    first AS (
+        SELECT purchase_id, event_type FROM (
+            SELECT purchase_id, event_type,
+                   row_number() OVER (
+                       PARTITION BY purchase_id ORDER BY tus, tid) AS rn
+            FROM cand
+        ) WHERE rn = 1
+    )
+    SELECT p.purchase_id, p.user_id,
+           coalesce(f.event_type, 'direct') AS first_touch
+    FROM p LEFT JOIN first f ON f.purchase_id = p.purchase_id
+    """,
+)
+def x48_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x48 — first-touch attribution: each purchase credits the EARLIEST
+    non-purchase event by the same user inside a 30-minute lookback
+    ('direct' when none). The lookback join is the c6b banded equi-join
+    specialized with the user in the key — (user, time-band) buckets,
+    the purchase side exploding the exactly-2 bands its window can
+    touch — so neither side broadcasts and cost stays ∝ matches + band
+    occupancy (a per-user range join would be a nested loop). Timestamps
+    compare in exact integer microseconds; ties break on event id."""
+    ev = load(spark, sf_dir, "events")
+    w = _ATTR_W_US
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        F.col("event_id").alias("purchase_id"),
+        F.unix_micros("ts").alias("_pus"),
+    )
+    t = ev.filter(F.col("event_type") != "purchase").select(
+        "user_id",
+        "event_type",
+        F.col("event_id").alias("_tid"),
+        F.unix_micros("ts").alias("_tus"),
+        F.expr(f"unix_micros(ts) div {w}").alias("_band"),
+    )
+    pb = p.withColumn(
+        "_band",
+        F.explode(
+            F.sequence(
+                F.expr(f"(_pus - {w}) div {w}"), F.expr(f"_pus div {w}")
+            )
         ),
     )
+    cand = pb.join(t, ["user_id", "_band"]).filter(
+        (F.col("_tus") < F.col("_pus")) & (F.col("_tus") >= F.col("_pus") - w)
+    )
+    wdw = Window.partitionBy("purchase_id").orderBy("_tus", "_tid")
+    first = (
+        cand.withColumn("_rn", F.row_number().over(wdw))
+        .filter(F.col("_rn") == 1)
+        .select("purchase_id", F.col("event_type").alias("_ft"))
+    )
+    return p.join(first, "purchase_id", "left").select(
+        "purchase_id",
+        "user_id",
+        F.coalesce("_ft", F.lit("direct")).alias("first_touch"),
+    )
+
+
+# -------------------------------------------------- j4 Python UDTF (Spark 4)
+
+_CHUNK_W = 20
+
+
+@register(
+    "j4_udtf_chunks",
+    oracle=f"""
+    WITH w AS (SELECT doc_id, string_split(text, ' ') AS words
+               FROM documents WHERE doc_id < 100),
+    c AS (
+        SELECT doc_id, words,
+               unnest(range(0, CAST(ceil(len(words) / {_CHUNK_W}.0) AS BIGINT)))
+                   AS chunk_id
+        FROM w
+    )
+    SELECT doc_id,
+           CAST(chunk_id AS INT) AS chunk_id,
+           array_to_string(
+               words[chunk_id * {_CHUNK_W} + 1 : chunk_id * {_CHUNK_W} + {_CHUNK_W}],
+               ' ') AS chunk,
+           CAST(least(len(words) - chunk_id * {_CHUNK_W}, {_CHUNK_W}) AS INT)
+               AS n_tokens
+    FROM c
+    """,
+)
+def j4_udtf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """j4 — a real Spark 4 Python UDTF (one row in, N rows out with
+    imperative logic), lateral-joined per document: fixed 20-word
+    chunking. API-parity demo for the reference's row-expanding
+    tokenization step (src/process_to_curated.py:22-29); the PRODUCTION
+    chunker stays the pure-column explode in x23/x25 (JVM codegen,
+    no Python round-trip) — the UDTF exists for logic a column expression
+    can't state. Bounded here to doc_id < 100 to keep the Python-path
+    cost honest in the bench."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(returnType="doc_id: bigint, chunk_id: int, chunk: string, n_tokens: int")
+    class ChunkWords:
+        def eval(self, doc_id: int, text: str):
+            if text is None:  # no content -> no chunks (matches the SQL
+                return        # oracle: string_split(NULL) yields no rows)
+            words = text.split(" ")
+            for i in range(0, len(words), _CHUNK_W):
+                part = words[i : i + _CHUNK_W]
+                yield doc_id, i // _CHUNK_W, " ".join(part), len(part)
+
+    spark.udtf.register("chunk_words", ChunkWords)
+    docs = load(spark, sf_dir, "documents")
+    docs.filter(F.col("doc_id") < 100).createOrReplaceTempView("_j4_docs")
+    return spark.sql(
+        """
+        SELECT c.doc_id, c.chunk_id, c.chunk, c.n_tokens
+        FROM _j4_docs d, LATERAL chunk_words(d.doc_id, d.text) c
+        """
+    )
+
+
+# --------------------------- j5 pandas GROUPED_AGG UDAF (trimmed mean)
+
+
+@register(
+    "j5_grouped_agg_udaf",
+    oracle="""
+    WITH cents AS (
+        SELECT o_orderpriority,
+               CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c,
+               o_orderkey
+        FROM orders
+    ),
+    ranked AS (
+        SELECT o_orderpriority, c,
+               row_number() OVER (
+                   PARTITION BY o_orderpriority ORDER BY c, o_orderkey
+               ) AS rn,
+               count(*) OVER (PARTITION BY o_orderpriority) AS n
+        FROM cents
+    ),
+    trimmed AS (
+        SELECT o_orderpriority, c
+        FROM ranked
+        WHERE rn > n // 10 AND rn <= n - n // 10
+    )
+    SELECT o_orderpriority,
+           count(*) AS n_kept,
+           round(CAST(sum(c) AS DOUBLE) / count(*) / 100.0, 6)
+               AS trimmed_mean
+    FROM trimmed GROUP BY o_orderpriority
+    """,
+)
+def j5_grouped_agg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """j5 — a REAL pandas GROUPED_AGG UDAF (Arrow-batched per-group
+    aggregation, the Spark analog of a custom aggregate function): 10%
+    two-sided trimmed mean of order value per priority. Inside the UDAF
+    everything is integer cents — sort, trim counts, int64 sum — so the
+    result is bit-identical to the oracle's window formulation no matter
+    how Arrow batches arrive (a float accumulation would drift with
+    batch order). The UDAF path exists for aggregation logic SQL can't
+    state in one expression; the engine's default remains built-in
+    aggregates (d-group), which stay JVM-side."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def trimmed_mean_cents(c: pd.Series) -> float:
+        vals = c.sort_values(kind="stable").to_numpy()
+        k = len(vals) // 10
+        kept = vals[k : len(vals) - k]
+        # rounding stays OUTSIDE the UDF (similarity.py discipline):
+        # Python round() is half-to-even, DuckDB/Spark round is half
+        # away from zero — a .5-exact double would diverge
+        return float(kept.sum()) / len(kept) / 100.0
+
+    @pandas_udf("long")
+    def trimmed_count(c: pd.Series) -> int:
+        k = len(c) // 10
+        return int(len(c) - 2 * k)
+
+    o = load(spark, sf_dir, "orders").select(
+        "o_orderpriority",
+        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("_c"),
+    )
+    return o.groupBy("o_orderpriority").agg(
+        trimmed_count(F.col("_c")).alias("n_kept"),
+        F.round(trimmed_mean_cents(F.col("_c")), 6).alias("trimmed_mean"),
+    )
+
+
+# ------------------------- j6 applyInPandas grouped-map (z-score)
+
+
+@register(
+    "j6_grouped_map_udf",
+    oracle="""
+    WITH cents AS (
+        SELECT o_orderkey, o_orderpriority,
+               CAST(round(o_totalprice * 100, 0) AS BIGINT) AS c
+        FROM orders
+    ),
+    g AS (
+        SELECT o_orderpriority, sum(c) AS sc, sum(c * c) AS sc2,
+               count(*) AS n
+        FROM cents GROUP BY o_orderpriority
+    )
+    SELECT c.o_orderkey, c.o_orderpriority,
+           round((CAST(c.c AS DOUBLE) - CAST(g.sc AS DOUBLE) / g.n)
+                 / sqrt(CAST(g.n * g.sc2 - g.sc * g.sc AS DOUBLE)
+                        / CAST(g.n * (g.n - 1) AS DOUBLE)),
+                 6) AS z
+    FROM cents c JOIN g USING (o_orderpriority)
+    """,
+)
+def j6_grouped_map_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """j6 — a REAL applyInPandas grouped-map transform (whole group in,
+    whole group out): per-priority z-score standardization of order
+    value. The group moments are exact INTEGER sums in arbitrary-
+    precision Python ints (an int64 sum of squares overflows around 30k
+    rows/group; a float sum drifts with Arrow batch order), and the
+    float expression then runs in the same operation order as the
+    oracle, so every z is bit-identical. applyInPandas is for per-group
+    logic needing the whole group materialized; the expression-only
+    formulation (the oracle's join shape) remains the scale default —
+    this entry pins the API and its determinism discipline. Requires
+    every group >= 2 rows (sample std)."""
+    def standardize(pdf: pd.DataFrame) -> pd.DataFrame:
+        import math
+
+        ints = [int(v) for v in pdf["_c"]]
+        n = len(ints)
+        sc = sum(ints)
+        sc2 = sum(v * v for v in ints)
+        mean = float(sc) / n
+        std = math.sqrt(float(n * sc2 - sc * sc) / float(n * (n - 1)))
+        # unrounded: engine-native F.round applies outside (pandas
+        # .round is half-to-even, the oracle's round is not)
+        z = (pdf["_c"].astype("float64") - mean) / std
+        return pd.DataFrame(
+            {
+                "o_orderkey": pdf["o_orderkey"],
+                "o_orderpriority": pdf["o_orderpriority"],
+                "z": z,
+            }
+        )
+
+    o = load(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderpriority",
+        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("_c"),
+    )
+    return o.groupBy("o_orderpriority").applyInPandas(
+        standardize, "o_orderkey long, o_orderpriority string, z double"
+    ).withColumn("z", F.round("z", 6))

@@ -1,33 +1,26 @@
-"""Round-6 operators: snapshot-isolated table commits (the manifest log of
-io/manifest.py) exercised as oracle-checked queries.
+"""SURVEY.md §2 group X8 and the lake extensions: MERGE/upsert, SCD2 and
+incremental MV maintenance, then the snapshot-committed manifest table
+(io/manifest.py) exercised as oracle-checked queries — time travel, change
+data feed, Z-order skipping, restore, an S3 log store, copy-on-write and
+deletion-vector DELETE/UPDATE, clause-level MERGE, CHECK constraints, the
+registered ``manifest`` batch format, deep clone, column mapping, metadata
+row counts, columnar checkpoints and stacked deletion vectors.
 
 The reference's only notion of a committed table state is "the CSV object
 most recently clobbered into the bucket" (build/unpack_to_raw.py:57 —
-whole-file put, no versioning, readers race the writer). These queries
-run the x8 MERGE workload THROUGH the versioned manifest table instead:
-x52 proves the committed latest snapshot equals the batch merge, x53
-proves the PREVIOUS version is still byte-readable after the merge commit
-(time travel / reader isolation) — the property the reference's clobber
-write can never provide.
+whole-file put, no versioning, readers race the writer). Each lake query
+commits through a fresh table under ``<repo>/.tmp/snapshots`` and answers
+with a committed snapshot read back from disk.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io.manifest import ManifestTable
-from ..operators.merge import merge_upsert
-from ..registry import load, register
+from ..operators.merge import merge_upsert, scd2_merge
+from ..registry import load, register, register_manifest_formats, scratch_dir
 
-_TMP = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".tmp",
-    "snapshots",
-)
 
 _X8_ORACLE = """
     WITH source AS (
@@ -42,6 +35,134 @@ _X8_ORACLE = """
     SELECT * FROM source
     """
 
+# x59/x61 (copy-on-write vs deletion-vector DELETE) and x60/x62 (UPDATE)
+# share one oracle each: the two physical strategies must read the same.
+_DELETE_WHERE_ORACLE = """
+    SELECT * FROM orders
+    WHERE NOT (o_orderstatus = 'F' AND o_orderkey % 5 = 0)
+    """
+
+_UPDATE_WHERE_ORACLE = """
+    SELECT o_orderkey, o_custkey, o_orderstatus,
+           CASE WHEN o_orderstatus = 'O'
+                THEN CAST(o_totalprice * 1.05 AS DOUBLE)
+                ELSE o_totalprice END AS o_totalprice,
+           o_orderdate,
+           CASE WHEN o_orderstatus = 'O'
+                THEN '1-URGENT' ELSE o_orderpriority END AS o_orderpriority
+    FROM orders
+    """
+
+
+@register("x8_merge_upsert", oracle=_X8_ORACLE)
+def x8_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MERGE INTO emulation (anti-join + union): a 10% 'CDC batch' with
+    repriced orders upserted into the orders table; source wins on key."""
+    orders = load(spark, sf_dir, "orders")
+    source = orders.filter(F.col("o_orderkey") % 10 == 0).withColumn(
+        "o_totalprice", (F.col("o_totalprice") * 1.1).cast("double")
+    )
+    return merge_upsert(orders, source, "o_orderkey")
+
+
+@register(
+    "x28_scd2_dimension",
+    oracle="""
+    WITH dim AS (
+        SELECT c_custkey, c_mktsegment,
+               CAST(0 AS BIGINT) AS valid_from,
+               CAST(NULL AS BIGINT) AS valid_to
+        FROM customer
+    ),
+    upd AS (
+        SELECT c_custkey, 'PROMO' AS new_seg
+        FROM customer WHERE c_custkey % 10 = 3
+    )
+    SELECT d.c_custkey, d.c_mktsegment, d.valid_from, d.valid_to
+    FROM dim d LEFT JOIN upd u USING (c_custkey)
+    WHERE u.c_custkey IS NULL OR u.new_seg = d.c_mktsegment
+    UNION ALL
+    SELECT d.c_custkey, d.c_mktsegment, d.valid_from, CAST(1 AS BIGINT)
+    FROM dim d JOIN upd u USING (c_custkey)
+    WHERE u.new_seg <> d.c_mktsegment
+    UNION ALL
+    SELECT d.c_custkey, u.new_seg, CAST(1 AS BIGINT), CAST(NULL AS BIGINT)
+    FROM dim d JOIN upd u USING (c_custkey)
+    WHERE u.new_seg <> d.c_mktsegment
+    """,
+)
+def x28_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x28 — SCD TYPE-2 dimension merge (the history-keeping cousin of
+    x8's overwrite upsert): a CDC batch re-segments 10% of customers;
+    changed rows are closed with a validity end and re-opened at the new
+    value, untouched/no-op rows pass through (`operators.merge.scd2_merge`).
+    The standard warehouse pattern for auditable dimensions."""
+    cust = load(spark, sf_dir, "customer")
+    dim = cust.select(
+        "c_custkey",
+        "c_mktsegment",
+        F.lit(0).cast("bigint").alias("valid_from"),
+        F.lit(None).cast("bigint").alias("valid_to"),
+    )
+    updates = cust.filter(F.col("c_custkey") % 10 == 3).select(
+        "c_custkey", F.lit("PROMO").alias("c_mktsegment")
+    )
+    return scd2_merge(dim, updates, "c_custkey", "c_mktsegment", batch_id=1)
+
+
+# -------------------------------------- x41 incremental MV maintenance
+
+_MV_CUTOFF = "2024-01-20 00:00:00"
+
+
+@register(
+    "x41_mv_incremental",
+    oracle="""
+    SELECT event_type,
+           count(*) AS n,
+           CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
+               AS sum_cents
+    FROM events GROUP BY event_type
+    """,
+)
+def x41_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x41 — incremental materialized-view maintenance: the per-type
+    (count, sum) MV is computed over the BASE partition (ts < cutoff),
+    the DELTA partition's partial aggregate is merged in with a full
+    outer join + coalesced addition — and the oracle recomputes the
+    aggregate over the whole table in one pass, proving merge ==
+    recompute. This is the algebraic-aggregate contract that makes
+    count/sum/avg MVs maintainable from appended partitions without
+    re-reading history (sums are BIGINT cents, so the merge is exact
+    under any split — float sums would differ by association order).
+    At scale the delta pass reads only new partitions: maintenance cost
+    follows the append rate, not table size."""
+    ev = load(spark, sf_dir, "events").select(
+        "event_type",
+        "ts",
+        F.round(F.col("value") * 100, 0).cast("bigint").alias("_cents"),
+    )
+    cut = F.lit(_MV_CUTOFF).cast("timestamp")
+
+    def agg(d: DataFrame, n: str, s: str) -> DataFrame:
+        return d.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias(n), F.sum("_cents").alias(s)
+        )
+
+    # Null-safe partitioning: a NULL ts fails BOTH `ts < cut` and
+    # `ts >= cut`, which would silently drop the row from the maintained
+    # view while a single-pass recompute (the oracle) counts it. Every
+    # row must land in exactly one partition — NULL ts rides with delta.
+    in_base = F.coalesce(F.col("ts") < cut, F.lit(False))
+    base = agg(ev.filter(in_base), "_nb", "_sb")
+    delta = agg(ev.filter(~in_base), "_nd", "_sd")
+    z = F.lit(0).cast("bigint")
+    return base.join(delta, "event_type", "full_outer").select(
+        "event_type",
+        (F.coalesce("_nb", z) + F.coalesce("_nd", z)).alias("n"),
+        (F.coalesce("_sb", z) + F.coalesce("_sd", z)).alias("sum_cents"),
+    )
+
 
 def _fresh_orders_table(
     spark: SparkSession,
@@ -53,11 +174,9 @@ def _fresh_orders_table(
     """Version 0 = the orders table (optionally projected / with file
     stats), committed fresh per run (a leftover log from an older fixture
     would merge stale rows — same hazard as i9's lake dir)."""
-    root = os.path.join(
-        _TMP, f"{tag}_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    table = ManifestTable(
+        scratch_dir("snapshots", tag, sf_dir), stats_cols=stats_cols
     )
-    shutil.rmtree(root, ignore_errors=True)
-    table = ManifestTable(root, stats_cols=stats_cols)
     df = load(spark, sf_dir, "orders")
     if select:
         df = df.select(*select)
@@ -78,8 +197,8 @@ def _commit_upsert(spark: SparkSession, table: ManifestTable) -> int:
 
 @register("x52_snapshot_upsert", oracle=_X8_ORACLE)
 def x52_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x52 — x8's MERGE routed through the snapshot-commit manifest table
-    (VERDICT r5 item 2): version 0 = orders, version 1 = merge-upsert,
+    """x52 — x8's MERGE routed through the snapshot-commit manifest table:
+    version 0 = orders, version 1 = merge-upsert,
     answer = the committed LATEST read back from disk. The hash match
     proves the full commit path — immutable txn data files, atomic
     put-if-absent manifest publish, snapshot read — loses and invents
@@ -100,78 +219,6 @@ def x53_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = _fresh_orders_table(spark, sf_dir, "x53")
     _commit_upsert(spark, table)  # version 1 exists...
     return table.read(spark, version=0)  # ...but we read version 0
-
-
-# ---------------------------------------------------------------------------
-# x5 family extension: compressed-audio + video-container metadata
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "x5k_mp3_metadata",
-    oracle="""
-    SELECT doc_id,
-           true AS valid,
-           CAST(doc_id % 5 + 2 AS BIGINT) AS n_frames,
-           CAST(CASE doc_id % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                ELSE 32000 END AS BIGINT) AS sample_rate,
-           CAST(CASE doc_id % 14
-                WHEN 0 THEN 32 WHEN 1 THEN 40 WHEN 2 THEN 48 WHEN 3 THEN 56
-                WHEN 4 THEN 64 WHEN 5 THEN 80 WHEN 6 THEN 96 WHEN 7 THEN 112
-                WHEN 8 THEN 128 WHEN 9 THEN 160 WHEN 10 THEN 192
-                WHEN 11 THEN 224 WHEN 12 THEN 256 ELSE 320 END AS BIGINT)
-               AS bitrate_kbps,
-           CAST((doc_id % 5 + 2) * CASE doc_id % 3 WHEN 0 THEN 26122
-                WHEN 1 THEN 24000 ELSE 36000 END AS BIGINT) AS duration_us,
-           doc_id % 3 = 0 AS has_id3,
-           false AS is_vbr
-    FROM documents
-    """,
-)
-def x5k_mp3_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x5k — compressed-audio metadata: real MPEG-1 Layer III streams
-    (deterministic from doc_id: optional ID3v2 tag + 2–6 CBR frames across
-    the full bitrate/sample-rate index tables) are walked frame-by-frame in
-    the typed Arrow row-map (`map_rows`) — frame
-    count, integer-microsecond duration, mean bitrate, VBR flag, ID3
-    presence — with every output field predicted arithmetically by the
-    oracle. The 'drop audio shorter than N seconds / partition by
-    duration' primitive of a corpus pipeline, with no codec lib."""
-    from ..operators.media_containers import mp3_bytes, parse_mp3
-    from ..operators.multimodal import attach_media
-
-    docs = load(spark, sf_dir, "documents")
-    return parse_mp3(attach_media(docs, "doc_id", mp3_bytes))
-
-
-@register(
-    "x5l_mp4_metadata",
-    oracle="""
-    SELECT doc_id,
-           true AS valid,
-           'isom' AS brand,
-           CAST(3 AS BIGINT) AS n_top_boxes,
-           CAST(doc_id * 500 + 1000 AS BIGINT) AS duration_ms,
-           CAST(doc_id % 2 + 1 AS BIGINT) AS n_tracks,
-           'avc1' AS video_codec,
-           CASE WHEN doc_id % 2 = 1 THEN 'mp4a' END AS audio_codec,
-           CAST((doc_id * 3) % 50 + 8 AS BIGINT) AS mdat_bytes
-    FROM documents
-    """,
-)
-def x5l_mp4_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x5l — video-container metadata: real minimal ISO-BMFF files (ftyp +
-    moov(mvhd, 1–2 trak with hdlr/stsd) + mdat, deterministic from doc_id)
-    are box-walked in the typed Arrow row-map — brand,
-    mvhd duration, track count, video/audio codec fourccs, mdat payload
-    size — all oracle-predicted. The container-level profiling a video
-    corpus needs (codec mix, duration distribution, track screening)
-    without any decoder."""
-    from ..operators.media_containers import mp4_bytes, parse_mp4
-    from ..operators.multimodal import attach_media
-
-    docs = load(spark, sf_dir, "documents")
-    return parse_mp4(attach_media(docs, "doc_id", mp4_bytes))
 
 
 @register(
@@ -306,98 +353,6 @@ def x56_zorder_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# x5m: AVI (RIFF) video container -> MJPEG frame extraction -> JPEG decode
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "x5m_avi_frames",
-    oracle="""
-    -- frame j of doc i is jpeg_bytes(i + 6*j): the +6 stride keeps the
-    -- fixture dims constant per file while the luma formula shifts per
-    -- frame — the oracle predicts the decoded pixel sum through BOTH
-    -- container layers (RIFF chunk walk, then entropy decode + IDCT)
-    WITH f AS (
-        SELECT doc_id, unnest(range(0, doc_id % 3 + 1)) AS frame_no
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(frame_no AS BIGINT) AS frame_no,
-           true AS valid,
-           CAST(8 * (doc_id % 3 + 2) AS BIGINT) AS width,
-           CAST(8 * (doc_id % 2 + 1) AS BIGINT) AS height,
-           CAST(64 * list_sum(list_transform(
-                    range(0, (doc_id % 3 + 2) * (doc_id % 2 + 1)),
-                    k -> ((doc_id + 6 * frame_no) * 17
-                          + (k // (doc_id % 3 + 2)) * 29
-                          + (k % (doc_id % 3 + 2)) * 43) % 256))
-               AS BIGINT) AS px_sum
-    FROM f
-    """,
-)
-def x5m_avi_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x5m — the video ingestion chain, format inside format: each
-    document id gets a REAL minimal AVI whose MJPEG stream
-    carries real baseline JPEGs; the lib-free RIFF chunk walk
-    (operators/media_containers.py:parse_avi_frames) explodes the movi
-    '00dc' chunks into one row per frame, and the lib-free JPEG decoder
-    (operators/jpeg.py — the same decoder x31 image dedup uses) consumes
-    the frame payloads. Container walk -> frame demux -> entropy decode
-    -> dequant -> IDCT, with the luma-sum oracle verifying the whole
-    chain arithmetically — `sample_frames`' stub contract made real for
-    an actual video container. Scale shape: both stages are typed Arrow
-    row-maps, the frame explosion happens executor-side, and nothing
-    shuffles before the decode."""
-    from ..operators.jpeg import parse_jpeg
-    from ..operators.media_containers import avi_bytes, parse_avi_frames
-    from ..operators.multimodal import attach_media
-
-    docs = load(spark, sf_dir, "documents")
-    frames = parse_avi_frames(attach_media(docs, "doc_id", avi_bytes))
-    # parse_jpeg carries a single id column; pack (doc_id, frame_no) into
-    # one synthetic key (frame_no < 3 << 8) instead of re-joining the
-    # decode output back to the frame rows — keeps the chain shuffle-free
-    packed = frames.select(
-        (F.col("doc_id") * 8 + F.col("frame_no")).alias("doc_id"),
-        F.col("frame").alias("media"),
-    )
-    return parse_jpeg(packed).select(
-        F.expr("doc_id DIV 8").alias("doc_id"),
-        (F.col("doc_id") % 8).cast("bigint").alias("frame_no"),
-        "valid", "width", "height", "px_sum",
-    )
-
-
-@register(
-    "x5n_avi_metadata",
-    oracle="""
-    SELECT doc_id,
-           true AS valid,
-           CAST(1 AS BIGINT) AS n_streams,
-           CAST(8 * (doc_id % 3 + 2) AS BIGINT) AS width,
-           CAST(8 * (doc_id % 2 + 1) AS BIGINT) AS height,
-           CAST(25 + 5 * (doc_id % 2) AS BIGINT) AS fps,
-           CAST(doc_id % 3 + 1 AS BIGINT) AS declared_frames,
-           CAST(doc_id % 3 + 1 AS BIGINT) AS n_frames,
-           'MJPG' AS codec
-    FROM documents
-    """,
-)
-def x5n_avi_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x5n — AVI container profiling (the metadata half of x5m): stream
-    count, avih dims/fps/declared frame count, strh video codec fourcc,
-    and the ACTUAL movi frame-chunk count — declared-vs-actual is the
-    integrity screen a video corpus runs before spending decode cycles.
-    Every field oracle-predicted from the fixture arithmetic; single
-    metadata pass, no frame payloads materialized."""
-    from ..operators.media_containers import avi_bytes, parse_avi
-    from ..operators.multimodal import attach_media
-
-    docs = load(spark, sf_dir, "documents")
-    return parse_avi(attach_media(docs, "doc_id", avi_bytes))
-
-
 @register("x57_restore_rollback", oracle="SELECT * FROM orders")
 def x57_restore_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x57 — RESTORE through the oracle gate: version 0 = orders, version
@@ -417,7 +372,7 @@ def x57_restore_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("x58_s3_lake_commit", oracle=_X8_ORACLE)
 def x58_s3_lake_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x58 — the x52 snapshot-upsert workload with the commit log ON AN
-    OBJECT STORE (round 8, VERDICT r7 item 1): an in-process moto S3
+    OBJECT STORE: an in-process moto S3
     server backs an `S3LogStore`, whose atomic put-if-absent is the
     public S3 conditional put (`If-None-Match: *` → 412 on conflict)
     instead of the local store's os.link. Version 0 = orders, version 1
@@ -442,10 +397,9 @@ def x58_s3_lake_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lake",
             "x58_orders",
             endpoint=f"http://127.0.0.1:{port}",
-            cache_dir=os.path.join(_TMP, "x58_cache"),
+            cache_dir=scratch_dir("snapshots", "x58_cache"),
         )
         store.client.create_bucket(Bucket="lake")
-        shutil.rmtree(store.cache_root, ignore_errors=True)
         table = ManifestTable("s3://lake/x58_orders", log_store=store)
         table.commit_overwrite(load(spark, sf_dir, "orders"))
         _commit_upsert(spark, table)
@@ -458,186 +412,9 @@ def x58_s3_lake_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         server.stop()
 
 
-@register("x71_dsv2_s3_write", oracle="SELECT * FROM orders")
-def x71_dsv2_s3_write(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x71 — the registered batch WRITER against an OBJECT-STORE root
-    (round 10, VERDICT r9 item 3 closes x66's local-only gap):
-    `df.write.format("manifest")` to `s3://lake/x71_orders` on an
-    in-process moto server. Each executor task stages its Arrow batches
-    in a task-local temp dir and PUTs the parquet itself to the table's
-    `data/txn=<id>/` prefix — data never moves through the driver — and
-    the driver publishes the same conditional-put commit x58 proved.
-    Answer = the committed table read back through the registered
-    reader; the hash match vs plain orders proves the executor-upload
-    staging loses and invents nothing. This is the write half of the
-    reference's bucket-zone contract (ref: build/unpack_to_raw.py:17-22)
-    at the public-format surface."""
-    from moto.server import ThreadedMotoServer
-
-    from ..io.datasource import ManifestDataSource
-    from ..io.logstore import S3LogStore
-
-    server = ThreadedMotoServer(port=0)
-    server.start()
-    try:
-        _host, port = server.get_host_and_port()
-        endpoint = f"http://127.0.0.1:{port}"
-        cache = os.path.join(_TMP, "x71_cache")
-        shutil.rmtree(cache, ignore_errors=True)
-        store = S3LogStore(
-            "lake", "x71_orders", endpoint=endpoint, cache_dir=cache
-        )
-        store.client.create_bucket(Bucket="lake")
-        spark.dataSource.register(ManifestDataSource)
-        (
-            load(spark, sf_dir, "orders")
-            .write.format("manifest")
-            .mode("overwrite")
-            .option("path", "s3://lake/x71_orders")
-            .option("endpoint", endpoint)
-            .option("cache_dir", cache)
-            .save()
-        )
-        out = (
-            spark.read.format("manifest")
-            .option("path", "s3://lake/x71_orders")
-            .option("endpoint", endpoint)
-            .option("cache_dir", cache)
-            .load()
-        )
-        # materialize NOW: the moto server dies with this function, so
-        # the lazy plan must not reach back to it afterwards
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        server.stop()
-
-
-@register(
-    "x72_dsv2_mapped_write",
-    oracle="""
-    SELECT 'v3' AS snap, o_orderkey,
-           CAST(o_totalprice AS DOUBLE) AS price
-    FROM orders
-    UNION ALL
-    SELECT 'v3', o_orderkey + 1000000,
-           CAST(o_totalprice * 2 AS DOUBLE)
-    FROM orders
-    UNION ALL
-    SELECT 'v0' AS snap, o_orderkey,
-           CAST(o_totalprice AS DOUBLE) AS price
-    FROM orders
-    """,
-)
-def x72_dsv2_mapped_write(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x72 — the registered batch WRITER against a COLUMN-MAPPED table
-    (round 11, VERDICT r10 item 3 closes the writer-protocol gate x68
-    documented): version 0 = orders(o_orderkey, o_totalprice); version 1
-    = metadata-only `rename_column("o_totalprice", "price")`; version 2
-    = an append under the NEW logical name routed through
-    `df.write.format("manifest")` — the executors stage parquet under
-    the PHYSICAL names resolved at writer construction
-    (io/datasource.py _init_common → ManifestTable._extend_mapping), so
-    the logical→physical indirection holds across files written by BOTH
-    paths. Output = x68's union shape: the latest snapshot (served under
-    `price` across native- and DataSource-written files) plus the v0
-    time travel (served under the original name). The hash match proves
-    the registered writer's mapped staging loses, invents, and detaches
-    nothing. Rename-during-write races fail loud via the commit loop's
-    mapping-change gate (pinned in tests/test_datasource.py)."""
-    from ..io.datasource import ManifestDataSource
-
-    table = _fresh_orders_table(
-        spark, sf_dir, "x72", select=["o_orderkey", "o_totalprice"]
-    )
-    table.rename_column("o_totalprice", "price")
-    spark.dataSource.register(ManifestDataSource)
-    (
-        load(spark, sf_dir, "orders")
-        .select(
-            (F.col("o_orderkey") + 1000000).alias("o_orderkey"),
-            (F.col("o_totalprice") * 2).cast("double").alias("price"),
-        )
-        .write.format("manifest")
-        .mode("append")
-        .option("path", table.root)
-        .save()
-    )
-    latest = table.read(spark).select(
-        F.lit("v3").alias("snap"),
-        "o_orderkey",
-        F.col("price").cast("double").alias("price"),
-    )
-    v0 = table.read(spark, version=0).select(
-        F.lit("v0").alias("snap"),
-        "o_orderkey",
-        F.col("o_totalprice").cast("double").alias("price"),
-    )
-    return latest.unionByName(v0)
-
-
-@register(
-    "x5o_avi_frame_sample",
-    oracle="""
-    -- x5m's luma oracle restricted to the SAMPLED frames (even frame_no)
-    WITH f AS (
-        SELECT doc_id, unnest(range(0, doc_id % 3 + 1)) AS frame_no
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(frame_no AS BIGINT) AS frame_no,
-           true AS valid,
-           CAST(8 * (doc_id % 3 + 2) AS BIGINT) AS width,
-           CAST(8 * (doc_id % 2 + 1) AS BIGINT) AS height,
-           CAST(64 * list_sum(list_transform(
-                    range(0, (doc_id % 3 + 2) * (doc_id % 2 + 1)),
-                    k -> ((doc_id + 6 * frame_no) * 17
-                          + (k // (doc_id % 3 + 2)) * 29
-                          + (k % (doc_id % 3 + 2)) * 43) % 256))
-               AS BIGINT) AS px_sum
-    FROM f WHERE frame_no % 2 = 0
-    """,
-)
-def x5o_avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x5o — frame SAMPLING over the real AVI chain (x5c's stub contract
-    realized on real container bytes): walk
-    the RIFF container, KEEP only the sampled keyframe positions (stride
-    2 here), and decode ONLY those — the order that matters at 100 TB,
-    because the expensive stage (JPEG entropy decode + IDCT) runs on the
-    sampled subset, not the full stream; the container walk itself never
-    materializes unsampled payloads past the filter. The luma oracle
-    verifies the surviving frames decode bit-exactly (same chain as
-    x5m). Scale shape: two typed Arrow row-map stages with a
-    codegen'd filter between them, shuffle-free end to end."""
-    from ..operators.jpeg import parse_jpeg
-    from ..operators.media_containers import avi_bytes, parse_avi_frames
-    from ..operators.multimodal import attach_media
-
-    docs = load(spark, sf_dir, "documents")
-    frames = parse_avi_frames(attach_media(docs, "doc_id", avi_bytes))
-    sampled = frames.filter(F.col("frame_no") % 2 == 0)
-    # pack (doc_id, frame_no) into one key — same shuffle-free idiom as
-    # x5m (frame_no < 3 << 8)
-    packed = sampled.select(
-        (F.col("doc_id") * 8 + F.col("frame_no")).alias("doc_id"),
-        F.col("frame").alias("media"),
-    )
-    return parse_jpeg(packed).select(
-        F.expr("doc_id DIV 8").alias("doc_id"),
-        (F.col("doc_id") % 8).cast("bigint").alias("frame_no"),
-        "valid", "width", "height", "px_sum",
-    )
-
-
-@register(
-    "x59_delete_where",
-    oracle="""
-    SELECT * FROM orders
-    WHERE NOT (o_orderstatus = 'F' AND o_orderkey % 5 = 0)
-    """,
-)
+@register("x59_delete_where", oracle=_DELETE_WHERE_ORACLE)
 def x59_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x59 — row-level DELETE FROM through the snapshot log (round 8):
+    """x59 — row-level DELETE FROM through the snapshot log:
     version 0 = orders, version 1 = `delete_where("o_orderstatus = 'F'
     AND o_orderkey % 5 = 0")` — the copy-on-write right-to-erasure
     primitive: only files CONTAINING matches are rewritten (the rest of
@@ -651,22 +428,10 @@ def x59_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table.read(spark)
 
 
-@register(
-    "x60_update_where",
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_orderstatus,
-           CASE WHEN o_orderstatus = 'O'
-                THEN CAST(o_totalprice * 1.05 AS DOUBLE)
-                ELSE o_totalprice END AS o_totalprice,
-           o_orderdate,
-           CASE WHEN o_orderstatus = 'O'
-                THEN '1-URGENT' ELSE o_orderpriority END AS o_orderpriority
-    FROM orders
-    """,
-)
+@register("x60_update_where", oracle=_UPDATE_WHERE_ORACLE)
 def x60_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x60 — row-level UPDATE ... SET through the snapshot log (round 8,
-    the delete_where twin): open orders get repriced +5% and escalated,
+    """x60 — row-level UPDATE ... SET through the snapshot log (the
+    delete_where twin): open orders get repriced +5% and escalated,
     everything else passes through byte-equal; only files containing
     matches rewrite. The CASE-mirrored oracle proves the matched rows
     changed exactly as SET and the unmatched rows (including those
@@ -683,16 +448,10 @@ def x60_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table.read(spark)
 
 
-@register(
-    "x61_delete_dv",
-    oracle="""
-    SELECT * FROM orders
-    WHERE NOT (o_orderstatus = 'F' AND o_orderkey % 5 = 0)
-    """,
-)
+@register("x61_delete_dv", oracle=_DELETE_WHERE_ORACLE)
 def x61_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x61 — merge-on-read DELETE via deletion vectors (round 8, the x59
-    twin with mode="dv"): the SAME predicate deletes the SAME rows, but
+    """x61 — merge-on-read DELETE via deletion vectors (the x59 twin
+    with mode="dv"): the SAME predicate deletes the SAME rows, but
     NO data file is rewritten — the matched (file, row position) pairs
     land in a positions-only DV parquet and readers subtract them with a
     broadcast anti-join on `_metadata.row_index`. The identical oracle
@@ -706,19 +465,7 @@ def x61_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table.read(spark)
 
 
-@register(
-    "x62_update_dv",
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_orderstatus,
-           CASE WHEN o_orderstatus = 'O'
-                THEN CAST(o_totalprice * 1.05 AS DOUBLE)
-                ELSE o_totalprice END AS o_totalprice,
-           o_orderdate,
-           CASE WHEN o_orderstatus = 'O'
-                THEN '1-URGENT' ELSE o_orderpriority END AS o_orderpriority
-    FROM orders
-    """,
-)
+@register("x62_update_dv", oracle=_UPDATE_WHERE_ORACLE)
 def x62_update_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x62 — merge-on-read UPDATE via deletion vectors (the x60 twin
     with mode="dv"): matched rows' OLD positions go into a DV, their
@@ -771,7 +518,7 @@ def x62_update_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x63_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x63 — the FULL clause-level MERGE INTO surface through the
-    snapshot log (round 8): one committed merge carrying all four clause
+    snapshot log: one committed merge carrying all four clause
     kinds at once —
 
       WHEN MATCHED AND s.status='F'  THEN UPDATE (reprice +20%, escalate)
@@ -847,8 +594,8 @@ def x63_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x64_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x64 — CHECK constraints as commit-time quality gates (round 8,
-    Delta ADD CONSTRAINT): the orders table gets
+    """x64 — CHECK constraints as commit-time quality gates (Delta ADD
+    CONSTRAINT): the orders table gets
     `CHECK (o_totalprice >= 0)` (one validation scan, then a
     metadata-only commit), after which a NEGATED-price append is
     REJECTED (CheckConstraintViolation — nothing written) and a valid
@@ -891,8 +638,8 @@ def x64_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x65_dsv2_batch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x65 — the manifest table as a registered BATCH format (round 8,
-    io/datasource.py): `spark.read.format("manifest")` over a table that
+    """x65 — the manifest table as a registered BATCH format
+    (io/datasource.py): `spark.read.format("manifest")` over a table that
     exercises every read-path feature at once — Hive-partitioned files
     (partition values injected from manifest entries), a deletion vector
     (merge-on-read DELETE applied executor-side), and `pushFilters`
@@ -907,16 +654,9 @@ def x65_dsv2_batch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: planning is driver-side O(files) over JSON; at 100 TB
     the partition+stats prune is the difference between scanning a
     day's files and scanning the table."""
-    import hashlib as _h
-
-    from ..io.datasource import ManifestDataSource
-
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(ManifestDataSource)
-    root = os.path.join(
-        _TMP, "x65_" + _h.md5(sf_dir.encode()).hexdigest()[:12]
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    register_manifest_formats(spark)
+    root = scratch_dir("snapshots", "x65", sf_dir)
     table = ManifestTable(root, stats_cols=["o_orderkey"])
     table.commit_overwrite(
         load(spark, sf_dir, "orders").repartition(8, "o_orderkey"),
@@ -944,16 +684,9 @@ def x66_dsv2_batch_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders` proves the executor-written files carry every row, partition
     values land in the Hive path (not the file) and are re-derived on
     read, and the two halves union to exactly the input."""
-    import hashlib as _h
-
-    from ..io.datasource import ManifestDataSource
-
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(ManifestDataSource)
-    root = os.path.join(
-        _TMP, "x66_" + _h.md5(sf_dir.encode()).hexdigest()[:12]
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    register_manifest_formats(spark)
+    root = scratch_dir("snapshots", "x66", sf_dir)
     orders = load(spark, sf_dir, "orders")
     (
         orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -976,7 +709,7 @@ def x66_dsv2_batch_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("x67_deep_clone", oracle="SELECT * FROM orders")
 def x67_deep_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x67 — DEEP CLONE (round 8, Delta's CLONE ... DEEP): after the x8
+    """x67 — DEEP CLONE (Delta's CLONE ... DEEP): after the x8
     merge commits as version 1, `clone_to(dest, version=0)` materializes
     the PRE-merge snapshot as a new independent table — plain files copy
     byte-identical with their manifest stats carried (no decode, no
@@ -990,14 +723,9 @@ def x67_deep_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: O(snapshot bytes) object copy (distcp-shaped on a real
     cluster), O(files) metadata; reading the clone afterward is the
     ordinary manifest read path."""
-    import hashlib as _h
-
     table = _fresh_orders_table(spark, sf_dir, "x67")
     _commit_upsert(spark, table)  # version 1 mutates the head...
-    dest_root = os.path.join(
-        _TMP, "x67_clone_" + _h.md5(sf_dir.encode()).hexdigest()[:12]
-    )
-    shutil.rmtree(dest_root, ignore_errors=True)
+    dest_root = scratch_dir("snapshots", "x67_clone", sf_dir)
     clone = table.clone_to(dest_root, version=0)  # ...we clone version 0
     return clone.read(spark)
 
@@ -1019,8 +747,8 @@ def x67_deep_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x68_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x68 — ALTER TABLE RENAME COLUMN without rewrite (round 9,
-    VERDICT r8 item 2 — Delta column-mapping name mode): version 0 =
+    """x68 — ALTER TABLE RENAME COLUMN without rewrite (Delta
+    column-mapping name mode): version 0 =
     orders(o_orderkey, o_totalprice); version 1 = metadata-only
     `rename_column("o_totalprice", "price")` (ZERO data files move — at
     100 TB this is the difference between an instant commit and a full
@@ -1067,8 +795,8 @@ def x68_column_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x69_column_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x69 — ALTER TABLE DROP COLUMN without rewrite + re-add (round 9,
-    the x68 twin): version 0 = orders(o_orderkey, o_orderstatus);
+    """x69 — ALTER TABLE DROP COLUMN without rewrite + re-add (the x68
+    twin): version 0 = orders(o_orderkey, o_orderstatus);
     version 1 = metadata-only `drop_column("o_orderstatus")` (bytes stay
     in retained files, reclaimed only by rewrite/vacuum); version 2 =
     an append RE-ADDING the logical name — a NEW column under a fresh
@@ -1112,7 +840,7 @@ def x69_column_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x70_metadata_row_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x70 — metadata-only COUNT (round 9; Delta's numRecords answer):
+    """x70 — metadata-only COUNT (Delta's numRecords answer):
     commit entries record each parquet footer's num_rows, so
     `row_count()` answers ``SELECT count(*)`` with ZERO data pages read
     — and stays exact under merge-on-read DELETEs by subtracting each
@@ -1137,6 +865,119 @@ def x70_metadata_row_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("x71_dsv2_s3_write", oracle="SELECT * FROM orders")
+def x71_dsv2_s3_write(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x71 — the registered batch WRITER against an OBJECT-STORE root
+    (x66 is the local-root twin):
+    `df.write.format("manifest")` to `s3://lake/x71_orders` on an
+    in-process moto server. Each executor task stages its Arrow batches
+    in a task-local temp dir and PUTs the parquet itself to the table's
+    `data/txn=<id>/` prefix — data never moves through the driver — and
+    the driver publishes the same conditional-put commit x58 proved.
+    Answer = the committed table read back through the registered
+    reader; the hash match vs plain orders proves the executor-upload
+    staging loses and invents nothing. This is the write half of the
+    reference's bucket-zone contract (ref: build/unpack_to_raw.py:17-22)
+    at the public-format surface."""
+    from moto.server import ThreadedMotoServer
+
+    from ..io.logstore import S3LogStore
+
+    server = ThreadedMotoServer(port=0)
+    server.start()
+    try:
+        _host, port = server.get_host_and_port()
+        endpoint = f"http://127.0.0.1:{port}"
+        cache = scratch_dir("snapshots", "x71_cache")
+        store = S3LogStore(
+            "lake", "x71_orders", endpoint=endpoint, cache_dir=cache
+        )
+        store.client.create_bucket(Bucket="lake")
+        register_manifest_formats(spark)
+        (
+            load(spark, sf_dir, "orders")
+            .write.format("manifest")
+            .mode("overwrite")
+            .option("path", "s3://lake/x71_orders")
+            .option("endpoint", endpoint)
+            .option("cache_dir", cache)
+            .save()
+        )
+        out = (
+            spark.read.format("manifest")
+            .option("path", "s3://lake/x71_orders")
+            .option("endpoint", endpoint)
+            .option("cache_dir", cache)
+            .load()
+        )
+        # materialize NOW: the moto server dies with this function, so
+        # the lazy plan must not reach back to it afterwards
+        rows = out.collect()
+        return spark.createDataFrame(rows, out.schema)
+    finally:
+        server.stop()
+
+
+@register(
+    "x72_dsv2_mapped_write",
+    oracle="""
+    SELECT 'v3' AS snap, o_orderkey,
+           CAST(o_totalprice AS DOUBLE) AS price
+    FROM orders
+    UNION ALL
+    SELECT 'v3', o_orderkey + 1000000,
+           CAST(o_totalprice * 2 AS DOUBLE)
+    FROM orders
+    UNION ALL
+    SELECT 'v0' AS snap, o_orderkey,
+           CAST(o_totalprice AS DOUBLE) AS price
+    FROM orders
+    """,
+)
+def x72_dsv2_mapped_write(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x72 — the registered batch WRITER against a COLUMN-MAPPED table
+    (the writer half of x68's column mapping): version 0 = orders(o_orderkey, o_totalprice); version 1
+    = metadata-only `rename_column("o_totalprice", "price")`; version 2
+    = an append under the NEW logical name routed through
+    `df.write.format("manifest")` — the executors stage parquet under
+    the PHYSICAL names resolved at writer construction
+    (io/datasource.py _init_common → ManifestTable._extend_mapping), so
+    the logical→physical indirection holds across files written by BOTH
+    paths. Output = x68's union shape: the latest snapshot (served under
+    `price` across native- and DataSource-written files) plus the v0
+    time travel (served under the original name). The hash match proves
+    the registered writer's mapped staging loses, invents, and detaches
+    nothing. Rename-during-write races fail loud via the commit loop's
+    mapping-change gate (pinned in tests/test_datasource.py)."""
+    table = _fresh_orders_table(
+        spark, sf_dir, "x72", select=["o_orderkey", "o_totalprice"]
+    )
+    table.rename_column("o_totalprice", "price")
+    register_manifest_formats(spark)
+    (
+        load(spark, sf_dir, "orders")
+        .select(
+            (F.col("o_orderkey") + 1000000).alias("o_orderkey"),
+            (F.col("o_totalprice") * 2).cast("double").alias("price"),
+        )
+        .write.format("manifest")
+        .mode("append")
+        .option("path", table.root)
+        .save()
+    )
+    latest = table.read(spark).select(
+        F.lit("v3").alias("snap"),
+        "o_orderkey",
+        F.col("price").cast("double").alias("price"),
+    )
+    v0 = table.read(spark, version=0).select(
+        F.lit("v0").alias("snap"),
+        "o_orderkey",
+        F.col("o_totalprice").cast("double").alias("price"),
+    )
+    return latest.unionByName(v0)
+
+
 @register(
     "x73_parquet_ckpt_autoskip",
     oracle="""
@@ -1156,8 +997,8 @@ def x70_metadata_row_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x73_parquet_ckpt_autoskip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x73 — round 12's lake levers end-to-end under the oracle gate:
-    COLUMNAR (parquet) manifest checkpoints + hint-free automatic
+    """x73 — columnar checkpoints and WHERE-derived file skipping
+    end-to-end under the oracle gate: COLUMNAR (parquet) manifest checkpoints + hint-free automatic
     WHERE-derived file skipping. v0 = orders(o_orderkey, o_totalprice)
     range-partitioned so per-file stats are disjoint; v1 = a CoW DELETE
     of `o_orderkey <= 100` whose discovery scan prunes AUTOMATICALLY
@@ -1171,10 +1012,7 @@ def x73_parquet_ckpt_autoskip(spark: SparkSession, sf_dir: str) -> DataFrame:
     time travel from behind two checkpoints. A hash match proves the
     columnar checkpoint round-trip, the delta replay over it, and both
     automatic prunes lose and invent nothing."""
-    root = os.path.join(
-        _TMP, "x73_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("snapshots", "x73", sf_dir)
     table = ManifestTable(
         root,
         stats_cols=["o_orderkey"],
@@ -1225,8 +1063,8 @@ def x73_parquet_ckpt_autoskip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x74_prune_in_or_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x74 — round 13's lake levers end-to-end under the oracle gate
-    (the x73 pattern applied to this round): on a PARTITIONED table with
+    """x74 — IN-list, OR and partition pruning end-to-end under the
+    oracle gate (the x73 pattern): on a PARTITIONED table with
     columnar checkpoints, (1) a CoW DELETE with an IN-list predicate —
     discovery pruned with the IN list kept as a value set
     (io/prune.py), including a key absent from the table (a no-match
@@ -1234,13 +1072,10 @@ def x74_prune_in_or_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     point predicates — discovery pruned with the UNION of branch file
     sets; (3) a partition_filter read and a partition-RANGE read, both
     planned through the columnar checkpoint's `part::<col>` columns (the
-    round-13 vectorized partition prune) then re-checked exactly. A hash
+    vectorized partition prune) then re-checked exactly. A hash
     match proves the branch-union and partition prunes lose and invent
     nothing across delete/update/read."""
-    root = os.path.join(
-        _TMP, "x74_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("snapshots", "x74", sf_dir)
     table = ManifestTable(
         root,
         stats_cols=["o_orderkey"],
@@ -1303,8 +1138,8 @@ def x74_prune_in_or_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x75_merged_dv_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x75 — round 14's lake levers end-to-end under the oracle gate (the
-    x73/x74 pattern applied to this round): merge-on-read DELETEs that
+    """x75 — stacked deletion vectors end-to-end under the oracle gate
+    (the x73/x74 pattern): merge-on-read DELETEs that
     STACK on the same data file (the second commit folds both deletion
     vectors into one merged DV — io/manifest.py:_merge_stacked_dvs), a
     merge-on-read UPDATE layered on top of the merged DV, then
@@ -1317,10 +1152,7 @@ def x75_merged_dv_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes applied, prices untouched). A hash match proves merge +
     dir-aligned apply + purge lose and invent nothing, at any of the
     three versions."""
-    root = os.path.join(
-        _TMP, "x75_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("snapshots", "x75", sf_dir)
     table = ManifestTable(root, stats_cols=["o_orderkey"])
     df = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table.commit_overwrite(df.repartitionByRange(4, "o_orderkey"))

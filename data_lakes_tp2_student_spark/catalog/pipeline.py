@@ -1,15 +1,19 @@
-"""Catalog entries for the reference-pipeline operators (e1, c1, e2, d9, j1)
-exercised on `documents` (`source` ≈ family_accession, `doc_id` ≈ pk)."""
+"""SURVEY.md §2 reference-pipeline operators (c1, d9, e1, e2, j1) exercised
+on `documents` (`source` ≈ family_accession, `doc_id` ≈ pk): label mapping
+and its broadcast application, the stratified split, class weights and the
+ESM2-style tokenizer.
+"""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.label import apply_label_mapping, label_encode, label_mapping
+from ..operators.label import label_encode, label_mapping
 from ..operators.split import split_counts, stratified_split
 from ..operators.tokenize import tokenize_chars, tokenize_esm2
 from ..operators.weights import class_weights
 from ..registry import load, register
+
 
 # Shared CASE expression for the oracle (DuckDB SQL) — mirrors split.py.
 _SPLIT_ORACLE = """

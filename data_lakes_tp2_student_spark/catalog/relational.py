@@ -1,6 +1,9 @@
-"""Relational-surface catalog: filters (b), joins (c3-c8), rollup/cube (d12),
-analytic windows (e3), top-k (f4), set ops (g), scalar/date/JSON/array
-functions (h), and TPC-H-style composites (x6) on the driver tables.
+"""SURVEY.md §2 groups B, C, D12–D14, E3, F, G and H, plus the x6
+pivot/unpivot/having and x7 skew extensions: filters and projections (b),
+joins (c3–c8, banded interval join), rollup/cube/grouping sets and
+conditional aggregates (d12–d14), analytic and ranking windows (e3), sorts,
+top-k and samples (f), set operations (g), date/JSON/array/math/string and
+Variant scalar functions (h), and salted skew-safe aggregation and join.
 
 The reference has none of these beyond implicit forms (SURVEY.md §2 C/G/H
 "Absent" rows) — they are the mandated extension surface, expressed purely
@@ -18,9 +21,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.compute import spread_if_underparallel
-from ..functions.money import SQL_CHARGE, SQL_DISC_PRICE, charge, dec2, disc_price
+from ..functions.money import dec2
+from ..operators.skew import salted_group_count_sum, salted_join
+from ..operators.tokenize import tokenize_chars, widen_tokens
 from ..registry import load, register
+
 
 # ---------------------------------------------------------------- B: filters
 
@@ -57,6 +62,31 @@ def b2_projection_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp")).select(
         "l_orderkey", "l_extendedprice"
+    )
+
+
+_WIDE_N = 16
+
+
+_WIDE_ORACLE_COLS = ",\n           ".join(
+    f"CASE WHEN length(text) >= {i + 1} THEN ord(substr(text, {i + 1}, 1)) "
+    f"ELSE 0 END AS token_{i}"
+    for i in range(_WIDE_N)
+)
+
+
+@register(
+    "b5_wide_projection",
+    oracle=f"SELECT doc_id,\n           {_WIDE_ORACLE_COLS}\n    FROM documents",
+)
+def b5_wide_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """b5 — the reference's token_0..token_N physical export layout
+    (ref: src/process_to_curated.py:28-29); array internally, widened only
+    at the boundary (SURVEY.md §4 codegen note)."""
+    docs = load(spark, sf_dir, "documents")
+    toks = tokenize_chars(docs, "text", max_len=_WIDE_N)
+    return widen_tokens(toks, width=_WIDE_N).select(
+        "doc_id", *[f"token_{i}" for i in range(_WIDE_N)]
     )
 
 
@@ -147,6 +177,40 @@ def c6_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cond = (F.col("o_totalprice") >= F.col("lo")) & (F.col("o_totalprice") < F.col("hi"))
     return orders.join(F.broadcast(tiers), cond, "inner").select("o_orderkey", "tier")
+
+
+@register(
+    "c6b_interval_join_banded",
+    oracle="""
+    WITH p AS (SELECT event_id AS purchase_id, epoch_us(ts) AS p_us
+               FROM events WHERE event_type = 'purchase'),
+    v AS (SELECT event_id AS view_id, epoch_us(ts) AS v_us
+          FROM events WHERE event_type = 'view')
+    SELECT p.purchase_id, v.view_id, p.p_us - v.v_us AS us_apart
+    FROM p JOIN v ON abs(p.p_us - v.v_us) <= 300000000
+    """,
+)
+def c6b_interval_join_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """c6 scale path — purchases × views within ±5 minutes, both sides
+    fact-sized: the banded-equi-join form of a range join (see
+    operators/windows.py:banded_interval_join for the scale argument). The
+    oracle states the plain |Δt| ≤ tolerance predicate — banding is pure
+    execution strategy, invisible in the result."""
+    from ..operators.windows import banded_interval_join
+
+    ev = load(spark, sf_dir, "events")
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.unix_micros("ts").alias("p_us"),
+    )
+    v = ev.filter(F.col("event_type") == "view").select(
+        F.col("event_id").alias("view_id"),
+        F.unix_micros("ts").alias("v_us"),
+    )
+    joined = banded_interval_join(p, v, "p_us", "v_us", 300_000_000)
+    return joined.select(
+        "purchase_id", "view_id", (F.col("p_us") - F.col("v_us")).alias("us_apart")
+    )
 
 
 @register(
@@ -254,6 +318,87 @@ def d12b_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.cube("l_returnflag", "l_linestatus").agg(F.count(F.lit(1)).alias("n"))
 
 
+@register(
+    "d12c_grouping_sets",
+    oracle="""
+    SELECT l_returnflag, l_linestatus,
+           count(*) AS n,
+           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+           CAST(grouping(l_returnflag) AS INT) * 2
+             + CAST(grouping(l_linestatus) AS INT) AS gid
+    FROM lineitem
+    GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+                            (l_returnflag), ())
+    """,
+)
+def d12c_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """d12 — explicit GROUPING SETS (finer control than rollup/cube) with a
+    grouping-id column distinguishing the aggregation levels. One shuffle;
+    Spark expands the sets map-side."""
+    load(spark, sf_dir, "lineitem").createOrReplaceTempView("l_gsets")
+    return spark.sql(
+        """
+        SELECT l_returnflag, l_linestatus,
+               count(*) AS n,
+               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+               CAST(grouping(l_returnflag) AS INT) * 2
+                 + CAST(grouping(l_linestatus) AS INT) AS gid
+        FROM l_gsets
+        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+                                (l_returnflag), ())
+        """
+    )
+
+
+@register(
+    "d13_conditional_agg",
+    oracle="""
+    SELECT event_type,
+           count(*) FILTER (WHERE value > 50) AS n_high,
+           bool_or(value > 99) AS any_extreme,
+           bool_and(value >= 0) AS all_nonneg,
+           min_by(user_id, event_id) AS first_user
+    FROM events
+    GROUP BY event_type
+    """,
+)
+def d13_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """d13 — conditional/ordered aggregates: count_if, bool_or/bool_and,
+    min_by keyed on the unique event_id (deterministic). All are single-pass
+    hash aggregates with map-side partials."""
+    ev = load(spark, sf_dir, "events")
+    return ev.groupBy("event_type").agg(
+        F.count_if(F.col("value") > 50).alias("n_high"),
+        F.bool_or(F.col("value") > 99).alias("any_extreme"),
+        F.bool_and(F.col("value") >= 0).alias("all_nonneg"),
+        F.min_by("user_id", "event_id").alias("first_user"),
+    )
+
+
+@register(
+    "d14_stats_agg",
+    oracle="""
+    SELECT l_returnflag,
+           round(stddev_samp(l_quantity), 4) AS sd_qty,
+           round(var_samp(l_quantity), 4) AS var_qty,
+           round(avg(l_quantity), 4) AS avg_qty
+    FROM lineitem
+    GROUP BY l_returnflag
+    """,
+)
+def d14_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """d14 — statistical moment aggregates (sample stddev/variance/mean).
+    Double accumulation order differs across partitionings, so results are
+    rounded to 4 decimals — ~1e-9 absolute drift against a 0.5e-4 rounding
+    boundary keeps the oracle hash stable."""
+    l = load(spark, sf_dir, "lineitem")
+    return l.groupBy("l_returnflag").agg(
+        F.round(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
+        F.round(F.var_samp("l_quantity"), 4).alias("var_qty"),
+        F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
+    )
+
+
 # ------------------------------------------------------------- E3: windows
 
 
@@ -289,7 +434,172 @@ def e3_window_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------- F: top-k
+@register(
+    "e3c_ntile_buckets",
+    oracle="""
+    WITH q AS (SELECT o_orderpriority,
+                      CAST(o_totalprice AS DECIMAL(18,2)) AS p,
+                      ntile(4) OVER (PARTITION BY o_orderpriority
+                                     ORDER BY o_totalprice, o_orderkey)
+                          AS quartile
+               FROM orders)
+    SELECT o_orderpriority, CAST(quartile AS BIGINT) AS quartile,
+           count(*) AS n, CAST(sum(p) AS DOUBLE) AS sum_price
+    FROM q GROUP BY o_orderpriority, quartile
+    """,
+)
+def e3c_ntile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """e3 extension — ntile quantile bucketing: quartiles of order value per
+    priority class, then per-bucket count + exact decimal sum (emitted as
+    double for pandas-landing portability).
+
+    Scale shape (two-phase rank, no per-group single-task sort): a naive
+    `ntile OVER (PARTITION BY o_orderpriority)` makes each of the ~5 priority
+    values ONE window task sorting ~20% of the table — a straggler at 100 TB.
+    Instead: (1) band rows by a DETERMINISTIC pure function of the sort key
+    (value-range slices from the global min/max — not repartitionByRange +
+    spark_partition_id, whose sampled boundaries may differ between the two
+    plan branches that reference them); (2) per-(band, group) counts give
+    each band's rank offset (tiny aggregate, broadcast); (3) per-band local
+    row_number + offset = exact global rank — each window task sorts only
+    its band; (4) ntile is pure arithmetic on (rank, group count). Bucket
+    assignment is engine-portable because (o_totalprice, o_orderkey) is a
+    total order and bands are monotone in it."""
+    o = load(spark, sf_dir, "orders").select(
+        "o_orderpriority",
+        "o_orderkey",
+        "o_totalprice",
+        F.col("o_totalprice").cast("decimal(18,2)").alias("p"),
+    )
+    slices = 32
+    stats = o.agg(
+        F.min("o_totalprice").alias("_lo"), F.max("o_totalprice").alias("_hi")
+    )
+    band = F.least(
+        F.lit(slices - 1),
+        F.floor(
+            (F.col("o_totalprice") - F.col("_lo"))
+            / ((F.col("_hi") - F.col("_lo") + F.lit(1e-6)) / slices)
+        ),
+    ).cast("int")
+    banded = o.crossJoin(F.broadcast(stats)).withColumn("_band", band)
+    # Tiny: (band, group) row counts -> cumulative offset per band, and
+    # the group totals off the SAME window pass: the two frames share one
+    # partitionBy, so both window functions ride one exchange+sort of the
+    # ~(slices × |priorities|)-row aggregate — a separate `totals` branch
+    # would recompute the whole banded→pc chain (scan + two exchanges)
+    # and pay a second broadcast join below.
+    pc = banded.groupBy("_band", "o_orderpriority").agg(
+        F.count(F.lit(1)).alias("_cnt")
+    )
+    w_off = (
+        Window.partitionBy("o_orderpriority")
+        .orderBy("_band")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    w_tot = Window.partitionBy("o_orderpriority")
+    offsets = pc.select(
+        "_band",
+        "o_orderpriority",
+        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"),
+        F.sum("_cnt").over(w_tot).alias("_n"),
+    )
+    # Local sort covers only one band (bands are disjoint and monotone in
+    # the total order, so offset + local row_number is the exact global
+    # rank; a same-price tie can never straddle bands).
+    w_local = Window.partitionBy("_band", "o_orderpriority").orderBy(
+        "o_totalprice", "o_orderkey"
+    )
+    ranked = (
+        banded.withColumn("_lrn", F.row_number().over(w_local))
+        .join(F.broadcast(offsets), ["_band", "o_orderpriority"])
+        .withColumn("_rn", F.col("_off") + F.col("_lrn"))
+    )
+    # ntile(k): first (n % k) buckets hold ceil(n/k) rows, the rest floor.
+    k = 4
+    q_sz = F.col("_n") / k  # floor via div below
+    big = (F.col("_n") % k) * (F.floor(q_sz) + 1)
+    quartile = F.when(
+        F.col("_rn") <= big, F.ceil(F.col("_rn") / (F.floor(q_sz) + 1))
+    ).otherwise(
+        (F.col("_n") % k)
+        + F.ceil((F.col("_rn") - big) / F.greatest(F.floor(q_sz), F.lit(1)))
+    )
+    return (
+        ranked.withColumn("quartile", quartile.cast("bigint"))
+        .groupBy("o_orderpriority", "quartile")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("p").cast("double").alias("sum_price"),
+        )
+    )
+
+
+# ------------------------- e3d analytic-window rank family completion
+
+
+@register(
+    "e3d_window_rank_family",
+    oracle="""
+    SELECT o_orderkey,
+           o_orderpriority,
+           round(percent_rank() OVER w, 6) AS pct_rank,
+           round(cume_dist() OVER w, 6) AS cume,
+           first_value(o_orderkey) OVER
+               (w ROWS BETWEEN UNBOUNDED PRECEDING
+                           AND UNBOUNDED FOLLOWING) AS cheapest_key,
+           nth_value(o_orderkey, 3) OVER
+               (w ROWS BETWEEN UNBOUNDED PRECEDING
+                           AND UNBOUNDED FOLLOWING) AS third_key
+    FROM orders
+    WINDOW w AS (PARTITION BY o_orderpriority
+                 ORDER BY o_totalprice, o_orderkey)
+    """,
+)
+def e3d_window_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """e3 extension — the remaining analytic rank family in one pass:
+    percent_rank (relative position), cume_dist (empirical CDF),
+    first_value / nth_value over the full frame (per-group champion and
+    3rd-cheapest order). One hash exchange by priority feeds all four —
+    Spark evaluates every function over the same sorted window run, so
+    completing the family costs no extra shuffle. Ordering is the total
+    (price, key) order, making ranks engine-identical."""
+    o = load(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_orderpriority").orderBy(
+        "o_totalprice", "o_orderkey"
+    )
+    wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return o.select(
+        "o_orderkey",
+        "o_orderpriority",
+        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
+        F.round(F.cume_dist().over(w), 6).alias("cume"),
+        F.first("o_orderkey").over(wf).alias("cheapest_key"),
+        F.nth_value("o_orderkey", 3).over(wf).alias("third_key"),
+    )
+
+
+# ---------------------------------------------------- F: sorts and samples
+
+
+@register(
+    "f1_sort",
+    oracle="""
+    SELECT n_name, CAST(row_number() OVER (ORDER BY n_name) AS BIGINT) AS pos
+    FROM nation
+    """,
+)
+def f1_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """f1 — total sort (range-partitioned exchange); the emitted position
+    column makes the order itself value-checkable under an order-insensitive
+    compare."""
+    from pyspark.sql import Window
+
+    n = load(spark, sf_dir, "nation")
+    return n.select(
+        "n_name",
+        F.row_number().over(Window.orderBy("n_name")).cast("bigint").alias("pos"),
+    ).orderBy("n_name")
 
 
 @register(
@@ -307,6 +617,67 @@ def f4_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         customer.orderBy(F.desc("c_acctbal"), "c_custkey")
         .select("c_custkey", "c_name", "c_acctbal")
         .limit(10)
+    )
+
+
+@register(
+    "f5_hash_sample",
+    oracle="""
+    SELECT l_orderkey, l_linenumber, l_quantity
+    FROM lineitem
+    WHERE md5(CAST(l_orderkey AS VARCHAR) || '-'
+              || CAST(l_linenumber AS VARCHAR)) < '1'
+    """,
+)
+def f5_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """f5 — deterministic ~1/16 Bernoulli sample via a hash predicate on the
+    primary key (md5 hex < '1'). Unlike `df.sample()`, the selected set is
+    a pure function of the data — identical on any engine, any partitioning,
+    any cluster size — which is what makes sampled pipelines reproducible
+    and oracle-checkable. Predicate is a cheap codegen'd expression; at
+    100 TB the sample never materializes the full table."""
+    l = load(spark, sf_dir, "lineitem")
+    key = F.concat_ws(
+        "-",
+        F.col("l_orderkey").cast("string"),
+        F.col("l_linenumber").cast("string"),
+    )
+    return l.filter(F.md5(key) < "1").select(
+        "l_orderkey", "l_linenumber", "l_quantity"
+    )
+
+
+@register(
+    "f6_stratified_sample",
+    oracle="""
+    WITH r AS (SELECT source, doc_id,
+                      row_number() OVER (
+                          PARTITION BY source
+                          ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
+                          AS rn
+               FROM documents)
+    SELECT source, doc_id, rn FROM r WHERE rn <= 5
+    """,
+)
+def f6_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """f-group extension — deterministic stratified sample: exactly k rows
+    per stratum, chosen by md5-hash order (so the sample is stable under any
+    partitioning AND reproducible by any engine — the same portability trick
+    as the e2 split shuffle key).
+
+    Scale shape: one hash exchange by stratum, and Catalyst inserts
+    WindowGroupLimit (verified in tests/test_plan_quality.py): each map task
+    keeps only its local top-k per stratum before shuffling, so the exchange
+    carries ~k·strata rows, never the table."""
+    d = load(spark, sf_dir, "documents")
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")), "doc_id"
+    )
+    return (
+        d.select(
+            "source", "doc_id", F.row_number().over(w).cast("bigint").alias("rn")
+        )
+        .filter(F.col("rn") <= 5)
     )
 
 
@@ -445,130 +816,144 @@ def h5_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- X6: TPC-H-style composites
+@register(
+    "h5_math_functions",
+    oracle="""
+    SELECT p_partkey,
+           round(p_retailprice, 1) AS price_r1,
+           abs(p_size - 25) AS size_dist,
+           round(power(CAST(p_size AS DOUBLE), 2.0), 6) AS size_sq,
+           round(sqrt(CAST(p_size AS DOUBLE)), 6) AS size_sqrt,
+           CAST(p_size % 7 AS INT) AS size_mod
+    FROM part
+    """,
+)
+def h5_math_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """h5 — math scalar set: round/abs/pow/sqrt/mod (all codegen'd)."""
+    p = load(spark, sf_dir, "part")
+    return p.select(
+        "p_partkey",
+        F.round("p_retailprice", 1).alias("price_r1"),
+        F.abs(F.col("p_size") - 25).alias("size_dist"),
+        F.round(F.pow(F.col("p_size").cast("double"), 2.0), 6).alias("size_sq"),
+        F.round(F.sqrt(F.col("p_size").cast("double")), 6).alias("size_sqrt"),
+        (F.col("p_size") % 7).cast("int").alias("size_mod"),
+    )
 
 
 @register(
-    "x6_tpch_q1",
-    oracle=f"""
-    SELECT l_returnflag, l_linestatus,
-           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-               AS sum_base_price,
-           CAST(sum({SQL_DISC_PRICE}) AS DOUBLE) AS sum_disc_price,
-           CAST(sum({SQL_CHARGE}) AS DOUBLE) AS sum_charge,
-           round(avg(l_quantity), 6) AS avg_qty,
-           round(avg(l_extendedprice), 6) AS avg_price,
-           round(avg(l_discount), 6) AS avg_disc,
-           count(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2000-09-02'
-    GROUP BY l_returnflag, l_linestatus
+    "h5b_string_functions",
+    oracle="""
+    SELECT doc_id,
+           upper(source) AS src_up,
+           lpad(CAST(doc_id AS VARCHAR), 8, '0') AS id_pad,
+           substring(text, 1, 10) AS prefix10,
+           concat_ws('|', lang, source) AS lang_src,
+           replace(substring(text, 1, 20), ' ', '_') AS snake20,
+           length(text) - length(replace(text, ' ', '')) AS n_spaces
+    FROM documents
     """,
 )
-def x6_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x6 — TPC-H Q1 pricing summary (adapted to driver schema); money math
-    in exact decimal (functions.money) so sums are partition-order-proof.
-    The scan feeds the whole aggregation map-side, so a single-row-group
-    input file would run it one-tasked — `spread_if_underparallel`
-    repartitions first ONLY in that case (no-op on a multi-split table;
-    round 15, see functions/compute.py)."""
-    li = spread_if_underparallel(load(spark, sf_dir, "lineitem"))
+def h5b_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """h5 — string scalar set: case, padding, substring, multi-column
+    concat, replace, and occurrence counting via length delta (all
+    JVM-side, whole-stage codegen — the reference does string work
+    row-at-a-time in Python, e.g. .apply(len))."""
+    d = load(spark, sf_dir, "documents")
+    return d.select(
+        "doc_id",
+        F.upper("source").alias("src_up"),
+        F.lpad(F.col("doc_id").cast("string"), 8, "0").alias("id_pad"),
+        F.substring("text", 1, 10).alias("prefix10"),
+        F.concat_ws("|", "lang", "source").alias("lang_src"),
+        F.replace(
+            F.substring("text", 1, 20), F.lit(" "), F.lit("_")
+        ).alias("snake20"),
+        (
+            F.length("text") - F.length(F.replace("text", F.lit(" "), F.lit("")))
+        ).alias("n_spaces"),
+    )
+
+
+# ----------------------------------------------- x39 Variant semi-structured
+
+
+@register(
+    "x39_variant_extract",
+    oracle="""
+    SELECT event_type,
+           count(*) AS n,
+           CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT)
+               AS sum_k,
+           round(avg(CAST(json_extract(props, '$.k') AS BIGINT)), 6) AS avg_k
+    FROM events GROUP BY event_type
+    """,
+)
+def x39_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x39 — Spark 4 VariantType path for semi-structured columns:
+    `parse_json` shreds the JSON payload ONCE into the binary Variant
+    encoding, then `variant_get` does typed path extraction — O(1)
+    field access per row instead of re-parsing JSON text per extracted
+    field (the `get_json_object` fallback used by h5d). At rest, Variant
+    columns store shredded subfields with parquet min/max stats, so
+    predicates on `$.k` can prune row groups — the scale rationale for
+    preferring Variant over JSON strings at 100 TB."""
+    ev = load(spark, sf_dir, "events")
+    k = F.variant_get(F.parse_json("props"), "$.k", "bigint")
     return (
-        li.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
+        ev.select("event_type", k.alias("_k"))
+        .groupBy("event_type")
         .agg(
-            F.sum(dec2("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec2("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(disc_price()).cast("double").alias("sum_disc_price"),
-            F.sum(charge()).cast("double").alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum("_k").alias("sum_k"),
+            F.round(F.avg("_k"), 6).alias("avg_k"),
         )
     )
 
 
+# ------------------------------------------ X6 reshaping and X7 skew handling
+
+
 @register(
-    "x6_tpch_q3",
-    oracle=f"""
-    SELECT l.l_orderkey,
-           CAST(sum({SQL_DISC_PRICE}) AS DOUBLE) AS revenue,
-           o.o_orderdate, o.o_orderpriority
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1998-06-01'
-      AND l.l_shipdate > TIMESTAMP '1998-06-01'
-    GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-    ORDER BY revenue DESC, l.l_orderkey
-    LIMIT 10
+    "x6_pivot",
+    oracle="""
+    SELECT l_returnflag,
+           CAST(sum(CASE WHEN l_linestatus = 'O'
+                    THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS O,
+           CAST(sum(CASE WHEN l_linestatus = 'F'
+                    THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS F
+    FROM lineitem GROUP BY l_returnflag
     """,
 )
-def x6_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x6 — TPC-H Q3 shipping priority: 3-way join, agg, ordered top-k.
-    The customer dim is broadcast; decimal revenue keeps cross-engine
-    ordering exact at the LIMIT boundary."""
-    c = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-06-01").cast("timestamp")
-    )
-    l = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-06-01").cast("timestamp")
-    )
+def x6_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x6 — pivot (linestatus columns per returnflag); Spark's pivot is the
+    same conditional-aggregation rewrite the oracle spells out."""
+    li = load(spark, sf_dir, "lineitem")
     return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(10)
+        li.groupBy("l_returnflag")
+        .pivot("l_linestatus", ["O", "F"])
+        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double"))
     )
 
 
 @register(
-    "x6_tpch_q5",
-    oracle=f"""
-    SELECT n.n_name,
-           CAST(sum({SQL_DISC_PRICE}) AS DOUBLE) AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    WHERE r.r_name = 'ASIA'
-      AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o.o_orderdate < TIMESTAMP '1999-01-01'
-    GROUP BY n.n_name
+    "x6_unpivot",
+    oracle="""
+    SELECT c_custkey, 'acctbal' AS metric, c_acctbal AS val FROM customer
+    UNION ALL
+    SELECT c_custkey, 'nationkey' AS metric,
+           CAST(c_nationkey AS DOUBLE) AS val FROM customer
     """,
 )
-def x6_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x6 — TPC-H Q5 local-supplier volume: 6-way star join; every dim side
-    broadcast, so the only fact-table shuffle is the final group-by."""
+def x6_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x6 — unpivot via stack() (wide → long; the inverse of x6_pivot)."""
     c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp"))
-    )
-    l = load(spark, sf_dir, "lineitem")
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (l.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
-        )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
+    return c.select(
+        "c_custkey",
+        F.expr(
+            "stack(2, 'acctbal', c_acctbal, "
+            "'nationkey', CAST(c_nationkey AS DOUBLE)) AS (metric, val)"
+        ),
     )
 
 
@@ -589,4 +974,51 @@ def x6_group_having(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("p_retailprice"), 6).alias("avg_price"),
         )
         .filter(F.col("n_parts") >= 90)
+    )
+
+
+@register(
+    "x7_salted_agg",
+    oracle="""
+    SELECT l_returnflag, count(*) AS n,
+           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+               AS sum_l_quantity
+    FROM lineitem GROUP BY l_returnflag
+    """,
+)
+def x7_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Skew pattern — salted two-stage aggregation over the 3 hot
+    returnflag keys; algebraically identical to the direct group-by (the
+    oracle IS the direct group-by)."""
+    li = load(spark, sf_dir, "lineitem")
+    out = salted_group_count_sum(li, "l_returnflag", "l_quantity")
+    return out.withColumn(
+        "sum_l_quantity", F.col("sum_l_quantity").cast("double")
+    )
+
+
+@register(
+    "x7b_salted_join",
+    oracle="""
+    SELECT o.o_orderpriority, count(*) AS n,
+           CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+               AS sum_price
+    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+    GROUP BY o.o_orderpriority
+    """,
+)
+def x7b_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Skew pattern — salted equi-join (fact side salted, dim side
+    replicated per salt) followed by a group-agg; row-identical to the
+    plain join, so the oracle IS the plain join+agg. The explicit/portable
+    form of AQE's skew-join split for keys hot enough to straggle a
+    sort-merge join when the dim side cannot broadcast."""
+    from ..functions.money import dec2
+
+    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
+    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    j = salted_join(li, o, "l_orderkey", "o_orderkey", salt_buckets=8)
+    return j.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(dec2("l_extendedprice")).cast("double").alias("sum_price"),
     )

@@ -1,6 +1,6 @@
 """Bloom-filter decontamination (SURVEY.md §2 X — corpus curation).
 
-The broadcast shingle-set decontamination (`catalog/llm_ops2.py`, x22)
+The broadcast shingle-set decontamination (`catalog/near_dup.py`, x22)
 ships every benchmark shingle to every executor — fine for one benchmark,
 unbounded as eval suites grow. The 100 TB-scale alternative promised there
 is a Bloom filter: a FIXED-size bitmap (m bits, k hashes) that answers

@@ -15,6 +15,9 @@ so double bit-patterns match.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -42,13 +45,13 @@ class Query:
     fn: QueryFn
     oracle: Optional[str]
     doc: str = ""
-    # Tolerance oracle (VERDICT r9 item 5) for sketch queries where exact
-    # hash match is impossible but a BOUND is checkable: DuckDB SQL that
-    # returns, for every column `c` in the Spark result, exact columns
-    # `c_lo` and `c_hi` (inclusive), one oracle row per Spark row. The
-    # local gate asserts lo <= value <= hi. Only meaningful when
-    # ``oracle`` is None (the driver still records rows-only; the LOCAL
-    # gate enforces the bound).
+    # Tolerance oracle for sketch queries where exact hash match is
+    # impossible but a BOUND is checkable: DuckDB SQL that returns, for
+    # every column `c` in the Spark result, exact columns `c_lo` and
+    # `c_hi` (inclusive), one oracle row per Spark row. The local gate
+    # asserts lo <= value <= hi. Only meaningful when ``oracle`` is None
+    # (the driver still records rows-only; the LOCAL gate enforces the
+    # bound).
     tol_oracle: Optional[str] = None
 
 
@@ -78,10 +81,9 @@ def register(
 
 # (path, size, mtime_ns) -> resolved Spark schema. Driver-side schema
 # inference (JVM footer read + listing) costs ~40-80 ms per spark.read —
-# a fixed tax on EVERY registry query (measured 0.08 s of i1's 0.40 s,
-# round 7). Keyed on file identity so a regenerated testdata file (new
-# size/mtime) re-infers; the cache only ever holds the handful of
-# driver tables.
+# a fixed tax on EVERY registry query (0.08 s of i1's 0.40 s). Keyed on
+# file identity so a regenerated testdata file (new size/mtime)
+# re-infers; the cache only ever holds the handful of driver tables.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -89,15 +91,13 @@ def _cached_read(spark: SparkSession, path: str) -> DataFrame:
     """spark.read.parquet with the schema-inference result memoized per
     file identity: first read infers and caches, later reads pass the
     schema explicitly and skip the footer round-trip."""
-    import os
-
     try:
         if os.path.isdir(path):
             # Directories: no memo. os.stat() SUCCEEDS on a directory, and
             # a dir's size/mtime does not change when a part-file is
-            # rewritten in place — keying on it would serve a stale schema
-            # (ADVICE r7). The driver tables are single files, so this
-            # path is cold there.
+            # rewritten in place — keying on it would serve a stale schema.
+            # The driver tables are single files, so this path is cold
+            # there.
             return spark.read.parquet(path)
         st = os.stat(path)
         key = (path, st.st_size, st.st_mtime_ns)
@@ -118,8 +118,6 @@ def assert_ts_not_utc_adjusted(path: str, col: str = "ts") -> None:
     the event-time operators rely on would silently break. Footer-only
     probe, best-effort (a missing pyarrow never blocks the read)."""
     try:
-        import os
-
         import pyarrow.parquet as pq
 
         st = os.stat(path)
@@ -154,11 +152,10 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table == "events":
         # conf.set is a py4j round-trip (~5-10 ms each); the two settings
         # are idempotent per session, so pay them once — part of the
-        # fixed per-query overhead shave on the sub-second event queries
-        # (VERDICT r7 item 2).
-        # keyed on applicationId, not id(spark): a stopped session's id()
+        # fixed per-query overhead shave on the sub-second event queries.
+        # Keyed on applicationId, not id(spark): a stopped session's id()
         # can be reused by a later session after GC, which would silently
-        # skip the pinning for the new session (ADVICE r8)
+        # skip the pinning for the new session.
         ck = ("conf_pinned", spark.sparkContext.applicationId)
         if ck not in _SCHEMA_CACHE:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -178,3 +175,35 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return _cached_read(spark, f"{sf_dir}/{table}.parquet")
+
+
+_SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
+)
+
+
+def scratch_dir(
+    zone: str, tag: str, sf_dir: str | None = None, clear: bool = True
+) -> str:
+    """A query's scratch path, ``<repo>/.tmp/<zone>/<tag>``, removed first
+    unless ``clear`` is False (driver testdata is read-only, so roundtrips
+    and lake tables stage here). With ``sf_dir`` the name gains
+    ``_<md5(sf_dir)[:12]>``: runs over different fixtures never share a
+    lake, and a leftover table from an older fixture generation can never
+    merge into a fresh run."""
+    if sf_dir is not None:
+        tag = f"{tag}_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
+    path = os.path.join(_SCRATCH, zone, tag)
+    if clear:
+        shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def register_manifest_formats(spark: SparkSession) -> None:
+    """Register the ``manifest`` batch/stream-sink format and the
+    ``manifest_stream`` source with this session's Data Source registry."""
+    from .io.datasource import ManifestDataSource
+    from .streaming.source import ManifestStreamDataSource
+
+    spark.dataSource.register(ManifestDataSource)
+    spark.dataSource.register(ManifestStreamDataSource)

@@ -184,7 +184,7 @@ def main() -> None:
     if {"x3b_knn_lsh", "x3c_knn_ivf"} & set(names):
         from pyspark.sql import functions as F
 
-        from data_lakes_tp2_student_spark.catalog.llm_ops import (
+        from data_lakes_tp2_student_spark.catalog.near_dup import (
             _LSH_PLANES,
             _LSH_TABLES,
         )

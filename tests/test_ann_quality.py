@@ -59,7 +59,7 @@ def test_default_lsh_config_recall(corpus, truth):
     be self-consistent: recall@10 ≥ 0.8 (measured ≈ 0.905 at the 16×4-bit
     default promoted in r6 — 8×4 measured 0.645; threshold leaves noise
     margin)."""
-    from data_lakes_tp2_student_spark.catalog.llm_ops import (
+    from data_lakes_tp2_student_spark.catalog.near_dup import (
         _LSH_PLANES,
         _LSH_TABLES,
     )
@@ -98,7 +98,7 @@ def test_semdedup_neighbor_recall(corpus):
     exact, so a flagged dup that is not a true dup is always a bug."""
     import numpy as np
 
-    from data_lakes_tp2_student_spark.catalog.llm_ops5 import _SEM_THRESHOLD
+    from data_lakes_tp2_student_spark.catalog.near_dup import _SEM_THRESHOLD
     from data_lakes_tp2_student_spark.operators.similarity import semdedup
 
     pdf = corpus.toPandas().sort_values("vec_id")
@@ -127,7 +127,7 @@ def test_default_lsh_candidate_fraction_pinned(corpus):
     (scripts/ann_operating_points.py, PERF.md #68) — the ceiling fails
     loudly if a parameter change silently buys recall with even more
     shuffle volume."""
-    from data_lakes_tp2_student_spark.catalog.llm_ops import (
+    from data_lakes_tp2_student_spark.catalog.near_dup import (
         _LSH_PLANES,
         _LSH_TABLES,
     )
@@ -149,7 +149,7 @@ def test_ivf_dominates_lsh_on_candidate_fraction(corpus):
     rests on a measured dominance: at comparable recall (0.805 vs 0.905),
     IVF scores ≤ 1/4 the candidates the default LSH point does.
     Pinning the ratio keeps the guidance honest if either side drifts."""
-    from data_lakes_tp2_student_spark.catalog.llm_ops import (
+    from data_lakes_tp2_student_spark.catalog.near_dup import (
         _LSH_PLANES,
         _LSH_TABLES,
     )

@@ -4,7 +4,7 @@ actually splits the hot partition (the executed SortMergeJoin node is
 marked `skew=true`), plus the negative control (skewJoin disabled → no
 skew handling) so the assertion is caused by the feature, not the data.
 
-When manual salting (x7/x7b, catalog/relational3.py) still beats AQE:
+When manual salting (x7/x7b, catalog/relational.py) still beats AQE:
 
 - **Skewed AGGREGATIONS.** AQE skew handling only rewrites shuffle JOIN
   partitions; a hot groupBy key still lands in one task — x7's two-phase

@@ -23,11 +23,9 @@ import datetime
 import pytest
 from pyspark.sql import Window, functions as F
 
-from data_lakes_tp2_student_spark.catalog.analytics import (
-    e3c_ntile_buckets,
-    x16_pmi_cooccurrence,
-)
-from data_lakes_tp2_student_spark.catalog.relational4 import x6_tpch_q21
+from data_lakes_tp2_student_spark.catalog.analytics import x16_pmi_cooccurrence
+from data_lakes_tp2_student_spark.catalog.relational import e3c_ntile_buckets
+from data_lakes_tp2_student_spark.catalog.tpch import x6_tpch_q21
 
 
 def _rows(df):

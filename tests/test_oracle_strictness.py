@@ -116,24 +116,24 @@ _VALUE_MUTATIONS = {
     # ONLY the hash can catch it)
     "d3_group_sizes": "SELECT source, n + 1 AS n FROM ({o}) t",  # stats
     "x6_tpch_q6": "SELECT revenue + 1 AS revenue FROM ({o}) t",  # relational
-    "i1_tumbling_window": (  # events_windows
+    "i1_tumbling_window": (  # streaming
         "SELECT window_start, event_type, n, sum_value + 0.5 AS sum_value "
         "FROM ({o}) t"
     ),
-    "x4_term_frequency": "SELECT word, tf + 1 AS tf FROM ({o}) t",  # llm_ops
-    "f1_sort": "SELECT n_name, pos + 1 AS pos FROM ({o}) t",  # extras
+    "x4_term_frequency": "SELECT word, tf + 1 AS tf FROM ({o}) t",  # corpus
+    "f1_sort": "SELECT n_name, pos + 1 AS pos FROM ({o}) t",  # relational
     # round-7 (VERDICT r6 item 2): the round-6 modules route through
     # FILESYSTEM state (manifest log + txn data dirs) and mapInPandas
     # walkers — the most novel failure surfaces; prove the gate fails on
     # a value nudge there too. DuckDB's `* REPLACE` keeps the schema
     # identical so ONLY the hash can catch these.
-    "x52_snapshot_upsert": (  # llm_ops6: full commit->read manifest path
+    "x52_snapshot_upsert": (  # lake: full commit->read manifest path
         "SELECT * REPLACE (o_totalprice + 1 AS o_totalprice) FROM ({o}) t"
     ),
-    "x54_change_data_feed": (  # llm_ops6: snapshot_diff CDF path
+    "x54_change_data_feed": (  # lake: snapshot_diff CDF path
         "SELECT * REPLACE (o_totalprice + 1 AS o_totalprice) FROM ({o}) t"
     ),
-    "x56_zorder_skipping_read": (  # llm_ops6: zorder + file-skipping read
+    "x56_zorder_skipping_read": (  # lake: zorder + file-skipping read
         "SELECT * REPLACE (o_totalprice + 1 AS o_totalprice) FROM ({o}) t"
     ),
     "x5k_mp3_metadata": (  # media_containers: MP3 frame walk
@@ -144,7 +144,7 @@ _VALUE_MUTATIONS = {
     ),
     # round-8 (VERDICT r7 item 3): the two new filesystem/binary-path
     # queries whose failure modes the earlier canaries don't exercise.
-    "x57_restore_rollback": (  # llm_ops6: RESTORE moved the head — a
+    "x57_restore_rollback": (  # lake: RESTORE moved the head — a
         # value nudge distinguishes "read the restored v0" from "read
         # anything else"; only the hash can catch it
         "SELECT * REPLACE (o_totalprice + 1 AS o_totalprice) FROM ({o}) t"
@@ -337,7 +337,7 @@ def test_lifecycle_mutation_fails_gate(spark, name):
     - x57: a restore that fails to move the head back, leaving the
       "bad deploy" merge in place.
     """
-    from data_lakes_tp2_student_spark.catalog.llm_ops6 import _X8_ORACLE
+    from data_lakes_tp2_student_spark.catalog.lake import _X8_ORACLE
 
     template = {
         "i14_stream_lake_source": (

@@ -340,7 +340,7 @@ def test_no_cartesian_product_anywhere_in_registry(spark):
         "x4d_tfidf_topk",
         "x6_tpch_q11",
         "x6_tpch_q22",
-        # round 8: the derived partsupp (catalog/partsupp.py) brings in
+        # round 8: the derived partsupp (catalog/tpch.py:partsupp) brings in
         # the 1-row supplier-count scalar broadcast (its only NLJ)
         "x6_tpch_q2",
         "x6_tpch_q9",
