@@ -654,7 +654,6 @@ def x65_dsv2_batch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: planning is driver-side O(files) over JSON; at 100 TB
     the partition+stats prune is the difference between scanning a
     day's files and scanning the table."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register_manifest_formats(spark)
     root = scratch_dir("snapshots", "x65", sf_dir)
     table = ManifestTable(root, stats_cols=["o_orderkey"])
@@ -684,7 +683,6 @@ def x66_dsv2_batch_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders` proves the executor-written files carry every row, partition
     values land in the Hive path (not the file) and are re-derived on
     read, and the two halves union to exactly the input."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     register_manifest_formats(spark)
     root = scratch_dir("snapshots", "x66", sf_dir)
     orders = load(spark, sf_dir, "orders")

@@ -86,7 +86,7 @@ def _open_table(options: dict) -> ManifestTable:
     need only `path`; an `s3://bucket/prefix` path builds an S3LogStore
     from `endpoint`/`access_key`/`secret_key`/`region`/`cache_dir`."""
     if "path" not in options:
-        # Measured Spark 4.1 behavior (round 9): a catalog table
+        # Measured Spark 4.1 behavior: a catalog table
         # (`CREATE TABLE ... USING manifest OPTIONS (path ...)`) passes
         # its OPTIONS to the first DataSource instantiation (schema
         # inference) but re-instantiates with EMPTY options for the
@@ -150,10 +150,7 @@ def _resolve_version(table: ManifestTable, options: dict) -> int:
 
             ts = datetime.fromisoformat(ts).timestamp()
         return table.version_at(ts)
-    latest = table.latest_version()
-    if latest is None:
-        raise FileNotFoundError(f"no committed version at {table.root}")
-    return latest
+    return table._require_latest()
 
 
 def _nullable(schema: StructType) -> StructType:
@@ -174,7 +171,7 @@ def _project(arrow_table, want, partition: dict | None = None, mapping: dict | N
     data files don't store them — a plain file read would return them
     null), and null-pad columns the (older, pre-evolution) file predates
     — the same contract as ManifestTable.read()'s mergeSchema scan.
-    `mapping` (logical→physical, round-9 column mapping) resolves each
+    `mapping` (logical→physical column mapping) resolves each
     logical field to the physical column name the file stores; identity
     when absent. Partition columns are always identity-mapped."""
     import pyarrow as pa
@@ -204,15 +201,14 @@ def pack_by_size(sizes: list) -> list[list[int]]:
     min(maxPartitionBytes, max(openCost, totalCost/parallelism)). Big
     tables split at 128 MB like a native scan; small many-file tables
     spread across the available cores instead of one Python-worker
-    round-trip per file. `sizes` entries may be None (legacy manifest
-    entries without `bytes`), costed at openCost like Spark costs
-    unknown small files. Parallelism proxy: SPARK_GRAFT_CPUS (this runs
+    round-trip per file. Each file costs its size plus openCost, as in
+    Spark. Parallelism proxy: SPARK_GRAFT_CPUS (this runs
     in a driver-side Python worker with no JVM gateway, so
     sc.defaultParallelism is unreachable), falling back to the
     machine's cores."""
     open_cost = 4 * 1024 * 1024  # Spark's files.openCostInBytes
     max_part = 128 * 1024 * 1024  # Spark's files.maxPartitionBytes
-    costs = [(s or open_cost) + open_cost for s in sizes]
+    costs = [s + open_cost for s in sizes]
     par = max(
         1, int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     )
@@ -268,7 +264,7 @@ def _plan(store, entries: list[dict], mapping: dict) -> list[_ScanPartition]:
     ]
     return [
         _ScanPartition(*files[b[0]], mapping, more=tuple(files[i] for i in b[1:]))
-        for b in pack_by_size([e.get("bytes") for e in entries])
+        for b in pack_by_size([e["bytes"] for e in entries])
     ]
 
 
@@ -347,7 +343,7 @@ class _CommitEntries(WriterCommitMessage):
 # escapes (verified empirically: '=' -> %3D, 'café' stays RAW). Using
 # urllib.quote here instead would percent-encode non-ASCII as UTF-8
 # bytes, which Spark's partition discovery decodes char-by-char into
-# mojibake ('café' read back as 'cafÃ©' — round-8 review find).
+# mojibake ('café' read back as 'cafÃ©').
 _PATH_ESCAPE = (
     set('"#%\'*/:=?\\{[]^')
     | {chr(i) for i in range(0x20)}
@@ -385,12 +381,13 @@ def _escape_path_value(v: str) -> str:
 
 class _StagedWriterBase:
     """Shared machinery of the batch and STREAMING manifest writers:
-    option parsing, the executor-side Arrow→parquet staging write, and
-    the sessionless DuckDB constraint validation."""
+    option parsing, the executor-side Arrow→parquet staging write, the
+    sessionless DuckDB constraint validation, and the publish
+    sequence (`_publish`)."""
 
     def _init_common(self, schema: StructType, options: dict, overwrite: bool):
         table = _open_table(options)
-        # Object-store roots (round 10, VERDICT r9 item 3): each executor
+        # Object-store roots: each executor
         # task stages its parquet in a task-local temp dir and PUTs the
         # files itself to the table's txn prefix — data never moves
         # through the driver; the driver's commit() publishes the same
@@ -424,7 +421,7 @@ class _StagedWriterBase:
             raise ValueError(
                 "column name 'txn' is reserved by the manifest layout"
             )
-        # column-mapped tables (VERDICT r10 item 3): files store
+        # column-mapped tables: files store
         # PHYSICAL column names. The mapping is resolved ONCE here at
         # writer construction (new logical columns get fresh physical
         # names, same rule as the native path) and rides the pickled
@@ -450,7 +447,7 @@ class _StagedWriterBase:
         )
         self._options = dict(options)
         # never let a read-side catalog stash ride into the committed
-        # table schema (ADVICE r10: wrong-table recovery on re-CREATE)
+        # table schema (a re-CREATE would recover the wrong table)
         self._schema = _strip_stash(self._schema)
         return table, base
 
@@ -539,7 +536,7 @@ class _StagedWriterBase:
 
                 # fast path — a repartitioned/sorted write usually has
                 # ONE partition value per batch: detect it Arrow-native
-                # (no per-row Python materialization, round-8 review)
+                # (no per-row Python materialization)
                 uniq = [pc.unique(t[c]) for c in self._partition_by]
                 if all(len(u) == 1 for u in uniq):
                     groups = {tuple(u[0].as_py() for u in uniq): t}
@@ -593,7 +590,7 @@ class _StagedWriterBase:
         (Hive layout keeps them out of the file), CAST to the written
         column's type — a raw varchar would make e.g. a numeric
         comparison lexicographic in DuckDB while Spark's path compares
-        numerically, letting a violating row through (ADVICE r8). FAIL
+        numerically, letting a violating row through. FAIL
         CLOSED: an expression DuckDB cannot evaluate aborts the commit
         rather than skipping the check — commit such tables via
         ManifestTable.commit_append."""
@@ -648,6 +645,62 @@ class _StagedWriterBase:
                         f"{name} ({expr})"
                     )
 
+    def _publish(
+        self, table: ManifestTable, txn, entries: list[dict], base,
+        base_cons: dict, version, drop,
+    ) -> bool:
+        """Publish the staged `entries` as ONE commit. In order: a
+        `txnAppId` token at `version` the log already holds drops the
+        staging and commits nothing (before validation, so a redelivered
+        batch is skipped, not re-validated); a CHECK violation drops the
+        staging and raises; `_commit_files` publishes, and a concurrent
+        commit of the same token (its in-loop guard) drops the staging.
+        `base`/`base_cons` are the conflict anchor and constraint set the
+        input was derived from; `drop()` deletes this commit's staging.
+        Returns False when the token pre-check skipped the commit."""
+        from .manifest import CheckConstraintViolation, TxnAlreadyCommitted
+
+        token = (self._app, version) if self._app is not None else None
+        if token is not None:
+            last = table.last_txn_version(self._app)
+            if last is not None and last >= version:
+                drop()
+                return False
+        if base_cons and entries:
+            try:
+                self._validate_with_duckdb(table, entries, base_cons)
+            except CheckConstraintViolation:
+                drop()
+                raise
+        try:
+            table._commit_files(
+                None,
+                txn,
+                entries,
+                self._schema.json(),
+                self._partition_by or None,
+                "overwrite" if self._overwrite else "append",
+                "all" if self._overwrite else "none",
+                base,
+                base_cons,
+                validate=False,
+                entry_extra=(
+                    {"txn": {"app": self._app, "version": version}}
+                    if token is not None
+                    else None
+                ),
+                txn_guard=token,
+                # mapped tables: publish the writer's mapping; the commit
+                # loop compares the parent's mapping against
+                # base_mapping, so a rename landing after the files were
+                # staged under stale physicals FAILS LOUD
+                column_mapping=self._mapping,
+                base_mapping=self._base_mapping,
+            )
+        except TxnAlreadyCommitted:
+            drop()
+        return True
+
 
 class ManifestBatchWriter(_StagedWriterBase, DataSourceArrowWriter):
     """Executors stream Arrow batches into per-(task, partition-value)
@@ -689,26 +742,15 @@ class ManifestBatchWriter(_StagedWriterBase, DataSourceArrowWriter):
         return self._stage, rel
 
     def commit(self, messages):
-        from .manifest import CheckConstraintViolation, TxnAlreadyCommitted
-
         table = _open_table(self._options)
         entries = [
             e for m in messages if m is not None for e in m.entries
         ]
-        if self._app is not None:
-            last = table.last_txn_version(self._app)
-            if last is not None and last >= self._app_version:
-                # this job version already committed: drop the duplicate
-                # staging, publish nothing (re-checked race-free inside
-                # the publish loop via txn_guard)
-                self._drop_txn(table)
-                return
         # a retried/speculative task may have left PARTIAL files in the
         # shared stage dir before its successful attempt's message won —
         # once committed, the txn dir is live and vacuum (txn-dir
         # granular) would never reap them; remove everything the commit
-        # messages don't reference (round-8 review find). On S3 the
-        # analogue is a completed-but-losing attempt's uploaded objects
+        # messages don't reference. On S3 the analogue is a completed-but-losing attempt's uploaded objects
         # (half-written files never upload — write() PUTs only at the
         # end): one LIST over the txn prefix, delete the unreferenced.
         referenced = {e["path"] for e in entries}
@@ -739,45 +781,10 @@ class ManifestBatchWriter(_StagedWriterBase, DataSourceArrowWriter):
                         os.rmdir(dirpath)
                     except OSError:
                         pass
-        if self._base_cons and entries:
-            try:
-                self._validate_with_duckdb(table, entries, self._base_cons)
-            except CheckConstraintViolation:
-                table.store.delete_txn_dir(f"txn={self._txn}")
-                raise
-        try:
-            table._commit_files(
-                None,
-                self._txn,
-                entries,
-                self._schema.json(),
-                self._partition_by or None,
-                "overwrite" if self._overwrite else "append",
-                "all" if self._overwrite else "none",
-                self._base,
-                self._base_cons,
-                validate=False,
-                entry_extra=(
-                    {"txn": {"app": self._app, "version": self._app_version}}
-                    if self._app is not None
-                    else None
-                ),
-                txn_guard=(
-                    (self._app, self._app_version)
-                    if self._app is not None
-                    else None
-                ),
-                # mapped tables: publish the construction-time mapping;
-                # the commit loop's gate compares the parent's mapping
-                # against base_mapping, so a rename landing after our
-                # files were staged under stale physicals FAILS LOUD
-                column_mapping=self._mapping,
-                base_mapping=self._base_mapping,
-            )
-        except TxnAlreadyCommitted:
-            # a concurrent writer with the same token won the race
-            # between our pre-check and the publish — drop the duplicate
-            self._drop_txn(table)
+        self._publish(
+            table, self._txn, entries, self._base, self._base_cons,
+            self._app_version, lambda: self._drop_txn(table),
+        )
 
     def _drop_txn(self, table: ManifestTable) -> None:
         try:
@@ -828,70 +835,28 @@ class ManifestStreamWriter(_StagedWriterBase, DataSourceStreamArrowWriter):
                 pass  # already gone — cleanup is best-effort
 
     def commit(self, messages, batchId: int):
-        from .manifest import CheckConstraintViolation, TxnAlreadyCommitted
-
         table = _open_table(self._options)
         entries = [
             e for m in messages if m is not None for e in m.entries
         ]
-        if self._app is not None:
-            last = table.last_txn_version(self._app)
-            if last is not None and last >= batchId:
-                # a redelivered batch the log already holds: drop the
-                # freshly staged duplicates, commit nothing (re-checked
-                # race-free inside the publish loop via txn_guard)
-                self._drop_staged(table, entries)
-                return
+        # the conflict base is per batch, but base_mapping starts as the
+        # CONSTRUCTION-time mapping: a rename landing mid-stream makes
+        # this batch's staged physicals stale and the commit fails loud
         base = table.latest_version()
         base_cons = (
             table._constraints_of(table._raw(base)) if base is not None else {}
         )
-        if base_cons and entries:
-            try:
-                self._validate_with_duckdb(table, entries, base_cons)
-            except CheckConstraintViolation:
-                self._drop_staged(table, entries)
-                raise
-        try:
-            table._commit_files(
-                None,
-                None,
-                entries,
-                self._schema.json(),
-                self._partition_by or None,
-                "overwrite" if self._overwrite else "append",
-                "all" if self._overwrite else "none",
-                base,
-                base_cons,
-                validate=False,
-                entry_extra=(
-                    {"txn": {"app": self._app, "version": batchId}}
-                    if self._app is not None
-                    else None
-                ),
-                txn_guard=(
-                    (self._app, batchId) if self._app is not None else None
-                ),
-                # base here is per-batch but base_mapping is the
-                # CONSTRUCTION-time mapping: a rename landing mid-stream
-                # makes this batch's staged physicals stale — the gate
-                # compares the parent's mapping against it and fails loud
-                column_mapping=self._mapping,
-                base_mapping=self._base_mapping,
-            )
-            # once batch 1 publishes an EXTENDED mapping (the stream
+        published = self._publish(
+            table, None, entries, base, base_cons, batchId,
+            lambda: self._drop_staged(table, entries),
+        )
+        if published and self._mapping is not None:
+            # once a batch publishes an EXTENDED mapping (the stream
             # added a logical column → fresh physical), later batches
             # must expect the extension at the parent, not the
-            # construction-time map — without this, batch 2 would
+            # construction-time map — otherwise batch 2 would
             # spuriously conflict against batch 1's own commit
-            # (round-11 review)
-            if self._mapping is not None:
-                self._base_mapping = self._mapping
-        except TxnAlreadyCommitted:
-            # duplicate batch: the log already holds this mapping too
-            self._drop_staged(table, entries)
-            if self._mapping is not None:
-                self._base_mapping = self._mapping
+            self._base_mapping = self._mapping
 
     def abort(self, messages, batchId: int):
         table = _open_table(self._options)
@@ -921,7 +886,7 @@ def _strip_stash(st: StructType) -> StructType:
     a READ-side channel only; letting it ride a written schema means a
     df read from catalog table A and written to table B embeds A's path
     in B's logged schema, and a later CREATE TABLE over B would recover
-    A's options — scans of B silently reading A (ADVICE r10)."""
+    A's options — scans of B silently reading A."""
     if not any(_CATALOG_STASH_KEY in (f.metadata or {}) for f in st.fields):
         return st
     from pyspark.sql.types import StructField
@@ -948,7 +913,7 @@ class ManifestDataSource(DataSource):
     `spark.read.format("manifest")` / `df.write.format("manifest")`.
 
     SQL catalog tables (`CREATE TABLE t USING manifest OPTIONS (path
-    ...)`) work through a measured Spark 4.1 quirk (VERDICT r9 item 4):
+    ...)`) work through a measured Spark 4.1 quirk:
     the API forwards OPTIONS to the CREATE-time `schema()` call but
     re-instantiates with EMPTY options for every later scan/insert. The
     catalog does persist the schema, field metadata included — so

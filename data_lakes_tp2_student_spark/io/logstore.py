@@ -2,14 +2,11 @@
 
 The manifest layer needs exactly one hard primitive — ATOMIC PUT-IF-ABSENT
 of the next log entry — plus a handful of soft ones (list, read, delete,
-data-file enumeration). Round 7 hard-coded those to the local filesystem
-(os.link / os.walk) and rejected object-store roots outright; this module
-factors them behind a `LogStore` interface so the same commit protocol
-runs against either backend (VERDICT r7 item 1):
+data-file enumeration). This module factors them behind a `LogStore`
+interface so the same commit protocol runs against either backend:
 
-- **LocalLogStore** — the round-7 behavior, verbatim: `os.link` is the
-  POSIX/HDFS rename-no-overwrite primitive, `os.walk` enumerates data
-  files, reads are direct paths.
+- **LocalLogStore** — `os.link` is the POSIX/HDFS rename-no-overwrite
+  primitive, `os.walk` enumerates data files, reads are direct paths.
 - **S3LogStore** — the public S3 conditional-write primitive:
   `PutObject` with `If-None-Match: *` fails with HTTP 412
   `PreconditionFailed` when the key already exists (generally available
@@ -75,7 +72,7 @@ class LogStore(ABC):
     def delete_logs(self, names: list[str]) -> None:
         """Bulk log removal — default loops delete_log; S3 batches
         (vacuum truncating 10^4 entries is otherwise 10^4 DELETE
-        round-trips, round 9 soak)."""
+        round-trips, scripts/soak_manifest.py)."""
         for name in names:
             self.delete_log(name)
 
@@ -111,8 +108,8 @@ class LogStore(ABC):
         commit-in-progress guard); return the removed dir names. This
         default composes the per-dir primitives; backends where each
         primitive is a network round-trip override it with a
-        single-pass scan (S3: 3 LISTs per dead dir otherwise — round 9
-        soak, PERF.md #46)."""
+        single-pass scan (S3: 3 LISTs per dead dir otherwise, PERF.md
+        #46)."""
         removed = []
         for name in self.list_txn_dirs():
             if name not in live:
@@ -131,18 +128,12 @@ class LogStore(ABC):
         one txn dir — vacuum's DEEP sweep uses this to find zombie
         objects inside LIVE (committed) txn dirs: a speculative task
         whose PUTs land after the commit's pre-publish LIST leaves
-        unreferenced keys the dir-granular sweep never reaps (ADVICE
-        r10)."""
+        unreferenced keys the dir-granular sweep never reaps."""
 
     @abstractmethod
     def delete_files(self, rels: list[str]) -> None:
         """Remove individual data files by table-relative path (deep
         vacuum's zombie reap)."""
-
-    @abstractmethod
-    def file_size(self, rel: str) -> int:
-        """Size in bytes of one data file (legacy entries without a
-        recorded `bytes`; new commits store it in the manifest)."""
 
     # ---- reads ----
 
@@ -159,8 +150,8 @@ class LogStore(ABC):
 
 
 class LocalLogStore(LogStore):
-    """Round-7 local-filesystem behavior, unchanged: hard-link
-    put-if-absent, os.replace checkpoints, os.walk enumeration."""
+    """The local filesystem: hard-link put-if-absent, os.replace
+    checkpoints, os.walk enumeration."""
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -205,8 +196,7 @@ class LocalLogStore(LogStore):
         finally:
             # os.replace consumes tmp on success; on ANY failure (ENOSPC
             # write, failed replace) unlink it — vacuum never removes
-            # non-v* names, so a leaked temp would live forever
-            # (ADVICE r7).
+            # non-v* names, so a leaked temp would live forever.
             if os.path.exists(tmp):
                 os.unlink(tmp)
 
@@ -278,9 +268,6 @@ class LocalLogStore(LogStore):
                 except OSError:
                     break
                 d = os.path.dirname(d)
-
-    def file_size(self, rel: str) -> int:
-        return os.path.getsize(os.path.join(self.root, rel))
 
     def resolve_read(self, rels: list[str]) -> tuple[str, list[str]]:
         return self.root, [os.path.join(self.root, r) for r in rels]
@@ -399,7 +386,7 @@ class S3LogStore(LogStore):
             # it won, so re-list and resolve the same way.
             if code not in ("PreconditionFailed", "ConditionalRequestConflict"):
                 raise
-            # Self-conflict guard (ADVICE r8): boto3 transparently
+            # Self-conflict guard: boto3 transparently
             # retries PUTs on network errors. If the FIRST attempt
             # landed but its 200 response was lost, the retry gets 412
             # against our OWN just-created entry — reporting that as a
@@ -482,7 +469,7 @@ class S3LogStore(LogStore):
             )
 
     def sweep_dead_txn_dirs(self, live: set, min_age_seconds: float) -> list[str]:
-        """Single-pass vacuum sweep (round 9 soak): ONE paginated LIST
+        """Single-pass vacuum sweep: ONE paginated LIST
         over the data area yields every dir's key set and newest
         LastModified, then dead keys delete in cross-dir batches of
         1000 — O(objects/1000) round-trips instead of 3 LISTs + 1
@@ -533,11 +520,6 @@ class S3LogStore(LogStore):
                 os.unlink(os.path.join(self.cache_root, rel))
             except OSError:
                 pass
-
-    def file_size(self, rel: str) -> int:
-        return self.client.head_object(
-            Bucket=self.bucket, Key=self._rel_key(rel)
-        )["ContentLength"]
 
     # ---- reads ----
 

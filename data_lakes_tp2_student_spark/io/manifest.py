@@ -17,7 +17,7 @@ reduced to its load-bearing core:
   so Spark's own partition discovery parses the layout — the reader is a
   vanilla `spark.read.option("basePath", root).parquet(*files)`, no custom
   relation needed; the synthetic `txn` column is dropped after read.)
-- **The log is incremental (round 7; VERDICT r6 item 1b).** Each
+- **The log is incremental.** Each
   `_manifest/v{N}.json` records only this commit's DELTA: the files it
   ADDS plus a remove spec (`none` for append, `all` for overwrite-style
   commits, the touched partition values for replace_partitions) — the
@@ -28,14 +28,18 @@ reduced to its load-bearing core:
   after every `checkpoint_interval`-th version, whatever kind of commit
   produced it, and by vacuum), so commit cost is O(Δfiles) and
   reconstruction cost is O(Δ since last checkpoint), never O(table
-  files) per commit. Legacy `v{N}.checkpoint.json` files still read.
+  files) per commit.
+- **One entry format, enforced at commit.** Every entry carries the
+  cumulative `table_schema`, and every file entry its `path`,
+  `partition`, `bytes` and `rows`; `_commit_files` refuses a commit
+  that breaks this, so no reader guesses at a missing field.
 - **Commit = atomic put-if-absent of the next log entry.** The entry is
   staged to a temp name and published with `os.link` (hard link), which
   fails with EEXIST if some other writer won the version — the HDFS-style
   rename-no-overwrite primitive. (On S3 proper this single primitive is
   what a DynamoDB/conditional-put LogStore supplies; everything else is
   unchanged.)
-- **Losers rebase OR abort (round 7; VERDICT r6 item 1a).** An append
+- **Losers rebase OR abort.** An append
   commutes with anything: the loser re-derives the next version number
   and retries — no lost updates. A `replace_partitions` whose base
   version is stale ABORTS with `ConcurrentWriteConflict` if any
@@ -49,7 +53,7 @@ reduced to its load-bearing core:
   write but before the log-entry link leaves only an orphan txn dir;
   readers never see it, and `vacuum()` removes any txn dir no retained
   snapshot references once a later commit (or none) lands.
-- **Schema changes fail at commit, not at read (round 7; ADVICE r6).**
+- **Schema changes fail at commit, not at read.**
   A commit that retains parent files (append / replace_partitions) must
   keep every shared column's type — otherwise the commit would succeed
   and every later read would throw inside the mergeSchema parquet scan.
@@ -59,14 +63,13 @@ Scale notes: a checkpoint is O(files) but amortized over
 `checkpoint_interval` commits; partition pruning and file skipping work
 against the reconstructed manifest BEFORE Spark lists anything.
 
-Storage backends (round 8; VERDICT r7 item 1): every filesystem touch
-goes through a `LogStore` (io/logstore.py) — `LocalLogStore` (os.link
-put-if-absent, the round-7 behavior, default for plain paths) or
-`S3LogStore` (S3 conditional put `If-None-Match: *`, object listing),
-so the SAME commit/conflict/vacuum protocol runs against a local dir or
-an S3 bucket. A bare `s3a://` root without an explicit LogStore is still
-rejected at construction (ADVICE r6: it would silently publish empty
-manifests) — construct `S3LogStore` and pass it instead.
+Storage backends: every filesystem touch goes through a `LogStore`
+(io/logstore.py) — `LocalLogStore` (os.link put-if-absent, default for
+plain paths) or `S3LogStore` (S3 conditional put `If-None-Match: *`,
+object listing), so the SAME commit/conflict/vacuum protocol runs
+against a local dir or an S3 bucket. A bare `s3a://` root without an
+explicit LogStore is rejected at construction (it would silently
+publish empty manifests) — construct `S3LogStore` and pass it instead.
 """
 
 from __future__ import annotations
@@ -94,6 +97,8 @@ from .prune import (
 )
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+# the fields every committed file entry records (see `_commit_files`)
+_FILE_KEYS = ("path", "partition", "bytes", "rows")
 
 
 class ConcurrentWriteConflict(RuntimeError):
@@ -223,7 +228,7 @@ def _file_stats(path: str, cols: list[str]) -> dict[str, list]:
     footers exclude NaN from min/max while Spark orders NaN GREATER
     than every value, so a [min, max] that ignores NaN would let
     `col > hi` prune a file whose NaN rows qualify — a silently wrong
-    answer (round-8 review find). The NaN probe reads just that column
+    answer. The NaN probe reads just that column
     once at commit time; NaN-free float columns keep full skipping."""
     import pyarrow.parquet as pq
 
@@ -252,10 +257,7 @@ def _file_stats(path: str, cols: list[str]) -> dict[str, list]:
             else:
                 # probe row group by row group with early exit — bounds
                 # the commit-time cost to one row group in memory and
-                # usually exits on the first NaN (review wave 2). NOTE:
-                # tables committed by pre-round-8 builds may carry float
-                # stats recorded WITHOUT this probe — re-commit
-                # (compact()) refreshes them.
+                # usually exits on the first NaN
                 for rg in range(md.num_row_groups):
                     vals = pf.read_row_group(rg, columns=[c])[c]
                     if pc.any(pc.is_nan(vals)).as_py():
@@ -310,12 +312,9 @@ def _txn_dir_of(rel: str) -> str | None:
     """The txn DIRECTORY (`data/txn=<id>`) a manifest-relative data path
     belongs to, or None for loose/non-standard paths. This is THE
     grouping rule shared by `_coalesce_dirs` (which collapses per-file
-    scan paths into dirs) and `_load_snapshot`'s DV branch split (which
-    must split at exactly the same granularity — ADVICE r14: the two
-    previously duplicated the rule inline, so editing one without the
-    other would silently desynchronize the split from coalescing and
-    reintroduce the r13 per-file-path planning regression without a
-    loud failure)."""
+    scan paths into dirs) and `_load_snapshot`'s DV branch split, which
+    must split at exactly the same granularity: a split that disagrees
+    with coalescing silently falls back to per-file scan paths."""
     parts = rel.split("/")
     if len(parts) >= 3 and parts[0] == "data" and parts[1].startswith("txn="):
         return "/".join(parts[:2])
@@ -396,36 +395,27 @@ class ManifestTable:
     def versions(self) -> list[int]:
         out = []
         for name in self.store.list_log():
-            if (
-                name.startswith("v")
-                and name.endswith(".json")
-                and not name.endswith(".checkpoint.json")
-            ):
+            if name.startswith("v") and name.endswith(".json"):
                 try:
                     out.append(int(name[1:-5]))
                 except ValueError:
                     continue
         return sorted(out)
 
-    def _checkpoint_files(self) -> dict[str, int]:
-        """{log name: version} of every checkpoint file, columnar or
-        legacy JSON."""
-        out = {}
-        for name in self.store.list_log():
-            for suf in (".checkpoint.parquet", ".checkpoint.json"):
-                if name.endswith(suf) and name.startswith("v"):
-                    try:
-                        out[name] = int(name[1 : -len(suf)])
-                    except ValueError:
-                        pass
-        return out
-
     def checkpoints(self) -> list[int]:
-        return sorted(set(self._checkpoint_files().values()))
+        suf = ".checkpoint.parquet"
+        out = []
+        for name in self.store.list_log():
+            if name.startswith("v") and name.endswith(suf):
+                try:
+                    out.append(int(name[1 : -len(suf)]))
+                except ValueError:
+                    continue
+        return sorted(out)
 
     def latest_version(self) -> int | None:
-        """The newest committed version. O(Δ) warm (round 9, soak
-        finding): the first call per handle lists the retained log; later
+        """The newest committed version. O(Δ) warm: the first call per
+        handle lists the retained log; later
         calls probe FORWARD from the highest version this handle has seen
         (versions are contiguous by construction — parent+1 under
         put-if-absent), so a busy writer pays per-commit cost
@@ -462,48 +452,43 @@ class ManifestTable:
         self._version_hint = latest
         return latest
 
+    def _require_latest(self) -> int:
+        """`latest_version()`, or FileNotFoundError on a table with no
+        committed version."""
+        latest = self.latest_version()
+        if latest is None:
+            raise FileNotFoundError(f"no committed version at {self.root}")
+        return latest
+
     def _raw(self, version: int) -> dict:
-        """The raw log entry for `version` — a DELTA (add + remove spec),
-        or a legacy full-snapshot entry (pre-round-7 format, `files`
-        key), which replays as remove-all + add."""
+        """The raw log entry for `version`: a DELTA (`add` file entries
+        plus a `remove` spec)."""
         return json.loads(self.store.read_log(self._version_name(version)))
 
     @staticmethod
-    def _entry_delta(entry: dict) -> tuple[list[dict], dict]:
-        """(added files, remove spec) of a raw entry, normalizing the
-        legacy full-snapshot format to remove-all semantics."""
-        if "files" in entry:
-            return entry["files"], {"kind": "all"}
-        return entry["add"], entry["remove"]
-
-    @classmethod
-    def _apply(cls, entry: dict, files: list[dict]) -> list[dict]:
+    def _apply(entry: dict, files: list[dict]) -> list[dict]:
         """Replay one log entry over the prior snapshot's file list."""
-        add, remove = cls._entry_delta(entry)
+        remove = entry["remove"]
         if remove["kind"] == "all":
             files = []
         elif remove["kind"] == "partitions":
             touched = {tuple(tuple(kv) for kv in t) for t in remove["values"]}
             files = [e for e in files if _part_key(e["partition"]) not in touched]
         elif remove["kind"] == "files":
-            # row-level DELETE/UPDATE (round 8): copy-on-write replaced
-            # exactly these files; everything else carries over untouched
+            # row-level DELETE/UPDATE: copy-on-write replaced exactly
+            # these files; everything else carries over untouched
             gone = set(remove["values"])
             files = [e for e in files if e["path"] not in gone]
-        return files + add
+        return files + entry["add"]
 
     def _read_checkpoint_body(self, version: int, env: dict | None = None) -> dict:
         """Checkpoint `version`'s body ({version, files[, txns]}): the
-        only checkpoint reader. `env` pre-filters the columnar checkpoint
-        (see `_ckpt_from_parquet`). A legacy `.checkpoint.json`, the
-        default format of tables written before the columnar one, is
-        read whole. Raises FileNotFoundError if neither file exists."""
-        try:
-            b = self.store.read_log(self._checkpoint_name(version))
-        except FileNotFoundError:
-            legacy = f"v{version:020d}.checkpoint.json"
-            return json.loads(self.store.read_log(legacy))
-        return _ckpt_from_parquet(b, env)
+        only checkpoint reader. `env` pre-filters its entries (see
+        `_ckpt_from_parquet`). Raises FileNotFoundError if the checkpoint
+        does not exist."""
+        return _ckpt_from_parquet(
+            self.store.read_log(self._checkpoint_name(version)), env
+        )
 
     def _snapshot_files(self, version: int, env: dict | None = None) -> list[dict]:
         """Reconstruct version N's full file list: nearest checkpoint ≤ N,
@@ -523,15 +508,12 @@ class ManifestTable:
 
     def manifest(self, version: int, prune: Pred | None = None) -> dict:
         """Version N's metadata with its FULL reconstructed file list
-        under `files` (the pre-round-7 full-snapshot shape, now derived
-        from the delta log). Raises FileNotFoundError for vacuumed or
-        never-committed versions. With `prune`, a columnar checkpoint
-        pre-filters the list by the predicate's envelope, so the list
-        may omit files that cannot match: callers treat it as
-        prune-scoped and still apply `keep`."""
+        under `files`, replayed from the delta log. Raises
+        FileNotFoundError for vacuumed or never-committed versions. With
+        `prune`, the checkpoint pre-filters the list by the predicate's
+        envelope, so the list may omit files that cannot match: callers
+        treat it as prune-scoped and still apply `keep`."""
         e = self._raw(version)
-        if "files" in e:
-            return e
         out = {k: v for k, v in e.items() if k not in ("add", "remove")}
         out["files"] = self._snapshot_files(version, envelope(prune, e))
         return out
@@ -625,12 +607,12 @@ class ManifestTable:
         if "txn" in df.columns:
             # reserved: the commit-id path segment is spelled txn=<id> so
             # partition discovery parses the layout; a data column of the
-            # same name would collide on read (review r6)
+            # same name would collide on read
             raise ValueError(
                 "column name 'txn' is reserved by the manifest layout"
             )
         if mapping:
-            # ONE-SHOT relabel (r9 review wave 2): sequential
+            # ONE-SHOT relabel: sequential
             # withColumnRenamed fails with COLUMN_ALREADY_EXISTS when a
             # logical name equals another column's physical target
             # (rename a→c then b→a: mapping {c: a, a: b} — renaming
@@ -660,16 +642,15 @@ class ManifestTable:
     @staticmethod
     def _table_schema_of(entry: dict) -> str:
         """The CUMULATIVE schema json of the snapshot at `entry` — the
-        union of every retained file's columns. Falls back to the
-        commit's own schema for legacy (pre-round-7) entries."""
-        return entry.get("table_schema", entry["schema"])
+        union of every retained file's columns."""
+        return entry["table_schema"]
 
     def _check_schema_compat(self, new_schema, parent_entry: dict) -> str:
         """A retained-file commit must not change a shared column's type:
         the commit would succeed and EVERY later read() would then throw
         inside the mergeSchema scan ('Failed to merge incompatible data
         types') — a successful commit yielding an unreadable latest
-        snapshot (ADVICE r6). Compared against the parent's CUMULATIVE
+        snapshot. Compared against the parent's CUMULATIVE
         table schema, not just its commit schema — a column absent from
         the parent COMMIT may still live in older retained files (added
         in v1, omitted in v2, re-added with a new type in v3 would brick
@@ -708,7 +689,7 @@ class ManifestTable:
         base: int | None,
         parent: int,
     ) -> None:
-        """Serializability gate for a rebasing loser (VERDICT r6 item 1a).
+        """Serializability gate for a rebasing loser.
         `base` is the latest version when this commit started; versions
         base+1..parent landed concurrently. Appends commute (Delta blind
         appends) and never conflict. Overwrite-style commits (remove-all)
@@ -735,7 +716,7 @@ class ManifestTable:
                     f"snapshot-derived commit cannot be rebased — re-read "
                     f"and retry"
                 )
-            other_add, other_remove = self._entry_delta(e)
+            other_add, other_remove = e["add"], e["remove"]
             if other_remove["kind"] in ("all", "files"):
                 raise ConcurrentWriteConflict(
                     f"replace_partitions based on version {base} conflicts "
@@ -836,7 +817,7 @@ class ManifestTable:
         must not collide with the old physical column still in retained
         files). Partition columns stay identity (their names ARE the
         Hive path layout). Shared by the native commit path and the
-        registered DataSource writer (VERDICT r10 item 3)."""
+        registered DataSource writer."""
         mapping = dict(base_map)
         taken = set(mapping.values())
         for name in field_names:
@@ -881,7 +862,17 @@ class ManifestTable:
         executors write Arrow batches straight into the txn dir) and with
         the DV commits, which re-add existing entries. `base`/`base_cons`
         are the conflict anchor and constraint set the INPUT was derived
-        from — capture them before the data write, not here."""
+        from — capture them before the data write, not here. Every file
+        entry must carry `_FILE_KEYS`, or the commit raises ValueError
+        before anything is validated or published."""
+        missing = sorted(
+            {k for e in new_files for k in _FILE_KEYS if k not in e}
+        )
+        if missing:
+            raise ValueError(
+                f"file entries lack {missing}: every committed file entry "
+                f"records {list(_FILE_KEYS)}"
+            )
         # CHECK constraints validate the commit's NEW rows (retained
         # files were validated by their own commits). Validation reads
         # the freshly WRITTEN files back rather than re-running the
@@ -995,7 +986,6 @@ class ManifestTable:
             entry = {
                 "action": action,
                 "partition_by": partition_by or [],
-                "schema": schema_json,
                 "table_schema": table_schema,
                 "add": new_files,
                 "remove": remove,
@@ -1120,15 +1110,15 @@ class ManifestTable:
         see every partition pre-commit or every partition post-commit,
         never a mix. Concurrent writers to DISJOINT partitions both
         land; a concurrent commit touching the SAME partition aborts
-        this commit with ConcurrentWriteConflict (VERDICT r6 item 1a)."""
+        this commit with ConcurrentWriteConflict."""
         return self._commit(df, partition_by, "replace_partitions", "partitions")
 
-    # ---------- CHECK constraints (round 8, Delta ADD CONSTRAINT) ----------
+    # ---------- CHECK constraints (Delta ADD CONSTRAINT) ----------
 
     @staticmethod
     def _constraints_of(entry: dict) -> dict:
         """The cumulative {name: sql} CHECK-constraint map carried by a
-        log entry (absent pre-round-8 entries → none)."""
+        log entry (absent → none)."""
         return entry.get("constraints") or {}
 
     def constraints(self) -> dict:
@@ -1170,9 +1160,7 @@ class ManifestTable:
         commits validated them). Aborts with ConcurrentWriteConflict if
         any commit lands between the validation scan and the publish (a
         racer could have appended violating rows)."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+        latest = self._require_latest()
         p_entry = self._raw(latest)
         cons = dict(self._constraints_of(p_entry))
         if name in cons:
@@ -1185,9 +1173,7 @@ class ManifestTable:
         """ALTER TABLE DROP CONSTRAINT — metadata-only; unknown names
         raise (a silent no-op would mask a typo'd drop before a load of
         bad data)."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+        latest = self._require_latest()
         p_entry = self._raw(latest)
         cons = dict(self._constraints_of(p_entry))
         if name not in cons:
@@ -1197,13 +1183,13 @@ class ManifestTable:
         del cons[name]
         return self._commit_metadata(latest, p_entry, "drop_constraint", cons)
 
-    # ---------- column mapping (round 9, Delta name-mode) ----------
+    # ---------- column mapping (Delta name-mode) ----------
 
     @staticmethod
     def _mapping_of(entry: dict) -> dict | None:
         """The {logical: physical} column-name mapping carried by a log
         entry. None = mapping never enabled on this table (physical
-        names ARE the logical names — every pre-round-9 table). Once
+        names ARE the logical names). Once
         enabled (first rename/drop), EVERY later entry carries the full
         mapping, and physical names are immutable: rename only relabels
         the logical side, so retained data files never rewrite."""
@@ -1241,8 +1227,8 @@ class ManifestTable:
                 )
 
     def rename_column(self, old: str, new: str) -> int:
-        """ALTER TABLE RENAME COLUMN — METADATA-ONLY (VERDICT r8 item 2;
-        Delta's column-mapping name mode): no data file rewrites, at any
+        """ALTER TABLE RENAME COLUMN — METADATA-ONLY (Delta's
+        column-mapping name mode): no data file rewrites, at any
         table size. The first rename/drop enables the mapping with
         identity physical names for every existing column (matching the
         bytes already on disk); the renamed column keeps its physical
@@ -1251,9 +1237,7 @@ class ManifestTable:
         renamed-away logical name can never collide with the old
         physical column still present in retained files. Time travel
         reads every version under its contemporaneous names."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+        latest = self._require_latest()
         p_entry = self._raw(latest)
         schema = StructType.fromJson(json.loads(self._table_schema_of(p_entry)))
         names = [f.name for f in schema.fields]
@@ -1289,9 +1273,7 @@ class ManifestTable:
         are rewritten or vacuumed away). A later column of the same
         logical name is a NEW column (fresh physical) reading NULL for
         pre-add rows — Delta's documented re-add semantics."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+        latest = self._require_latest()
         p_entry = self._raw(latest)
         schema = StructType.fromJson(json.loads(self._table_schema_of(p_entry)))
         names = [f.name for f in schema.fields]
@@ -1338,9 +1320,7 @@ class ManifestTable:
             "action": action,
             "partition_by": base_entry.get("partition_by") or [],
             # a schema-altering metadata commit DECLARES the whole
-            # logical schema (there is no narrower "commit schema" for a
-            # commit that writes no files)
-            "schema": table_schema or base_entry["schema"],
+            # logical schema
             "table_schema": table_schema or self._table_schema_of(base_entry),
             "add": [],
             "remove": {"kind": "none"},
@@ -1374,26 +1354,23 @@ class ManifestTable:
         row-level predicate on the returned DataFrame too (surviving
         files still contain non-matching rows)."""
         if version is None:
-            version = self.latest_version()
-        if version is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+            version = self._require_latest()
         pred = from_dicts(partition_filter, range_filter)
         m = self.manifest(version, prune=pred)
         unknown = set(partition_filter or ()) - set(m.get("partition_by") or ())
         if unknown:
             # a typo'd key would otherwise prune EVERY file and read
-            # as an empty table (review r6) — fail loud instead
+            # as an empty table — fail loud instead
             raise ValueError(
                 f"partition_filter keys {sorted(unknown)} are not "
                 f"partition columns {m['partition_by']} of version {version}"
             )
         # Materialization (shared with the provenance path): project to
-        # the version's CUMULATIVE table schema, not just its COMMIT
-        # schema (ADVICE r7 — an append omitting an existing column must
-        # not drop it), mergeSchema across evolved commits with
-        # pre-evolution rows null-filled, partition-discovery types pinned
-        # back to the committed types, and DELETION VECTORS applied to the
-        # file entries that carry them (round 8 merge-on-read).
+        # the version's CUMULATIVE table schema (an append omitting an
+        # existing column must not drop it), pre-evolution rows
+        # null-filled, partition-discovery types pinned back to the
+        # committed types, and DELETION VECTORS applied to the file
+        # entries that carry them (merge-on-read).
         return self._load_snapshot(spark, m, keep(m, m["files"], pred))
 
     # ---------- table services over the log ----------
@@ -1452,9 +1429,9 @@ class ManifestTable:
         filtered out BEFORE any downstream work."""
         old = self.read(spark, version=v_from)
         new = self.read(spark, version=v_to)
-        # Value columns span BOTH schemas (review r6: diffing across a
-        # schema-evolution boundary used to throw on the column only one
-        # side has); the missing side contributes typed nulls — an added
+        # Value columns span BOTH schemas (diffing across a
+        # schema-evolution boundary must not throw on the column only
+        # one side has); the missing side contributes typed nulls — an added
         # column therefore reads as an update for rows whose new value is
         # non-null, exactly the Delta CDF behavior.
         new_types = {f.name: f.dataType for f in new.schema.fields}
@@ -1502,8 +1479,8 @@ class ManifestTable:
             o["_old_vals"].alias("_old_vals"),
             n["_new_vals"].alias("_new_vals"),
         ).filter(F.col("change_type").isNotNull())
-        # Single pass for both images (review r6: the preimage branch
-        # used to re-run the whole join): each changed row explodes into
+        # Single pass for both images (the preimage does not re-run the
+        # join): each changed row explodes into
         # its image rows — one for inserts/deletes/post, plus the
         # preimage for updates when requested.
         post = F.struct(
@@ -1539,14 +1516,12 @@ class ManifestTable:
         matched → inserted) and the result commits atomically. Returns
         the new version; the pre-merge snapshot stays time-travelable.
 
-        Round 8: routed through the clause-level `merge()` builder
-        (update-all + insert-all), which makes the upsert FILE-SELECTIVE
-        — only files containing matched keys rewrite; the rest of the
-        snapshot carries over by reference, exactly like delete_where.
-        The pre-round-8 form rewrote the whole table every merge (and
-        supported only a single key column; composite keys now join on
-        the conjunction, NULL-safely — a NULL key component never
-        matches, standard SQL join semantics)."""
+        Routed through the clause-level `merge()` builder (update-all +
+        insert-all), which makes the upsert FILE-SELECTIVE — only files
+        containing matched keys rewrite; the rest of the snapshot carries
+        over by reference, exactly like delete_where. Composite keys join
+        on the conjunction; a NULL key component never matches (standard
+        SQL join semantics)."""
         if not key_cols:
             raise ValueError("merge_into requires at least one key column")
         cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in key_cols)
@@ -1599,18 +1574,18 @@ class ManifestTable:
 
     def _coalesce_dirs(self, rels: list[str]) -> list[str]:
         """Collapse per-file scan paths into their txn DIRECTORY when the
-        directory's on-disk parquet content is EXACTLY the live set
-        (round 12 — the per-path driver cost of Spark's file index made
-        full-snapshot frame construction linear-in-files with a ~1 ms
-        constant). Sound by the commit protocol: txn dirs are immutable
+        directory's on-disk parquet content is EXACTLY the live set (the
+        per-path driver cost of Spark's file index makes full-snapshot
+        frame construction linear-in-files with a ~1 ms constant). Sound
+        by the commit protocol: txn dirs are immutable
         once committed (new commits stage into FRESH dirs), so the
         listing cannot race a writer; any mismatch — dead files after a
         CoW rewrite, pre-vacuum zombies, non-parquet droppings — keeps
         that dir's files on the per-file path. Hidden files (`_`/`.`
         prefixes) are excluded from the comparison because Spark's scan
-        ignores them; a VISIBLE non-parquet file is a mismatch (ADVICE
-        r12 — the directory scan would try to read it as parquet and
-        fail the job, so that dir stays on per-file paths). Residual
+        ignores them; a VISIBLE non-parquet file is a mismatch (the
+        directory scan would try to read it as parquet and fail the job,
+        so that dir stays on per-file paths). Residual
         TOCTOU: a post-commit zombie PUT landing between this listing
         and Spark's own directory listing could still inject a phantom
         file into a coalesced dir — same window Spark's native
@@ -1650,19 +1625,16 @@ class ManifestTable:
         table schema, applying DELETION VECTORS: positions recorded in
         the snapshot's DV parquets are removed via ONE broadcast anti-join
         on (file path, `_metadata.row_index`) over the scan of the
-        DV-adjacent txn dirs (round 14). With `provenance`, appends `_rel`
+        DV-adjacent txn dirs. With `provenance`, appends `_rel`
         (manifest-relative file path) and `_pos` (row position within that
         file) — what the copy-on-write rewrite and the DV writer key on.
 
-        Round-14 flattening (VERDICT r13 item 1): the previous shape split
-        files into a plain branch and a DV branch and unioned two scans.
-        That split BROKE `_coalesce_dirs` — a txn dir with even one
-        DV-carrying file no longer list-matched the plain branch's subset,
-        so the plain branch fell back to per-file scan paths (~1 ms of
-        driver-side file-index work EACH): DATAPLANE_r13 measured a
-        16-DV read at 5.7× the plain read at 8192 files, growing with
-        file count. The fix splits at DIRECTORY granularity instead: a
-        txn dir goes to the meta+anti-join branch only when it CONTAINS
+        Files split into a plain branch and a DV branch at DIRECTORY
+        granularity: a file-aligned split would leave a txn dir with even
+        one DV-carrying file straddling the branches, so neither branch
+        list-matches in `_coalesce_dirs` and planning falls back to
+        per-file scan paths (~1 ms of driver-side file-index work EACH).
+        A txn dir goes to the meta+anti-join branch only when it CONTAINS
         a DV-carrying file, whole — so both branches keep directory
         coalescing (O(commits) scan paths), commits untouched by deletes
         read on the byte-identical plain path (no `_metadata`, no
@@ -1683,15 +1655,15 @@ class ManifestTable:
         asked, the plan is byte-identical to the pre-DV read (no
         `_metadata` reference, nothing blocks column pruning)."""
         schema = StructType.fromJson(json.loads(self._table_schema_of(m)))
-        # logical→physical resolution (round 9 column mapping): files
+        # logical→physical resolution (column mapping): files
         # store physical names; the projection relabels to the
         # snapshot's contemporaneous logical names — identity on tables
         # that never renamed/dropped
         mapping = m.get("column_mapping") or {}
-        # round-13 review: StructType.add parses JSON type names — "long",
-        # not "bigint" (the "bigint" spelling raised CANNOT_PARSE_DATATYPE
-        # on the empty-snapshot branch, so a fully-pruned no-match
-        # DELETE/UPDATE crashed instead of no-opping)
+        # StructType.add parses JSON type names — "long", not "bigint"
+        # (the "bigint" spelling raises CANNOT_PARSE_DATATYPE on the
+        # empty-snapshot branch, crashing a fully-pruned no-match
+        # DELETE/UPDATE instead of no-opping)
         prov_fields = (
             [("_rel", "string"), ("_pos", "long")] if provenance else []
         )
@@ -1705,7 +1677,7 @@ class ManifestTable:
 
         def load(entries: list[dict], with_meta: bool) -> DataFrame:
             rels = [e["path"] for e in entries]
-            # round 12 (planning soak): Spark's file index pays ~1 ms of
+            # Spark's file index pays ~1 ms of
             # driver-side glob/qualify/list work PER PATH — 17+ s for a
             # 16k-file snapshot before a single task runs. Txn dirs are
             # immutable after commit, so when a directory's on-disk
@@ -1720,8 +1692,8 @@ class ManifestTable:
             # The snapshot's cumulative schema is KNOWN from the
             # manifest — declare it (under PHYSICAL names) instead of
             # mergeSchema, which fetches EVERY file footer at frame-
-            # construction time: measured 100 s at 4096 files in the
-            # round-12 planning soak, ~40 min extrapolated at 10^5.
+            # construction time: measured 100 s at 4096 files by
+            # scripts/soak_planning.py, ~40 min extrapolated at 10^5.
             # The explicit-schema parquet reader gives the identical
             # semantics for free: absent columns (pre-evolution files)
             # read as NULL, partition-discovery types are pinned to the
@@ -1761,23 +1733,17 @@ class ManifestTable:
             out = load(files, provenance)
             plain = None
         else:
-            # DIR-ALIGNED split (round 14): only the txn dirs that
-            # CONTAIN a DV-carrying file pay the `_metadata` projection
-            # and the anti-join probe; dirs untouched by deletes — the
-            # bulk of a real table — read on the byte-identical plain
-            # path. Splitting at DIRECTORY granularity (never inside a
-            # dir) is what keeps `_coalesce_dirs` sound on both
-            # branches: the r13 regression came from a FILE-aligned
-            # split that left a dir's live set straddling the branches,
-            # so neither branch list-matched and planning fell back to
-            # per-file paths (PERF.md #71). Loose (non-txn-dir) files
-            # split individually — they never dir-coalesce anyway.
-            # Grouping rule is the SHARED `_txn_dir_of` (also used by
-            # `_coalesce_dirs`), so the split can never desynchronize
-            # from what coalescing groups (ADVICE r14).
-            # one _txn_dir_of per entry: this loop runs on the driver
-            # over the FULL file list, the same planning path the round
-            # keeps at O(commits) cost
+            # DIR-ALIGNED split: only the txn dirs that CONTAIN a
+            # DV-carrying file pay the `_metadata` projection and the
+            # anti-join probe; dirs untouched by deletes — the bulk of a
+            # real table — read on the byte-identical plain path.
+            # Splitting at DIRECTORY granularity (never inside a dir) is
+            # what keeps `_coalesce_dirs` sound on both branches (see the
+            # docstring). Loose (non-txn-dir) files split individually —
+            # they never dir-coalesce anyway. The grouping rule is the
+            # SHARED `_txn_dir_of`, so the split can never desynchronize
+            # from what coalescing groups; one `_txn_dir_of` per entry
+            # keeps this loop over the FULL file list cheap
             dirs = {e["path"]: _txn_dir_of(e["path"]) for e in files}
             dv_dirs = {
                 d
@@ -1817,9 +1783,7 @@ class ManifestTable:
         matching `condition`, `condition` as a Column): the discovery
         prelude of every row-level op. A WHERE string prunes through
         `prune.from_where`; Column conditions prune nothing."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+        latest = self._require_latest()
         pred = from_where(condition, spark)
         m = self.manifest(latest, prune=pred)
         cond = F.expr(condition) if isinstance(condition, str) else condition
@@ -2121,22 +2085,6 @@ class ManifestTable:
             include_preimage=include_preimage,
         )
 
-    def _entry_bytes(self, e: dict) -> int:
-        """A file entry's recorded size; a backend stat for entries that
-        predate the `bytes` field."""
-        return e["bytes"] if "bytes" in e else self.store.file_size(e["path"])
-
-    def _entry_rows(self, e: dict) -> int:
-        """A file entry's recorded row count; one footer read for entries
-        that predate the `rows` field."""
-        if "rows" in e:
-            return e["rows"]
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(
-            self.store.resolve_read([e["path"]])[1][0]
-        ).metadata.num_rows
-
     def _dead_positions(self, files: list[dict]) -> dict:
         """`dv.dead_positions` for the DV-carrying entries of `files`:
         {file path: sorted distinct deleted positions}."""
@@ -2177,9 +2125,7 @@ class ManifestTable:
         compaction."""
         import math
 
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+        latest = self._require_latest()
         m = self.manifest(latest)
         part_by = m["partition_by"] or None
         if small_file_bytes is None:
@@ -2189,25 +2135,25 @@ class ManifestTable:
             chosen = [
                 e
                 for e in m["files"]
-                if self._entry_bytes(e) < small_file_bytes or e.get("dv")
+                if e["bytes"] < small_file_bytes or e.get("dv")
             ]
             if len(chosen) < 2 and not any(e.get("dv") for e in chosen):
                 return latest
             df = self._load_snapshot(spark, m, chosen)
         n = max(
             1,
-            math.ceil(sum(map(self._entry_bytes, chosen)) / target_file_bytes),
+            math.ceil(sum(e["bytes"] for e in chosen) / target_file_bytes),
         )
         # On a partitioned table, hash-distribute BY the partition columns
         # so each value lands in one task → ~one file per partition; a
         # plain repartition(n) scatters every partition's rows across all
         # n tasks and the partitionBy write then emits up to n×values
-        # files — compaction MULTIPLYING small files (review r6).
+        # files — compaction MULTIPLYING small files.
         df = df.repartition(n, *part_by) if part_by else df.repartition(n)
         # base=latest: the rewrite was derived from snapshot `latest`, so
         # the conflict gate must anchor there, not at _commit entry — a
         # commit landing between the read above and the publish would
-        # otherwise be silently clobbered (ADVICE r7).
+        # otherwise be silently clobbered.
         if small_file_bytes is None:
             return self._commit(df, part_by, "compact", "all", base=latest)
         return self._commit(
@@ -2238,9 +2184,7 @@ class ManifestTable:
         commit aborts with ConcurrentWriteConflict."""
         import math
 
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+        latest = self._require_latest()
         m = self.manifest(latest)
         dved = [e for e in m["files"] if e.get("dv")]
         if not dved:
@@ -2252,8 +2196,8 @@ class ManifestTable:
             chosen = [
                 e
                 for e in dved
-                if (n_rows := self._entry_rows(e))
-                and len(dead[e["path"]]) / n_rows >= min_deleted_ratio
+                if e["rows"]
+                and len(dead[e["path"]]) / e["rows"] >= min_deleted_ratio
             ]
         if not chosen:
             return latest
@@ -2261,9 +2205,7 @@ class ManifestTable:
         part_by = m["partition_by"] or None
         n = max(
             1,
-            math.ceil(
-                sum(map(self._entry_bytes, chosen)) / target_file_bytes
-            ),
+            math.ceil(sum(e["bytes"] for e in chosen) / target_file_bytes),
         )
         df = df.repartition(n, *part_by) if part_by else df.repartition(n)
         return self._commit(
@@ -2293,53 +2235,45 @@ class ManifestTable:
         ConcurrentWriteConflict if a commit races it."""
         from ..operators.layout import zorder_by
 
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
-        # Preserve the table's partition spec (review r6: committing
-        # unpartitioned erased partition metadata, so a later
-        # partition_filter read silently returned 0 rows and the
-        # streaming sink's next replace_partitions double-counted).
+        latest = self._require_latest()
+        # Preserve the table's partition spec: committing unpartitioned
+        # would erase partition metadata, so a later partition_filter
+        # read would silently return 0 rows and the streaming sink's
+        # next replace_partitions would double-count.
         part_by = self._raw(latest).get("partition_by") or None
         df = zorder_by(self.read(spark, version=latest), cols, n_files, bits)
         # base=latest: anchor the conflict gate at the snapshot this
-        # rewrite was derived from (ADVICE r7 — see compact).
+        # rewrite was derived from (see compact).
         return self._commit(df, part_by, "optimize", "all", base=latest)
 
     def row_count(self, version: int | None = None) -> int:
         """``SELECT count(*)`` answered from metadata, with no data-page
-        scan: each entry's recorded footer row count (one footer read for
-        legacy entries without `rows`) minus its distinct DV positions,
-        each DV parquet read once."""
+        scan: each entry's recorded footer row count minus its distinct
+        DV positions, each DV parquet read once."""
         if version is None:
-            version = self.latest_version()
-        if version is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+            version = self._require_latest()
         files = self.manifest(version)["files"]
         dead = self._dead_positions(files)
-        return sum(map(self._entry_rows, files)) - sum(map(len, dead.values()))
+        return sum(e["rows"] for e in files) - sum(map(len, dead.values()))
 
     def describe_detail(self) -> dict:
         """Delta `DESCRIBE DETAIL`: one dict of table-level facts derived
         from the manifest alone (no data scan) — current version, file
         count, total bytes, partition columns, constraint map, DV debt
         (files carrying deletion vectors), and the commit timestamp."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+        latest = self._require_latest()
         e = self._raw(latest)
         files = self._snapshot_files(latest)
         return {
             "location": self.root,
             "version": latest,
             "num_files": len(files),
-            "size_bytes": sum(f.get("bytes", 0) for f in files),
-            # None when any entry predates r9's footer row counts (use
-            # row_count(), which falls back to footer reads)
+            "size_bytes": sum(f["bytes"] for f in files),
+            # None under DV debt: recorded rows still count deleted ones
+            # (row_count() subtracts them)
             "num_rows": (
                 sum(f["rows"] for f in files)
-                if files and all("rows" in f for f in files)
-                and not any(f.get("dv") for f in files)
+                if files and not any(f.get("dv") for f in files)
                 else None
             ),
             "partition_columns": e.get("partition_by") or [],
@@ -2377,9 +2311,7 @@ class ManifestTable:
         object copy. Use for env promotion / disaster recovery, not as
         a read path."""
         if version is None:
-            version = self.latest_version()
-        if version is None:
-            raise FileNotFoundError(f"no committed version at {self.root}")
+            version = self._require_latest()
         m = self.manifest(version)
         src_entry = self._raw(version)
         cons = self._constraints_of(src_entry)
@@ -2426,9 +2358,11 @@ class ManifestTable:
             entry = {
                 "path": rel,
                 "partition": _parse_partition(rel),
-                "bytes": e.get("bytes", os.path.getsize(local)),
+                "bytes": e["bytes"],
+                "rows": e["rows"],
             }
-            entry.update({k: e[k] for k in ("rows", "stats") if k in e})
+            if "stats" in e:
+                entry["stats"] = e["stats"]
             entries.append(entry)
         dest._commit_files(
             None,
@@ -2464,8 +2398,9 @@ class ManifestTable:
         the nearest checkpoint carrying the cumulative `txns` map (vacuum
         writes one before truncating, so idempotence memory survives log
         truncation) and answers from it, through `_read_checkpoint_body`
-        like every checkpoint read; legacy txns-less checkpoints fall
-        through to the vacuum boundary."""
+        like every checkpoint read; a checkpoint without the map (its
+        writer could not prove it complete) falls through to the vacuum
+        boundary."""
         latest = self.latest_version()
         if latest is None:
             return None
@@ -2513,7 +2448,7 @@ class ManifestTable:
                 cp = {}
             if "txns" in cp:
                 return cp["txns"].get(app)
-            # legacy checkpoint without the map: walk the rest
+            # checkpoint without the map: walk the rest
             for u in range(min(floor, v), -1, -1):
                 try:
                     t = self._raw(u).get("txn")
@@ -2563,7 +2498,6 @@ class ManifestTable:
             "action": "restore",
             "restored_version": version,
             "partition_by": src.get("partition_by") or [],
-            "schema": src["schema"],
             "table_schema": self._table_schema_of(src),
             "add": files,
             "remove": {"kind": "all"},
@@ -2679,11 +2613,10 @@ class ManifestTable:
             if keep[0] not in self.checkpoints():
                 self._write_checkpoint(keep[0])
         # log truncation in ONE bulk call (one DELETE round-trip per dead
-        # entry would dominate on S3); checkpoints are doomed by their
-        # LISTED names, columnar or legacy JSON
+        # entry would dominate on S3)
         doomed = [self._version_name(v) for v in vs if v not in keep] + [
-            name
-            for name, c in self._checkpoint_files().items()
+            self._checkpoint_name(c)
+            for c in self.checkpoints()
             if keep and c < keep[0]
         ]
         self.store.delete_logs(doomed)
@@ -2783,7 +2716,7 @@ class MergeBuilder:
         equality in a plain conjunction ON clause — the keys the
         automatic target-file skipping (see execute) can prune on.
         Conservative by construction: parentheses, OR, a quoted string
-        literal (ADVICE r11 — `re.split` on \\band\\b could otherwise
+        literal (`re.split` on \\band\\b could otherwise
         split INSIDE a literal like `'a and b'` and the inner fragment
         fullmatch as a fake equality), or a non-string ON disable
         parsing entirely, and unparsed AND-conjuncts are simply ignored
@@ -2836,7 +2769,7 @@ class MergeBuilder:
         if not (self._matched or self._not_matched or self._nms):
             raise ValueError("MERGE requires at least one WHEN clause")
         t, spark, src = self._table, self._spark, self._source
-        # ADVICE r11: a non-deterministic source (rand(), un-ordered
+        # A non-deterministic source (rand(), un-ordered
         # LIMIT, a re-read of changing data) can yield DIFFERENT rows on
         # each of the merge's several evaluations — unsound for the
         # bounds prune below AND for the multi-pass merge itself (the
@@ -2857,9 +2790,7 @@ class MergeBuilder:
         bad = reserved & set(src.columns)
         if bad:
             raise ValueError(f"source carries reserved merge columns {sorted(bad)}")
-        latest = t.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version at {t.root}")
+        latest = t._require_latest()
         e0 = t._raw(latest)
         schema = StructType.fromJson(json.loads(t._table_schema_of(e0)))
         tcols = [f.name for f in schema.fields]

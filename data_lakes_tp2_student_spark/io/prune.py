@@ -248,10 +248,9 @@ def _col_types(entry: dict) -> dict:
     """{column: simpleString type} of a log entry's cumulative schema."""
     from pyspark.sql.types import StructType
 
-    schema = entry.get("table_schema", entry.get("schema"))
     return {
         f.name: f.dataType.simpleString()
-        for f in StructType.fromJson(json.loads(schema)).fields
+        for f in StructType.fromJson(json.loads(entry["table_schema"])).fields
     }
 
 
@@ -573,7 +572,7 @@ def envelope(pred: Pred | None, entry: dict) -> dict | None:
     sets and intervals hull to one interval in the column's domain;
     `Paths` union. None when no pre-filter is sound: no predicate,
     non-UTC literals, or a column-mapped table (checkpoint stats use
-    physical names). Legacy full-snapshot entries read no checkpoint."""
+    physical names)."""
     if pred is None or not pred.tz_utc or entry.get("column_mapping"):
         return None
     ctypes = _col_types(entry)

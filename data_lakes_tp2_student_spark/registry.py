@@ -201,9 +201,13 @@ def scratch_dir(
 
 def register_manifest_formats(spark: SparkSession) -> None:
     """Register the ``manifest`` batch/stream-sink format and the
-    ``manifest_stream`` source with this session's Data Source registry."""
+    ``manifest_stream`` source with this session's Data Source registry,
+    and turn on Python data source filter pushdown: the ``manifest``
+    reader implements ``pushFilters``, and Spark refuses its scan unless
+    the setting is on (``session.get_spark`` already defaults it on)."""
     from .io.datasource import ManifestDataSource
     from .streaming.source import ManifestStreamDataSource
 
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(ManifestDataSource)
     spark.dataSource.register(ManifestStreamDataSource)

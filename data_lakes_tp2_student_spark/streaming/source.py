@@ -76,8 +76,8 @@ class ManifestStreamReader(DataSourceStreamReader):
         # ingestion of a hot table. 0/absent = unbounded. The position is
         # learned from partitions()/commit() callbacks, so the FIRST
         # micro-batch of each run is uncapped BY DEFAULT — and that is
-        # forced by the API, not a shortcut (round 9, measured with a
-        # call-order probe): Spark calls the no-arg latestOffset BEFORE
+        # forced by the API, not a shortcut (measured with a call-order
+        # probe): Spark calls the no-arg latestOffset BEFORE
         # initialOffset on a fresh query and never tells the reader the
         # restored checkpoint on restart, so any first-trigger cap
         # anchored at a guessed start can fall BELOW an unknown restart
@@ -89,7 +89,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         # then anchors at the initial offset and a 10^4-commit backfill
         # drains in bounded batches instead of one blob. Setting it on a
         # RESTART is caller error with the duplicate hazard above.
-        # Trigger.AvailableNow caveat (round 9, measured): AvailableNow
+        # Trigger.AvailableNow caveat (measured): AvailableNow
         # pins its drain target from the FIRST latestOffset answer (the
         # Python API exposes no SupportsTriggerAvailableNow), so a
         # version cap truncates the drain at pos+cap — run AvailableNow
@@ -191,10 +191,10 @@ class ManifestStreamReader(DataSourceStreamReader):
         for v in range(start["version"] + 1, end["version"] + 1):
             entry = self._table._raw(v)
             action = entry.get("action", "?")
-            added, remove = self._table._entry_delta(entry)
+            added = entry["add"]
             if v > 0 and action not in _APPEND_ACTIONS:
                 if action in _METADATA_ACTIONS or not (
-                    added or remove.get("kind") not in (None, "none")
+                    added or entry["remove"]["kind"] != "none"
                 ):
                     continue  # nothing moved — nothing to stream
                 if self._skip_changes:
@@ -234,11 +234,7 @@ class ManifestStreamDataSource(DataSource):
 
     def schema(self) -> StructType:
         table = _open_table(dict(self.options))
-        latest = table.latest_version()
-        if latest is None:
-            raise FileNotFoundError(
-                f"no committed version at {self.options['path']}"
-            )
+        latest = table._require_latest()
         # nullable like every file source: pre-evolution files are
         # null-padded for added columns, and a non-nullable field would
         # make Spark throw on the padded batches

@@ -106,6 +106,7 @@ def synth_commit(tab: ManifestTable, n_files: int, txn_version: int | None = Non
                 "path": f"data/txn={txn}/{name}",
                 "partition": {},
                 "bytes": 8,
+                "rows": 1,
                 "stats": {"id": [i, i + 10]},
             }
         )

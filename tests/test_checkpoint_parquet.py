@@ -4,8 +4,8 @@ min/max stat columns, so a range-filtered read prunes VECTORIZED and
 decodes O(selected) entries. These tests pin: exact round-trip of the
 file list against log replay, identical read() results on every path,
 coarse prune engagement and soundness, txns-map survival across log
-truncation, the due checkpoint for every commit kind, legacy JSON
-checkpoints, and vacuum cleanup of checkpoint files."""
+truncation, the due checkpoint for every commit kind, the refusal of a
+headless columnar checkpoint, and vacuum cleanup of checkpoint files."""
 
 from __future__ import annotations
 
@@ -206,8 +206,8 @@ def test_parquet_checkpoint_deltas_and_vacuum(spark, tmp_path):
 
 
 def _stage_one_row(tab, value):
-    """Stage one hand-written parquet file; its entry records neither
-    `bytes` nor `rows` (the legacy entry shape)."""
+    """Stage one hand-written parquet file and return (txn, its commit
+    entries)."""
     import os
     import uuid
 
@@ -222,7 +222,13 @@ def _stage_one_row(tab, value):
         os.path.join(stage, "part-0.parquet"),
     )
     entries = [
-        {"path": rel, "partition": {}} for rel, _ in tab.store.finalize_txn(txn)
+        {
+            "path": rel,
+            "partition": {},
+            "bytes": os.path.getsize(local),
+            "rows": 1,
+        }
+        for rel, local in tab.store.finalize_txn(txn)
     ]
     return txn, entries
 
@@ -249,55 +255,31 @@ def test_parquet_checkpoint_txns_survive(spark, tmp_path):
     ]
     fresh = tab.clone()
     assert fresh.last_txn_version("appX") == 7
-    # the v1 entry without bytes/rows passed through due checkpoints:
-    # count and detail still answer from metadata plus one footer read
+    # count and detail answer from the checkpointed metadata
     assert fresh.row_count() == 3
     detail = fresh.describe_detail()
-    assert detail["num_rows"] is None and detail["size_bytes"] > 0
+    assert detail["num_rows"] == 3 and detail["size_bytes"] > 0
 
 
-def test_legacy_json_checkpoint_reads_and_headless_columnar_raises(
-    spark, tmp_path
-):
-    """A hand-written legacy `.checkpoint.json` below a truncated log
-    still reconstructs snapshots and answers last_txn_version; a columnar
-    checkpoint without the `entry` column fails loudly."""
-    import os
-
+def test_headless_columnar_checkpoint_raises(spark, tmp_path):
+    """A columnar checkpoint without the `entry` column (an older
+    per-field encoding) fails loudly instead of reading as empty."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     tab = ManifestTable(str(tmp_path / "t"), checkpoint_interval=0)
     df = spark.createDataFrame([(1, "a")], "id int, v string")
     tab.commit_overwrite(df)
-    txn, entries = _stage_one_row(tab, 2)
-    tab._commit_files(
-        None, txn, entries, tab._table_schema_of(tab._raw(0)), None,
-        "append", "none", 0, {}, validate=False,
-        entry_extra={"txn": {"app": "old", "version": 3}},
-    )
     tab.commit_append(spark.createDataFrame([(3, "c")], df.schema))
-    # the legacy format: the whole body as one JSON document at v1
-    body = {"version": 1, "files": tab._snapshot_files(1), "txns": {"old": 3}}
-    with open(os.path.join(tab.log_dir, "v%020d.checkpoint.json" % 1), "w") as f:
-        json.dump(body, f)
-    for v in (0, 1):  # truncate the log below the legacy checkpoint
-        os.unlink(os.path.join(tab.log_dir, tab._version_name(v)))
-    fresh = tab.clone()
-    assert fresh.checkpoints() == [1]
-    assert _rows(fresh.read(spark)) == [(1, "a"), (2, "r2"), (3, "c")]
-    assert fresh.last_txn_version("old") == 3
-
-    # a columnar checkpoint in the older per-field encoding: no `entry`
-    t = pa.table({"path": [e["path"] for e in body["files"]]})
-    t = t.replace_schema_metadata({b"version": b"2"})
+    t = pa.table({"path": [e["path"] for e in tab._snapshot_files(1)]})
+    t = t.replace_schema_metadata({b"version": b"1"})
     sink = pa.BufferOutputStream()
     pq.write_table(t, sink)
-    fresh.store.put_log_atomic(
-        fresh._checkpoint_name(2), sink.getvalue().to_pybytes()
+    tab.store.put_log_atomic(
+        tab._checkpoint_name(1), sink.getvalue().to_pybytes()
     )
     with pytest.raises(ValueError, match="no `entry` column"):
-        fresh.clone().read(spark)
+        tab.clone().read(spark)
 
 
 def _dv_delete(spark, tab):

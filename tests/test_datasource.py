@@ -1286,7 +1286,7 @@ def test_stale_stash_in_logged_schema_is_shed_on_create(spark, tmp_path):
         }
         logged = _json.dumps(raw)
         entry = tab_b._raw(0)
-        entry["schema"] = logged
+        entry["table_schema"] = logged
         name = tab_b._version_name(0)
         tab_b.store.delete_log(name)
         assert tab_b.store.put_log_if_absent(
@@ -1373,3 +1373,35 @@ def test_auto_files_per_partition_packs_by_size(spark, tmp_path, monkeypatch):
     assert sum(1 + len(p.more) for p in pp) == 4
     got = sorted(r.id for r in _read(spark, root).collect())
     assert got == list(range(12))
+
+
+def test_registering_manifest_formats_enables_pushdown(spark):
+    """The pushdown setting the `manifest` reader needs is set where the
+    format is registered, never by a catalog query: x65/x66 used to set
+    it on the caller's session, so later reads depended on whether they
+    had run first."""
+    import ast
+    import inspect
+
+    from data_lakes_tp2_student_spark.catalog import lake
+    from data_lakes_tp2_student_spark.registry import register_manifest_formats
+
+    key = "spark.sql.python.filterPushdown.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        register_manifest_formats(spark)
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, before)
+    for fn in (lake.x65_dsv2_batch_read, lake.x66_dsv2_batch_write):
+        conf_sets = [
+            node
+            for node in ast.walk(ast.parse(inspect.getsource(fn)))
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "set"
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "conf"
+        ]
+        assert not conf_sets, fn.__name__

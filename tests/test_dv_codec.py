@@ -100,12 +100,18 @@ def _shared_dv_table(root: str, n_files: int, rows: int) -> ManifestTable:
     entries = []
     for i in range(n_files):
         name = f"part-{i:05d}.parquet"
+        local = os.path.join(stage, name)
         pq.write_table(
             pa.table({"id": pa.array(range(i * rows, (i + 1) * rows), pa.int64())}),
-            os.path.join(stage, name),
+            local,
         )
         entries.append(
-            {"path": f"data/txn={txn}/{name}", "partition": {}, "rows": rows}
+            {
+                "path": f"data/txn={txn}/{name}",
+                "partition": {},
+                "bytes": os.path.getsize(local),
+                "rows": rows,
+            }
         )
     dv_stage = tab.store.txn_stage_dir(dv_txn)
     os.makedirs(dv_stage)

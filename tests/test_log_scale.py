@@ -55,7 +55,12 @@ def _synth_commit(tab: ManifestTable, n_files: int = 2):
         with open(local, "wb") as f:
             f.write(b"PAR1x")
         entries.append(
-            {"path": f"data/txn={txn}/part-{i}.parquet", "partition": {}, "bytes": 5}
+            {
+                "path": f"data/txn={txn}/part-{i}.parquet",
+                "partition": {},
+                "bytes": 5,
+                "rows": 1,
+            }
         )
     schema = (
         '{"type":"struct","fields":[{"name":"id","type":"integer",'
@@ -163,7 +168,15 @@ def _synth_txn_commit(tab, app, ver):
         '"nullable":true,"metadata":{}}]}'
     )
     return tab._commit_files(
-        None, txn, [{"path": f"data/txn={txn}/part-0.parquet", "partition": {}, "bytes": 5}],
+        None, txn,
+        [
+            {
+                "path": f"data/txn={txn}/part-0.parquet",
+                "partition": {},
+                "bytes": 5,
+                "rows": 1,
+            }
+        ],
         schema, None, "append", "none", tab.latest_version(), {},
         validate=False, entry_extra={"txn": {"app": app, "version": ver}},
     )

@@ -808,18 +808,37 @@ def test_vacuum_checkpoints_oldest_kept_version(spark, tmp_path):
     assert (99, "post", "d1") in rows(tab.read(spark))
 
 
-def test_legacy_full_snapshot_entry_still_readable(spark, tab):
-    """Pre-round-7 log entries carried the FULL file list under `files`;
-    they must replay as remove-all + add (a checkpoint in the log)."""
-    tab.commit_overwrite(_df(spark, [(1, "a", "d1"), (2, "b", "d2")]))
-    # rewrite v0 into the legacy format in place
-    e = tab._raw(0)
-    legacy = {k: v for k, v in e.items() if k not in ("add", "remove")}
-    legacy["files"] = e["add"]
-    tab.store.put_log_atomic(tab._version_name(0), json.dumps(legacy).encode())
-    assert rows(tab.read(spark)) == [(1, "a", "d1"), (2, "b", "d2")]
-    tab.commit_append(_df(spark, [(3, "c", "d3")]))
-    assert rows(tab.read(spark)) == [(1, "a", "d1"), (2, "b", "d2"), (3, "c", "d3")]
+def test_commit_refuses_file_entry_without_rows_or_bytes(spark, tab):
+    """One log format: every committed file entry records `path`,
+    `partition`, `bytes` and `rows`, and readers use them with no
+    fallback — so `_commit_files` refuses an entry missing one before
+    anything is published."""
+    tab.commit_overwrite(_df(spark, [(1, "a", "d1")]))
+    df = _df(spark, [(2, "b", "d2")])
+    for key in ("rows", "bytes"):
+        txn, files = tab._write_txn(df, None)
+        del files[0][key]
+        with pytest.raises(ValueError, match=f"lack \\['{key}'\\]"):
+            tab._commit_files(
+                spark, txn, files, df.schema.json(), None, "append", "none",
+                0, {},
+            )
+        assert tab.latest_version() == 0
+    assert rows(tab.read(spark)) == [(1, "a", "d1")]
+
+
+def test_entries_log_table_schema_and_no_commit_schema(spark, tab):
+    """Every commit kind logs the cumulative `table_schema` and no
+    per-commit `schema` key (no reader reads one)."""
+    tab.commit_overwrite(_df(spark, [(1, "a", "d1")]))
+    tab.commit_append(_df(spark, [(2, "b", "d2")]))
+    tab.add_check_constraint(spark, "pos", "id > 0")
+    tab.delete_where(spark, "id = 2", mode="dv")
+    tab.restore(0)
+    for v in tab.versions():
+        e = tab._raw(v)
+        assert "table_schema" in e and "schema" not in e, (v, sorted(e))
+    assert rows(tab.read(spark)) == [(1, "a", "d1")]
 
 
 # --- round-7: schema compatibility at commit time (ADVICE r6) --------------
@@ -2096,9 +2115,8 @@ def test_overwrite_on_mapped_table_keeps_physical_stability(spark, tab):
 
 def test_row_count_metadata_only(spark, tab):
     """row_count() answers count(*) from manifest metadata: exact on
-    plain snapshots, under DV deletes (positions subtracted), across
-    time travel, and on legacy entries without recorded rows (footer
-    fallback)."""
+    plain snapshots, under DV deletes (positions subtracted), and across
+    time travel."""
     tab.commit_overwrite(_df(spark, [(i, f"v{i}", f"d{i % 3}") for i in range(30)]))
     assert tab.row_count() == 30
     tab.commit_append(_df(spark, [(100 + i, "x", "d1") for i in range(5)]))
@@ -2109,16 +2127,6 @@ def test_row_count_metadata_only(spark, tab):
     assert tab.read(spark).count() == expect
     # time travel counts the PINNED snapshot
     assert tab.row_count(version=0) == 30
-    # legacy entries (no `rows` recorded) fall back to footer reads
-    m = tab.manifest(tab.latest_version())
-    import json as _json
-
-    raw = tab._raw(0)
-    for e in raw["add"]:
-        e.pop("rows", None)
-    tab.store.put_log_atomic(tab._version_name(0), _json.dumps(raw).encode())
-    tab2 = tab.clone()
-    assert tab2.row_count(version=0) == 30
 
 
 def test_row_count_survives_clone_and_describe(spark, tmp_path):

@@ -125,6 +125,7 @@ def test_txn_idempotence_skips_redelivered_batch(spark, tmp_path):
             "path": os.path.relpath(p, root),
             "partition": {},
             "bytes": os.path.getsize(p),
+            "rows": len(df.toPandas()),
         }
 
     w.commit([_CommitEntries([staged_entry()])], batchId=7)
@@ -272,6 +273,7 @@ def test_stream_sink_mapped_table_new_column_across_batches(spark, tmp_path):
             "path": os.path.relpath(p, root),
             "partition": {},
             "bytes": os.path.getsize(p),
+            "rows": 1,
         }
 
     w.commit([_CommitEntries([staged_entry(10)])], batchId=0)
