@@ -171,6 +171,13 @@ HOST_PROBE_REF = 1.104
 PROBE_AGREEMENT_TOL = 1.25
 
 
+# The stdout tail a bench capture keeps: the `tail` of every BENCH_r*.json
+# capture is exactly 2,000 characters, so the final line plus its newline
+# must fit in it (the BENCH_r16*.json final lines measure 1,211 and 1,214
+# bytes).
+TAIL_CAPTURE_BYTES = 2000
+
+
 def final_line_payload(
     total: float,
     bests: dict[str, float],
@@ -180,12 +187,12 @@ def final_line_payload(
     host_probe: dict,
     sf: float,
 ) -> dict:
-    """The driver-facing FINAL stdout line (VERDICT r15 item 1): must
-    carry the per-query best map as "queries" so the driver's PERF
-    comparison can populate per_query/geomean, while staying small
-    enough for the driver's stdout tail-capture window (~1.5 KB for 34
-    queries; the r9 overflow line carried TWO 34-entry dicts plus
-    spreads)."""
+    """The FINAL stdout line: carries the per-query best map as
+    "queries" so a per-query comparison of two captures can populate
+    per_query/geomean, while fitting the stdout tail a capture keeps
+    (`TAIL_CAPTURE_BYTES` with its newline; ~1.2 KB for 34 queries,
+    where the overflow line of BENCH_r09.json carried TWO 34-entry dicts
+    plus spreads)."""
     worst = dict(sorted(vs_baseline.items(), key=lambda kv: -kv[1])[:3])
     return {
         "metric": "headline_queries_total_wall",

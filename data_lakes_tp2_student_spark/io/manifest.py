@@ -75,6 +75,7 @@ publish empty manifests) — construct `S3LogStore` and pass it instead.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import time
@@ -96,6 +97,7 @@ from .prune import (
     keep,
 )
 
+_log = logging.getLogger("spark_graft")
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 # the fields every committed file entry records (see `_commit_files`)
 _FILE_KEYS = ("path", "partition", "bytes", "rows")
@@ -1576,7 +1578,7 @@ class ManifestTable:
         """Collapse per-file scan paths into their txn DIRECTORY when the
         directory's on-disk parquet content is EXACTLY the live set (the
         per-path driver cost of Spark's file index makes full-snapshot
-        frame construction linear-in-files with a ~1 ms constant). Sound
+        frame construction linear-in-files with a ~0.1 ms constant). Sound
         by the commit protocol: txn dirs are immutable
         once committed (new commits stage into FRESH dirs), so the
         listing cannot race a writer; any mismatch — dead files after a
@@ -1633,7 +1635,7 @@ class ManifestTable:
         granularity: a file-aligned split would leave a txn dir with even
         one DV-carrying file straddling the branches, so neither branch
         list-matches in `_coalesce_dirs` and planning falls back to
-        per-file scan paths (~1 ms of driver-side file-index work EACH).
+        per-file scan paths (~0.1 ms of planning-time file-index work EACH).
         A txn dir goes to the meta+anti-join branch only when it CONTAINS
         a DV-carrying file, whole — so both branches keep directory
         coalescing (O(commits) scan paths), commits untouched by deletes
@@ -1676,18 +1678,25 @@ class ManifestTable:
             return spark.createDataFrame([], out_schema)
 
         def load(entries: list[dict], with_meta: bool) -> DataFrame:
-            rels = [e["path"] for e in entries]
-            # Spark's file index pays ~1 ms of
-            # driver-side glob/qualify/list work PER PATH — 17+ s for a
-            # 16k-file snapshot before a single task runs. Txn dirs are
+            live = [e["path"] for e in entries]
+            # Spark's file index pays ~0.1 ms of planning-time
+            # glob/qualify/list work PER PATH — 1.9 s for a 16k-file
+            # snapshot before a single task runs. Txn dirs are
             # immutable after commit, so when a directory's on-disk
             # parquet content EXACTLY equals its live set, one DIRECTORY
             # path replaces all its per-file paths: path count drops
             # from O(files) to O(commits). Dirs with dead/extra files
             # (CoW leftovers pre-vacuum, zombies) fall back to per-file
             # paths — result-identical by construction.
-            if self.data_dir is not None and len(rels) >= 512:
-                rels = self._coalesce_dirs(rels)
+            rels, n_dirs = live, 0
+            if self.data_dir is not None and len(live) >= 512:
+                rels = self._coalesce_dirs(live)
+                n_dirs = len(set(rels) - set(live))
+            _log.debug(
+                "manifest scan %s: %d live files, %d scan paths, "
+                "%d txn dirs coalesced",
+                self.root, len(live), len(rels), n_dirs,
+            )
             base, paths = self.store.resolve_read(rels)
             # The snapshot's cumulative schema is KNOWN from the
             # manifest — declare it (under PHYSICAL names) instead of

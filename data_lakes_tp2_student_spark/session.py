@@ -20,46 +20,47 @@ import os
 from pyspark.sql import SparkSession
 
 _MIB = 1 << 20
+# Int.MaxValue: no scan hands Spark more paths than this
+_NEVER_LIST_IN_PARALLEL = 2**31 - 1
 _log = logging.getLogger("spark_graft")
 _config_logged = False
 
 
 def auto_max_partition_bytes(total_input_bytes: int, cores: int) -> int:
-    """Local-mode scan-split size (round 13, VERDICT r12 item 4): aim for
-    ~2 tasks per core over the session's expected input, clamped to
-    [16 MiB, 128 MiB]. The r12 fixed 16 MB default was right for sf0.1's
-    single-file tables but over-splits a directory of already-small
-    files and silently under-splits if the testdata grows — deriving the
-    size from (total bytes / 2×cores) keeps both ends honest. The clamp
-    floor matches parquet row-group granularity (a split below one row
-    group buys no parallelism, only scheduling overhead); the ceiling is
-    Spark's cluster default. Pure function — unit-testable without a
-    session."""
+    """Local-mode scan-split size: aim for ~2 tasks per core over the
+    session's expected input, clamped to [16 MiB, 128 MiB]. A fixed
+    16 MB split was right for sf0.1's single-file tables but over-splits
+    a directory of already-small files and silently under-splits if the
+    testdata grows — deriving the size from (total bytes / 2×cores)
+    keeps both ends honest. The clamp floor matches parquet row-group
+    granularity (a split below one row group buys no parallelism, only
+    scheduling overhead); the ceiling is Spark's cluster default. Pure
+    function — unit-testable without a session."""
     target = int(total_input_bytes) // max(1, 2 * int(cores))
     return min(128 * _MIB, max(16 * _MIB, target))
 
 
 def auto_shuffle_partitions(total_input_bytes: int, cores: int) -> int:
-    """Scale-adaptive default for ``spark.sql.shuffle.partitions`` (round
-    16, VERDICT r15 item 5): ~2 MiB of session input per reduce partition,
-    clamped to [max(4, cores//4), 64*cores].
+    """Scale-adaptive default for ``spark.sql.shuffle.partitions``: ~2 MiB
+    of session input per reduce partition, clamped to
+    [max(4, cores//4), 64*cores].
 
-    The r15 scaling capture showed the 32-core bench LOSING to 8 cores on
-    33/34 queries at sf0.1 — with a fixed 32-partition default every tiny
-    exchange fans out into 32 sub-millisecond tasks whose scheduling
-    dominates. Deriving the count from input bytes keeps small sessions
-    small (sf0.1's ~25 MiB → 12 partitions; measured over the 8
-    shuffle-heaviest headline queries, interleaved best-of-3: total 12.33 s
-    at 32 partitions → 10.96 at 16 / 10.80 at 8, with x2f — the one
-    parallelism-bound query — flat, its compute stages parallelised by
-    `spread(defaultParallelism)`, not by this knob) while growing the
-    count linearly with data so a 10×/100× fixture still fans out. The
-    cores-aware clamp keeps a minimum of concurrency for tiny inputs and
-    bounds task bloat above; AQE coalescing still adapts per-exchange at
-    runtime. A cluster deployment overrides via SPARK_SHUFFLE_PARTITIONS
-    (this heuristic reads the LOCAL testdata dir; at 100 TB you want an
-    explicit high initial count for AQE to coalesce down from). Pure
-    function — unit-testable without a session."""
+    With a fixed 32-partition default the 32-core bench LOST to 8 cores
+    on 33/34 queries at sf0.1: every tiny exchange fanned out into 32
+    sub-millisecond tasks whose scheduling dominated. Deriving the count
+    from input bytes keeps small sessions small (sf0.1's ~25 MiB → 12
+    partitions; over the 8 shuffle-heaviest headline queries,
+    interleaved best-of-3: total 12.33 s at 32 partitions → 10.96 at 16
+    / 10.80 at 8, with x2f — the one parallelism-bound query — flat, its
+    compute stages parallelised by `spread(defaultParallelism)`, not by
+    this knob) while growing the count linearly with data so a 10×/100×
+    fixture still fans out. The cores-aware clamp keeps a minimum of
+    concurrency for tiny inputs and bounds task bloat above; AQE
+    coalescing still adapts per-exchange at runtime. A cluster
+    deployment overrides via SPARK_SHUFFLE_PARTITIONS (this heuristic
+    reads the LOCAL testdata dir; at 100 TB you want an explicit high
+    initial count for AQE to coalesce down from). Pure function —
+    unit-testable without a session."""
     target = int(total_input_bytes) // (2 * _MIB)
     return min(64 * int(cores), max(4, int(cores) // 4, target))
 
@@ -94,9 +95,9 @@ def get_spark(
     """
     global _config_logged
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "*"))
-    # NB parenthesized: the r13 form `os.cpu_count() or 32 if ... else
-    # int(cpus)` parsed as `cpu_count() or (...)` and silently read the
-    # machine's core count even when SPARK_GRAFT_CPUS was set lower.
+    # NB parenthesized: unparenthesized, `os.cpu_count() or 32 if ...
+    # else int(cpus)` parses as `cpu_count() or (...)` and silently reads
+    # the machine's core count even when SPARK_GRAFT_CPUS is set lower.
     n_cores = (os.cpu_count() or 32) if cpus == "*" else int(cpus)
     sf_dir = (
         os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -146,11 +147,26 @@ def get_spark(
         # SPARK_FILES_MAX_PARTITION_BYTES, or pass extra_conf), where
         # scan tasks are bounded by file and row-group layout.
         .config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
+        # List scan paths serially while planning, never as a Spark job.
+        # Above this many paths (default 32) Spark's file index lists them
+        # with a distributed job of up to one task per path. The master is
+        # always local[N], and every path a manifest read hands Spark is
+        # a local file (S3LogStore copies into a local cache first), so
+        # that job makes the same file-system calls a serial listing does,
+        # plus a job launch before any action. Building a full-scan frame
+        # over per-file paths in one dir (scripts/soak_planning.py, 4
+        # cores, median of 3), threshold 32 -> this: 200 files 0.72 s ->
+        # 0.06 s, 16,384 files 26.3 s -> 1.86 s, 65,536 files 31.0 s ->
+        # 7.35 s. Serial listing wins at every size measured.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(_NEVER_LIST_IN_PARALLEL),
+        )
         # Spark still defaults timestamps to deprecated INT96, which
         # carries NO parquet footer min/max — every timestamp column
         # would silently lose data skipping (manifest stats AND Spark's
         # own row-group pruning). TIMESTAMP_MICROS is the modern typed
-        # encoding with full statistics (round 12).
+        # encoding with full statistics.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         # the `manifest` Python DataSource (io/datasource.py) implements
         # pushFilters; Spark refuses the scan unless this is on

@@ -8,7 +8,11 @@ at each file count F, over the columnar checkpoint:
     (`manifest(v, prune=...)`) ms,
   - pruned-scan DataFrame construction (`_load_snapshot` on the
     pruned file subset) ms,
-  - full-scan DataFrame construction ms (the unprunable worst case),
+  - full-scan DataFrame construction ms (the unprunable worst case), on
+    two layouts: COALESCED (the txn dir holds exactly its live files, so
+    `_coalesce_dirs` hands Spark one directory path per commit from 512
+    files up) and UNCOALESCED (one extra visible parquet that the log does
+    not name sits in the dir, so every live file stays its own scan path),
   - the checkpoint's size in bytes.
 
 The F data files are HARD LINKS of one tiny parquet (inode-only, so
@@ -16,7 +20,14 @@ The F data files are HARD LINKS of one tiny parquet (inode-only, so
 synthetic DISJOINT id ranges so a point-lookup prune selects exactly
 one file. This measures the metadata plane, not the data plane.
 
+`--thresholds 32,session` repeats each full-scan build with
+`spark.sql.sources.parallelPartitionDiscovery.threshold` set at runtime
+to each value (`session` = what `get_spark` configured), interleaved
+over `--reps` rounds: above the threshold Spark lists scan paths with a
+distributed job instead of serially while planning.
+
 Usage: python scripts/soak_planning.py [--files 4096,16384,65536,131072]
+       [--thresholds 32,session] [--reps 3]
 Prints one JSON line per F and a final summary line.
 """
 
@@ -25,6 +36,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -128,7 +140,49 @@ def build_table(root: str, n_files: int) -> ManifestTable:
     return tab
 
 
-def bench_once(spark, tab: ManifestTable, full_frame: bool = True) -> dict:
+_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def full_frame_ms(
+    spark, tab: ManifestTable, m: dict, thresholds: tuple[str, ...], reps: int
+) -> dict[str, float]:
+    """Median ms to build the full-scan frame (incl. Spark's file index
+    listing) per listing threshold, the thresholds interleaved per rep."""
+    session = spark.conf.get(_THRESHOLD)
+    samples: dict[str, list[float]] = {t: [] for t in thresholds}
+    try:
+        for _ in range(reps):
+            for t in thresholds:
+                spark.conf.set(_THRESHOLD, session if t == "session" else t)
+                t0 = time.perf_counter()
+                full = tab._load_snapshot(spark, m, m["files"])
+                _ = full.schema
+                samples[t].append(time.perf_counter() - t0)
+    finally:
+        spark.conf.set(_THRESHOLD, session)
+    return {
+        t: round(statistics.median(v) * 1e3, 1) for t, v in samples.items()
+    }
+
+
+def add_unlogged_parquet(tab: ManifestTable) -> None:
+    """Drop one visible parquet the log does not name into the big txn
+    dir, so `_coalesce_dirs` keeps every live file a per-file scan path
+    (the layout a pre-vacuum zombie or CoW leftover leaves)."""
+    stage = tab.store.txn_stage_dir("0" * 32)
+    pq.write_table(
+        pa.table({"id": pa.array([-1], pa.int64()), "v": ["zombie"]}),
+        os.path.join(stage, "part-zombie-unlogged.parquet"),
+    )
+
+
+def bench_once(
+    spark,
+    tab: ManifestTable,
+    full_frame: bool = True,
+    thresholds: tuple[str, ...] = ("session",),
+    reps: int = 1,
+) -> dict:
     t0 = time.perf_counter()
     m = tab.manifest(tab.latest_version())
     t_load = time.perf_counter() - t0
@@ -153,12 +207,11 @@ def bench_once(spark, tab: ManifestTable, full_frame: bool = True) -> dict:
     t_pruned_scan = time.perf_counter() - t0
     assert got == 1, got
 
-    t_full_frame = None
+    coalesced = uncoalesced = None
     if full_frame:
-        t0 = time.perf_counter()
-        full = tab._load_snapshot(spark, m, m["files"])
-        _ = full.schema  # frame construction incl. driver file index
-        t_full_frame = time.perf_counter() - t0
+        coalesced = full_frame_ms(spark, tab, m, thresholds, reps)
+        add_unlogged_parquet(tab)
+        uncoalesced = full_frame_ms(spark, tab, m, thresholds, reps)
 
     return {
         "files": n,
@@ -170,9 +223,8 @@ def bench_once(spark, tab: ManifestTable, full_frame: bool = True) -> dict:
         "coarse_plan_ms": round(t_coarse * 1e3, 1),
         "coarse_entries": len(coarse),
         "pruned_scan_ms": round(t_pruned_scan * 1e3, 1),
-        "full_frame_ms": (
-            round(t_full_frame * 1e3, 1) if t_full_frame is not None else None
-        ),
+        "full_frame_ms_coalesced": coalesced,
+        "full_frame_ms_uncoalesced": uncoalesced,
     }
 
 
@@ -187,8 +239,18 @@ def main() -> None:
         help="skip the full-scan frame construction (O(F) by definition;"
              " at 10^6 files it alone dominates the soak wall)",
     )
+    ap.add_argument(
+        "--thresholds", default="session",
+        help="comma-separated listing thresholds for the full-scan build"
+             " (`session` = the get_spark value)",
+    )
+    ap.add_argument(
+        "--reps", type=int, default=1,
+        help="interleaved repetitions of each full-scan build (median)",
+    )
     args = ap.parse_args()
     counts = [int(x) for x in args.files.split(",")]
+    thresholds = tuple(args.thresholds.split(","))
     spark = get_spark(app_name="soak-planning", shuffle_partitions=8)
     rows = []
     with tempfile.TemporaryDirectory() as td:
@@ -199,7 +261,10 @@ def main() -> None:
             build_s = time.perf_counter() - t0
             # planning reads the FINAL (small) v1's tiny entry + its
             # checkpoint — the production shape
-            r = bench_once(spark, tab, full_frame=not args.skip_full_frame)
+            r = bench_once(
+                spark, tab, full_frame=not args.skip_full_frame,
+                thresholds=thresholds, reps=args.reps,
+            )
             r["build_s"] = round(build_s, 2)
             rows.append(r)
             print(json.dumps(r), flush=True)

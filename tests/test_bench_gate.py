@@ -107,9 +107,10 @@ def test_final_line_carries_per_query_map():
     reads its "queries" map for per-query regression/scaling analysis.
     PERF was blind (per_query: {}, now_bench_ok: false) for two rounds
     because the final line carried only aggregates. Pin that the payload
-    carries the map AND stays small enough for the driver's tail-capture
-    window (the r9 overflow that motivated the compact line was a
-    ~4.5 KB two-dict line; the window demonstrably holds ~3 KB)."""
+    carries the map AND, with its newline, fits the
+    `bench.TAIL_CAPTURE_BYTES` stdout tail the captures keep (the r9
+    overflow that motivated the compact line was a ~4.5 KB two-dict
+    line)."""
     bests = {n: 1.234 for n in bench.HEADLINE}
     vs_b = {n: 1.01 for n in bench.HEADLINE}
     hp = {"factor": 1.0, "median": 1.104, "agreement": 1.1}
@@ -120,8 +121,27 @@ def test_final_line_carries_per_query_map():
     assert payload["metric"] == "headline_queries_total_wall"
     assert payload["unit"] == "sec"
     assert payload["n_queries"] == len(bench.HEADLINE)
-    line = json.dumps(payload)
-    assert len(line) < 2600, len(line)
+    line = json.dumps(payload) + "\n"
+    assert len(line.encode()) <= bench.TAIL_CAPTURE_BYTES, len(line)
+
+
+def test_tail_capture_bound_matches_the_captures():
+    """`bench.TAIL_CAPTURE_BYTES` is the measured window, not a guess:
+    every BENCH_r*.json capture's `tail` is exactly that long, and the
+    final line of the per-query-map captures (BENCH_r16*.json) fits in
+    it whole and parses."""
+    import glob
+
+    caps = sorted(glob.glob(os.path.join(REPO, "BENCH_r*.json")))
+    assert caps
+    for path in caps:
+        with open(path) as f:
+            tail = json.load(f)["tail"]
+        assert len(tail) == bench.TAIL_CAPTURE_BYTES, (path, len(tail))
+    for path in glob.glob(os.path.join(REPO, "BENCH_r16*.json")):
+        with open(path) as f:
+            final = json.load(f)["tail"].rstrip("\n").rsplit("\n", 1)[-1]
+        assert "queries" in json.loads(final), path
 
 
 def test_headline_set_covered_by_baselines():

@@ -2334,3 +2334,42 @@ def test_delete_where_range_hint_prunes_discovery(spark, tmp_path, monkeypatch):
     )
     got = {r.id: r.v for r in tab.read(spark).collect()}
     assert got[8] == "patched" and got[9] == "v9"
+
+
+def test_read_plans_from_the_log_without_a_spark_job(spark, tab, caplog):
+    """Building a read frame over more than 32 scan paths launches no
+    Spark job: every path comes from the log and is a local file, so the
+    file index lists them serially while planning instead of through a
+    distributed listing job (Spark's default above
+    `spark.sql.sources.parallelPartitionDiscovery.threshold` = 32). 40
+    files in one txn dir stay per-file scan paths: directory coalescing
+    starts at 512 files."""
+    import logging
+    import uuid
+
+    written = [(i, f"v{i}", f"d{i % 3}") for i in range(80)]
+    tab.commit_overwrite(_df(spark, written).repartition(40))
+    n_files = len(tab.manifest(tab.latest_version())["files"])
+    assert n_files > 32, n_files
+
+    sc = spark.sparkContext
+    group = f"manifest-read-plan-only-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build the read frame, no action")
+    try:
+        with caplog.at_level(logging.DEBUG, logger="spark_graft"):
+            df = tab.read(spark)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    scans = [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == "spark_graft" and r.getMessage().startswith("manifest scan")
+    ]
+    assert scans == [
+        f"manifest scan {tab.root}: {n_files} live files, {n_files} scan "
+        "paths, 0 txn dirs coalesced"
+    ]
+    assert rows(df) == sorted(written)

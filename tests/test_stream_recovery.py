@@ -10,6 +10,7 @@ table.
 from __future__ import annotations
 
 import os
+import shutil
 
 import duckdb
 
@@ -27,6 +28,10 @@ def test_checkpoint_restart_processes_only_new_files(spark, tmp_path):
     src = f"{SF}/events.parquet"
     my_sf = str(tmp_path / "sf")
     os.makedirs(my_sf)
+    # the stage dir is keyed by the source path, which a later pytest
+    # session's tmp_path can repeat: drop the late file an earlier run
+    # staged there, or phase 1 streams it too
+    shutil.rmtree(_stage_dir(my_sf, "events"))
     # phase-1 arrival: even event_ids as the initial events.parquet
     con.execute(
         f"COPY (SELECT * FROM read_parquet('{src}') WHERE event_id % 2 = 0) "
