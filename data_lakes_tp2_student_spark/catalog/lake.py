@@ -9,8 +9,9 @@ row counts, columnar checkpoints and stacked deletion vectors.
 The reference's only notion of a committed table state is "the CSV object
 most recently clobbered into the bucket" (build/unpack_to_raw.py:57 —
 whole-file put, no versioning, readers race the writer). Each lake query
-commits through a fresh table under ``<repo>/.tmp/snapshots`` and answers
-with a committed snapshot read back from disk.
+commits through a fresh table under ``snapshots`` in the process's scratch
+root (``registry.scratch_dir``) and answers with a committed snapshot read
+back from disk.
 """
 
 from __future__ import annotations
@@ -172,11 +173,9 @@ def _fresh_orders_table(
     select: list[str] | None = None,
 ) -> ManifestTable:
     """Version 0 = the orders table (optionally projected / with file
-    stats), committed fresh per run (a leftover log from an older fixture
-    would merge stale rows — same hazard as i9's lake dir)."""
-    table = ManifestTable(
-        scratch_dir("snapshots", tag, sf_dir), stats_cols=stats_cols
-    )
+    stats), committed fresh per call (a leftover log would merge stale
+    rows — same hazard as i9's lake dir)."""
+    table = ManifestTable(scratch_dir("snapshots", tag), stats_cols=stats_cols)
     df = load(spark, sf_dir, "orders")
     if select:
         df = df.select(*select)
@@ -655,7 +654,7 @@ def x65_dsv2_batch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partition+stats prune is the difference between scanning a
     day's files and scanning the table."""
     register_manifest_formats(spark)
-    root = scratch_dir("snapshots", "x65", sf_dir)
+    root = scratch_dir("snapshots", "x65")
     table = ManifestTable(root, stats_cols=["o_orderkey"])
     table.commit_overwrite(
         load(spark, sf_dir, "orders").repartition(8, "o_orderkey"),
@@ -684,7 +683,7 @@ def x66_dsv2_batch_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     values land in the Hive path (not the file) and are re-derived on
     read, and the two halves union to exactly the input."""
     register_manifest_formats(spark)
-    root = scratch_dir("snapshots", "x66", sf_dir)
+    root = scratch_dir("snapshots", "x66")
     orders = load(spark, sf_dir, "orders")
     (
         orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -723,7 +722,7 @@ def x67_deep_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordinary manifest read path."""
     table = _fresh_orders_table(spark, sf_dir, "x67")
     _commit_upsert(spark, table)  # version 1 mutates the head...
-    dest_root = scratch_dir("snapshots", "x67_clone", sf_dir)
+    dest_root = scratch_dir("snapshots", "x67_clone")
     clone = table.clone_to(dest_root, version=0)  # ...we clone version 0
     return clone.read(spark)
 
@@ -1010,7 +1009,7 @@ def x73_parquet_ckpt_autoskip(spark: SparkSession, sf_dir: str) -> DataFrame:
     time travel from behind two checkpoints. A hash match proves the
     columnar checkpoint round-trip, the delta replay over it, and both
     automatic prunes lose and invent nothing."""
-    root = scratch_dir("snapshots", "x73", sf_dir)
+    root = scratch_dir("snapshots", "x73")
     table = ManifestTable(
         root,
         stats_cols=["o_orderkey"],
@@ -1073,7 +1072,7 @@ def x74_prune_in_or_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized partition prune) then re-checked exactly. A hash
     match proves the branch-union and partition prunes lose and invent
     nothing across delete/update/read."""
-    root = scratch_dir("snapshots", "x74", sf_dir)
+    root = scratch_dir("snapshots", "x74")
     table = ManifestTable(
         root,
         stats_cols=["o_orderkey"],
@@ -1150,7 +1149,7 @@ def x75_merged_dv_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes applied, prices untouched). A hash match proves merge +
     dir-aligned apply + purge lose and invent nothing, at any of the
     three versions."""
-    root = scratch_dir("snapshots", "x75", sf_dir)
+    root = scratch_dir("snapshots", "x75")
     table = ManifestTable(root, stats_cols=["o_orderkey"])
     df = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     table.commit_overwrite(df.repartitionByRange(4, "o_orderkey"))

@@ -4,8 +4,9 @@ media scan, mergeSchema evolution and PERMISSIVE malformed-row capture.
 
 Each roundtrip writes the driver table out and reads it back, so the
 parquet-backed oracle view proves format fidelity. Staging lives under
-``<repo>/.tmp/ingest`` (driver testdata is read-only); each query
-overwrites its own subdir, so reruns are idempotent.
+``ingest`` in the process's scratch root (``registry.scratch_dir``; the
+input tables are read-only); each call starts from an emptied subdir, so
+reruns are idempotent.
 """
 
 from __future__ import annotations
@@ -39,7 +40,7 @@ def a1_multipath_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "test": n.filter("n_nationkey % 3 = 1"),
         "dev": n.filter("n_nationkey % 3 = 2"),
     }
-    root = scratch_dir("ingest", "a1_nation", clear=False)
+    root = scratch_dir("ingest", "a1_nation")
     for sub, df in shards.items():
         write_csv(df, f"{root}/{sub}", header=False)
     return read_csv_headerless(
@@ -52,7 +53,7 @@ def a2_csv_headerless_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """a2+a4 — headerless CSV sink then source with imposed schema
     (ref: pd.read_csv(names=[...]), build/unpack_to_raw.py:40-43).
     Lossless roundtrip ⇒ result equals the source parquet table."""
-    path = scratch_dir("ingest", "a2_nation", clear=False)
+    path = scratch_dir("ingest", "a2_nation")
     write_csv(load(spark, sf_dir, "nation"), path, header=False)
     return read_csv_headerless(spark, path, NATION_SCHEMA)
 
@@ -70,7 +71,7 @@ def a3_csv_headered_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("c_mktsegment", T.StringType()),
         ]
     )
-    path = scratch_dir("ingest", "a3_customer", clear=False)
+    path = scratch_dir("ingest", "a3_customer")
     write_csv(load(spark, sf_dir, "customer"), path, header=True)
     return read_csv_headered(spark, path, schema)
 
@@ -78,7 +79,7 @@ def a3_csv_headered_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("a8_json_roundtrip", oracle="SELECT * FROM nation")
 def a8_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """a-group format coverage — JSON lines sink + schema-imposed source."""
-    path = scratch_dir("ingest", "a8_nation_json", clear=False)
+    path = scratch_dir("ingest", "a8_nation_json")
     load(spark, sf_dir, "nation").write.mode("overwrite").json(path)
     return spark.read.schema(NATION_SCHEMA).json(path)
 
@@ -87,7 +88,7 @@ def a8_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a9_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """a-group format coverage — ORC sink + source (columnar alternative;
     pushdown/pruning apply as with parquet)."""
-    path = scratch_dir("ingest", "a9_nation_orc", clear=False)
+    path = scratch_dir("ingest", "a9_nation_orc")
     load(spark, sf_dir, "nation").write.mode("overwrite").orc(path)
     return spark.read.orc(path)
 
@@ -122,11 +123,8 @@ def a10_binaryfile_media_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-media objects before any bytes move."""
     from ..operators.multimodal import bmp_bytes, parse_bmp
 
-    path = scratch_dir("ingest", "a10_media", clear=False)
-    os.makedirs(path, exist_ok=True)
-    # Always rewrite (files are tiny): an if-exists skip would let stale
-    # fixtures from an older bmp_bytes version, or a crashed partial write,
-    # silently diverge from the oracle.
+    path = scratch_dir("ingest", "a10_media")
+    os.makedirs(path)
     for i in range(25):
         f = os.path.join(path, f"doc_{i}.bmp")
         with open(f, "wb") as fh:
@@ -174,7 +172,7 @@ def a11_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    p = scratch_dir("ingest", "a11_evo", clear=False)
+    p = scratch_dir("ingest", "a11_evo")
     base.write.mode("overwrite").parquet(f"{p}/v1")
     base.withColumn(
         "batch_tag", (F.col("n_nationkey") * 10).cast("bigint")
@@ -210,7 +208,7 @@ def a12_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate validation pass."""
     from pyspark.sql import types as T
 
-    path = scratch_dir("ingest", "a12_malformed.csv", clear=False)
+    path = scratch_dir("ingest", "a12_malformed.csv")
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as fh:
         for i in range(100):

@@ -188,10 +188,9 @@ def i9_stream_lake_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row-per-id form."""
     from ..streaming.jobs import stream_upsert_partitions
 
-    # Fresh lake per run: a leftover dest from an older fixture generation
-    # would MERGE into the result and silently diverge from the oracle
-    # (same stale-fixture hazard as a10).
-    dest = scratch_dir("ingest", "i9_lake", sf_dir)
+    # Fresh lake per call: a leftover dest would MERGE into the result and
+    # silently diverge from the oracle.
+    dest = scratch_dir("ingest", "i9_lake")
     stream_upsert_partitions(spark, sf_dir, dest)
     from ..io.manifest import ManifestTable
 
@@ -309,8 +308,8 @@ def i13_stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io.manifest import ManifestTable
     from ..streaming.jobs import stream_cdc_merge
 
-    dest = scratch_dir("ingest", "i13_lake", sf_dir)
-    stage = scratch_dir("ingest", "i13_cdc", sf_dir)
+    dest = scratch_dir("ingest", "i13_lake")
+    stage = scratch_dir("ingest", "i13_cdc")
 
     orders = load(spark, sf_dir, "orders")
     table = ManifestTable(dest)
@@ -362,7 +361,7 @@ def i14_stream_lake_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side — file-per-task parallelism, no driver materialization."""
     from ..io.manifest import ManifestTable
 
-    dest = scratch_dir("ingest", "i14_lake", sf_dir)
+    dest = scratch_dir("ingest", "i14_lake")
     orders = load(spark, sf_dir, "orders")
     table = ManifestTable(dest)
     table.commit_overwrite(orders.filter(F.col("o_orderkey") % 3 == 0))
@@ -408,10 +407,9 @@ def i15_stream_lake_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest_stream source see exactly one version per batch."""
     from ..io.manifest import ManifestTable
 
-    src_root = scratch_dir("ingest", "i15_src", sf_dir)
-    sink_root = scratch_dir("ingest", "i15_sink", sf_dir)
-    ck = scratch_dir("ingest", "i15_ck", sf_dir)
-    tag = ck.rsplit("_", 1)[1]
+    src_root = scratch_dir("ingest", "i15_src")
+    sink_root = scratch_dir("ingest", "i15_sink")
+    ck = scratch_dir("ingest", "i15_ck")
     orders = load(spark, sf_dir, "orders")
     src = ManifestTable(src_root)
     src.commit_overwrite(orders.filter(F.col("o_orderkey") % 3 == 0))
@@ -424,7 +422,7 @@ def i15_stream_lake_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
         .writeStream.format("manifest")
         .option("path", sink_root)
-        .option("txnAppId", f"i15_{tag}")
+        .option("txnAppId", "i15")
         .option("checkpointLocation", ck)
         .outputMode("append")
         .start()

@@ -15,9 +15,10 @@ so double bit-patterns match.
 
 from __future__ import annotations
 
-import hashlib
+import atexit
 import os
 import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -177,25 +178,25 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return _cached_read(spark, f"{sf_dir}/{table}.parquet")
 
 
-_SCRATCH = os.path.join(
+_SCRATCH_PARENT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
 )
+_scratch_root: str | None = None
 
 
-def scratch_dir(
-    zone: str, tag: str, sf_dir: str | None = None, clear: bool = True
-) -> str:
-    """A query's scratch path, ``<repo>/.tmp/<zone>/<tag>``, removed first
-    unless ``clear`` is False (driver testdata is read-only, so roundtrips
-    and lake tables stage here). With ``sf_dir`` the name gains
-    ``_<md5(sf_dir)[:12]>``: runs over different fixtures never share a
-    lake, and a leftover table from an older fixture generation can never
-    merge into a fresh run."""
-    if sf_dir is not None:
-        tag = f"{tag}_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-    path = os.path.join(_SCRATCH, zone, tag)
-    if clear:
-        shutil.rmtree(path, ignore_errors=True)
+def scratch_dir(zone: str, tag: str) -> str:
+    """A query's scratch path, ``<root>/<zone>/<tag>``, removed first
+    (the input tables are read-only, so roundtrips and lake tables stage
+    here). ``<root>`` belongs to this process alone: it is made under
+    ``<repo>/.tmp`` on the first call and removed at interpreter exit, so
+    no other run, concurrent or earlier, ever sees what a query leaves."""
+    global _scratch_root
+    if _scratch_root is None:
+        os.makedirs(_SCRATCH_PARENT, exist_ok=True)
+        _scratch_root = tempfile.mkdtemp(dir=_SCRATCH_PARENT)
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    path = os.path.join(_scratch_root, zone, tag)
+    shutil.rmtree(path, ignore_errors=True)
     return path
 
 

@@ -14,20 +14,14 @@ schema adapts per file (a batch footer read decides), same as
 
 from __future__ import annotations
 
-import hashlib
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-# Spark's file stream source requires a *directory*; testdata is one parquet
-# file per table, so stage a symlink dir (no data copy) under the repo tmp.
-_STAGE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".tmp",
-    "stream_stage",
-)
+from ..registry import assert_ts_not_utc_adjusted, load, scratch_dir
+
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -42,27 +36,7 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
     )
 
 
-def _stage_dir(sf_dir: str, table: str) -> str:
-    src = os.path.abspath(f"{sf_dir}/{table}.parquet")
-    d = os.path.join(_STAGE_ROOT, hashlib.md5(src.encode()).hexdigest()[:12])
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, f"{table}.parquet")
-    # lexists + EEXIST-tolerant: exists() follows symlinks (a dangling
-    # leftover reads False but still blocks creation) and two concurrent
-    # processes can race the check (review r6)
-    if os.path.lexists(link) and not os.path.exists(link):
-        try:
-            os.unlink(link)  # dangling leftover from a removed sf_dir
-        except FileNotFoundError:
-            pass  # concurrent process won the cleanup race (ADVICE r6)
-    try:
-        os.symlink(src, link)
-    except FileExistsError:
-        pass
-    return d
-
-
-def _sentinel_stage_dir(sf_dir: str) -> str:
+def _sentinel_source_dir(sf_dir: str) -> str:
     """Stage dir = symlink to events.parquet + a 2-row sentinel file holding
     one 'view' and one 'purchase' at max(ts) + 1 hour (user_id = -1).
 
@@ -70,76 +44,70 @@ def _sentinel_stage_dir(sf_dir: str) -> str:
     time, so the youngest unmatched outer-join state never flushes — the
     sentinel pushes the TERMINAL watermark past every real row's join
     horizon, making the drained left-outer result deterministic and equal
-    to the batch join (VERDICT r4 item 3). Pure test-fixture staging
-    (driver-side, once, atomic rename); the engine path stays declarative."""
+    to the batch join. Built fresh on every call, so a regenerated
+    events.parquet (later timestamps, or a flipped ts physical type — both
+    have happened across testdata generations) always gets a sentinel past
+    its own max(ts). Pure test-fixture staging; the engine path stays
+    declarative."""
+    import datetime
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     src = os.path.abspath(f"{sf_dir}/events.parquet")
-    # Key the stage dir on the source's content identity (size + mtime),
-    # not just its path: a regenerated events.parquet with later timestamps
-    # (or a flipped ts physical type — it has happened across testdata
-    # generations) must get a FRESH sentinel, or the cached one no longer
-    # exceeds max(ts) and the drained result silently diverges.
-    st = os.stat(src)
-    key = f"{src}#sentinel#{st.st_size}:{st.st_mtime_ns}"
-    d = os.path.join(_STAGE_ROOT, hashlib.md5(key.encode()).hexdigest()[:12])
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    sentinel = os.path.join(d, "zz_sentinel.parquet")
-    if not os.path.exists(sentinel):
-        schema = pq.read_schema(src)
-        tcol = pq.read_table(src, columns=["ts"])["ts"]
-        ts_type = schema.field("ts").type
-        if pa.types.is_timestamp(ts_type):
-            import datetime
-
-            bump = pa.compute.max(tcol).as_py() + datetime.timedelta(hours=1)
-        else:  # nanos-as-long generation
-            bump = pa.compute.max(tcol).as_py() + 3_600 * 10**9
-        cols = {
-            "event_id": [-1, -2],
-            "ts": [bump, bump],
-            "user_id": [-1, -1],
-            "event_type": ["view", "purchase"],
-            "value": [0.0, 0.0],
-            "props": ["{}", "{}"],
-        }
-        table = pa.Table.from_pydict(
-            {f.name: pa.array(cols[f.name], type=f.type) for f in schema}
-        )
-        tmp = sentinel + f".tmp.{uuid.uuid4().hex[:8]}"
-        pq.write_table(table, tmp)
-        os.rename(tmp, sentinel)
+    d = scratch_dir("stream", "sentinel")
+    os.makedirs(d)
+    os.symlink(src, os.path.join(d, "events.parquet"))
+    schema = pq.read_schema(src)
+    tcol = pq.read_table(src, columns=["ts"])["ts"]
+    if pa.types.is_timestamp(schema.field("ts").type):
+        bump = pa.compute.max(tcol).as_py() + datetime.timedelta(hours=1)
+    else:  # nanos-as-long generation
+        bump = pa.compute.max(tcol).as_py() + 3_600 * 10**9
+    cols = {
+        "event_id": [-1, -2],
+        "ts": [bump, bump],
+        "user_id": [-1, -1],
+        "event_type": ["view", "purchase"],
+        "value": [0.0, 0.0],
+        "props": ["{}", "{}"],
+    }
+    table = pa.Table.from_pydict(
+        {f.name: pa.array(cols[f.name], type=f.type) for f in schema}
+    )
+    pq.write_table(table, os.path.join(d, "zz_sentinel.parquet"))
     return d
 
 
 def read_events_stream(
     spark: SparkSession, sf_dir: str, with_sentinel: bool = False
 ) -> DataFrame:
-    from ..registry import assert_ts_not_utc_adjusted
-
+    """The events table as a file stream. Its input is every
+    ``events*.parquet`` file in ``sf_dir``: a file that lands there while a
+    checkpointed query is down (say ``events_late.parquet``) is all that
+    the restarted query reads. The source is a glob because Spark's file
+    stream source rejects a single-file path. With ``with_sentinel`` the
+    input is ``events.parquet`` plus the sentinel pair instead (see
+    ``_sentinel_source_dir``)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")  # see registry.load
     # A third testdata generation shipping TIMESTAMP(isAdjustedToUTC=true)
-    # must fail loudly, not diverge from the naive-UTC oracle (ADVICE r2).
+    # must fail loudly, not diverge from the naive-UTC oracle.
     assert_ts_not_utc_adjusted(f"{sf_dir}/events.parquet")
     # Footer-only batch read decides whether ts arrives as nanos-long or as
     # a native timestamp; the imposed stream schema must match the file or
     # the reader silently misinterprets the column.
     file_ts = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
     nanos = isinstance(file_ts, T.LongType)
-    stage = (
-        _sentinel_stage_dir(sf_dir) if with_sentinel else _stage_dir(sf_dir, "events")
+    source = (
+        _sentinel_source_dir(sf_dir) if with_sentinel else f"{sf_dir}/events*.parquet"
     )
     raw = (
         spark.readStream.schema(
             _events_schema(T.LongType() if nanos else file_ts)
         )
         .format("parquet")
-        .load(stage)
+        .load(source)
     )
     if nanos:
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -207,7 +175,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dropDuplicatesWithinWatermark`, NOT plain `dropDuplicates`: with the
     event-time column absent from the subset, plain dropDuplicates keeps
     every id ever seen — the watermark never evicts its state and an
-    infinite stream OOMs (review r6). The WithinWatermark variant expires
+    infinite stream OOMs. The WithinWatermark variant expires
     each key once the watermark passes its event time, which is exactly
     the bounded-state contract the docstring promises; on the drained
     finite fixture both emit each id once, so the oracle is unchanged."""
@@ -290,11 +258,11 @@ def stream_outer_interval_join(
     batch inner join; emitted null rows are exactly the provably-expired
     unmatched views).
 
-    ``with_sentinel=True`` (the registry/oracle path, VERDICT r4 item 3)
-    adds a max-timestamp sentinel event pair to the source, pushing the
-    terminal watermark past every real view's join horizon — the drained
-    result then EQUALS the batch left-outer join exactly (sentinel rows
-    filtered back out), so the standard SQL oracle applies."""
+    ``with_sentinel=True`` (the registry/oracle path) adds a max-timestamp
+    sentinel event pair to the source, pushing the terminal watermark past
+    every real view's join horizon — the drained result then EQUALS the
+    batch left-outer join exactly (sentinel rows filtered back out), so the
+    standard SQL oracle applies."""
     joined = build_interval_join(
         spark, sf_dir, "left_outer", with_sentinel=with_sentinel
     ).select("v_user", "view_id", "view_ts", "purchase_id", "purchase_ts")
@@ -311,11 +279,9 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real cluster Spark broadcasts it per micro-batch, so stream state
     stays zero and late data cannot affect the dim. Inner join over the
     drained file source equals the batch join — SQL oracle applies."""
-    from ..registry import load
-
     # registry.load, not a raw read: it owns the TIMESTAMP(NANOS) parquet
     # adaptation — a raw eager read here crashed when i10 was the first
-    # events query of the session (review r6)
+    # events query of the session
     profile = (
         load(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -365,8 +331,8 @@ def stream_upsert_partitions(
     batch_id) is an optional observation hook for tests. Runs the file
     source dry synchronously (same test-bed contract as the other jobs).
 
-    The lake is a SNAPSHOT-COMMITTED manifest table (io/manifest.py,
-    VERDICT r5 item 2): each micro-batch lands as ONE
+    The lake is a SNAPSHOT-COMMITTED manifest table (io/manifest.py): each
+    micro-batch lands as ONE
     `commit_replace_partitions`, so every touched day flips to the new
     state atomically — a reader never sees day A post-batch and day B
     pre-batch (the mixed state a raw dynamic partition overwrite can
@@ -382,8 +348,7 @@ def stream_upsert_partitions(
 
     `dest` may be a path (local manifest table) or an already-constructed
     `ManifestTable` — e.g. one backed by `io/logstore.py:S3LogStore`, so
-    the same sink streams atomically into an object-store lake
-    (round 8)."""
+    the same sink streams atomically into an object-store lake."""
     from ..io.manifest import ManifestTable
 
     table = dest if isinstance(dest, ManifestTable) else ManifestTable(dest)

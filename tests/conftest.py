@@ -12,11 +12,21 @@ if REPO not in sys.path:
 from data_lakes_tp2_student_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
-SF_ORACLE = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
+SF_SMALL = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+SF_ORACLE = os.environ.get("TEST_SF_DIR", SF_SMOKE)
+
+
+def _require_testdata() -> None:
+    """Fail with one message that names the missing data dir, instead of
+    each test tripping over its own file-not-found."""
+    missing = [d for d in (SF_SMOKE, SF_ORACLE) if not os.path.isdir(d)]
+    if missing:
+        pytest.fail(f"test data not found: {', '.join(missing)}", pytrace=False)
 
 
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
+    _require_testdata()
     s = get_spark(
         app_name="tests",
         cpus=os.environ.get("SPARK_GRAFT_CPUS", "4"),
@@ -32,4 +42,5 @@ def spark(tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
+    _require_testdata()
     return SF_ORACLE

@@ -43,6 +43,8 @@ from data_lakes_tp2_student_spark.io.prune import (
     keep,
 )
 
+from .conftest import SF_SMOKE
+
 
 def _where(cond):
     """The parsed branches of `cond` ([] when it prunes nothing)."""
@@ -462,7 +464,7 @@ def test_auto_max_partition_bytes_sizing():
     # degenerate cores never divide by zero
     assert auto_max_partition_bytes(10 * _MIB, 0) == 16 * _MIB
     # flat-dir byte probe: real testdata >10 MB, missing dir → 0
-    assert _dir_parquet_bytes("/root/testdata/sf0.001") > 0
+    assert _dir_parquet_bytes(SF_SMOKE) > 0
     assert _dir_parquet_bytes("/nonexistent/dir") == 0
 
 

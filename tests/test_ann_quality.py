@@ -21,13 +21,15 @@ from data_lakes_tp2_student_spark.operators.similarity import (
     top_sets,
 )
 
+from .conftest import SF_SMALL
+
 K = 10
 N_QUERIES = 20
 
 
 @pytest.fixture(scope="module")
 def corpus(spark):
-    return spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    return spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
 
 
 # shared with scripts/ann_operating_points.py (round-13 review: one

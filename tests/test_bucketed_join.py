@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from data_lakes_tp2_student_spark.io.bucketing import read_table, write_bucketed
 
+from .conftest import SF_SMOKE
+
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -17,7 +19,7 @@ def plan_of(df) -> str:
 
 @pytest.fixture(scope="module")
 def bucketed_tables(spark):
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     orders = spark.read.parquet(f"{sf}/orders.parquet")
     lineitem = spark.read.parquet(f"{sf}/lineitem.parquet")
     write_bucketed(
@@ -51,9 +53,9 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables, no_broadcast):
     assert "BroadcastHashJoin" not in p
     # correctness: identical to the plain path-read join
     plain = (
-        spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+        spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
         .join(
-            spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet"),
+            spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet"),
             F.col("o_orderkey") == F.col("l_orderkey"),
         )
         .count()
@@ -62,7 +64,7 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables, no_broadcast):
 
 
 def test_unbucketed_twin_join_shuffles(spark, no_broadcast):
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     o = spark.read.parquet(f"{sf}/orders.parquet")
     l = spark.read.parquet(f"{sf}/lineitem.parquet")
     p = plan_of(o.join(l, o.o_orderkey == l.l_orderkey))

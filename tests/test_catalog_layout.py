@@ -1,18 +1,21 @@
 """Catalog layout rules, checked without a Spark session: the registered id
 set, one module per SURVEY.md §2 operator group with no cross-module private
-imports, and the shared scratch-dir helper."""
+imports, and the per-process scratch root behind the shared scratch-dir
+helper."""
 
 from __future__ import annotations
 
 import ast
-import hashlib
 import os
+import subprocess
+import sys
 from pathlib import Path
 
 from data_lakes_tp2_student_spark import registry
 from data_lakes_tp2_student_spark.catalog import REGISTRY
 
 CATALOG = Path(registry.__file__).parent / "catalog"
+REPO = str(Path(registry.__file__).parent.parent)
 MODULES = sorted(p for p in CATALOG.glob("*.py") if p.name != "__init__.py")
 
 
@@ -41,27 +44,72 @@ def test_catalog_modules_are_named_by_group_not_round():
         assert ast.get_docstring(ast.parse(path.read_text())), path.name
 
 
-def test_scratch_dir_is_stable_per_fixture_and_cleared(tmp_path, monkeypatch):
-    monkeypatch.setattr(registry, "_SCRATCH", str(tmp_path))
-    first = registry.scratch_dir("snapshots", "x65", "/data/sf0.01")
-    digest = hashlib.md5(b"/data/sf0.01").hexdigest()[:12]
-    assert first == os.path.join(str(tmp_path), "snapshots", f"x65_{digest}")
+def test_scratch_dir_second_call_returns_an_emptied_dir():
+    first = registry.scratch_dir("snapshots", "x65")
     os.makedirs(first)
     Path(first, "leftover.parquet").write_bytes(b"stale")
 
-    again = registry.scratch_dir("snapshots", "x65", "/data/sf0.01")
+    again = registry.scratch_dir("snapshots", "x65")
     assert again == first
-    assert not os.path.exists(again) or os.listdir(again) == []
-
-    other = registry.scratch_dir("snapshots", "x65", "/data/sf0.1")
-    assert other != first
+    assert not os.path.exists(again)
 
 
-def test_scratch_dir_keeps_contents_when_not_clearing(tmp_path, monkeypatch):
-    monkeypatch.setattr(registry, "_SCRATCH", str(tmp_path))
-    path = registry.scratch_dir("ingest", "a2_nation", clear=False)
-    assert path == os.path.join(str(tmp_path), "ingest", "a2_nation")
-    os.makedirs(path)
-    Path(path, "part-0.csv").write_text("0,ALGERIA,0\n")
-    assert registry.scratch_dir("ingest", "a2_nation", clear=False) == path
-    assert os.listdir(path) == ["part-0.csv"]
+# One process that asks for a2's scratch dir, writes a file into it, prints
+# the path and exits once its stdin closes, so a caller can hold two alive.
+_SCRATCH_USER = """
+import os, sys
+from data_lakes_tp2_student_spark import registry
+path = registry.scratch_dir("ingest", "a2_nation")
+os.makedirs(path)
+with open(os.path.join(path, "part-0.csv"), "w") as fh:
+    fh.write("0,ALGERIA,0\\n")
+print(path, flush=True)
+sys.stdin.read()
+"""
+
+
+def _start_scratch_user() -> subprocess.Popen:
+    return subprocess.Popen(
+        [sys.executable, "-c", _SCRATCH_USER],
+        cwd=REPO,
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+
+
+def _finish(proc: subprocess.Popen) -> None:
+    proc.stdin.close()
+    assert proc.wait(timeout=60) == 0
+
+
+def _assert_nothing_left(paths: list[str]) -> None:
+    scratch = os.path.join(REPO, ".tmp")
+    for path in paths:
+        assert path.startswith(scratch + os.sep), path
+        root = os.path.join(scratch, os.path.relpath(path, scratch).split(os.sep)[0])
+        assert not os.path.exists(root), root
+
+
+def test_sequential_processes_get_disjoint_scratch_and_leave_none():
+    paths = []
+    for _ in range(2):
+        proc = _start_scratch_user()
+        paths.append(proc.stdout.readline().strip())
+        _finish(proc)
+    assert paths[0] != paths[1]
+    _assert_nothing_left(paths)
+
+
+def test_concurrent_processes_get_disjoint_scratch_and_leave_none():
+    procs = [_start_scratch_user() for _ in range(2)]
+    try:
+        paths = [proc.stdout.readline().strip() for proc in procs]
+        # both alive here: each still holds its own file
+        assert paths[0] != paths[1]
+        for path in paths:
+            assert os.listdir(path) == ["part-0.csv"]
+    finally:
+        for proc in procs:
+            _finish(proc)
+    _assert_nothing_left(paths)

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from data_lakes_tp2_student_spark.operators.layout import zorder_by, zorder_key
 
+from .conftest import SF_SMALL
+
 
 def _py_morton(vals: list[int], bits: int) -> int:
     k = len(vals)
@@ -52,7 +54,7 @@ def test_zorder_tightens_file_stats_on_both_dims(spark, tmp_path):
     min/max span shrinks on BOTH columns vs the unsorted layout — a linear
     sort can only ever tighten one. Tight spans are what lets a reader skip
     files/row-groups for predicates on either column."""
-    li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").select(
+    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_suppkey"
     )
     n_files = 16
@@ -134,7 +136,7 @@ def test_hilbert_consecutive_cells_are_grid_adjacent(spark):
 def test_hilbert_by_tightens_file_stats_on_both_dims(spark, tmp_path):
     from data_lakes_tp2_student_spark.operators.layout import hilbert_by
 
-    li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").select(
+    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_suppkey"
     )
     n_files = 16

@@ -12,6 +12,7 @@ from decimal import Decimal
 import numpy as np
 import pandas as pd
 
+from .conftest import SF_SMOKE
 from .oracle import _str, canon_strings, spark_nonportable_fields
 
 
@@ -43,7 +44,7 @@ def test_decimal_registration_fails_the_gate(spark):
             return spark.sql("SELECT CAST(123.40 AS DECIMAL(18,2)) AS money")
 
         with pytest.raises(AssertionError, match="non-portable"):
-            compare_query(spark, name, "/root/testdata/sf0.001")
+            compare_query(spark, name, SF_SMOKE)
     finally:
         REGISTRY.pop(name, None)
 
@@ -286,7 +287,7 @@ def _expect_gate_failure(spark, name: str, template: str):
     REGISTRY[name] = _with_mutated_oracle(name, template)
     try:
         with pytest.raises(AssertionError):
-            compare_query(spark, name, "/root/testdata/sf0.001")
+            compare_query(spark, name, SF_SMOKE)
     finally:
         REGISTRY[name] = original
 
@@ -370,7 +371,7 @@ def test_sketch_bound_canaries(spark, name):
     q = REGISTRY[name]
     assert q.oracle is None and q.tol_oracle is not None
     # unmutated: the sketch sits inside the exact bound
-    compare_query(spark, name, "/root/testdata/sf0.001")
+    compare_query(spark, name, SF_SMOKE)
 
     def nudged(spark_, sf_, _fn=q.fn):
         df = _fn(spark_, sf_)
@@ -383,7 +384,7 @@ def test_sketch_bound_canaries(spark, name):
     )
     try:
         with _pytest.raises(AssertionError, match="outside exact bound"):
-            compare_query(spark, name, "/root/testdata/sf0.001")
+            compare_query(spark, name, SF_SMOKE)
     finally:
         REGISTRY[name] = q
 
@@ -402,4 +403,4 @@ def test_unmutated_canary_queries_pass_gate(spark):
         "x53_time_travel",
         "x57_restore_rollback",
     ]:
-        compare_query(spark, name, "/root/testdata/sf0.001")
+        compare_query(spark, name, SF_SMOKE)

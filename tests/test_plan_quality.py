@@ -11,6 +11,8 @@ import contextlib
 import pytest
 from pyspark.sql import functions as F
 
+from .conftest import SF_SMOKE
+
 
 def plan_of(df) -> str:
     buf = io.StringIO()
@@ -20,7 +22,7 @@ def plan_of(df) -> str:
 
 
 def test_filter_pushdown_and_column_pruning(spark):
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
     df = li.filter(F.col("l_shipdate") < "1996-01-01").select(
         "l_orderkey", "l_extendedprice"
     )
@@ -33,7 +35,7 @@ def test_filter_pushdown_and_column_pruning(spark):
 
 
 def test_partition_pruning_on_partitioned_write(spark, tmp_path):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     out = str(tmp_path / "docs_by_lang")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
     df = spark.read.parquet(out).filter(F.col("lang") == "en")
@@ -50,8 +52,8 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try:
-        orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+        orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
+        li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
         orders.write.mode("overwrite").bucketBy(4, "o_orderkey").sortBy(
             "o_orderkey"
         ).saveAsTable("b_orders")
@@ -77,7 +79,7 @@ def test_compaction_sizes_output_files(spark, tmp_path):
     from data_lakes_tp2_student_spark.io.sinks import compact_parquet
     import glob
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     src = str(tmp_path / "fragmented")
     docs.repartition(32).write.mode("overwrite").parquet(src)
     assert len(glob.glob(f"{src}/part-*.parquet")) == 32
@@ -97,7 +99,7 @@ def test_resample_spine_join_is_broadcast(spark):
     from data_lakes_tp2_student_spark.registry import REGISTRY
     import data_lakes_tp2_student_spark.catalog  # noqa: F401
 
-    df = REGISTRY["x11_resample_gapfill"].fn(spark, "/root/testdata/sf0.001")
+    df = REGISTRY["x11_resample_gapfill"].fn(spark, SF_SMOKE)
     assert "BroadcastHashJoin" in plan_of(df)
 
 
@@ -107,7 +109,7 @@ def test_stratified_sample_single_exchange(spark):
     from data_lakes_tp2_student_spark.registry import REGISTRY
     import data_lakes_tp2_student_spark.catalog  # noqa: F401
 
-    df = REGISTRY["f6_stratified_sample"].fn(spark, "/root/testdata/sf0.001")
+    df = REGISTRY["f6_stratified_sample"].fn(spark, SF_SMOKE)
     p = plan_of(df)
     assert p.count("hashpartitioning(") == 1
     # Spark's WindowGroupLimit keeps only k rows per stratum on the map side
@@ -123,7 +125,7 @@ def test_ntile_two_phase_rank_no_group_sort(spark):
     from data_lakes_tp2_student_spark.registry import REGISTRY
     import data_lakes_tp2_student_spark.catalog  # noqa: F401
 
-    df = REGISTRY["e3c_ntile_buckets"].fn(spark, "/root/testdata/sf0.001")
+    df = REGISTRY["e3c_ntile_buckets"].fn(spark, SF_SMOKE)
     p = plan_of(df)
     # the row_number window spec carries both band and priority keys
     win = next(
@@ -146,7 +148,7 @@ def test_token_budget_two_phase_prefix_sum(spark):
     import data_lakes_tp2_student_spark.catalog  # noqa: F401
 
     df = REGISTRY["x25_token_budget_selection"].fn(
-        spark, "/root/testdata/sf0.001"
+        spark, SF_SMOKE
     )
     p = plan_of(df)
     # every sum-window spec carries the band key alongside source (the tiny
@@ -170,7 +172,7 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
     from data_lakes_tp2_student_spark.io.sinks import overwrite_partitions
     from data_lakes_tp2_student_spark.registry import load
 
-    ev = load(spark, "/root/testdata/sf0.001", "events").withColumn(
+    ev = load(spark, SF_SMOKE, "events").withColumn(
         "day", F.to_date("ts")
     )
     path = str(tmp_path / "events_by_day")
@@ -217,7 +219,7 @@ def test_stream_upsert_partitions_matches_batch(spark, tmp_path):
     from data_lakes_tp2_student_spark.io.manifest import ManifestTable
 
     dest = str(tmp_path / "events_lake")
-    sf = "/root/testdata/sf0.001"
+    sf = SF_SMOKE
     stream_upsert_partitions(spark, sf, dest)
     batch = load(spark, sf, "events")
     table = ManifestTable(dest)
@@ -241,7 +243,7 @@ def test_substring_dedup_no_cartesian(spark):
     from data_lakes_tp2_student_spark.registry import REGISTRY
     import data_lakes_tp2_student_spark.catalog  # noqa: F401
 
-    df = REGISTRY["x32_substring_dedup"].fn(spark, "/root/testdata/sf0.001")
+    df = REGISTRY["x32_substring_dedup"].fn(spark, SF_SMOKE)
     p = plan_of(df)
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
@@ -257,7 +259,7 @@ def test_lsh_join_is_bucket_equijoin(spark):
     from data_lakes_tp2_student_spark.registry import REGISTRY
     import data_lakes_tp2_student_spark.catalog  # noqa: F401
 
-    df = REGISTRY["x3b_knn_lsh"].fn(spark, "/root/testdata/sf0.001")
+    df = REGISTRY["x3b_knn_lsh"].fn(spark, SF_SMOKE)
     p = plan_of(df)
     assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
@@ -270,7 +272,7 @@ def test_weighted_sample_is_top_k(spark):
     from data_lakes_tp2_student_spark.registry import REGISTRY
     import data_lakes_tp2_student_spark.catalog  # noqa: F401
 
-    df = REGISTRY["x35_weighted_sample"].fn(spark, "/root/testdata/sf0.001")
+    df = REGISTRY["x35_weighted_sample"].fn(spark, SF_SMOKE)
     p = plan_of(df)
     assert "TakeOrderedAndProject" in p
 
@@ -281,7 +283,7 @@ def test_bloom_probe_broadcasts_bitmap(spark):
     from data_lakes_tp2_student_spark.registry import REGISTRY
     import data_lakes_tp2_student_spark.catalog  # noqa: F401
 
-    df = REGISTRY["x37_bloom_decontaminate"].fn(spark, "/root/testdata/sf0.001")
+    df = REGISTRY["x37_bloom_decontaminate"].fn(spark, SF_SMOKE)
     p = plan_of(df)
     assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
@@ -294,7 +296,7 @@ def test_snm_window_join_is_equijoin(spark):
     from data_lakes_tp2_student_spark.registry import REGISTRY
     import data_lakes_tp2_student_spark.catalog  # noqa: F401
 
-    df = REGISTRY["x42_entity_resolution"].fn(spark, "/root/testdata/sf0.001")
+    df = REGISTRY["x42_entity_resolution"].fn(spark, SF_SMOKE)
     p = plan_of(df)
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
@@ -306,7 +308,7 @@ def test_semdedup_pairs_by_cell_equijoin(spark):
     from data_lakes_tp2_student_spark.registry import REGISTRY
     import data_lakes_tp2_student_spark.catalog  # noqa: F401
 
-    df = REGISTRY["x38_semdedup"].fn(spark, "/root/testdata/sf0.001")
+    df = REGISTRY["x38_semdedup"].fn(spark, SF_SMOKE)
     p = plan_of(df)
     assert "CartesianProduct" not in p
 
@@ -358,7 +360,7 @@ def test_no_cartesian_product_anywhere_in_registry(spark):
     for name, q in sorted(REGISTRY.items()):
         if name in STREAMING_SINK:
             continue
-        p = plan_of(q.fn(spark, "/root/testdata/sf0.001"))
+        p = plan_of(q.fn(spark, SF_SMOKE))
         if "CartesianProduct" in p:
             cartesian.append(name)
         if "BroadcastNestedLoopJoin" in p and name not in ALLOWED_NLJ:
@@ -378,7 +380,7 @@ def test_stream_interval_join_plans_symmetric_hash(spark):
     )
 
     for how in ("inner", "left_outer"):
-        p = plan_of(build_interval_join(spark, "/root/testdata/sf0.001", how))
+        p = plan_of(build_interval_join(spark, SF_SMOKE, how))
         assert "StreamingSymmetricHashJoin" in p, (how, p)
         assert "BroadcastNestedLoopJoin" not in p
         assert "CartesianProduct" not in p
@@ -390,10 +392,10 @@ def test_join_strategy_hints_steer_the_planner(spark):
     hint, and every variant returns identical results — the knob used at
     100 TB when the optimizer's size estimates are wrong (a misestimated
     broadcast OOMs an executor; a forced shuffle_hash skips the sort)."""
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").select(
+    o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").select(
         "o_orderkey", "o_orderpriority"
     )
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
         "l_orderkey", "l_quantity"
     )
     base = li.join(o.hint("broadcast"), li.l_orderkey == o.o_orderkey)
@@ -414,7 +416,7 @@ def test_x5m_avi_chain_is_shuffle_free_and_column_pruned(spark):
     nothing shuffles binary payloads."""
     from data_lakes_tp2_student_spark.catalog import REGISTRY
 
-    df = REGISTRY.get("x5m_avi_frames").fn(spark, "/root/testdata/sf0.001")
+    df = REGISTRY.get("x5m_avi_frames").fn(spark, SF_SMOKE)
     df.collect()
     p = df._jdf.queryExecution().executedPlan().toString()
     p = p.split("== Initial Plan ==")[0]

@@ -11,9 +11,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .conftest import SF_SMOKE
+
 
 def _docs(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    return spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
 
 
 def test_additive_column_merges_with_nulls(spark, tmp_path):

@@ -23,7 +23,8 @@ from data_lakes_tp2_student_spark.streaming.jobs import (
     stream_outer_interval_join,
 )
 
-SF = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE as SF
+
 INTERVAL = datetime.timedelta(minutes=10)
 
 

@@ -10,17 +10,13 @@ table.
 from __future__ import annotations
 
 import os
-import shutil
 
 import duckdb
 
 from data_lakes_tp2_student_spark.registry import load
-from data_lakes_tp2_student_spark.streaming.jobs import (
-    _stage_dir,
-    stream_upsert_partitions,
-)
+from data_lakes_tp2_student_spark.streaming.jobs import stream_upsert_partitions
 
-SF = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE as SF
 
 
 def test_checkpoint_restart_processes_only_new_files(spark, tmp_path):
@@ -28,10 +24,6 @@ def test_checkpoint_restart_processes_only_new_files(spark, tmp_path):
     src = f"{SF}/events.parquet"
     my_sf = str(tmp_path / "sf")
     os.makedirs(my_sf)
-    # the stage dir is keyed by the source path, which a later pytest
-    # session's tmp_path can repeat: drop the late file an earlier run
-    # staged there, or phase 1 streams it too
-    shutil.rmtree(_stage_dir(my_sf, "events"))
     # phase-1 arrival: even event_ids as the initial events.parquet
     con.execute(
         f"COPY (SELECT * FROM read_parquet('{src}') WHERE event_id % 2 = 0) "
@@ -50,12 +42,11 @@ def test_checkpoint_restart_processes_only_new_files(spark, tmp_path):
     ).fetchone()[0]
     assert sum(seen) == n_even
 
-    # phase-2 arrival while the query is down: odd ids land in the staged
-    # source dir as a second file
-    stage = _stage_dir(my_sf, "events")
+    # phase-2 arrival while the query is down: odd ids land next to the
+    # source as a second events*.parquet file
     con.execute(
         f"COPY (SELECT * FROM read_parquet('{src}') WHERE event_id % 2 = 1) "
-        f"TO '{stage}/events_late.parquet' (FORMAT PARQUET)"
+        f"TO '{my_sf}/events_late.parquet' (FORMAT PARQUET)"
     )
     seen.clear()
     stream_upsert_partitions(spark, my_sf, dest, ckpt, on_batch)
