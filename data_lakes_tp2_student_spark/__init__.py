@@ -13,6 +13,7 @@ Layout
 - ``pipeline``   : raw -> staging -> curated pipeline parity with the reference.
 - ``registry``   : query registry wiring operators to the driver harness
                    (``__spark_entry__.py``) with DuckDB oracle SQL per query.
+- ``scratch``    : per-process scratch roots, removed at interpreter exit.
 
 Everything here uses only public PySpark APIs; no custom Catalyst rules are
 needed (SURVEY.md §4).

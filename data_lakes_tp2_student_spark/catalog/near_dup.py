@@ -60,7 +60,7 @@ def x1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- x2 near-dup: MinHash + LSH
 
-# DuckDB CTE chain mirroring dedup.with_shingles/minhash_signatures/
+# DuckDB CTE chain mirroring dedup.exploded_shingles/minhash_signatures/
 # lsh_candidate_pairs (16 rotated hashes, 4 bands × 4 rows). The signature
 # definition (one md5 per shingle, k left-rotations as the hash family) must
 # stay in lockstep with operators/dedup.py — the oracle SQL below is BUILT
@@ -173,18 +173,15 @@ def x2_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x2b_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x2 — exact shingle-Jaccard verification of the LSH candidates (the
     cheap-filter-then-exact-verify shape; only candidates pay set costs).
-    ONE persisted shingle table feeds both the signature aggregation and the
-    verify joins — the explosion (the pipeline's most expensive stage) runs
-    once, as it would at 100 TB."""
+    The signatures come from the per-document MinHash kernel, which shingles
+    in its own batches; the persisted distinct shingle table feeds only the
+    verify joins (its set sizes and the intersection), which read it
+    several times."""
     docs = load(spark, sf_dir, "documents")
-    # ONE distinct shingle table, hash-partitioned by doc_id, feeds both the
-    # signature mins (duplicates never change a min) and the verify joins —
-    # shingle once, dedup once, every downstream per-doc aggregation reuses
-    # the cached partitioning (operators/dedup.py:distinct_shingles).
+    # hash-partitioned by doc_id, so the verify stage's per-doc set sizes
+    # reuse the cached partitioning (operators/dedup.py:distinct_shingles)
     sh = eager(distinct_shingles(docs, "doc_id", "text"))
-    sigs = minhash_signatures(
-        docs, "doc_id", "text", num_hashes=_N_HASHES, shingles=sh
-    )
+    sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=_N_HASHES)
     pairs = lsh_candidate_pairs(
         sigs, "doc_id", bands=_N_BANDS, rows_per_band=_ROWS_PER_BAND
     )
@@ -1054,11 +1051,9 @@ def x44_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.compute import eager
 
     docs = load(spark, sf_dir, "documents")
-    # Shared distinct shingle table, hash-partitioned by doc_id (see x2b / operators/dedup.py:distinct_shingles for the reuse argument).
+    # the verify stage's distinct shingle table, as in x2b
     sh = eager(distinct_shingles(docs, "doc_id", "text"))
-    sigs = minhash_signatures(
-        docs, "doc_id", "text", num_hashes=_N_HASHES, shingles=sh
-    )
+    sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=_N_HASHES)
     pairs = lsh_candidate_pairs(
         sigs, "doc_id", bands=_N_BANDS, rows_per_band=_ROWS_PER_BAND
     )

@@ -39,6 +39,8 @@ import tempfile
 import time
 from abc import ABC, abstractmethod
 
+from ..scratch import process_root
+
 
 class LogStore(ABC):
     """The manifest layer's storage contract. `name` arguments are log-file
@@ -129,6 +131,13 @@ class LogStore(ABC):
         objects inside LIVE (committed) txn dirs: a speculative task
         whose PUTs land after the commit's pre-publish LIST leaves
         unreferenced keys the dir-granular sweep never reaps."""
+
+    def list_txn_rels(self, name: str) -> list[str]:
+        """Table-relative path of every file in one txn dir, without
+        ages (scan planning's `_coalesce_dirs`). This default drops the
+        ages of `list_txn_files`; a backend that pays per file for an
+        age overrides it."""
+        return [rel for rel, _age in self.list_txn_files(name)]
 
     @abstractmethod
     def delete_files(self, rels: list[str]) -> None:
@@ -235,18 +244,24 @@ class LocalLogStore(LogStore):
     def delete_txn_dir(self, name: str) -> None:
         shutil.rmtree(os.path.join(self.data_dir, name))
 
+    def list_txn_rels(self, name: str) -> list[str]:
+        # one relpath per directory, not per file: 65k files in one txn
+        # dir are one os.walk entry
+        out: list[str] = []
+        for dirpath, _dirs, names in os.walk(os.path.join(self.data_dir, name)):
+            rel_dir = os.path.relpath(dirpath, self.root)
+            out.extend(os.path.join(rel_dir, n) for n in names)
+        return out
+
     def list_txn_files(self, name: str) -> list[tuple[str, float]]:
-        base = os.path.join(self.data_dir, name)
         out: list[tuple[str, float]] = []
         now = time.time()
-        for dirpath, _dirs, names in os.walk(base):
-            for n in names:
-                full = os.path.join(dirpath, n)
-                try:
-                    age = now - os.path.getmtime(full)
-                except OSError:
-                    continue  # concurrently removed
-                out.append((os.path.relpath(full, self.root), age))
+        for rel in self.list_txn_rels(name):
+            try:
+                age = now - os.path.getmtime(os.path.join(self.root, rel))
+            except OSError:
+                continue  # concurrently removed
+            out.append((rel, age))
         return out
 
     def delete_files(self, rels: list[str]) -> None:
@@ -286,7 +301,10 @@ class S3LogStore(LogStore):
     Spark reads/stage writes; pass the same dir to cooperating handles on
     one machine or let each default to its own temp dir — correctness
     does not depend on sharing (files are immutable), only warm-read
-    speed does.
+    speed does. A `cache_dir` passed in stays the caller's; a default one
+    is a fresh dir under this process's `manifest-s3-*` root in the
+    system temp dir, removed when the process exits
+    (`scratch.process_root`).
 
     Vacuum-vs-cached-reader nuance (differs from the local backend's
     fail-loud contract): vacuum deletes the S3 objects and THIS handle's
@@ -322,7 +340,9 @@ class S3LogStore(LogStore):
         self.client = client
         self.bucket = bucket
         self.prefix = table_prefix.strip("/")
-        self.cache_root = cache_dir or tempfile.mkdtemp(prefix="manifest-s3-")
+        self.cache_root = cache_dir or tempfile.mkdtemp(
+            dir=process_root(None, "manifest-s3-")
+        )
         self._injected_client = _injected
         self._ctor = dict(
             endpoint=endpoint,

@@ -1607,7 +1607,7 @@ class ManifestTable:
             live = groups[d]
             listed = {
                 rel
-                for rel, _age in self.store.list_txn_files(d.split("/", 1)[1])
+                for rel in self.store.list_txn_rels(d.split("/", 1)[1])
                 if not os.path.basename(rel).startswith(("_", "."))
             }
             if listed == set(live):

@@ -9,13 +9,15 @@ state.
 Scale & execution design:
 - exact dedup groups on md5(text) rather than the text itself, so the shuffle
   carries 32-byte keys instead of documents;
-- MinHash is computed as explode(shingles) → ONE md5 per shingle → k
-  codegen'd `min` aggregations over a rotated-hash family. Spark evaluates
-  higher-order-function lambdas interpreted (no whole-stage codegen), so the
-  naive `transform(seq(k), j -> array_min(transform(shingles, md5(j||s))))`
-  shape is ~k× more md5 calls AND interpreted — measured ~30× slower at
-  sf0.1. The explode/groupBy shape is also the 100 TB shape: partial min
-  aggregation collapses map-side, the shuffle carries k strings per doc;
+- MinHash signatures come from one Arrow kernel per batch of documents
+  (`mapInArrow` after a round-robin spread): one md5 per distinct shingle
+  of the batch, and the k rotated minima as fixed-width 128-bit integers
+  in numpy. Per row, so the signature stage has no exchange and no
+  aggregate at any scale. Spark's own shape, explode → md5 → k `min`
+  aggregations over rotated hex strings, runs as a sort aggregate because
+  strings are not fixed-width aggregation buffers: 1.50 s against the
+  kernel's 0.27 s for the signature stage at sf0.1 on 4 cores (PERF.md
+  "MinHash: one Arrow kernel per batch");
 - LSH banding is the classic trick: the only join is an equi-join on
   (band_index, band_hash) — fan-out controlled by band width, never O(n²);
 - candidate pairs are verified with exact shingle Jaccard only on the
@@ -34,15 +36,24 @@ from __future__ import annotations
 
 import logging
 import os
+import sys
 from hashlib import md5
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..functions.compute import eager, spread
+
+# The MinHash kernel calls the module-level `rotated_minima` (module level
+# for its unit test). Registered once here: UDFs pickle this module's
+# functions by value, so Python workers never import this package (the
+# `simhash` kernel gets the same by nesting its helpers).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # Word-shingle width for MinHash/Jaccard (3-word shingles).
 SHINGLE_W = 3
@@ -97,10 +108,10 @@ def exploded_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     see each word's two successors. Measured at sf0.1 (same session,
     best-of-4): 0.95 s → 0.46 s for the shingle explosion alone, and the
     whole-corpus word shuffle is gone — strictly fewer exchanges at any
-    scale. Downstream consumers that aggregate by id (minhash signatures,
-    distinct-shingle sets) now install their own hash exchange, but it
-    carries partial-aggregated rows (one per doc per map partition), far
-    less than the word rows the window shuffled. Short docs (<SHINGLE_W
+    scale. Downstream consumers that aggregate by id (distinct-shingle
+    sets) now install their own hash exchange, but it carries
+    partial-aggregated rows (one per doc per map partition), far less than
+    the word rows the window shuffled. Short docs (<SHINGLE_W
     words) contribute their whole text: `concat_ws(' ', _words)` is an
     exact roundtrip of the single-space split (empty words preserved),
     avoiding carrying `text` alongside `_words`."""
@@ -120,18 +131,18 @@ def distinct_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """DISTINCT (id, shingle) rows, hash-partitioned by `id_col` — the
     shareable shingle table for verify pipelines (round 15).
 
-    MinHash mins are unaffected by duplicate shingles, and the Jaccard /
-    containment verify stage needs the distinct sets anyway, so a pipeline
-    that feeds BOTH (x2b, x44) should shingle-dedup ONCE here and cache the
+    The Jaccard / containment verify stage (x2b, x44) reads the distinct
+    sets several times, so it shingle-dedups ONCE here and caches the
     result. The explicit `repartition(id_col)` before the dedup is the
     load-bearing part: it makes the deduplicating aggregate exchange-free
     (hash partitioning on `id_col` satisfies the (id, s) clustering) and —
     more importantly — the CACHED table comes out hash-partitioned by
-    `id_col`, so every downstream per-doc aggregation (signature mins, set
-    sizes) reuses the partitioning instead of re-shuffling the cached
-    shingle rows. Measured at sf0.1 (same-session best-of-4, x2b end to
-    end): caching the raw round-robin shingles 3.82 s, this 2.19-2.42 s
-    (the r14 window-form baseline read 2.43-2.92 s in the same session).
+    `id_col`, so the verify stage's per-doc set sizes reuse the
+    partitioning instead of re-shuffling the cached shingle rows. Measured
+    at sf0.1 (same-session best-of-4, x2b end to end, when this table also
+    fed the signature aggregation): caching the raw round-robin shingles
+    3.82 s, this 2.19-2.42 s (the r14 window-form baseline read 2.43-2.92 s
+    in the same session).
 
     The repartition runs on the DOCS, before the explosion: Generate
     preserves its child's partitioning, so the exploded shingle rows come
@@ -145,13 +156,31 @@ def distinct_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).dropDuplicates([id_col, "s"])
 
 
-def rotation(h: Column, j: int) -> Column:
-    """The j-th hash of the family: the md5 hex string rotated left by j
-    chars. One real md5 per shingle; rotations give k distinct uniform-ish
-    orderings at substr cost (a cheap-hash-family trick; fully portable)."""
-    if j == 0:
-        return h
-    return F.concat(F.substring(h, j + 1, 32 - j), F.substring(h, 1, j))
+def rotated_minima(
+    hi: np.ndarray, lo: np.ndarray, starts: np.ndarray, num_hashes: int
+) -> np.ndarray:
+    """Per group of rows, the minimum of each of `num_hashes` rotations of
+    the 128-bit values ``hi * 2**64 + lo``: rotation j shifts left by 4j
+    bits, which moves hex digit j of the value's 32-digit string to the
+    front. A value's order is its high word's, ties broken by the low
+    word, so the minimum is exact. Groups are the runs of rows beginning
+    at each index in `starts` (ascending, none empty). Returns a
+    (groups, num_hashes, 2) big-endian uint64 array whose bytes are the
+    minima as 16-byte digests, in order."""
+    group = np.repeat(np.arange(len(starts)), np.diff(starts, append=len(hi)))
+    out = np.empty((len(starts), num_hashes, 2), ">u8")
+    for j in range(num_hashes):
+        h, l = (hi, lo) if 4 * j < 64 else (lo, hi)
+        s = np.uint64(4 * j % 64)
+        if s:
+            r = np.uint64(64) - s
+            h, l = (h << s) | (l >> r), (l << s) | (h >> r)
+        top = np.minimum.reduceat(h, starts)
+        out[:, j, 0] = top
+        out[:, j, 1] = np.minimum.reduceat(
+            np.where(h == top[group], l, np.uint64(2**64 - 1)), starts
+        )
+    return out
 
 
 def minhash_signatures(
@@ -160,36 +189,80 @@ def minhash_signatures(
     text_col: str,
     num_hashes: int = 16,
     out_col: str = "sig",
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """x2 — MinHash signature per row: position j holds
-    min over shingles of rotate_j(md5(shingle)).
+    """x2 — MinHash signature per row with a non-null text: position j
+    holds the minimum over the row's shingles of md5(shingle) as a 32-char
+    hex string rotated left by j chars (j < 32). Hex strings compare as
+    the 128-bit values they spell, so this is the order the DuckDB oracle
+    takes with `min` over rotated md5 strings.
 
-    Hex strings compare lexicographically — a valid uniform hash order,
-    identical in every engine. Shape: explode → md5 → k min-aggs (codegen,
-    map-side partial aggregation; see module docstring).
+    `id_col` must be unique among rows with a non-null text: the oracle
+    groups shingles by id, so a repeated id there gets one signature over
+    the union of its texts, while here each row gets its own.
 
-    Pass a precomputed ``shingles`` (id, s) table to share the explosion
-    with other stages (e.g. jaccard_verify) — one shingle scan feeding the
-    whole near-dup pipeline is the 100 TB shape.
-
-    The default path hash-partitions the DOCS by id before exploding
-    (round 15): Generate preserves partitioning, so the signature
-    aggregation below is exchange-free — one exchange of document rows is
-    the whole pipeline's shuffle (x2 end-to-end 1.67 s → 1.15 s at sf0.1
-    when this replaced round-robin spread + a post-aggregation exchange).
-    """
-    ex = (
-        shingles
-        if shingles is not None
-        else exploded_shingles(df.repartition(id_col), id_col, text_col)
+    One Arrow kernel per batch of documents, applied with `mapInArrow`
+    after a round-robin `spread`: per row, so no exchange follows the
+    spread at any scale, and no aggregate buffers a string. The kernel
+    splits each text on a single space, builds the `SHINGLE_W`-word
+    shingles (a text of fewer words is its own single shingle), md5-hashes
+    each distinct shingle of the batch once, and takes each document's
+    rotated minima in numpy (`rotated_minima`). See PERF.md ("MinHash:
+    one Arrow kernel per batch") for the measured alternatives."""
+    if not 0 < num_hashes <= 32:
+        raise ValueError(f"num_hashes must be in 1..32, got {num_hashes}")
+    schema = StructType(
+        [
+            StructField(id_col, df.schema[id_col].dataType),
+            StructField(out_col, ArrayType(StringType())),
+        ]
     )
-    h = ex.select(id_col, F.md5("s").alias("_h"))
-    aggs = [F.min(rotation(F.col("_h"), j)).alias(f"_s{j}") for j in range(num_hashes)]
-    wide = h.groupBy(id_col).agg(*aggs)
-    return wide.select(
-        id_col, F.array(*[F.col(f"_s{j}") for j in range(num_hashes)]).alias(out_col)
-    )
+
+    def kernel(batches):
+        for batch in batches:
+            batch = batch.filter(pc.is_valid(batch.column(1)))
+            n = batch.num_rows
+            if n == 0:
+                continue
+            words = pc.split_pattern(batch.column(1), " ")
+            flat = pc.list_flatten(words)
+            lens = pc.list_value_length(words).to_numpy()
+            counts = np.maximum(lens - SHINGLE_W + 1, 1)
+            starts = np.cumsum(counts) - counts
+            # per shingle: its document, and the flat index of its first word
+            doc = np.repeat(np.arange(n), counts)
+            first = (np.cumsum(lens) - lens - starts)[doc] + np.arange(len(doc))
+            # a text of fewer words is one shingle: its words joined, the
+            # missing ones null and skipped (the text itself, never copied)
+            width = np.minimum(lens, SHINGLE_W)[doc]
+            shingles = pc.binary_join_element_wise(
+                *[
+                    flat.take(pa.array(first + i, mask=i >= width))
+                    for i in range(SHINGLE_W)
+                ],
+                " ",
+                null_handling="skip",
+            )
+            enc = pc.dictionary_encode(shingles)
+            digests = b"".join(
+                md5(s).digest() for s in enc.dictionary.cast(pa.binary()).to_pylist()
+            )
+            hi_lo = np.frombuffer(digests, ">u8").astype(np.uint64).reshape(-1, 2)
+            hi_lo = hi_lo[enc.indices.to_numpy()]
+            minima = rotated_minima(hi_lo[:, 0], hi_lo[:, 1], starts, num_hashes)
+            n_hex = n * num_hashes
+            sigs = pa.ListArray.from_arrays(
+                np.arange(0, n_hex + 1, num_hashes, dtype=np.int32),
+                pa.StringArray.from_buffers(
+                    n_hex,
+                    pa.py_buffer(np.arange(0, 32 * n_hex + 1, 32, dtype=np.int32)),
+                    pa.py_buffer(minima.tobytes().hex().encode()),
+                ),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), sigs], names=[id_col, out_col]
+            )
+
+    return spread(df.select(id_col, text_col)).mapInArrow(kernel, schema)
 
 
 def lsh_candidate_pairs(

@@ -15,14 +15,14 @@ so double bit-patterns match.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .scratch import process_root
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -181,7 +181,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 _SCRATCH_PARENT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
 )
-_scratch_root: str | None = None
 
 
 def scratch_dir(zone: str, tag: str) -> str:
@@ -189,13 +188,9 @@ def scratch_dir(zone: str, tag: str) -> str:
     (the input tables are read-only, so roundtrips and lake tables stage
     here). ``<root>`` belongs to this process alone: it is made under
     ``<repo>/.tmp`` on the first call and removed at interpreter exit, so
-    no other run, concurrent or earlier, ever sees what a query leaves."""
-    global _scratch_root
-    if _scratch_root is None:
-        os.makedirs(_SCRATCH_PARENT, exist_ok=True)
-        _scratch_root = tempfile.mkdtemp(dir=_SCRATCH_PARENT)
-        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
-    path = os.path.join(_scratch_root, zone, tag)
+    no other run, concurrent or earlier, ever sees what a query leaves
+    (``scratch.process_root``)."""
+    path = os.path.join(process_root(_SCRATCH_PARENT, "tmp"), zone, tag)
     shutil.rmtree(path, ignore_errors=True)
     return path
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from data_lakes_tp2_student_spark.functions.compute import eager, spread  # noqa: E402
 from data_lakes_tp2_student_spark.operators.dedup import (  # noqa: E402
+    distinct_shingles,
     dup_clusters,
     exploded_shingles,
     jaccard_verify,
@@ -67,8 +68,7 @@ def main() -> None:
     stage("01_shingles", lambda: exploded_shingles(spread(docs), "doc_id", "text"))
 
     def _sigs():
-        sh = exploded_shingles(spread(docs), "doc_id", "text")
-        return minhash_signatures(docs, "doc_id", "text", N_HASHES, shingles=sh)
+        return minhash_signatures(docs, "doc_id", "text", N_HASHES)
 
     stage("02_sigs", _sigs)
 
@@ -77,13 +77,13 @@ def main() -> None:
 
     stage("03_lsh_pairs", _pairs)
 
-    def _verify_shared():
-        sh = eager(exploded_shingles(spread(docs), "doc_id", "text"))
-        sigs = minhash_signatures(docs, "doc_id", "text", N_HASHES, shingles=sh)
-        pairs = lsh_candidate_pairs(sigs, "doc_id", N_BANDS, ROWS_PER_BAND)
-        return jaccard_verify(pairs, docs, "doc_id", "text", shingles=sh)
+    def _verify():
+        sh = eager(distinct_shingles(docs, "doc_id", "text"))
+        return jaccard_verify(
+            _pairs(), docs, "doc_id", "text", shingles=sh, shingles_are_distinct=True
+        )
 
-    stage("04_x2b_full", _verify_shared)
+    stage("04_x2b_full", _verify)
     stage("05_x2e_full", lambda: dup_clusters(_pairs()))
     def _fingerprints():
         # one bigint per document from the Arrow-batched kernel

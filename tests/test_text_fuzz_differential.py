@@ -33,6 +33,9 @@ FUZZ_QUERIES = [
     "x4_quality_score",
     "x4_token_counts",
     "x2_minhash_pairs",
+    "x2b_jaccard_verify",
+    "x2e_dup_clusters",
+    "x2g_neardup_dedup",
     "x2c_simhash",
     "x2f_simhash_pairs",
     "x32_substring_dedup",
