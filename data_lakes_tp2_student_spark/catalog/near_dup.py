@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.compute import eager
 from ..operators.bloom import M_BITS, WORD, bloom_build, bloom_probe
 from ..operators.dedup import (
-    distinct_shingles,
     dup_clusters,
     exact_dedup,
     exploded_shingles,
@@ -173,21 +172,16 @@ def x2_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x2b_jaccard_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x2 — exact shingle-Jaccard verification of the LSH candidates (the
     cheap-filter-then-exact-verify shape; only candidates pay set costs).
-    The signatures come from the per-document MinHash kernel, which shingles
-    in its own batches; the persisted distinct shingle table feeds only the
-    verify joins (its set sizes and the intersection), which read it
-    several times."""
+    The signatures come from the per-document MinHash kernel; each
+    candidate pair is then verified from its two texts alone
+    (operators/dedup.py:jaccard_verify), so no corpus-wide shingle table
+    is built."""
     docs = load(spark, sf_dir, "documents")
-    # hash-partitioned by doc_id, so the verify stage's per-doc set sizes
-    # reuse the cached partitioning (operators/dedup.py:distinct_shingles)
-    sh = eager(distinct_shingles(docs, "doc_id", "text"))
     sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=_N_HASHES)
     pairs = lsh_candidate_pairs(
         sigs, "doc_id", bands=_N_BANDS, rows_per_band=_ROWS_PER_BAND
     )
-    return jaccard_verify(
-        pairs, docs, "doc_id", "text", shingles=sh, shingles_are_distinct=True
-    )
+    return jaccard_verify(pairs, docs, "doc_id", "text")
 
 
 # Shared by x2c (fingerprints) and x2f (hamming-banded pairs). 64 bits
@@ -1040,26 +1034,20 @@ def x44_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     |A∩B|/|A| vs |A∩B|/|B| classifies each near-dup pair as duplicate /
     contained (doc-in-doc: quotes, boilerplate wrappers — near-invisible
     to symmetric Jaccard at unequal sizes) / plain overlap. Same
-    candidates-only join shape as x2b (operators/dedup.py:
-    containment_verify)."""
+    candidates-only per-pair verify as x2b (operators/dedup.py:
+    containment_verify): each pair from its two texts alone."""
     from ..operators.dedup import (
         containment_verify,
-        distinct_shingles,
         lsh_candidate_pairs,
         minhash_signatures,
     )
-    from ..functions.compute import eager
 
     docs = load(spark, sf_dir, "documents")
-    # the verify stage's distinct shingle table, as in x2b
-    sh = eager(distinct_shingles(docs, "doc_id", "text"))
     sigs = minhash_signatures(docs, "doc_id", "text", num_hashes=_N_HASHES)
     pairs = lsh_candidate_pairs(
         sigs, "doc_id", bands=_N_BANDS, rows_per_band=_ROWS_PER_BAND
     )
-    return containment_verify(
-        pairs, docs, "doc_id", "text", shingles=sh, shingles_are_distinct=True
-    )
+    return containment_verify(pairs, docs, "doc_id", "text")
 
 
 # ----------------------------- x47 sparse cosine via inverted index

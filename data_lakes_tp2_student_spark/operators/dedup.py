@@ -20,12 +20,15 @@ Scale & execution design:
   "MinHash: one Arrow kernel per batch");
 - LSH banding is the classic trick: the only join is an equi-join on
   (band_index, band_hash) — fan-out controlled by band width, never O(n²);
-- candidate pairs are verified with exact shingle Jaccard only on the
-  (small) candidate set, against a persisted shingle table.
+- candidate pairs are verified with exact shingle-set Jaccard or
+  containment per pair: each pair joins its two texts, and the shingle
+  sets are built and intersected as arrays in the row, so only candidate
+  documents are shingled and no corpus-wide shingle table exists.
 
-Cache contract: `eager()`/persist sites in this module (candidate tables,
-pair-overlap inputs) are NOT unpersisted before return — the returned
-DataFrames still read the cached blocks. Long sessions running many
+Cache contract: `eager()`/persist sites in this module (the banded tables
+that feed both sides of the LSH and SimHash self-joins) are NOT
+unpersisted before return — the returned DataFrames still read the cached
+blocks. The verify stage caches nothing. Long sessions running many
 queries are expected to `spark.catalog.clearCache()` after each query
 materializes, which both the bench harness (bench.py) and the local
 oracle gate (tests/oracle.py) do; see operators/graph.py for the same
@@ -34,8 +37,6 @@ documented contract.
 
 from __future__ import annotations
 
-import logging
-import os
 import sys
 from hashlib import md5
 
@@ -70,90 +71,36 @@ def exact_dedup(df: DataFrame, text_col: str, tiebreak_col: str) -> DataFrame:
     )
 
 
-def with_shingles(df: DataFrame, text_col: str, out_col: str = "shingles") -> DataFrame:
-    """Word shingles (width SHINGLE_W); whole text as the single shingle for
-    very short docs (keeps null-free semantics portable to the oracle).
+def shingle_array(words: str) -> Column:
+    """The `SHINGLE_W`-word shingles of the split text in column `words`,
+    in order: one `transform` lambda slices each out of the stored array.
+    A text of fewer words is one shingle, its words joined: `concat_ws(' ',
+    words)` is an exact roundtrip of the single-space split (empty words
+    kept), so callers need not carry the text alongside its words.
 
-    The split() is materialized once per row (`_words` projection — Catalyst
-    keeps non-cheap multiply-referenced aliases un-inlined) instead of once
-    per shingle."""
-    shingles = F.when(
-        F.size("_words") < SHINGLE_W, F.array(F.col(text_col))
+    Callers project `words` once (`F.split(text, " ")`) and pass its name:
+    Catalyst keeps that multiply-referenced non-cheap alias un-inlined, so
+    the plan splits each text once, not once per shingle."""
+    return F.when(
+        F.size(words) < SHINGLE_W, F.array(F.concat_ws(" ", words))
     ).otherwise(
         F.expr(
-            f"transform(sequence(0, size(_words) - {SHINGLE_W}), "
-            f"i -> concat_ws(' ', slice(_words, i + 1, {SHINGLE_W})))"
+            f"transform(sequence(0, size({words}) - {SHINGLE_W}), "
+            f"i -> concat_ws(' ', slice({words}, i + 1, {SHINGLE_W})))"
         )
-    )
-    return (
-        df.withColumn("_words", F.split(F.col(text_col), " "))
-        .withColumn(out_col, shingles)
-        .drop("_words")
     )
 
 
 def exploded_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, shingle) rows — one split per doc, zero shuffles.
+    """(id, shingle) rows, one per shingle occurrence (`shingle_array`
+    exploded): one split per doc, zero shuffles.
 
-    Round-15 shape: split once into a materialized `_words` projection,
-    slice each 3-word shingle out of the stored array with one `transform`
-    lambda, explode. Catalyst keeps the multiply-referenced non-cheap
-    `_words` alias un-inlined (verified: exactly ONE `split(` in the
-    physical plan), so the r1-era pathology that originally forced the
-    window form — `split()` re-run PER SHINGLE after the lambda inlined it,
-    8 copies in the plan — no longer occurs on Spark 4.1.
-
-    This replaces the previous posexplode → Window `lead` stitching, which
-    paid a full exchange of every word row (hash by id) plus a sort just to
-    see each word's two successors. Measured at sf0.1 (same session,
-    best-of-4): 0.95 s → 0.46 s for the shingle explosion alone, and the
-    whole-corpus word shuffle is gone — strictly fewer exchanges at any
-    scale. Downstream consumers that aggregate by id (distinct-shingle
-    sets) now install their own hash exchange, but it carries
-    partial-aggregated rows (one per doc per map partition), far less than
-    the word rows the window shuffled. Short docs (<SHINGLE_W
-    words) contribute their whole text: `concat_ws(' ', _words)` is an
-    exact roundtrip of the single-space split (empty words preserved),
-    avoiding carrying `text` alongside `_words`."""
+    Slicing the stored word array replaced a posexplode → Window `lead`
+    stitching that shuffled every word row by id and sorted it just to see
+    each word's two successors (sf0.1, best of 4: 0.95 s → 0.46 s for the
+    explosion alone)."""
     w = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_words"))
-    shingles = F.when(
-        F.size("_words") < SHINGLE_W, F.array(F.concat_ws(" ", "_words"))
-    ).otherwise(
-        F.expr(
-            f"transform(sequence(0, size(_words) - {SHINGLE_W}), "
-            f"i -> concat_ws(' ', slice(_words, i + 1, {SHINGLE_W})))"
-        )
-    )
-    return w.select(F.col(id_col), F.explode(shingles).alias("s"))
-
-
-def distinct_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """DISTINCT (id, shingle) rows, hash-partitioned by `id_col` — the
-    shareable shingle table for verify pipelines (round 15).
-
-    The Jaccard / containment verify stage (x2b, x44) reads the distinct
-    sets several times, so it shingle-dedups ONCE here and caches the
-    result. The explicit `repartition(id_col)` before the dedup is the
-    load-bearing part: it makes the deduplicating aggregate exchange-free
-    (hash partitioning on `id_col` satisfies the (id, s) clustering) and —
-    more importantly — the CACHED table comes out hash-partitioned by
-    `id_col`, so the verify stage's per-doc set sizes reuse the
-    partitioning instead of re-shuffling the cached shingle rows. Measured
-    at sf0.1 (same-session best-of-4, x2b end to end, when this table also
-    fed the signature aggregation): caching the raw round-robin shingles
-    3.82 s, this 2.19-2.42 s (the r14 window-form baseline read 2.43-2.92 s
-    in the same session).
-
-    The repartition runs on the DOCS, before the explosion: Generate
-    preserves its child's partitioning, so the exploded shingle rows come
-    out hash-clustered by id without ever shuffling a shingle — ONE
-    exchange of document rows total, and hash-by-id distributes documents
-    across the cluster just as well as a round-robin spread would
-    (measured: cache build 0.77-0.99 s → 0.48-0.56 s when the
-    spread + post-explode repartition pair collapsed into this)."""
-    return exploded_shingles(
-        df.repartition(id_col), id_col, text_col
-    ).dropDuplicates([id_col, "s"])
+    return w.select(F.col(id_col), F.explode(shingle_array("_words")).alias("s"))
 
 
 def rotated_minima(
@@ -304,129 +251,61 @@ def lsh_candidate_pairs(
     )
 
 
-def _input_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for `df` (file-index bytes for scans) — a
-    pure driver-side scale probe, no Spark job, any storage backend.
-    Frames without real statistics (createDataFrame/RDD-backed) carry
-    Catalyst's defaultSizeInBytes = Long.MAX and therefore read as huge;
-    0 (small) only on probe failure."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 0
-
-
 def _pair_overlap(
-    pairs: DataFrame,
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingles: DataFrame | None,
-    shingles_are_distinct: bool = False,
+    pairs: DataFrame, df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """Shared verify core for jaccard_verify / containment_verify: per
-    candidate pair, the exact distinct-shingle intersection plus both set
-    sizes — (id_a, id_b, _inter, _na, _nb). Intersection is the equi-join
-    of the two exploded distinct-shingle sides on (pair, shingle); LSH
-    false positives with zero overlap keep _inter = 0 via the left join.
-    Both the pairs and the distinct-shingle table persist+materialize up
-    front — each feeds two+ branches, several broadcast builds, which
-    would otherwise recompute the upstream pipeline concurrently (see
-    functions.compute.eager).
+    """Shared verify core of `jaccard_verify` and `containment_verify`: per
+    candidate pair (id_a, id_b), the size of the intersection of the two
+    documents' distinct shingle sets and the two set sizes — (id_a, id_b,
+    _inter, _na, _nb), all bigint.
 
-    Round 16 (guide §3.2 semi-join reduction): only ids that appear in a
-    candidate pair can influence the output (every consumer below joins
-    back to `pairs`), so on corpora past SPARK_GRAFT_VERIFY_CUT_MIN_BYTES
-    of input the shingle table is cut to candidate ids with one left-semi
-    join BEFORE the intersection joins and the set-size aggregation. At
-    LSH-selective duplicate rates the verify stage then touches a
-    candidate-sized table instead of the whole corpus three times — the
-    100 TB shape; the semi probe itself is exchange-free on the shingle
-    side (the cached table is hash-partitioned by id, and the id set
-    broadcasts while it fits, degrading to a shuffle of ids only). The
-    cut costs two fixed jobs (id-set build + materializing the cut
-    table), so below the threshold — where the whole verify is a few
-    hundred ms and the avoided scans are tiny — it is skipped (measured
-    at sf0.1/5k docs: cut 2.16 s vs plain 1.84 s best; at the
-    100c/500k-doc fixture the cut reads median 22.2 s vs 24.3 s with a
-    far tighter spread). The decision reads Catalyst's size estimate on
-    the driver — no job, independent of the data values; frames without
-    real statistics (in-memory test frames) read as huge and take the
-    cut path, which is always result-identical."""
-    pairs = eager(pairs)
-    raw = (
-        shingles
-        if shingles is not None
-        else exploded_shingles(df.repartition(id_col), id_col, text_col)
-    )
-    if shingles_are_distinct and shingles is not None and not shingles.is_cached:
-        # The flag's contract is 'distinct AND cached'. An uncached frame
-        # (never persisted, or dropped by clearCache) would recompute the
-        # whole shingle pipeline per broadcast build below: persist it.
-        logging.getLogger("spark_graft").warning(
-            "shingles_are_distinct=True got an uncached shingle table; "
-            "persisting it (pass eager(distinct_shingles(...)) to avoid this)"
-        )
-        raw = eager(shingles)
-    if _input_bytes(df) >= int(
-        os.environ.get("SPARK_GRAFT_VERIFY_CUT_MIN_BYTES", str(32 << 20))
-    ):
-        pair_ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-            .dropDuplicates([id_col])
-        )
-        cut = raw.join(pair_ids, id_col, "left_semi")
-        # dedup AFTER the cut: only candidate docs pay the distinct (the
-        # semi preserves the id partitioning, so it stays exchange-free)
-        sh = eager(cut if shingles_are_distinct else cut.distinct())
-    else:
-        # A caller passing `distinct_shingles(...)` (already deduped AND
-        # cached partitioned by id) sets shingles_are_distinct — re-running
-        # distinct here would pay a second aggregate pass over the cached
-        # rows.
-        sh = raw if shingles_are_distinct else eager(raw.distinct())
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col(id_col).alias("id_a"), "s")
-    b = sh.select(F.col(id_col).alias("id_b"), "s")
-    inter = (
+    Each pair joins the non-null texts of `df` on id_a and on id_b; a pair
+    naming an id with no such text is dropped. Each side's set is
+    `array_distinct(shingle_array(...))` of its text split once, and the
+    overlap is `size(array_intersect(...))` in the row, so the work is
+    proportional to the candidates' text, never to the corpus, and runs
+    in the JVM with no Python worker. A document in several pairs is
+    shingled once per pair. `id_col` must be unique among rows with a
+    non-null text: a repeated id joins each of its texts separately,
+    where the oracle takes the union of their shingles. See PERF.md
+    ("Verify per pair from its two texts") for the measured alternatives."""
+    texts = df.where(F.col(text_col).isNotNull())
+    a = texts.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("_ta"))
+    b = texts.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("_tb"))
+    sets = (
         pairs.join(a, "id_a")
-        .join(b, ["id_b", "s"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("_inter"))
+        .join(b, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.split("_ta", " ").alias("_wa"),
+            F.split("_tb", " ").alias("_wb"),
+        )
+        .select(
+            "id_a",
+            "id_b",
+            F.array_distinct(shingle_array("_wa")).alias("_sa"),
+            F.array_distinct(shingle_array("_wb")).alias("_sb"),
+        )
     )
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("_na"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("_nb"))
-    return (
-        pairs.join(inter, ["id_a", "id_b"], "left")
-        .na.fill({"_inter": 0})
-        .join(na, "id_a")
-        .join(nb, "id_b")
+    return sets.select(
+        "id_a",
+        "id_b",
+        F.size(F.array_intersect("_sa", "_sb")).cast("bigint").alias("_inter"),
+        F.size("_sa").cast("bigint").alias("_na"),
+        F.size("_sb").cast("bigint").alias("_nb"),
     )
 
 
 def jaccard_verify(
-    pairs: DataFrame,
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingles: DataFrame | None = None,
-    shingles_are_distinct: bool = False,
+    pairs: DataFrame, df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
-    """x2 — exact shingle-set Jaccard for candidate pairs (the verify stage
-    after LSH; only candidates pay set costs), join-based: intersection =
-    equi-join of the two exploded distinct-shingle sides on (pair, shingle),
-    union = |A| + |B| − |A∩B|. No per-pair array materialization; every stage
-    codegen'd; LSH false positives with zero overlap keep jaccard 0 via the
-    left join. The distinct-shingle table and the pairs table are persisted
-    and materialized up front — each feeds two+ branches of the join tree,
-    several of them broadcast builds that would otherwise recompute the
-    whole upstream pipeline concurrently (see functions.compute.eager)."""
-    return _pair_overlap(
-        pairs, df, id_col, text_col, shingles, shingles_are_distinct
-    ).select(
+    """x2 — exact shingle-set Jaccard of each candidate pair (the verify
+    stage after LSH; only candidates pay set costs): |A∩B| / (|A| + |B| −
+    |A∩B|) over the pair's distinct shingle sets, rounded to 6 places. A
+    pair with no common shingle scores 0. Per pair from its two texts
+    (`_pair_overlap`)."""
+    return _pair_overlap(pairs, df, id_col, text_col).select(
         "id_a",
         "id_b",
         F.round(
@@ -438,12 +317,7 @@ def jaccard_verify(
 
 
 def containment_verify(
-    pairs: DataFrame,
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingles: DataFrame | None = None,
-    shingles_are_distinct: bool = False,
+    pairs: DataFrame, df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """x44 — exact shingle-set CONTAINMENT for candidate pairs, the
     asymmetric companion to `jaccard_verify`: containment_a = |A∩B|/|A|
@@ -453,13 +327,12 @@ def containment_verify(
     engine draws the same thresholds): both containments >= 0.9 →
     'duplicate'; one side → 'contained'; else 'overlap'.
 
-    Same join shape and persistence discipline as `jaccard_verify`
-    (intersection = equi-join on (pair, shingle); only LSH candidates pay
-    set costs; the shingle table feeds multiple branches → eager)."""
+    Same per-pair verify as `jaccard_verify` (`_pair_overlap`): only LSH
+    candidates pay set costs."""
     ca = F.round(F.col("_inter").cast("double") / F.col("_na"), 6)
     cb = F.round(F.col("_inter").cast("double") / F.col("_nb"), 6)
     return (
-        _pair_overlap(pairs, df, id_col, text_col, shingles, shingles_are_distinct)
+        _pair_overlap(pairs, df, id_col, text_col)
         .select(
             "id_a",
             "id_b",

@@ -19,9 +19,8 @@ if REPO not in sys.path:
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from data_lakes_tp2_student_spark.functions.compute import eager, spread  # noqa: E402
+from data_lakes_tp2_student_spark.functions.compute import spread  # noqa: E402
 from data_lakes_tp2_student_spark.operators.dedup import (  # noqa: E402
-    distinct_shingles,
     dup_clusters,
     exploded_shingles,
     jaccard_verify,
@@ -77,13 +76,9 @@ def main() -> None:
 
     stage("03_lsh_pairs", _pairs)
 
-    def _verify():
-        sh = eager(distinct_shingles(docs, "doc_id", "text"))
-        return jaccard_verify(
-            _pairs(), docs, "doc_id", "text", shingles=sh, shingles_are_distinct=True
-        )
-
-    stage("04_x2b_full", _verify)
+    stage(
+        "04_x2b_full", lambda: jaccard_verify(_pairs(), docs, "doc_id", "text")
+    )
     stage("05_x2e_full", lambda: dup_clusters(_pairs()))
     def _fingerprints():
         # one bigint per document from the Arrow-batched kernel

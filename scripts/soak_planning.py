@@ -201,6 +201,9 @@ def bench_once(
     t_coarse = time.perf_counter() - t0
     assert 1 <= len(coarse) <= n
 
+    # untimed warm-up: the session's first Spark job pays one-off start-up
+    # costs that are not planning
+    tab._load_snapshot(spark, m, pruned).count()
     t0 = time.perf_counter()
     df = tab._load_snapshot(spark, m, pruned)
     got = df.count()

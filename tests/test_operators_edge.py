@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from data_lakes_tp2_student_spark.operators.dedup import (
     exact_dedup,
     minhash_signatures,
-    with_shingles,
+    shingle_array,
 )
 from data_lakes_tp2_student_spark.operators.label import label_encode
 from data_lakes_tp2_student_spark.operators.split import stratified_split
@@ -76,7 +76,8 @@ def test_tokenize_esm2_known_vectors(spark):
 
 def test_shingles_short_text_fallback(spark):
     df = spark.createDataFrame([(1, "one two")], "pk bigint, t string")
-    row = with_shingles(df, "t").first()
+    words = df.select(F.split("t", " ").alias("_words"))
+    row = words.select(shingle_array("_words").alias("shingles")).first()
     assert row["shingles"] == ["one two"]  # < 3 words -> whole text
 
 
